@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  StructField, StructType}
 
 /** Product quantization (PQ) for the embedding store — the compression
   * rung past the scalar q8 tier: each vector splits into `m` subspaces,
@@ -438,18 +440,41 @@ object GraftPq {
 
   /** Load the codebook persisted by [[writePqCodebook]]. */
   def readPqCodebook(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): PqCodebook = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/pq_codebook")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
+                     dir: String): PqCodebook =
+    readPqCodebookIfAny(spark, dir).getOrElse(throw new IllegalArgumentException(
       s"readPqCodebook: no codebook at $dir/pq_codebook — not a PQ store " +
       "(writeIvfPqStore / IvfObjectStore.create(…, pq = Some(cb)) writes " +
       "one; writePqCodebook attaches one to an existing store for " +
-      "compaction migration)")
-    val raw = spark.read.parquet(s"$dir/pq_codebook")
-    val meta = raw.select(col("m"), col("ksub")).limit(1).collect()
-    require(meta.nonEmpty, s"readPqCodebook: empty codebook at $dir")
-    PqCodebook(raw.select(col("sub_id"), col("code"), col("cv")),
-               meta(0).getInt(0), meta(0).getInt(1))
+      "compaction migration)"))
+
+  /** The [[writePqCodebook]] schema: the codebook rows plus the constant
+    * (m, ksub) columns. */
+  private val StoredCodebook = StructType(Seq(
+    StructField("sub_id", IntegerType), StructField("code", IntegerType),
+    StructField("cv", ArrayType(DoubleType)), StructField("m", IntegerType),
+    StructField("ksub", IntegerType)))
+
+  /** The codebook at `$dir/pq_codebook`, or None when there is none. One
+    * directory listing (it is written by a plain `write`, outside any
+    * manifest) and ONE bounded collect of its m·ksub rows under the fixed
+    * schema — no inference job — into a LOCAL relation, so [[materialize]]
+    * and [[collectCodebook]] over it launch no job either. */
+  def readPqCodebookIfAny(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Option[PqCodebook] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/pq_codebook")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts =
+      try fs.listStatus(p).filter(f => f.isFile &&
+                                      !f.getPath.getName.startsWith("_") &&
+                                      !f.getPath.getName.startsWith("."))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val rows = org.apache.spark.sql.GraftSqlBridge.parquetScan(
+      spark, parts.toSeq, StoredCodebook, None).collect()
+    require(rows.nonEmpty, s"readPqCodebook: empty codebook at $dir")
+    Some(PqCodebook(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StoredCodebook)
+        .select(col("sub_id"), col("code"), col("cv")),
+      rows(0).getInt(3), rows(0).getInt(4)))
   }
 
   /** Attach the packed code-word column to an assigned frame via the
@@ -498,10 +523,9 @@ object GraftPq {
                        dir: String, batch: DataFrame,
                        idCol: String = "vec_id", vecCol: String = "v",
                        batchTag: Option[String] = None): Unit = {
-    val cb = readPqCodebook(spark, dir).persist()
-    try GraftSimilarity.appendIvfStore(spark, dir, batch, idCol, vecCol,
-                                       batchTag, augment = withCw(cb, _))
-    finally cb.unpersist()
+    val cb = readPqCodebook(spark, dir)
+    GraftSimilarity.appendIvfStore(spark, dir, batch, idCol, vecCol,
+                                   batchTag, augment = withCw(cb, _))
   }
 
   /** Serve top-k from an at-rest PQ store ([[writeIvfPqStore]]): probe

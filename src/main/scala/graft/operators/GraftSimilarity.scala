@@ -1228,10 +1228,7 @@ object GraftSimilarity {
       // PQ stores keep their codebook at a fixed immutable path
       // ([[GraftPq.writePqCodebook]]); load it ONCE per pass — the cw
       // repair below re-encodes null slivers against it
-      val pqCb: Option[GraftPq.PqCodebook] =
-        if (fs.exists(new Path(s"$dir/pq_codebook")))
-          Some(GraftPq.readPqCodebook(spark, dir).persist())
-        else None
+      val pqCb = GraftPq.readPqCodebookIfAny(spark, dir)
       // one listing of the committed-tag namespace, not one exists() RPC
       // per (cell, tag) — the loop below is O(cells) round-trips already
       val committedTags: Set[String] = {
@@ -1407,7 +1404,6 @@ object GraftSimilarity {
         compacted += 1
       }
       fs.delete(stagingRoot, true)
-      pqCb.foreach(_.unpersist())
       // reaching here means every attempted rewrite landed; in purge
       // mode with no touched cell skipped (uncommitted in-flight tags),
       // the pass-start tombstone files are fully applied — clear them.

@@ -20,8 +20,10 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   *     their final keys, by [[ManifestCommitProtocol]]; mutation =
   *     publishing a new immutable manifest version listing the live set;
   *   - **no listing consistency**: readers resolve state from the manifest
-  *     chain (writers learn their own files from task commit messages);
-  *     a lagging listing serves a slightly stale COMPLETE snapshot;
+  *     chain (writers learn their own files from task commit messages),
+  *     and take every file's length and schema from it — the only
+  *     listing a read makes finds the newest manifest, and a lagging one
+  *     serves a slightly stale COMPLETE snapshot;
   *   - **torn-manifest safety**: SHA-256 trailer; an invalid manifest is
   *     skipped and the previous version serves.
   *
@@ -46,7 +48,16 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   *   terms/<file>.parquet                (__term, __df, __maxa) summary
   *   tombstones/<file>.parquet           (doc_id) delete slivers
   * }}}
-  * The `__bkt=` partition form is kept so a manifest-driven read
+  * Besides `version`, `k1`, `b`, `buckets` and `tag` lines, a manifest
+  * (format `graft-impact-manifest v2`) holds one `schema
+  * impact|term|tomb <json>` line per file family and one
+  * `impact|term|tomb <path> <bytes>` line per live file, from which
+  * [[ManifestCatalog]] plans every read without a Spark job. A v1
+  * manifest (bare paths, no schema lines) still reads, and the next
+  * write records what it lacked; the format only goes forward, so never
+  * downgrade graft on a store or mix writer versions on one (see
+  * [[ManifestCatalog$]]). The
+  * `__bkt=` partition form is kept so a manifest-driven read
   * (`basePath` + explicit file list) plans the same literal bucket-pruned
   * scan as the directory store — [[ImpactIndex.StoredImpacts.impactsFor]]
   * and both serve paths ([[ImpactIndex.bm25TopKStored]] /
@@ -60,59 +71,45 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   */
 object ImpactObjectStore {
 
-  private val Header = "graft-impact-manifest v1"
+  private val Format = "graft-impact-manifest"
+  private val NoFiles = ManifestCatalog("impact", "term", "tomb")
 
   private[graft] final case class ImpactManifest(version: Long, k1: Double,
                                                  b: Double, buckets: Int,
-                                                 impacts: Seq[String],
-                                                 terms: Seq[String],
-                                                 tombs: Seq[String] = Nil,
-                                                 tags: Seq[String] = Nil) {
-    def render: String = {
-      val body = new StringBuilder
-      body.append(Header).append('\n')
-      body.append("version ").append(version).append('\n')
-      body.append("k1 ").append(k1).append('\n')
-      body.append("b ").append(b).append('\n')
-      body.append("buckets ").append(buckets).append('\n')
-      impacts.sorted.foreach(f => body.append("impact ").append(f).append('\n'))
-      terms.sorted.foreach(f => body.append("term ").append(f).append('\n'))
-      tombs.sorted.foreach(f => body.append("tomb ").append(f).append('\n'))
-      tags.sorted.foreach(t => body.append("tag ").append(t).append('\n'))
-      val digest = IvfObjectStore.sha256(body.toString)
-      body.append("end ").append(digest).append('\n')
-      body.toString
-    }
+                                                 tags: Seq[String] = Nil,
+                                                 catalog: ManifestCatalog =
+                                                   NoFiles) {
+    def impacts: Seq[String] = catalog.files("impact")
+    def terms: Seq[String] = catalog.files("term")
+    def tombs: Seq[String] = catalog.files("tomb")
+
+    def render: String = ManifestCatalog.render(Format,
+      Seq(s"version $version", s"k1 $k1", s"b $b", s"buckets $buckets") ++
+        tags.sorted.map("tag " + _), catalog)
+
+    /** Lengths and schemas of an earlier-format manifest filled in, so a
+      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
+    def resolved(spark: SparkSession, dir: String): ImpactManifest =
+      copy(catalog = catalog.resolved(spark, dir))
   }
 
-  /** Parse + integrity-check one manifest body; None if torn/invalid. */
+  /** Parse + integrity-check one manifest body; None if torn, a throw if
+    * its checksum holds but this build cannot read it. */
   private[graft] def parseManifest(text: String): Option[ImpactManifest] = {
-    val lines = text.split("\n", -1).toSeq.dropRight(
-      if (text.endsWith("\n")) 1 else 0)
-    if (lines.isEmpty || lines.head != Header) return None
-    val endIdx = lines.lastIndexWhere(_.startsWith("end "))
-    if (endIdx != lines.length - 1) return None
-    val expected = lines(endIdx).stripPrefix("end ")
-    val payload = lines.take(endIdx).mkString("", "\n", "\n")
-    if (IvfObjectStore.sha256(payload) != expected) return None
     var version = -1L; var k1 = Double.NaN; var b = Double.NaN
     var buckets = -1
-    val imps = Seq.newBuilder[String]; val terms = Seq.newBuilder[String]
-    val tombs = Seq.newBuilder[String]; val tags = Seq.newBuilder[String]
-    for (l <- lines.slice(1, endIdx)) l.split(" ", 2) match {
-      case Array("version", v) => version = v.toLong
-      case Array("k1", v) => k1 = v.toDouble
-      case Array("b", v) => b = v.toDouble
-      case Array("buckets", v) => buckets = v.toInt
-      case Array("impact", f) => imps += f
-      case Array("term", f) => terms += f
-      case Array("tomb", f) => tombs += f
-      case Array("tag", t) => tags += t
-      case _ => return None
+    val tags = Seq.newBuilder[String]
+    ManifestCatalog.parse(text, Format, NoFiles) {
+      case ("version", v) => version = v.toLong
+      case ("k1", v) => k1 = v.toDouble
+      case ("b", v) => b = v.toDouble
+      case ("buckets", v) => buckets = v.toInt
+      case ("tag", t) => tags += t
+    }.map { cat =>
+      if (version < 1 || k1.isNaN || b.isNaN || buckets < 1)
+        throw ManifestCatalog.unreadable(Format, "missing version/k1/b/buckets")
+      ImpactManifest(version, k1, b, buckets, tags.result(), cat)
     }
-    if (version < 1 || k1.isNaN || b.isNaN || buckets < 1) return None
-    Some(ImpactManifest(version, k1, b, buckets, imps.result(),
-                        terms.result(), tombs.result(), tags.result()))
   }
 
   private[graft] def currentManifest(fs: FileSystem,
@@ -183,22 +180,23 @@ object ImpactObjectStore {
     // ImpactIndex.write twin)
     val impWide = ScaleHints.writeWidth(imp, col("__bkt"))
       .sortWithinPartitions("__bkt", "__term", "doc_id")
-    val impFiles = IvfObjectStore.writeVia(impWide, s"$dir/impacts",
-      Seq("__bkt")).map(r => s"impacts/$r")
+    val impStaged = IvfObjectStore.writeVia(impWide, s"$dir/impacts",
+      Seq("__bkt")).under("impacts")
+    val staged = NoFiles.add("impact", impStaged)
     // the per-term bound table aggregates the WRITTEN bytes (one at-rest
     // scan of exactly the staged files), as on the directory layout
     val termsDf =
-      if (impFiles.isEmpty) emptyTerms(spark)
-      else spark.read.option("basePath", s"$dir/impacts")
-        .parquet(impFiles.map(r => s"$dir/$r"): _*)
+      if (impStaged.files.isEmpty) emptyTerms(spark)
+      else staged.scan(spark, dir, Seq("impact"), Some(s"$dir/impacts"))
         .groupBy("__term")
         .agg(count(lit(1)).as("__df"), max(col("__a")).as("__maxa"))
-    val termFiles = IvfObjectStore.writeVia(termsDf, s"$dir/terms", Nil)
-      .map(r => s"terms/$r")
+    val termStaged = IvfObjectStore.writeVia(termsDf, s"$dir/terms", Nil)
+      .under("terms")
+    val catalog = staged.add("term", termStaged)
     var attempt = 0
     while (attempt < IvfObjectStore.PublishRetries) {
       val next = currentManifest(fs, dir).map(_.version + 1).getOrElse(1L)
-      val m = ImpactManifest(next, k1, b, buckets, impFiles, termFiles)
+      val m = ImpactManifest(next, k1, b, buckets, catalog = catalog)
       if (publish(fs, dir, m)) return next
       // staged files are corpus content — chain-independent — so the
       // retry re-publishes the same set under the advanced slot
@@ -249,19 +247,19 @@ object ImpactObjectStore {
     if (batchTag.exists(pre.tags.contains)) return pre.version
     // one O(ids) sliver, staged once — chain-independent content, so a
     // publish-conflict retry re-lists the SAME file under the next slot
-    val tombFiles = IvfObjectStore.writeVia(
+    val tombStaged = IvfObjectStore.writeVia(
       ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
-      s"$dir/tombstones", Nil).map(r => s"tombstones/$r")
+      s"$dir/tombstones", Nil).under("tombstones")
     var attempt = 0
     while (attempt < IvfObjectStore.PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"ImpactObjectStore.delete: manifest chain vanished under $dir"))
+        .resolved(spark, dir)
       if (batchTag.exists(m.tags.contains)) return m.version
       val next = m.version + 1
-      if (publish(fs, dir, m.copy(version = next,
-                                  tombs = m.tombs ++ tombFiles,
-                                  tags = m.tags ++ batchTag)))
+      if (publish(fs, dir, m.copy(version = next, tags = m.tags ++ batchTag,
+                                  catalog = m.catalog.add("tomb", tombStaged))))
         return next
       healTorn(fs, dir, next)
       IvfObjectStore.publishBackoff(attempt)
@@ -350,13 +348,12 @@ object ImpactObjectStore {
     // column so impactsFor's literal bucket predicates still prune files
     val impacts =
       if (m.impacts.isEmpty) emptyImpacts(spark)
-      else spark.read.option("basePath", s"$dir/impacts")
-        .parquet(m.impacts.map(r => s"$dir/$r"): _*)
+      else m.catalog.scan(spark, dir, Seq("impact"), Some(s"$dir/impacts"))
         .withColumn("__bkt", col("__bkt").cast("int"))
         .withColumn("doc_id", col("doc_id").cast("long"))
     val terms =
       if (m.terms.isEmpty) emptyTerms(spark)
-      else spark.read.parquet(m.terms.map(r => s"$dir/$r"): _*)
+      else m.catalog.scan(spark, dir, Seq("term"))
     // tombstone mask ([[delete]]): drop deleted docs' postings at serve.
     // The anti join's filter-side is the O(ids) sliver (gated broadcast);
     // impactsFor's __bkt/__term literals push through the join's left
@@ -365,7 +362,7 @@ object ImpactObjectStore {
       if (m.tombs.isEmpty) impacts
       else impacts.join(
         ScaleHints.gated(
-          spark.read.parquet(m.tombs.map(r => s"$dir/$r"): _*)
+          m.catalog.scan(spark, dir, Seq("tomb"))
             .select(col("doc_id").cast("long").as("doc_id")).distinct()),
         Seq("doc_id"), "left_anti")
     StoredImpacts(masked, terms, m.buckets, m.k1, m.b)

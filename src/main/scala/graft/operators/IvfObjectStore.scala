@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,6 +10,7 @@ import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import GraftSimilarity.IvfIndex
 
@@ -19,12 +19,13 @@ import GraftSimilarity.IvfIndex
   * task/job commit renames — the two things an object store cannot do
   * atomically) under names made unique per attempt by a random UUID, and
   * report the relative paths they wrote back to the driver through their
-  * [[TaskCommitMessage]]. The driver thus learns the exact file set from
-  * the job result — never from a directory listing — and records it for
-  * the store's manifest publish. Files written by losing task attempts
-  * (speculation, retries — Spark keeps only the first successful result
-  * per partition) or by jobs that die before their manifest publishes are
-  * simply never referenced; [[IvfObjectStore.vacuum]] deletes them later.
+  * [[TaskCommitMessage]], each with its byte length. The driver thus
+  * learns the exact file set from the job result — never from a directory
+  * listing — and records it for the store's manifest publish. Files
+  * written by losing task attempts (speculation, retries — Spark keeps
+  * only the first successful result per partition) or by jobs that die
+  * before their manifest publishes are simply never referenced;
+  * [[IvfObjectStore.vacuum]] deletes them later.
   * This is the standard object-store table-format write path (no rename,
   * no listing-consistency assumption anywhere between data and commit).
   *
@@ -66,7 +67,7 @@ class ManifestCommitProtocol(jobId: String, path: String,
       "through IvfObjectStore.writeVia (did an unrelated write get routed " +
       "through it?)")
     ManifestCommitProtocol.record(
-      token, taskCommits.flatMap(_.obj.asInstanceOf[Seq[String]]))
+      token, taskCommits.flatMap(_.obj.asInstanceOf[Seq[(String, Long)]]))
   }
 
   override def abortJob(jobContext: JobContext): Unit = ()
@@ -97,8 +98,14 @@ class ManifestCommitProtocol(jobId: String, path: String,
       "ManifestCommitProtocol tracks files relative to the store root; " +
       "absolute-path writes cannot be manifest-committed")
 
-  override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage =
-    new TaskCommitMessage(added.toSeq)
+  // the writers are closed by now, so each file's length is final — the
+  // manifest records it and readers never stat or list the file
+  override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(taskContext.getConfiguration)
+    new TaskCommitMessage(
+      added.toSeq.map(rel => rel -> fs.getFileStatus(new Path(root, rel)).getLen))
+  }
 
   // files of an aborted attempt stay on disk unreferenced — deleting here
   // would race the winning attempt's read path on eventually-consistent
@@ -113,16 +120,17 @@ object ManifestCommitProtocol {
   private[graft] val TokenKey = "graft.manifest.commit.token"
 
   private val results =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
 
-  private[operators] def record(token: String, files: Seq[String]): Unit =
+  private[operators] def record(token: String,
+                                files: Seq[(String, Long)]): Unit =
     results.put(token, files)
 
-  /** Claim (and clear) the committed file list of the job that carried
-    * `token`. Tokens are unique per write, so concurrent writers to the
-    * SAME store directory (append ∥ compact, streaming ∥ maintenance)
-    * each take exactly their own file list. */
-  private[operators] def take(token: String): Option[Seq[String]] =
+  /** Claim (and clear) the committed (file, length) list of the job that
+    * carried `token`. Tokens are unique per write, so concurrent writers
+    * to the SAME store directory (append ∥ compact, streaming ∥
+    * maintenance) each take exactly their own file list. */
+  private[operators] def take(token: String): Option[Seq[(String, Long)]] =
     Option(results.remove(token))
 }
 
@@ -135,13 +143,17 @@ object ManifestCommitProtocol {
   *     listing the live file set; "deleting" a file means leaving it out.
   *   - **no listing consistency**: readers and writers resolve state from
   *     the manifest chain, never from what a directory claims to contain.
-  *     Writers learn their own files from task commit messages. The one
-  *     listing left on the serving path — finding the newest manifest —
-  *     degrades under eventual listing to reading a slightly STALE
-  *     version: a complete, immutable snapshot (manifests reference only
-  *     already-durable files), never a torn one. Only [[vacuum]] lists
-  *     data directories, and a file a lagging listing hides is merely
-  *     collected on a later pass.
+  *     Writers learn their own files (and their lengths) from task commit
+  *     messages; readers take every data file's length and schema from
+  *     the manifest, so no data file is listed, stat'ed or
+  *     footer-inferred before its scan runs. Two listings are left on the
+  *     serving path: finding the newest manifest, which degrades under
+  *     eventual listing to reading a slightly STALE version — a complete,
+  *     immutable snapshot (manifests reference only already-durable
+  *     files), never a torn one — and a PQ store's `pq_codebook/`
+  *     directory, written once at create and never changed. Only
+  *     [[vacuum]] lists data directories, and a file a lagging listing
+  *     hides is merely collected on a later pass.
   *   - **atomic whole-object visibility, not atomic create**: each
   *     manifest carries a SHA-256 trailer; a reader that meets a torn
   *     half-written manifest (possible only on filesystems without
@@ -167,10 +179,22 @@ object ManifestCommitProtocol {
   *   manifests/v<20-digit>.manifest   immutable, SHA-256 trailer
   *   centroids/<file>.parquet         immutable data objects
   *   data/c_id=<cell>/<file>.parquet  immutable, cell-partitioned
+  *   pq_codebook/<file>.parquet       PQ stores only, written once
   * }}}
-  * The `data/` keys keep the `c_id=` partition form so a manifest-driven
+  * A manifest (format `graft-ivf-manifest v2`) holds `version`, one
+  * `tag` line per batch tag, one `schema centroid|data <json>` line per
+  * file family (the union schema of the family's files) and one
+  * `centroid|data <path> <bytes>` line per live file; [[ManifestCatalog]]
+  * plans every read from those lines alone. A v1 manifest (bare paths,
+  * no schema lines) still reads, from footers and `getFileStatus` on the
+  * driver, and the next write records what it lacked. The format only
+  * goes forward: a graft that reads only v1 takes a v2 manifest for a
+  * torn one (and its writers may delete it), so never downgrade graft on
+  * a store or mix writer versions on one — see [[ManifestCatalog$]]. The
+  * `data/` keys keep the `c_id=` partition form so a manifest-driven
   * read (`basePath` + explicit file list) yields the same cell-pruned
-  * scan shape as the directory store.
+  * scan shape — dynamic partition pruning included — as the directory
+  * store.
   *
   * Scale: the manifest holds one line per live file — with compaction
   * keeping ~1 file per cell that is √N lines (~31k at 1e9 vectors, ~2 MB
@@ -188,7 +212,8 @@ object IvfObjectStore {
   final class ManifestStoreException(msg: String)
       extends IllegalStateException(msg)
 
-  private val Header = "graft-ivf-manifest v1"
+  private val Format = "graft-ivf-manifest"
+  private val NoFiles = ManifestCatalog("centroid", "data")
   private[operators] val PublishRetries = 8
 
   /** Losing a publish is not always "the chain advanced": the winner may
@@ -206,51 +231,45 @@ object IvfObjectStore {
   private[operators] def publishBackoff(attempt: Int): Unit =
     Thread.sleep(50L << math.min(attempt, 4))
 
-  private[graft] final case class Manifest(version: Long,
-                                               centroids: Seq[String],
-                                               data: Seq[String],
-                                               tags: Set[String]) {
-    def render: String = {
-      val body = new StringBuilder
-      body.append(Header).append('\n')
-      body.append("version ").append(version).append('\n')
-      tags.toSeq.sorted.foreach(t => body.append("tag ").append(t).append('\n'))
-      centroids.sorted.foreach(c =>
-        body.append("centroid ").append(c).append('\n'))
-      data.sorted.foreach(d => body.append("data ").append(d).append('\n'))
-      val digest = sha256(body.toString) // BEFORE the trailer line mutates
-      body.append("end ").append(digest).append('\n')
-      body.toString
-    }
+  private[graft] final case class Manifest(
+      version: Long, tags: Set[String], catalog: ManifestCatalog = NoFiles) {
+    def centroids: Seq[String] = catalog.files("centroid")
+    def data: Seq[String] = catalog.files("data")
+
+    def render: String = ManifestCatalog.render(Format,
+      s"version $version" +: tags.toSeq.sorted.map("tag " + _), catalog)
+
+    /** Lengths and schemas of an earlier-format manifest filled in, so a
+      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
+    def resolved(spark: SparkSession, dir: String): Manifest =
+      copy(catalog = catalog.resolved(spark, dir))
+
+    def centroidScan(spark: SparkSession, dir: String): DataFrame =
+      catalog.scan(spark, dir, Seq("centroid"))
+        .withColumn("c_id", col("c_id").cast("long"))
+
+    /** The live data files passing `only`, with `c_id` from the partition
+      * directories; columns a file lacks read null. */
+    def dataScan(spark: SparkSession, dir: String,
+                 only: String => Boolean = _ => true): DataFrame =
+      catalog.scan(spark, dir, Seq("data"), Some(s"$dir/data"), only)
+        .withColumn("c_id", col("c_id").cast("long"))
+        .withColumn("n_id", col("n_id").cast("long"))
   }
 
-  private[operators] def sha256(s: String): String =
-    MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes(StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-
-  /** Parse + integrity-check one manifest body; None if torn/invalid. */
+  /** Parse + integrity-check one manifest body; None if torn. A body
+    * whose checksum holds but which this build cannot read throws (see
+    * [[ManifestCatalog.parse]]). */
   private[graft] def parseManifest(text: String): Option[Manifest] = {
-    val lines = text.split("\n", -1).toSeq.dropRight(
-      if (text.endsWith("\n")) 1 else 0)
-    if (lines.isEmpty || lines.head != Header) return None
-    val endIdx = lines.lastIndexWhere(_.startsWith("end "))
-    if (endIdx != lines.length - 1) return None
-    val expected = lines(endIdx).stripPrefix("end ")
-    val payload = lines.take(endIdx).mkString("", "\n", "\n")
-    if (sha256(payload) != expected) return None
     var version = -1L
-    val cents = Seq.newBuilder[String]; val data = Seq.newBuilder[String]
     val tags = Set.newBuilder[String]
-    for (l <- lines.slice(1, endIdx)) l.split(" ", 2) match {
-      case Array("version", v) => version = v.toLong
-      case Array("tag", t) => tags += t
-      case Array("centroid", c) => cents += c
-      case Array("data", d) => data += d
-      case _ => return None
+    ManifestCatalog.parse(text, Format, NoFiles) {
+      case ("version", v) => version = v.toLong
+      case ("tag", t) => tags += t
+    }.map { cat =>
+      if (version < 1) throw ManifestCatalog.unreadable(Format, "no version")
+      Manifest(version, tags.result(), cat)
     }
-    if (version < 1) return None
-    Some(Manifest(version, cents.result(), data.result(), tags.result()))
   }
 
   private[operators] def fsOf(spark: SparkSession, dir: String): FileSystem =
@@ -270,7 +289,8 @@ object IvfObjectStore {
   /** Resolve the newest VALID manifest. Listing may lag on an
     * eventually-consistent store — then this returns an older complete
     * snapshot (safe; see class doc). Torn manifests (no atomic PUT) fail
-    * their checksum and are skipped. */
+    * their checksum and are skipped; one whose checksum holds but whose
+    * format this build cannot read throws instead. */
   private[graft] def currentManifest(fs: FileSystem,
                                          dir: String): Option[Manifest] = {
     val root = new Path(s"$dir/manifests")
@@ -318,8 +338,9 @@ object IvfObjectStore {
   }
 
   /** Route a DataFrame write through [[ManifestCommitProtocol]] and hand
-    * back the store-relative paths of exactly the files the committed
-    * tasks wrote. The write runs on a FORKED child session (cloned
+    * back the store-relative paths and byte lengths of exactly the files
+    * the committed tasks wrote, with the schema they carry — what the
+    * manifest records so reads never list or infer. The write runs on a FORKED child session (cloned
     * session state, same SparkContext) so the commit-protocol conf flip
     * is invisible to the caller's session — an unrelated `df.write` on
     * the owning session during this window keeps its normal task-commit
@@ -327,7 +348,7 @@ object IvfObjectStore {
     * riding the writer options, so concurrent store writers never race
     * each other's file lists. */
   private[graft] def writeVia(df: DataFrame, outPath: String,
-                                  partitionCols: Seq[String]): Seq[String] = {
+                              partitionCols: Seq[String]): Staged = {
     import org.apache.spark.sql.GraftSqlBridge
     val isolated = GraftSqlBridge.forkSession(df.sparkSession)
     isolated.conf.set("spark.sql.sources.commitProtocolClass",
@@ -338,10 +359,12 @@ object IvfObjectStore {
       .option(ManifestCommitProtocol.TokenKey, token)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(outPath)
-    ManifestCommitProtocol.take(token).getOrElse(
+    val files = ManifestCommitProtocol.take(token).getOrElse(
       throw new ManifestStoreException(
         s"ManifestCommitProtocol recorded no commit for $outPath — " +
         "another protocol handled the write"))
+    Staged(files, StructType(
+      frame.schema.filterNot(f => partitionCols.contains(f.name))))
   }
 
   // same at-rest shape as the directory layout (GraftSimilarity
@@ -351,21 +374,11 @@ object IvfObjectStore {
   private def stageAssigned(dir: String, assigned: DataFrame,
                             pq: Option[GraftPq.PqCodebook],
                             q4: Boolean = false,
-                            b1: Boolean = false): Seq[String] =
+                            b1: Boolean = false): Staged =
     writeVia(GraftSimilarity.storedLayout(
                pq.map(GraftPq.withCw(_, assigned)).getOrElse(assigned),
                q4, b1),
-             s"$dir/data", Seq("c_id")).map(r => s"data/$r")
-
-  /** The store's PQ codebook, if one was attached at create — fixed
-    * immutable path OUTSIDE the manifest chain (it is written once and
-    * never superseded, so there is no version to track and vacuum never
-    * touches it). */
-  private[graft] def pqCodebookIfAny(spark: SparkSession,
-                                     dir: String): Option[GraftPq.PqCodebook] =
-    if (fsOf(spark, dir).exists(new Path(s"$dir/pq_codebook")))
-      Some(GraftPq.readPqCodebook(spark, dir))
-    else None
+             s"$dir/data", Seq("c_id")).under("data")
 
   /** Create the store: stage centroid + assigned objects, publish
     * manifest v1. Refuses a dir that already has a manifest chain.
@@ -388,7 +401,7 @@ object IvfObjectStore {
     }
     val cents = writeVia(index.centroids.select(
         col("c_id").cast("long").as("c_id"), col("cv")),
-      s"$dir/centroids", Nil).map(r => s"centroids/$r")
+      s"$dir/centroids", Nil).under("centroids")
     // persist the codebook across its two consumers here (folded-encode
     // collect + the at-rest write) — it is typically a LAZY train chain
     // that would otherwise run Lloyd twice
@@ -402,7 +415,8 @@ object IvfObjectStore {
         col("n_id").cast("long").as("n_id") +: col("v") +:
           col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pqP,
         q4, b1)
-      if (!publish(fs, dir, Manifest(1, cents, data, Set.empty)))
+      if (!publish(fs, dir, Manifest(1, Set.empty,
+            NoFiles.add("centroid", cents).add("data", data))))
         throw new ManifestConflict(
           s"IvfObjectStore.create: lost the v1 publish race on $dir — " +
           "another writer created the store concurrently")
@@ -444,7 +458,8 @@ object IvfObjectStore {
   /** Load the live snapshot. The assigned frame is read from the
     * manifest's EXPLICIT file list (basePath keeps the `c_id=` partition
     * column), so unreferenced/orphaned objects are invisible by
-    * construction. */
+    * construction; the manifest's lengths and schemas plan the scan, so
+    * building the frames launches no Spark job. */
   def read(spark: SparkSession, dir: String): IvfIndex = {
     val fs = fsOf(spark, dir)
     val m = currentManifest(fs, dir).getOrElse(throw new ManifestStoreException(
@@ -454,24 +469,14 @@ object IvfObjectStore {
 
   private def loadIndex(spark: SparkSession, dir: String,
                         m: Manifest): IvfIndex = {
-    val cents = spark.read
-      .parquet(m.centroids.map(r => s"$dir/$r"): _*)
-      .withColumn("c_id", col("c_id").cast("long"))
+    val cents = m.centroidScan(spark, dir)
     val assigned =
       if (m.data.isEmpty)
         cents.limit(0).select(col("c_id").as("n_id"),
                               col("cv").as("v"), col("c_id"))
-      else spark.read.option("basePath", s"$dir/data")
-        .parquet(m.data.map(r => s"$dir/$r"): _*)
-        .withColumn("c_id", col("c_id").cast("long"))
-        .withColumn("n_id", col("n_id").cast("long"))
+      else m.dataScan(spark, dir)
     IvfIndex(cents, assigned)
   }
-
-  private def loadCentroids(spark: SparkSession, dir: String,
-                            m: Manifest): DataFrame =
-    spark.read.parquet(m.centroids.map(r => s"$dir/$r"): _*)
-      .withColumn("c_id", col("c_id").cast("long"))
 
   /** Append a batch: assign against the manifest's (immutable) centroids,
     * stage the cell files, publish `v+1 = live ∪ staged`. `batchTag`
@@ -497,27 +502,25 @@ object IvfObjectStore {
     val fs = fsOf(spark, dir)
     // PQ stores auto-encode arriving batches against the stored codebook
     // (fixed immutable path, checked once per append — never retrained)
-    val pq = pqCodebookIfAny(spark, dir).map(_.persist())
-    var staged: Seq[String] = null
+    val pq = GraftPq.readPqCodebookIfAny(spark, dir)
+    var staged: Staged = null
     var stagedAgainst: Seq[String] = null
     var attempt = 0
-    try while (attempt < PublishRetries) {
+    while (attempt < PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"IvfObjectStore.append: no valid manifest under $dir — create() first"))
+        .resolved(spark, dir)
       if (batchTag.exists(m.tags.contains)) return // committed replay: no-op
       if (staged == null || stagedAgainst != m.centroids) {
-        val cents = loadCentroids(spark, dir, m)
+        val cents = m.centroidScan(spark, dir)
         // a metadata-carrying store appends metadata-carrying batches —
         // derive the store's metadata set from the snapshot's data
-        // schema, fail-loud if the batch lacks any column (the same
-        // contract as the directory layout's appendIvfStore)
+        // schema (the manifest's), fail-loud if the batch lacks any
+        // column (the same contract as the directory layout's
+        // appendIvfStore)
         val snapCols =
-          if (m.data.isEmpty) Nil
-          else
-            // one footer read — every data object shares the snapshot
-            // schema (create/compact/append all write storedLayout frames)
-            spark.read.parquet(s"$dir/${m.data.head}").columns.toSeq
+          if (m.data.isEmpty) Nil else m.dataScan(spark, dir).columns.toSeq
         val meta = GraftSimilarity.metaColsOf(snapCols)
         GraftSimilarity.requireMetaCols(meta, batch.columns.toSeq,
                                         "IvfObjectStore.append")
@@ -531,13 +534,13 @@ object IvfObjectStore {
           q4 = snapCols.contains("q4"), b1 = snapCols.contains("b1"))
         stagedAgainst = m.centroids
       }
-      val next = Manifest(m.version + 1, m.centroids, m.data ++ staged,
-                          m.tags ++ batchTag)
+      val next = Manifest(m.version + 1, m.tags ++ batchTag,
+                          m.catalog.add("data", staged))
       if (publish(fs, dir, next)) return
       healTorn(fs, dir, m.version + 1)
       publishBackoff(attempt)
       attempt += 1
-    } finally pq.foreach(_.unpersist())
+    }
     throw new ManifestConflict(
       s"IvfObjectStore.append: lost the publish race $PublishRetries " +
       s"times on $dir — serialize committers or raise retries")
@@ -558,17 +561,19 @@ object IvfObjectStore {
       s"maxFilesPerCell must be >= 1, got $maxFilesPerCell")
     val fs = fsOf(spark, dir)
     // the rewrite repairs null code words when the store carries a
-    // codebook (mergeSchema surfaces the column across generations) —
-    // compaction doubles as the PQ migration path, as on the directory
-    // layout
-    val pq = pqCodebookIfAny(spark, dir).map(_.persist())
+    // codebook (the manifest's union schema surfaces the column across
+    // generations) — compaction doubles as the PQ migration path, as on
+    // the directory layout
+    val pq = GraftPq.readPqCodebookIfAny(spark, dir)
     // staged rewrites per cell, keyed by the exact live file set merged
     var stagedFor: Map[String, (Set[String], Seq[String])] = Map.empty
+    var stages = Seq.empty[Staged]
     var attempt = 0
-    try while (attempt < PublishRetries) {
+    while (attempt < PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"IvfObjectStore.compact: no valid manifest under $dir"))
+        .resolved(spark, dir)
       val byCell = m.data.groupBy(cellOf)
       val oversized = byCell.filter(_._2.length > maxFilesPerCell)
       if (oversized.isEmpty) return 0
@@ -576,16 +581,13 @@ object IvfObjectStore {
         !stagedFor.get(cell).exists(_._1 == files.toSet)
       }
       if (toStage.nonEmpty) {
-        val merged0 = spark.read.option("basePath", s"$dir/data")
-          .option("mergeSchema", "true")
-          .parquet(toStage.values.flatten.map(r => s"$dir/$r").toSeq: _*)
-          .withColumn("c_id", col("c_id").cast("long"))
-          .withColumn("n_id", col("n_id").cast("long"))
+        val merged0 = m.dataScan(spark, dir, toStage.values.flatten.toSet)
         val merged = pq.map(GraftPq.repairCw(_, merged0)).getOrElse(merged0)
         // pq = None here: cw (when present) was just repaired above and
         // must not re-encode through the stage augment
-        val files = stageAssigned(dir, merged, None)
-        val newByCell = files.groupBy(cellOf)
+        val staged = stageAssigned(dir, merged, None)
+        stages :+= staged
+        val newByCell = staged.files.groupBy(cellOf)
         stagedFor ++= toStage.map { case (cell, live) =>
           cell -> (live.toSet, newByCell.getOrElse(cell, Seq.empty))
         }
@@ -599,12 +601,13 @@ object IvfObjectStore {
           files.filterNot(stagedFor(cell)._1.contains)
         }
       if (publish(fs, dir,
-                  Manifest(m.version + 1, m.centroids, nextData, m.tags)))
+                  Manifest(m.version + 1, m.tags,
+                           m.catalog.replace("data", nextData, stages))))
         return oversized.size
       healTorn(fs, dir, m.version + 1)
       publishBackoff(attempt)
       attempt += 1
-    } finally pq.foreach(_.unpersist())
+    }
     throw new ManifestConflict(
       s"IvfObjectStore.compact: lost the publish race $PublishRetries " +
       s"times on $dir — schedule compaction off the ingest path")
@@ -643,24 +646,22 @@ object IvfObjectStore {
     graft.GraftSession.ensureExtensions(spark)
     val fs = fsOf(spark, dir)
     val del = ids.select(col(idCol).cast("long").as("n_id")).distinct()
-    val pq = pqCodebookIfAny(spark, dir).map(_.persist())
+    val pq = GraftPq.readPqCodebookIfAny(spark, dir)
     // staged rewrites per cell, keyed by the exact live file set rewritten
     var stagedFor: Map[String, (Set[String], Seq[String])] = Map.empty
+    var stages = Seq.empty[Staged]
     var attempt = 0
-    try while (attempt < PublishRetries) {
+    while (attempt < PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"IvfObjectStore.delete: no valid manifest under $dir"))
+        .resolved(spark, dir)
       if (batchTag.exists(m.tags.contains)) return 0 // committed replay
       if (m.data.isEmpty) return 0
       // locate touched cells: ONE (n_id, c_id)-pruned scan of the live
       // file set — deleted ids can sit anywhere, so a linear skinny scan
       // is inherent; the vector bytes never load
-      val live = spark.read.option("basePath", s"$dir/data")
-        .option("mergeSchema", "true")
-        .parquet(m.data.map(r => s"$dir/$r"): _*)
-        .select(col("n_id").cast("long").as("n_id"),
-                col("c_id").cast("long").as("c_id"))
+      val live = m.dataScan(spark, dir).select("n_id", "c_id")
       val touched: Set[String] = live
         .join(ScaleHints.gated(del), Seq("n_id"), "left_semi")
         .select("c_id").distinct()
@@ -672,16 +673,13 @@ object IvfObjectStore {
         !stagedFor.get(cell).exists(_._1 == files.toSet)
       }
       if (toStage.nonEmpty) {
-        val merged = spark.read.option("basePath", s"$dir/data")
-          .option("mergeSchema", "true")
-          .parquet(toStage.values.flatten.map(r => s"$dir/$r").toSeq: _*)
-          .withColumn("c_id", col("c_id").cast("long"))
-          .withColumn("n_id", col("n_id").cast("long"))
+        val merged = m.dataScan(spark, dir, toStage.values.flatten.toSet)
           .join(ScaleHints.gated(del), Seq("n_id"), "left_anti")
         val repaired = pq.map(GraftPq.repairCw(_, merged)).getOrElse(merged)
         // pq = None: cw (when present) rides through / was just repaired
-        val files = stageAssigned(dir, repaired, None)
-        val newByCell = files.groupBy(cellOf)
+        val staged = stageAssigned(dir, repaired, None)
+        stages :+= staged
+        val newByCell = staged.files.groupBy(cellOf)
         stagedFor ++= toStage.map { case (cell, liveFiles) =>
           cell -> (liveFiles.toSet, newByCell.getOrElse(cell, Seq.empty))
         }
@@ -696,13 +694,13 @@ object IvfObjectStore {
           files.filterNot(stagedFor(cell)._1.contains)
         }
       if (publish(fs, dir,
-                  Manifest(m.version + 1, m.centroids, nextData,
-                           m.tags ++ batchTag)))
+                  Manifest(m.version + 1, m.tags ++ batchTag,
+                           m.catalog.replace("data", nextData, stages))))
         return replaced.size
       healTorn(fs, dir, m.version + 1)
       publishBackoff(attempt)
       attempt += 1
-    } finally pq.foreach(_.unpersist())
+    }
     throw new ManifestConflict(
       s"IvfObjectStore.delete: lost the publish race $PublishRetries " +
       s"times on $dir — serialize committers or raise retries")

@@ -26,6 +26,14 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   *   data/<file>.parquet               (doc_id, cluster_id, __v) rows,
   *                                     or (doc_id) tombstone slivers
   * }}}
+  * A manifest (format `graft-keepset-manifest v2`) holds `version`,
+  * `tag` lines, one `schema base|delta|tomb <json>` line per file family
+  * and one `base|delta|tomb <path> <bytes>` line per live file;
+  * [[ManifestCatalog]] plans every read from them without listing
+  * `data/` or inferring a schema. A v1 manifest (bare paths, no schema
+  * lines) still reads, and the next write records what it lacked; the
+  * format only goes forward, so never downgrade graft on a store or mix
+  * writer versions on one (see [[ManifestCatalog$]]).
   *
   * Versioning model — base ⊕ deltas, LAST-WINS per id:
   *   - [[create]] stages the full table as the BASE of v1;
@@ -62,51 +70,38 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   */
 object KeepSetStore {
 
-  private val Header = "graft-keepset-manifest v1"
+  private val Format = "graft-keepset-manifest"
+  private val NoFiles = ManifestCatalog("base", "delta", "tomb")
 
   private[graft] final case class KeepSetManifest(version: Long,
-                                                  base: Seq[String],
-                                                  deltas: Seq[String],
                                                   tags: Set[String],
-                                                  tombs: Seq[String] = Nil) {
-    def render: String = {
-      val body = new StringBuilder
-      body.append(Header).append('\n')
-      body.append("version ").append(version).append('\n')
-      tags.toSeq.sorted.foreach(t => body.append("tag ").append(t).append('\n'))
-      base.sorted.foreach(f => body.append("base ").append(f).append('\n'))
-      deltas.sorted.foreach(f => body.append("delta ").append(f).append('\n'))
-      tombs.sorted.foreach(f => body.append("tomb ").append(f).append('\n'))
-      val digest = IvfObjectStore.sha256(body.toString)
-      body.append("end ").append(digest).append('\n')
-      body.toString
-    }
+                                                  catalog: ManifestCatalog =
+                                                    NoFiles) {
+    def base: Seq[String] = catalog.files("base")
+    def deltas: Seq[String] = catalog.files("delta")
+    def tombs: Seq[String] = catalog.files("tomb")
+
+    def render: String = ManifestCatalog.render(Format,
+      s"version $version" +: tags.toSeq.sorted.map("tag " + _), catalog)
+
+    /** Lengths and schemas of an earlier-format manifest filled in, so a
+      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
+    def resolved(spark: SparkSession, dir: String): KeepSetManifest =
+      copy(catalog = catalog.resolved(spark, dir))
   }
 
+  /** Parse + integrity-check one manifest body; None if torn, a throw if
+    * its checksum holds but this build cannot read it. */
   private[graft] def parseManifest(text: String): Option[KeepSetManifest] = {
-    val lines = text.split("\n", -1).toSeq.dropRight(
-      if (text.endsWith("\n")) 1 else 0)
-    if (lines.isEmpty || lines.head != Header) return None
-    val endIdx = lines.lastIndexWhere(_.startsWith("end "))
-    if (endIdx != lines.length - 1) return None
-    val expected = lines(endIdx).stripPrefix("end ")
-    val payload = lines.take(endIdx).mkString("", "\n", "\n")
-    if (IvfObjectStore.sha256(payload) != expected) return None
     var version = -1L
-    val base = Seq.newBuilder[String]; val deltas = Seq.newBuilder[String]
-    val tombs = Seq.newBuilder[String]
     val tags = Set.newBuilder[String]
-    for (l <- lines.slice(1, endIdx)) l.split(" ", 2) match {
-      case Array("version", v) => version = v.toLong
-      case Array("tag", t) => tags += t
-      case Array("base", f) => base += f
-      case Array("delta", f) => deltas += f
-      case Array("tomb", f) => tombs += f
-      case _ => return None
+    ManifestCatalog.parse(text, Format, NoFiles) {
+      case ("version", v) => version = v.toLong
+      case ("tag", t) => tags += t
+    }.map { cat =>
+      if (version < 1) throw ManifestCatalog.unreadable(Format, "no version")
+      KeepSetManifest(version, tags.result(), cat)
     }
-    if (version < 1) return None
-    Some(KeepSetManifest(version, base.result(), deltas.result(),
-                         tags.result(), tombs.result()))
   }
 
   private[graft] def currentManifest(fs: FileSystem,
@@ -145,12 +140,12 @@ object KeepSetStore {
   }
 
   private def stage(df: DataFrame, dir: String, v: Long,
-                    idCol: String): Seq[String] =
+                    idCol: String): Staged =
     IvfObjectStore.writeVia(
       df.select(col(idCol).cast("long").as(idCol),
                 col("cluster_id").cast("long").as("cluster_id"),
                 lit(v).as("__v")),
-      s"$dir/data", Nil).map(r => s"data/$r")
+      s"$dir/data", Nil).under("data")
 
   /** Create the store from a [[GraftDedup.keepSet]]-shaped table
     * (idCol, cluster_id[, keep]) — the full table becomes v1's base.
@@ -164,7 +159,8 @@ object KeepSetStore {
         " — use increment to mutate an existing store")
     }
     val base = stage(keepSet, dir, 1L, idCol)
-    if (!publish(fs, dir, KeepSetManifest(1L, base, Nil, Set.empty)))
+    if (!publish(fs, dir, KeepSetManifest(1L, Set.empty,
+                                          NoFiles.add("base", base))))
       throw new ManifestConflict(
         s"KeepSetStore.create: lost the v1 publish race on $dir")
     1L
@@ -172,8 +168,7 @@ object KeepSetStore {
 
   private def resolveFrom(spark: SparkSession, dir: String,
                           m: KeepSetManifest, idCol: String): DataFrame = {
-    val all = spark.read.parquet(
-      (m.base ++ m.deltas).map(r => s"$dir/$r"): _*)
+    val all = m.catalog.scan(spark, dir, Seq("base", "delta"))
     val lbl =
       if (m.deltas.isEmpty) all.select(col(idCol), col("cluster_id"))
       else all
@@ -186,7 +181,7 @@ object KeepSetStore {
     val masked =
       if (m.tombs.isEmpty) lbl
       else lbl.join(
-        broadcast(spark.read.parquet(m.tombs.map(r => s"$dir/$r"): _*)
+        broadcast(m.catalog.scan(spark, dir, Seq("tomb"))
           .select(col(idCol)).distinct()),
         Seq(idCol), "left_anti")
     masked.withColumn("keep", col(idCol) === col("cluster_id"))
@@ -255,14 +250,14 @@ object KeepSetStore {
       s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as the " +
       "sibling stores)"))
     val fs = IvfObjectStore.fsOf(spark, dir)
-    var staged: Seq[String] = null
+    var staged: Staged = null
     var stagedAgainst: Seq[String] = null
     var attempt = 0
     while (attempt < IvfObjectStore.PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"KeepSetStore.increment: no valid manifest under $dir — " +
-          "create() first"))
+          "create() first")).resolved(spark, dir)
       if (batchTag.exists(m.tags.contains)) return m.version // replay
       val liveFiles = m.base ++ m.deltas ++ m.tombs
       if (staged == null || stagedAgainst != liveFiles) {
@@ -310,8 +305,8 @@ object KeepSetStore {
           stagedAgainst = liveFiles
         } finally { remap.unpersist(); prevLbl.unpersist() }
       }
-      val next = KeepSetManifest(m.version + 1, m.base, m.deltas ++ staged,
-                                 m.tags ++ batchTag, m.tombs)
+      val next = KeepSetManifest(m.version + 1, m.tags ++ batchTag,
+                                 m.catalog.add("delta", staged))
       if (publish(fs, dir, next)) return next.version
       healTorn(fs, dir, m.version + 1)
       IvfObjectStore.publishBackoff(attempt)
@@ -336,7 +331,7 @@ object KeepSetStore {
   def compact(spark: SparkSession, dir: String,
               idCol: String = "doc_id"): Long = {
     val fs = IvfObjectStore.fsOf(spark, dir)
-    var staged: Seq[String] = null
+    var staged: Staged = null
     var stagedAgainst: Seq[String] = null
     var attempt = 0
     while (attempt < IvfObjectStore.PublishRetries) {
@@ -350,8 +345,8 @@ object KeepSetStore {
                        m.version + 1, idCol)
         stagedAgainst = liveFiles
       }
-      if (publish(fs, dir, KeepSetManifest(m.version + 1, staged, Nil,
-                                           m.tags)))
+      if (publish(fs, dir, KeepSetManifest(m.version + 1, m.tags,
+                                           NoFiles.add("base", staged))))
         return m.version + 1
       healTorn(fs, dir, m.version + 1)
       IvfObjectStore.publishBackoff(attempt)
@@ -391,20 +386,20 @@ object KeepSetStore {
     val fs = IvfObjectStore.fsOf(spark, dir)
     // the tombstone sliver is snapshot-independent (just the id set) —
     // stage once, retry only the publish
-    var staged: Seq[String] = null
+    var staged: Staged = null
     var attempt = 0
     while (attempt < IvfObjectStore.PublishRetries) {
       val m = currentManifest(fs, dir).getOrElse(
         throw new ManifestStoreException(
           s"KeepSetStore.delete: no valid manifest under $dir — " +
-          "create() first"))
+          "create() first")).resolved(spark, dir)
       if (batchTag.exists(m.tags.contains)) return m.version // replay
       if (staged == null)
         staged = IvfObjectStore.writeVia(
           ids.select(col(idCol).cast("long").as(idCol)).distinct(),
-          s"$dir/data", Nil).map(r => s"data/$r")
-      val next = KeepSetManifest(m.version + 1, m.base, m.deltas,
-                                 m.tags ++ batchTag, m.tombs ++ staged)
+          s"$dir/data", Nil).under("data")
+      val next = KeepSetManifest(m.version + 1, m.tags ++ batchTag,
+                                 m.catalog.add("tomb", staged))
       if (publish(fs, dir, next)) return next.version
       healTorn(fs, dir, m.version + 1)
       IvfObjectStore.publishBackoff(attempt)
