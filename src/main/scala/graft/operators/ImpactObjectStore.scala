@@ -1,31 +1,17 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import ImpactIndex.StoredImpacts
-import IvfObjectStore.{ManifestConflict, ManifestStoreException}
+import ManifestLog.{Publish, writeVia}
 
 /** The OBJECT-STORE layout of the at-rest BM25 impact index — the lexical
   * twin of [[IvfObjectStore]] (VERDICT r14 missing #2: the directory-layout
   * [[ImpactIndex]] gates on the rename-commit filesystem contract, so an
-  * S3-class deployment could serve vectors but not BM25). Same substrate
-  * guarantees, restated briefly (the full argument lives on
-  * [[IvfObjectStore]]'s class doc):
-  *
-  *   - **no rename**: bucket/summary files are written once, directly to
-  *     their final keys, by [[ManifestCommitProtocol]]; mutation =
-  *     publishing a new immutable manifest version listing the live set;
-  *   - **no listing consistency**: readers resolve state from the manifest
-  *     chain (writers learn their own files from task commit messages),
-  *     and take every file's length and schema from it — the only
-  *     listing a read makes finds the newest manifest, and a lagging one
-  *     serves a slightly stale COMPLETE snapshot;
-  *   - **torn-manifest safety**: SHA-256 trailer; an invalid manifest is
-  *     skipped and the previous version serves.
+  * S3-class deployment could serve vectors but not BM25). A store on the
+  * [[ManifestLog]], whose scaladoc gives the substrate argument.
   *
   * Mutations are [[rebuild]] and [[delete]] — the honest BM25 lifecycle
   * ([[ImpactIndex]]'s scaladoc: every addend bakes in global df/N/avgdl,
@@ -54,14 +40,12 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   * `impact|term|tomb <path> <bytes>` line per live file, from which
   * [[ManifestCatalog]] plans every read without a Spark job. A v1
   * manifest (bare paths, no schema lines) still reads, and the next
-  * write records what it lacked; the format only goes forward, so never
-  * downgrade graft on a store or mix writer versions on one (see
-  * [[ManifestCatalog$]]). The
-  * `__bkt=` partition form is kept so a manifest-driven read
-  * (`basePath` + explicit file list) plans the same literal bucket-pruned
-  * scan as the directory store — [[ImpactIndex.StoredImpacts.impactsFor]]
-  * and both serve paths ([[ImpactIndex.bm25TopKStored]] /
-  * [[ImpactIndex.bm25TopKPruned]]) run VERBATIM on either substrate.
+  * write records what it lacked. The `__bkt=` partition form is kept so
+  * a manifest-driven read (`basePath` + explicit file list) plans the
+  * same literal bucket-pruned scan as the directory store —
+  * [[ImpactIndex.StoredImpacts.impactsFor]] and both serve paths
+  * ([[ImpactIndex.bm25TopKStored]] / [[ImpactIndex.bm25TopKPruned]]) run
+  * VERBATIM on either substrate.
   *
   * Scale: one manifest line per live file — `buckets` impact files plus a
   * handful of summary files after each rebuild, driver-trivial text read
@@ -69,86 +53,37 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   * ages them out (the refresh-cadence knob: yesterday's idf snapshot
   * serves while today's builds, and the publish flips readers atomically).
   */
-object ImpactObjectStore {
+object ImpactObjectStore extends ManifestStore {
+  type M = ImpactManifest
 
-  private val Format = "graft-impact-manifest"
-  private val NoFiles = ManifestCatalog("impact", "term", "tomb")
+  protected val name = "ImpactObjectStore"
+  protected val format = "graft-impact-manifest"
+  protected val noFiles: ManifestCatalog = ManifestCatalog("impact", "term", "tomb")
+  protected val dataRoots = Seq("impacts", "terms", "tombstones")
+  override protected val fieldKeys = Set("k1", "b", "buckets")
 
   private[graft] final case class ImpactManifest(version: Long, k1: Double,
                                                  b: Double, buckets: Int,
-                                                 tags: Seq[String] = Nil,
+                                                 tags: Set[String] = Set.empty,
                                                  catalog: ManifestCatalog =
-                                                   NoFiles) {
+                                                   noFiles)
+      extends ManifestEntry {
+    protected def format: String = ImpactObjectStore.format
+    override def fields: Seq[(String, String)] =
+      Seq("k1" -> k1.toString, "b" -> b.toString, "buckets" -> buckets.toString)
     def impacts: Seq[String] = catalog.files("impact")
     def terms: Seq[String] = catalog.files("term")
     def tombs: Seq[String] = catalog.files("tomb")
-
-    def render: String = ManifestCatalog.render(Format,
-      Seq(s"version $version", s"k1 $k1", s"b $b", s"buckets $buckets") ++
-        tags.sorted.map("tag " + _), catalog)
-
-    /** Lengths and schemas of an earlier-format manifest filled in, so a
-      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
-    def resolved(spark: SparkSession, dir: String): ImpactManifest =
-      copy(catalog = catalog.resolved(spark, dir))
   }
 
-  /** Parse + integrity-check one manifest body; None if torn, a throw if
-    * its checksum holds but this build cannot read it. */
-  private[graft] def parseManifest(text: String): Option[ImpactManifest] = {
-    var version = -1L; var k1 = Double.NaN; var b = Double.NaN
-    var buckets = -1
-    val tags = Seq.newBuilder[String]
-    ManifestCatalog.parse(text, Format, NoFiles) {
-      case ("version", v) => version = v.toLong
-      case ("k1", v) => k1 = v.toDouble
-      case ("b", v) => b = v.toDouble
-      case ("buckets", v) => buckets = v.toInt
-      case ("tag", t) => tags += t
-    }.map { cat =>
-      if (version < 1 || k1.isNaN || b.isNaN || buckets < 1)
-        throw ManifestCatalog.unreadable(Format, "missing version/k1/b/buckets")
-      ImpactManifest(version, k1, b, buckets, tags.result(), cat)
+  protected def build(version: Long, tags: Set[String],
+                      fields: Map[String, String],
+                      catalog: ManifestCatalog): ImpactManifest =
+    (fields.get("k1"), fields.get("b"), fields.get("buckets").map(_.toInt)) match {
+      case (Some(k1), Some(b), Some(buckets)) if buckets >= 1 =>
+        ImpactManifest(version, k1.toDouble, b.toDouble, buckets, tags, catalog)
+      case _ => throw ManifestCatalog.unreadable(format, "missing k1/b/buckets")
     }
-  }
-
-  private[graft] def currentManifest(fs: FileSystem,
-                                     dir: String): Option[ImpactManifest] = {
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return None
-    fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .sortBy(_.getPath.getName)(Ordering[String].reverse)
-      .iterator
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .nextOption()
-  }
-
-  private def publish(fs: FileSystem, dir: String,
-                      m: ImpactManifest): Boolean = {
-    val p = new Path(f"$dir/manifests/v${m.version}%020d.manifest")
-    fs.mkdirs(p.getParent)
-    val out =
-      try fs.create(p, false)
-      catch { case _: java.io.IOException => return false }
-    try out.write(m.render.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    true
-  }
-
-  /** Same torn-slot healing as the vector twin: a version file that fails
-    * its checksum and is older than the grace was left by a dead writer
-    * and squats on the slot — delete it so the next publish can land. */
-  private def healTorn(fs: FileSystem, dir: String, version: Long): Unit = {
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    try {
-      val st = fs.getFileStatus(p)
-      if (st.getModificationTime < System.currentTimeMillis() -
-            IvfObjectStore.TornManifestGraceMs &&
-          parseManifest(IvfObjectStore.readFully(fs, p)).isEmpty)
-        fs.delete(p, false)
-    } catch { case _: java.io.FileNotFoundException => }
-  }
 
   /** (Re)build the store from `docs` and publish it as the next manifest
     * version — v1 on an empty dir, v+1 over an existing chain, in either
@@ -158,17 +93,17 @@ object ImpactObjectStore {
     * ([[TextRank.bm25Impacts]]) exactly as [[ImpactIndex.write]] — same
     * bucket key, same file-level __term sort, same summary — so at-rest
     * bytes are bit-equal across the two layouts and the
-    * `text_bm25_topk` oracle certifies the serve verbatim. Returns the
-    * published version.
+    * `text_bm25_topk` oracle certifies the serve verbatim. The head's
+    * tags carry forward, so a committed tagged batch still replays as a
+    * no-op after a rebuild. Returns the published version.
     */
-  def rebuild(docs: org.apache.spark.sql.DataFrame, dir: String,
+  def rebuild(docs: DataFrame, dir: String,
               idCol: String = "doc_id", textCol: String = "text",
               k1: Double = 1.2, b: Double = 0.75,
               buckets: Int = 64): Long = {
     require(buckets >= 1,
       s"ImpactObjectStore.rebuild: buckets must be >= 1, got $buckets")
     val spark = docs.sparkSession
-    val fs = IvfObjectStore.fsOf(spark, dir)
     val imp = TextRank.bm25Impacts(
         docs.select(col(idCol).cast("long").as("doc_id"), col(textCol)),
         "doc_id", textCol, k1, b, termGate = None)
@@ -180,9 +115,9 @@ object ImpactObjectStore {
     // ImpactIndex.write twin)
     val impWide = ScaleHints.writeWidth(imp, col("__bkt"))
       .sortWithinPartitions("__bkt", "__term", "doc_id")
-    val impStaged = IvfObjectStore.writeVia(impWide, s"$dir/impacts",
+    val impStaged = writeVia(impWide, s"$dir/impacts",
       Seq("__bkt")).under("impacts")
-    val staged = NoFiles.add("impact", impStaged)
+    val staged = noFiles.add("impact", impStaged)
     // the per-term bound table aggregates the WRITTEN bytes (one at-rest
     // scan of exactly the staged files), as on the directory layout
     val termsDf =
@@ -190,24 +125,16 @@ object ImpactObjectStore {
       else staged.scan(spark, dir, Seq("impact"), Some(s"$dir/impacts"))
         .groupBy("__term")
         .agg(count(lit(1)).as("__df"), max(col("__a")).as("__maxa"))
-    val termStaged = IvfObjectStore.writeVia(termsDf, s"$dir/terms", Nil)
+    val termStaged = writeVia(termsDf, s"$dir/terms", Nil)
       .under("terms")
-    val catalog = staged.add("term", termStaged)
-    var attempt = 0
-    while (attempt < IvfObjectStore.PublishRetries) {
-      val next = currentManifest(fs, dir).map(_.version + 1).getOrElse(1L)
-      val m = ImpactManifest(next, k1, b, buckets, catalog = catalog)
-      if (publish(fs, dir, m)) return next
-      // staged files are corpus content — chain-independent — so the
-      // retry re-publishes the same set under the advanced slot
-      healTorn(fs, dir, next)
-      IvfObjectStore.publishBackoff(attempt)
-      attempt += 1
+    val fresh = ImpactManifest(0, k1, b, buckets,
+                               catalog = staged.add("term", termStaged))
+    // staged files are corpus content — chain-independent — so a retry
+    // re-publishes the same set under the advanced slot
+    commit(spark, dir, "rebuild", unchanged = _.version,
+           empty = Some(fresh.copy(catalog = noFiles))) { m =>
+      Publish(fresh, m.version + 1)
     }
-    throw new ManifestConflict(
-      s"ImpactObjectStore.rebuild: lost the publish race " +
-      s"${IvfObjectStore.PublishRetries} times on $dir — serialize " +
-      "rebuilds or raise retries")
   }
 
   /** Mask documents out of the served index — the takedown/opt-out path
@@ -233,71 +160,26 @@ object ImpactObjectStore {
     * is the safe direction (the next rebuild purges). Returns the
     * published version (the current one on a tag replay).
     */
-  def delete(spark: SparkSession, dir: String,
-             ids: org.apache.spark.sql.DataFrame,
+  def delete(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "doc_id",
              batchTag: Option[String] = None): Long = {
-    batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (silent sanitization " +
-      "could collide two tags)"))
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val pre = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"ImpactObjectStore.delete: no valid manifest under $dir"))
-    if (batchTag.exists(pre.tags.contains)) return pre.version
     // one O(ids) sliver, staged once — chain-independent content, so a
     // publish-conflict retry re-lists the SAME file under the next slot
-    val tombStaged = IvfObjectStore.writeVia(
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
-      s"$dir/tombstones", Nil).under("tombstones")
-    var attempt = 0
-    while (attempt < IvfObjectStore.PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"ImpactObjectStore.delete: manifest chain vanished under $dir"))
-        .resolved(spark, dir)
-      if (batchTag.exists(m.tags.contains)) return m.version
-      val next = m.version + 1
-      if (publish(fs, dir, m.copy(version = next, tags = m.tags ++ batchTag,
-                                  catalog = m.catalog.add("tomb", tombStaged))))
-        return next
-      healTorn(fs, dir, next)
-      IvfObjectStore.publishBackoff(attempt)
-      attempt += 1
+    var tombStaged: Staged = null
+    commit(spark, dir, "delete", unchanged = _.version, tag = batchTag) { m =>
+      if (tombStaged == null)
+        tombStaged = writeVia(
+          ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
+          s"$dir/tombstones", Nil).under("tombstones")
+      Publish(m.copy(catalog = m.catalog.add("tomb", tombStaged)), m.version + 1)
     }
-    throw new ManifestConflict(
-      s"ImpactObjectStore.delete: lost the publish race " +
-      s"${IvfObjectStore.PublishRetries} times on $dir — serialize " +
-      "committers or raise retries")
-  }
-
-  /** All valid manifest versions still on disk, ascending — the
-    * time-travel window (every version is a complete immutable snapshot;
-    * [[vacuum]] bounds it). */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .map(_.version).toSeq.sorted
   }
 
   /** Serve the snapshot as of manifest `version` — yesterday's idf, if
     * yesterday is still inside the vacuum window. */
   def readAt(spark: SparkSession, dir: String, version: Long)
-      : StoredImpacts = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    val m = (if (fs.exists(p))
-               parseManifest(IvfObjectStore.readFully(fs, p))
-             else None)
-      .getOrElse(throw new ManifestStoreException(
-        s"ImpactObjectStore.readAt: no valid manifest v$version under " +
-        s"$dir — readable versions: ${versions(spark, dir).mkString(", ")}"))
-    load(spark, dir, m)
-  }
+      : StoredImpacts =
+    loadIndex(spark, dir, at(spark, dir, version))
 
   /** Streaming opt-out twin of [[delete]] (r16 — the
     * [[IvfObjectStore.deleteStream]] contract on the lexical store): an
@@ -307,32 +189,18 @@ object ImpactObjectStore {
     * opted-out doc's postings stop serving at the NEXT read after its
     * batch commits — takedown latency is one micro-batch, the purge
     * remains [[rebuild]] on its own cadence. */
-  def deleteStream(dir: String, ids: org.apache.spark.sql.DataFrame,
-                   streamId: String, idCol: String = "doc_id")
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    graft.GraftSession.ensureExtensions(ids.sparkSession)
-    ids.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        delete(batch.sparkSession, dir, batch.select(col(idCol)), idCol,
-               batchTag = Some(s"${streamId}_d$batchId"))
-        ()
+  def deleteStream(dir: String, ids: DataFrame, streamId: String,
+                   idCol: String = "doc_id"): DataStreamWriter[Row] =
+    taggedStream(ids, streamId, "d") { (batch, tag) =>
+      delete(batch.sparkSession, dir, batch.select(col(idCol)), idCol,
+             batchTag = tag)
     }
-  }
 
   /** Load the live snapshot as a [[ImpactIndex.StoredImpacts]] handle —
     * the SAME serve surface as the directory layout, so
     * `bm25TopKStored` / `bm25TopKPruned` / `impactsFor` run verbatim. */
-  def read(spark: SparkSession, dir: String): StoredImpacts = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val m = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"ImpactObjectStore.read: no valid manifest under $dir"))
-    load(spark, dir, m)
-  }
+  def read(spark: SparkSession, dir: String): StoredImpacts =
+    loadIndex(spark, dir, head(spark, dir))
 
   private def emptyImpacts(spark: SparkSession) =
     spark.range(0).select(lit("").as("__term"), col("id").as("doc_id"),
@@ -342,8 +210,8 @@ object ImpactObjectStore {
     spark.range(0).select(lit("").as("__term"), col("id").as("__df"),
                           col("id").as("__maxa"))
 
-  private def load(spark: SparkSession, dir: String,
-                   m: ImpactManifest): StoredImpacts = {
+  private def loadIndex(spark: SparkSession, dir: String,
+                        m: ImpactManifest): StoredImpacts = {
     // explicit manifest file lists; basePath keeps __bkt as a partition
     // column so impactsFor's literal bucket predicates still prune files
     val impacts =
@@ -366,54 +234,5 @@ object ImpactObjectStore {
             .select(col("doc_id").cast("long").as("doc_id")).distinct()),
         Seq("doc_id"), "left_anti")
     StoredImpacts(masked, terms, m.buckets, m.k1, m.b)
-  }
-
-  /** Delete data objects NO surviving manifest references and that are
-    * older than `olderThanMs` (orphans of crashed/raced builds, files of
-    * superseded rebuilds, applied tombstone slivers), plus superseded
-    * manifest versions past the bound — the time-travel retention knob.
-    * The manifest sweep runs FIRST, and the live set is the union over
-    * every manifest that remains readable (ADVICE r15: sweeping data by
-    * the current manifest alone could delete a file a retained older
-    * manifest still serves — staging time precedes publish time — making
-    * [[readAt]] advertise a version whose data is gone). Returns objects
-    * deleted. */
-  def vacuum(spark: SparkSession, dir: String, olderThanMs: Long): Int = {
-    require(olderThanMs > 0, s"olderThanMs must be positive: $olderThanMs")
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val cur = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"ImpactObjectStore.vacuum: no valid manifest under $dir"))
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    var deleted = 0
-    val mRoot = new Path(s"$dir/manifests")
-    for (st <- fs.listStatus(mRoot)
-           if st.isFile && st.getModificationTime < cutoff &&
-              st.getPath.getName.matches("v\\d{20}\\.manifest") &&
-              st.getPath.getName < f"v${cur.version}%020d.manifest") {
-      fs.delete(st.getPath, false); deleted += 1
-    }
-    val live: Set[String] = fs.listStatus(mRoot)
-      .filter(f => f.isFile &&
-                   f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .flatMap(m => m.impacts ++ m.terms ++ m.tombs)
-      .toSet
-    val root = new Path(dir)
-    def sweep(sub: String): Unit = {
-      val p = new Path(root, sub)
-      if (!fs.exists(p)) return
-      for (st <- fs.listStatus(p)) {
-        if (st.isDirectory) sweep(s"$sub/${st.getPath.getName}")
-        else if (st.getModificationTime < cutoff) {
-          val rel = s"$sub/${st.getPath.getName}"
-          if (!live.contains(rel)) {
-            fs.delete(st.getPath, false); deleted += 1
-          }
-        }
-      }
-    }
-    sweep("impacts"); sweep("terms"); sweep("tombstones")
-    deleted
   }
 }

@@ -1,178 +1,18 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
-import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
-import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import GraftSimilarity.IvfIndex
+import ManifestLog.{Publish, Unchanged, writeVia}
 
-/** Direct-write commit protocol for [[IvfObjectStore]]: tasks write their
-  * parquet files STRAIGHT to the final location (no `_temporary`, no
-  * task/job commit renames — the two things an object store cannot do
-  * atomically) under names made unique per attempt by a random UUID, and
-  * report the relative paths they wrote back to the driver through their
-  * [[TaskCommitMessage]], each with its byte length. The driver thus
-  * learns the exact file set from the job result — never from a directory
-  * listing — and records it for the store's manifest publish. Files
-  * written by losing task attempts (speculation, retries — Spark keeps
-  * only the first successful result per partition) or by jobs that die
-  * before their manifest publishes are simply never referenced;
-  * [[IvfObjectStore.vacuum]] deletes them later.
-  * This is the standard object-store table-format write path (no rename,
-  * no listing-consistency assumption anywhere between data and commit).
-  *
-  * Instantiated reflectively by Spark via
-  * `spark.sql.sources.commitProtocolClass`; the companion hands each
-  * job's committed file list back to the caller keyed by a per-write
-  * UUID token carried in the writer options (never by output path —
-  * concurrent writers to one store directory must not race the handoff).
-  */
-class ManifestCommitProtocol(jobId: String, path: String,
-                             dynamicPartitionOverwrite: Boolean)
-    extends FileCommitProtocol with Serializable {
-
-  def this(jobId: String, path: String) = this(jobId, path, false)
-
-  require(!dynamicPartitionOverwrite,
-    "ManifestCommitProtocol is append-only: overwrite semantics live in " +
-    "the manifest (publish a version without the replaced files), not in " +
-    "the filesystem")
-
-  // task-side buffer of store-relative paths this attempt wrote
-  @transient private var added: ArrayBuffer[String] = _
-
-  override def setupJob(jobContext: JobContext): Unit = ()
-
-  override def commitJob(jobContext: JobContext,
-                         taskCommits: Seq[TaskCommitMessage]): Unit = {
-    // The handoff is keyed by the per-write token [[IvfObjectStore]] put in
-    // the writer options (which Spark folds into the job's Hadoop conf) —
-    // NEVER by output path: two concurrent writers to the same store (the
-    // advertised append+compact / streaming+maintenance mode) both target
-    // `$dir/data`, and path-keying would let one writer publish the
-    // other's files under its own tag while its own staged files are
-    // orphaned. A token collision is impossible (UUID per write).
-    val token = jobContext.getConfiguration.get(ManifestCommitProtocol.TokenKey)
-    require(token != null && token.nonEmpty,
-      "ManifestCommitProtocol: no " + ManifestCommitProtocol.TokenKey +
-      " in the job conf — this protocol is only valid for writes issued " +
-      "through IvfObjectStore.writeVia (did an unrelated write get routed " +
-      "through it?)")
-    ManifestCommitProtocol.record(
-      token, taskCommits.flatMap(_.obj.asInstanceOf[Seq[(String, Long)]]))
-  }
-
-  override def abortJob(jobContext: JobContext): Unit = ()
-  override def setupTask(taskContext: TaskAttemptContext): Unit =
-    added = ArrayBuffer.empty[String]
-
-  override def newTaskTempFile(taskContext: TaskAttemptContext,
-                               dir: Option[String],
-                               spec: FileNameSpec): String = {
-    val split = taskContext.getTaskAttemptID.getTaskID.getId
-    // UUID per file: two attempts of one task write DISTINCT objects, so
-    // the losing attempt can never clobber the winner's bytes mid-read
-    val name = f"${spec.prefix}part-$split%05d-${java.util.UUID.randomUUID}" +
-      spec.suffix
-    val rel = dir.map(d => s"$d/$name").getOrElse(name)
-    added += rel
-    new Path(new Path(path), rel).toString
-  }
-
-  override def newTaskTempFile(taskContext: TaskAttemptContext,
-                               dir: Option[String], ext: String): String =
-    newTaskTempFile(taskContext, dir, FileNameSpec("", ext))
-
-  override def newTaskTempFileAbsPath(taskContext: TaskAttemptContext,
-                                      absoluteDir: String,
-                                      ext: String): String =
-    throw new UnsupportedOperationException(
-      "ManifestCommitProtocol tracks files relative to the store root; " +
-      "absolute-path writes cannot be manifest-committed")
-
-  // the writers are closed by now, so each file's length is final — the
-  // manifest records it and readers never stat or list the file
-  override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(taskContext.getConfiguration)
-    new TaskCommitMessage(
-      added.toSeq.map(rel => rel -> fs.getFileStatus(new Path(root, rel)).getLen))
-  }
-
-  // files of an aborted attempt stay on disk unreferenced — deleting here
-  // would race the winning attempt's read path on eventually-consistent
-  // stores for zero benefit; vacuum() collects them
-  override def abortTask(taskContext: TaskAttemptContext): Unit = ()
-}
-
-object ManifestCommitProtocol {
-  /** Writer-option key carrying the per-write handoff token; Spark copies
-    * writer options into the write job's Hadoop conf, which is where
-    * [[ManifestCommitProtocol.commitJob]] reads it back. */
-  private[graft] val TokenKey = "graft.manifest.commit.token"
-
-  private val results =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
-  private[operators] def record(token: String,
-                                files: Seq[(String, Long)]): Unit =
-    results.put(token, files)
-
-  /** Claim (and clear) the committed (file, length) list of the job that
-    * carried `token`. Tokens are unique per write, so concurrent writers
-    * to the SAME store directory (append ∥ compact, streaming ∥
-    * maintenance) each take exactly their own file list. */
-  private[operators] def take(token: String): Option[Seq[(String, Long)]] =
-    Option(results.remove(token))
-}
-
-/** The OBJECT-STORE layout of the at-rest IVF index: a manifest-committed
-  * store that assumes NOTHING an object store cannot give —
-  *
-  *   - **no rename**: data/centroid files are written once, directly to
-  *     their final keys, by [[ManifestCommitProtocol]]; nothing is ever
-  *     moved. Mutation = publishing a NEW immutable manifest version
-  *     listing the live file set; "deleting" a file means leaving it out.
-  *   - **no listing consistency**: readers and writers resolve state from
-  *     the manifest chain, never from what a directory claims to contain.
-  *     Writers learn their own files (and their lengths) from task commit
-  *     messages; readers take every data file's length and schema from
-  *     the manifest, so no data file is listed, stat'ed or
-  *     footer-inferred before its scan runs. Two listings are left on the
-  *     serving path: finding the newest manifest, which degrades under
-  *     eventual listing to reading a slightly STALE version — a complete,
-  *     immutable snapshot (manifests reference only already-durable
-  *     files), never a torn one — and a PQ store's `pq_codebook/`
-  *     directory, written once at create and never changed. Only
-  *     [[vacuum]] lists data directories, and a file a lagging listing
-  *     hides is merely collected on a later pass.
-  *   - **atomic whole-object visibility, not atomic create**: each
-  *     manifest carries a SHA-256 trailer; a reader that meets a torn
-  *     half-written manifest (possible only on filesystems without
-  *     all-or-nothing object PUT) rejects it and falls back to the
-  *     previous version.
-  *
-  * Concurrent COMMITTERS are serialized optimistically: version `n+1` is
-  * published with create-if-absent, and a loser re-reads the chain and
-  * retries on top of the winner ([[ManifestConflict]] after bounded
-  * retries). On stores exposing conditional PUT (S3 `If-None-Match`, GCS
-  * generation preconditions) that check is atomic; elsewhere run one
-  * committer at a time — concurrent READERS are always safe either way.
-  * Crash windows: dying before publish leaves orphaned data files (no
-  * reader ever sees them; [[vacuum]] deletes them); dying after publish
-  * IS the commit. There is no window where a reader can observe a
-  * half-applied mutation, which is what the rename-based
-  * [[GraftSimilarity.writeIvfIndex]] layout could not promise off HDFS —
-  * hence its filesystem-contract gate refuses object stores while THIS
-  * layout is the supported way to run the mutable store on them.
+/** The OBJECT-STORE layout of the at-rest IVF index: a store on the
+  * [[ManifestLog]], whose scaladoc gives the substrate argument (no
+  * rename, no listing consistency, torn-manifest fallback, the optimistic
+  * version race, crash windows, the format rule). Mutations are
+  * [[append]], [[compact]] and [[delete]]; [[readAt]]/[[versions]] time
+  * travel and [[vacuum]] bounds the window.
   *
   * Layout under `dir`:
   * {{{
@@ -187,11 +27,10 @@ object ManifestCommitProtocol {
   * `centroid|data <path> <bytes>` line per live file; [[ManifestCatalog]]
   * plans every read from those lines alone. A v1 manifest (bare paths,
   * no schema lines) still reads, from footers and `getFileStatus` on the
-  * driver, and the next write records what it lacked. The format only
-  * goes forward: a graft that reads only v1 takes a v2 manifest for a
-  * torn one (and its writers may delete it), so never downgrade graft on
-  * a store or mix writer versions on one — see [[ManifestCatalog$]]. The
-  * `data/` keys keep the `c_id=` partition form so a manifest-driven
+  * driver, and the next write records what it lacked. Two listings are
+  * left on the serving path: the newest manifest and a PQ store's
+  * `pq_codebook/` directory, written once at create and never changed.
+  * The `data/` keys keep the `c_id=` partition form so a manifest-driven
   * read (`basePath` + explicit file list) yields the same cell-pruned
   * scan shape — dynamic partition pruning included — as the directory
   * store.
@@ -202,47 +41,20 @@ object ManifestCommitProtocol {
   * session. Appends cost one manifest rewrite each; batch sizes at 100 TB
   * ingest are minutes apart, not per-record.
   */
-object IvfObjectStore {
+object IvfObjectStore extends ManifestStore {
+  type M = Manifest
 
-  /** Bounded-retry loser of the optimistic manifest race. */
-  final class ManifestConflict(msg: String)
-      extends IllegalStateException(msg)
-
-  /** Store corruption / misuse distinct from racing ([[ManifestConflict]]). */
-  final class ManifestStoreException(msg: String)
-      extends IllegalStateException(msg)
-
-  private val Format = "graft-ivf-manifest"
-  private val NoFiles = ManifestCatalog("centroid", "data")
-  private[operators] val PublishRetries = 8
-
-  /** Losing a publish is not always "the chain advanced": the winner may
-    * still be BETWEEN create and close, so the loser's immediate re-read
-    * sees a half-written (torn-looking) manifest, falls back to the
-    * previous version, and re-targets the same squatted slot. Without a
-    * pause, the whole retry budget can burn inside the winner's write
-    * window (microseconds of loser work vs a descheduled winner's
-    * milliseconds). Exponential backoff capped at 800 ms —
-    * 50·2^min(attempt,4) ms, ~4 s total across the budget — outwaits a
-    * live writer's close even when that writer is descheduled for whole
-    * seconds on an oversubscribed host (a 5-attempt/1.5 s budget was
-    * observed losing to exactly that); genuinely dead writers are
-    * [[healTorn]]'s job after the grace. */
-  private[operators] def publishBackoff(attempt: Int): Unit =
-    Thread.sleep(50L << math.min(attempt, 4))
+  protected val name = "IvfObjectStore"
+  protected val format = "graft-ivf-manifest"
+  protected val noFiles: ManifestCatalog = ManifestCatalog("centroid", "data")
+  protected val dataRoots = Seq("centroids", "data")
 
   private[graft] final case class Manifest(
-      version: Long, tags: Set[String], catalog: ManifestCatalog = NoFiles) {
+      version: Long, tags: Set[String], catalog: ManifestCatalog = noFiles)
+      extends ManifestEntry {
+    protected def format: String = IvfObjectStore.format
     def centroids: Seq[String] = catalog.files("centroid")
     def data: Seq[String] = catalog.files("data")
-
-    def render: String = ManifestCatalog.render(Format,
-      s"version $version" +: tags.toSeq.sorted.map("tag " + _), catalog)
-
-    /** Lengths and schemas of an earlier-format manifest filled in, so a
-      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
-    def resolved(spark: SparkSession, dir: String): Manifest =
-      copy(catalog = catalog.resolved(spark, dir))
 
     def centroidScan(spark: SparkSession, dir: String): DataFrame =
       catalog.scan(spark, dir, Seq("centroid"))
@@ -257,115 +69,10 @@ object IvfObjectStore {
         .withColumn("n_id", col("n_id").cast("long"))
   }
 
-  /** Parse + integrity-check one manifest body; None if torn. A body
-    * whose checksum holds but which this build cannot read throws (see
-    * [[ManifestCatalog.parse]]). */
-  private[graft] def parseManifest(text: String): Option[Manifest] = {
-    var version = -1L
-    val tags = Set.newBuilder[String]
-    ManifestCatalog.parse(text, Format, NoFiles) {
-      case ("version", v) => version = v.toLong
-      case ("tag", t) => tags += t
-    }.map { cat =>
-      if (version < 1) throw ManifestCatalog.unreadable(Format, "no version")
-      Manifest(version, tags.result(), cat)
-    }
-  }
-
-  private[operators] def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[operators] def readFully(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
-  /** Resolve the newest VALID manifest. Listing may lag on an
-    * eventually-consistent store — then this returns an older complete
-    * snapshot (safe; see class doc). Torn manifests (no atomic PUT) fail
-    * their checksum and are skipped; one whose checksum holds but whose
-    * format this build cannot read throws instead. */
-  private[graft] def currentManifest(fs: FileSystem,
-                                         dir: String): Option[Manifest] = {
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return None
-    val candidates = fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .sortBy(_.getPath.getName)(Ordering[String].reverse)
-    candidates.iterator
-      .flatMap(f => parseManifest(readFully(fs, f.getPath)))
-      .nextOption()
-  }
-
-  /** A torn manifest (crash mid-write on a filesystem WITHOUT atomic
-    * whole-object PUT — real object stores cannot produce one) squats on
-    * its version slot: every later publish of that version fails
-    * create-if-absent while no reader ever accepts the torn bytes. Heal:
-    * a version file that fails its checksum AND is older than this grace
-    * (i.e. its writer is dead, not mid-close) is deleted by the next
-    * publisher's retry loop, freeing the slot. */
-  private[graft] val TornManifestGraceMs: Long = 60000L
-
-  private def healTorn(fs: FileSystem, dir: String, version: Long): Unit = {
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    try {
-      val st = fs.getFileStatus(p)
-      if (st.getModificationTime <
-            System.currentTimeMillis() - TornManifestGraceMs &&
-          parseManifest(readFully(fs, p)).isEmpty)
-        fs.delete(p, false)
-    } catch { case _: java.io.FileNotFoundException => }
-  }
-
-  /** Publish `m` as the next version with create-if-absent: the loser of
-    * a racing publish gets the IOException and retries on a re-read
-    * chain. */
-  private def publish(fs: FileSystem, dir: String, m: Manifest): Boolean = {
-    val p = new Path(f"$dir/manifests/v${m.version}%020d.manifest")
-    fs.mkdirs(p.getParent)
-    val out =
-      try fs.create(p, false)
-      catch { case _: java.io.IOException => return false }
-    try out.write(m.render.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    true
-  }
-
-  /** Route a DataFrame write through [[ManifestCommitProtocol]] and hand
-    * back the store-relative paths and byte lengths of exactly the files
-    * the committed tasks wrote, with the schema they carry — what the
-    * manifest records so reads never list or infer. The write runs on a FORKED child session (cloned
-    * session state, same SparkContext) so the commit-protocol conf flip
-    * is invisible to the caller's session — an unrelated `df.write` on
-    * the owning session during this window keeps its normal task-commit
-    * semantics — and the handoff is claimed by a per-write UUID token
-    * riding the writer options, so concurrent store writers never race
-    * each other's file lists. */
-  private[graft] def writeVia(df: DataFrame, outPath: String,
-                              partitionCols: Seq[String]): Staged = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val isolated = GraftSqlBridge.forkSession(df.sparkSession)
-    isolated.conf.set("spark.sql.sources.commitProtocolClass",
-                      classOf[ManifestCommitProtocol].getName)
-    val frame = GraftSqlBridge.ofRows(isolated, GraftSqlBridge.logicalPlan(df))
-    val token = java.util.UUID.randomUUID().toString
-    val w = frame.write.mode("append")
-      .option(ManifestCommitProtocol.TokenKey, token)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(outPath)
-    val files = ManifestCommitProtocol.take(token).getOrElse(
-      throw new ManifestStoreException(
-        s"ManifestCommitProtocol recorded no commit for $outPath — " +
-        "another protocol handled the write"))
-    Staged(files, StructType(
-      frame.schema.filterNot(f => partitionCols.contains(f.name))))
-  }
+  protected def build(version: Long, tags: Set[String],
+                      fields: Map[String, String],
+                      catalog: ManifestCatalog): Manifest =
+    Manifest(version, tags, catalog)
 
   // same at-rest shape as the directory layout (GraftSimilarity
   // .storedLayout): q8 serving column + n_id-sorted cell files (plus the
@@ -393,79 +100,42 @@ object IvfObjectStore {
              q4: Boolean = false,
              b1: Boolean = false): Unit = {
     graft.GraftSession.ensureExtensions(spark)
-    val fs = fsOf(spark, dir)
-    currentManifest(fs, dir).foreach { m =>
-      throw new ManifestStoreException(
-        s"IvfObjectStore.create: $dir already holds manifest v${m.version}" +
-        " — use append/compact/rewrite to mutate an existing store")
-    }
-    val cents = writeVia(index.centroids.select(
-        col("c_id").cast("long").as("c_id"), col("cv")),
-      s"$dir/centroids", Nil).under("centroids")
     // persist the codebook across its two consumers here (folded-encode
     // collect + the at-rest write) — it is typically a LAZY train chain
     // that would otherwise run Lloyd twice
     val pqP = pq.map(_.persist())
     try {
-      // metadata columns (anything beyond the layout set, incl. an
-      // already-attached q8/q4) ride into the staged cell objects — the
-      // filter columns of ivfTopKWith(where = ...) over this substrate
-      val meta = GraftSimilarity.metaColsOf(index.assigned.columns.toSeq)
-      val data = stageAssigned(dir, index.assigned.select(
-        col("n_id").cast("long").as("n_id") +: col("v") +:
-          col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pqP,
-        q4, b1)
-      if (!publish(fs, dir, Manifest(1, Set.empty,
-            NoFiles.add("centroid", cents).add("data", data))))
-        throw new ManifestConflict(
-          s"IvfObjectStore.create: lost the v1 publish race on $dir — " +
-          "another writer created the store concurrently")
+      startChain(spark, dir) {
+        val cents = writeVia(index.centroids.select(
+            col("c_id").cast("long").as("c_id"), col("cv")),
+          s"$dir/centroids", Nil).under("centroids")
+        // metadata columns (anything beyond the layout set, incl. an
+        // already-attached q8/q4) ride into the staged cell objects — the
+        // filter columns of ivfTopKWith(where = ...) over this substrate
+        val meta = GraftSimilarity.metaColsOf(index.assigned.columns.toSeq)
+        val data = stageAssigned(dir, index.assigned.select(
+          col("n_id").cast("long").as("n_id") +: col("v") +:
+            col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pqP,
+          q4, b1)
+        Manifest(1, Set.empty, noFiles.add("centroid", cents).add("data", data))
+      }
       pqP.foreach(GraftPq.writePqCodebook(_, dir))
     } finally pqP.foreach(_.unpersist())
-  }
-
-  /** All valid manifest versions still on disk, ascending — the store's
-    * TIME-TRAVEL window. Every version is an immutable complete snapshot
-    * (manifests reference only already-durable files and "deletion" is
-    * omission), so any listed version serves exactly as it did when it
-    * was current; [[vacuum]] bounds the window by deleting superseded
-    * manifests (and compacted-away data objects) older than its age
-    * bound — size retention to the history you want readable. Torn files
-    * fail their checksum and are excluded. */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = fsOf(spark, dir)
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(readFully(fs, f.getPath)))
-      .map(_.version).toSeq.sorted
   }
 
   /** Time-travel read: serve the snapshot as of manifest `version`.
     * Throws if that version is invalid or already vacuumed (see
     * [[versions]] for what is still readable). */
-  def readAt(spark: SparkSession, dir: String, version: Long): IvfIndex = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    val m = (if (fs.exists(p)) parseManifest(readFully(fs, p)) else None)
-      .getOrElse(throw new ManifestStoreException(
-        s"IvfObjectStore.readAt: no valid manifest v$version under $dir — " +
-        s"readable versions: ${versions(spark, dir).mkString(", ")}"))
-    loadIndex(spark, dir, m)
-  }
+  def readAt(spark: SparkSession, dir: String, version: Long): IvfIndex =
+    loadIndex(spark, dir, at(spark, dir, version))
 
   /** Load the live snapshot. The assigned frame is read from the
     * manifest's EXPLICIT file list (basePath keeps the `c_id=` partition
     * column), so unreferenced/orphaned objects are invisible by
     * construction; the manifest's lengths and schemas plan the scan, so
     * building the frames launches no Spark job. */
-  def read(spark: SparkSession, dir: String): IvfIndex = {
-    val fs = fsOf(spark, dir)
-    val m = currentManifest(fs, dir).getOrElse(throw new ManifestStoreException(
-      s"IvfObjectStore.read: no valid manifest under $dir"))
-    loadIndex(spark, dir, m)
-  }
+  def read(spark: SparkSession, dir: String): IvfIndex =
+    loadIndex(spark, dir, head(spark, dir))
 
   private def loadIndex(spark: SparkSession, dir: String,
                         m: Manifest): IvfIndex = {
@@ -481,9 +151,7 @@ object IvfObjectStore {
   /** Append a batch: assign against the manifest's (immutable) centroids,
     * stage the cell files, publish `v+1 = live ∪ staged`. `batchTag`
     * gives streaming replays idempotence — a tag already recorded in the
-    * manifest no-ops BEFORE any work (the tag set rides the manifest
-    * chain itself, so the check and the commit are one atomic document —
-    * no separate marker files to race). On a publish conflict the append
+    * manifest no-ops BEFORE any work. On a publish conflict the append
     * re-reads the chain and retries; its staged files stay valid because
     * assignment depends only on the centroid list, which append/compact
     * never change — if a concurrent REWRITE changed centroids, the
@@ -492,26 +160,16 @@ object IvfObjectStore {
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              idCol: String = "vec_id", vecCol: String = "v",
              batchTag: Option[String] = None): Unit = {
-    batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as the " +
-      "directory store: silent sanitization could collide two tags)"))
     // same convention as GraftSimilarity's public entry points: a fresh
     // ingest-daemon session that only reads + appends must still resolve
     // graft_cosine inside assignTo
     graft.GraftSession.ensureExtensions(spark)
-    val fs = fsOf(spark, dir)
     // PQ stores auto-encode arriving batches against the stored codebook
     // (fixed immutable path, checked once per append — never retrained)
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
     var staged: Staged = null
     var stagedAgainst: Seq[String] = null
-    var attempt = 0
-    while (attempt < PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"IvfObjectStore.append: no valid manifest under $dir — create() first"))
-        .resolved(spark, dir)
-      if (batchTag.exists(m.tags.contains)) return // committed replay: no-op
+    commit(spark, dir, "append", unchanged = _ => (), tag = batchTag) { m =>
       if (staged == null || stagedAgainst != m.centroids) {
         val cents = m.centroidScan(spark, dir)
         // a metadata-carrying store appends metadata-carrying batches —
@@ -534,16 +192,49 @@ object IvfObjectStore {
           q4 = snapCols.contains("q4"), b1 = snapCols.contains("b1"))
         stagedAgainst = m.centroids
       }
-      val next = Manifest(m.version + 1, m.tags ++ batchTag,
-                          m.catalog.add("data", staged))
-      if (publish(fs, dir, next)) return
-      healTorn(fs, dir, m.version + 1)
-      publishBackoff(attempt)
-      attempt += 1
+      Publish(m.copy(catalog = m.catalog.add("data", staged)), ())
     }
-    throw new ManifestConflict(
-      s"IvfObjectStore.append: lost the publish race $PublishRetries " +
-      s"times on $dir — serialize committers or raise retries")
+  }
+
+  /** Cell rewrites a [[compact]] or [[delete]] staged across its commit
+    * attempts: per cell, the exact live file set it rewrote and the files
+    * it wrote. A retry keeps the rewrite of every cell whose live files
+    * did not change. */
+  private final class CellRewrites(spark: SparkSession, dir: String) {
+    private var byCell = Map.empty[String, (Set[String], Seq[String])]
+    private var stages = Seq.empty[Staged]
+
+    /** Stage the `targets` cells not yet staged against their current
+      * files: `rewrite` turns those cells' rows into the rows to write. */
+    def stage(m: Manifest, targets: Map[String, Seq[String]])(
+        rewrite: DataFrame => DataFrame): Unit = {
+      val toStage = targets.filter { case (cell, files) =>
+        !byCell.get(cell).exists(_._1 == files.toSet)
+      }
+      if (toStage.nonEmpty) {
+        // pq = None: cw (when present) rides through / was just repaired
+        // and must not re-encode through the stage augment
+        val staged = stageAssigned(dir,
+          rewrite(m.dataScan(spark, dir, toStage.values.flatten.toSet)), None)
+        stages :+= staged
+        val newByCell = staged.files.groupBy(cellOf)
+        byCell ++= toStage.map { case (cell, live) =>
+          cell -> (live.toSet, newByCell.getOrElse(cell, Seq.empty))
+        }
+      }
+    }
+
+    /** `m`'s catalog with the `targets` cells' files swapped for their
+      * rewrites — keeping any file that landed in a target cell after its
+      * stage: a concurrent append, a later write that wins. */
+    def catalog(m: Manifest, targets: Map[String, Seq[String]]): ManifestCatalog =
+      m.catalog.replace("data",
+        m.data.filterNot(f => targets.contains(cellOf(f))) ++
+          targets.toSeq.flatMap { case (cell, files) =>
+            val (rewrote, wrote) = byCell(cell)
+            wrote ++ files.filterNot(rewrote)
+          },
+        stages)
   }
 
   /** Compact cells holding more than `maxFilesPerCell` live files: their
@@ -559,58 +250,21 @@ object IvfObjectStore {
               maxFilesPerCell: Int = 4): Int = {
     require(maxFilesPerCell >= 1,
       s"maxFilesPerCell must be >= 1, got $maxFilesPerCell")
-    val fs = fsOf(spark, dir)
     // the rewrite repairs null code words when the store carries a
     // codebook (the manifest's union schema surfaces the column across
     // generations) — compaction doubles as the PQ migration path, as on
     // the directory layout
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
-    // staged rewrites per cell, keyed by the exact live file set merged
-    var stagedFor: Map[String, (Set[String], Seq[String])] = Map.empty
-    var stages = Seq.empty[Staged]
-    var attempt = 0
-    while (attempt < PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"IvfObjectStore.compact: no valid manifest under $dir"))
-        .resolved(spark, dir)
-      val byCell = m.data.groupBy(cellOf)
-      val oversized = byCell.filter(_._2.length > maxFilesPerCell)
-      if (oversized.isEmpty) return 0
-      val toStage = oversized.filter { case (cell, files) =>
-        !stagedFor.get(cell).exists(_._1 == files.toSet)
+    val rewrites = new CellRewrites(spark, dir)
+    commit(spark, dir, "compact", unchanged = _ => 0) { m =>
+      val oversized = m.data.groupBy(cellOf).filter(_._2.length > maxFilesPerCell)
+      if (oversized.isEmpty) Unchanged
+      else {
+        rewrites.stage(m, oversized)(
+          merged => pq.map(GraftPq.repairCw(_, merged)).getOrElse(merged))
+        Publish(m.copy(catalog = rewrites.catalog(m, oversized)), oversized.size)
       }
-      if (toStage.nonEmpty) {
-        val merged0 = m.dataScan(spark, dir, toStage.values.flatten.toSet)
-        val merged = pq.map(GraftPq.repairCw(_, merged0)).getOrElse(merged0)
-        // pq = None here: cw (when present) was just repaired above and
-        // must not re-encode through the stage augment
-        val staged = stageAssigned(dir, merged, None)
-        stages :+= staged
-        val newByCell = staged.files.groupBy(cellOf)
-        stagedFor ++= toStage.map { case (cell, live) =>
-          cell -> (live.toSet, newByCell.getOrElse(cell, Seq.empty))
-        }
-      }
-      val replaced = oversized.keySet
-      val nextData =
-        m.data.filterNot(f => replaced.contains(cellOf(f))) ++
-        replaced.toSeq.flatMap(c => stagedFor(c)._2) ++
-        // keep live files that landed in a replaced cell AFTER our stage
-        oversized.toSeq.flatMap { case (cell, files) =>
-          files.filterNot(stagedFor(cell)._1.contains)
-        }
-      if (publish(fs, dir,
-                  Manifest(m.version + 1, m.tags,
-                           m.catalog.replace("data", nextData, stages))))
-        return oversized.size
-      healTorn(fs, dir, m.version + 1)
-      publishBackoff(attempt)
-      attempt += 1
     }
-    throw new ManifestConflict(
-      s"IvfObjectStore.compact: lost the publish race $PublishRetries " +
-      s"times on $dir — schedule compaction off the ingest path")
   }
 
   /** Delete rows by id — the takedown/opt-out path (VERDICT r11 missing
@@ -640,70 +294,30 @@ object IvfObjectStore {
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "vec_id",
              batchTag: Option[String] = None): Int = {
-    batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as " +
-      "append: silent sanitization could collide two tags)"))
     graft.GraftSession.ensureExtensions(spark)
-    val fs = fsOf(spark, dir)
     val del = ids.select(col(idCol).cast("long").as("n_id")).distinct()
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
-    // staged rewrites per cell, keyed by the exact live file set rewritten
-    var stagedFor: Map[String, (Set[String], Seq[String])] = Map.empty
-    var stages = Seq.empty[Staged]
-    var attempt = 0
-    while (attempt < PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"IvfObjectStore.delete: no valid manifest under $dir"))
-        .resolved(spark, dir)
-      if (batchTag.exists(m.tags.contains)) return 0 // committed replay
-      if (m.data.isEmpty) return 0
+    val rewrites = new CellRewrites(spark, dir)
+    commit(spark, dir, "delete", unchanged = _ => 0, tag = batchTag) { m =>
       // locate touched cells: ONE (n_id, c_id)-pruned scan of the live
       // file set — deleted ids can sit anywhere, so a linear skinny scan
       // is inherent; the vector bytes never load
-      val live = m.dataScan(spark, dir).select("n_id", "c_id")
-      val touched: Set[String] = live
-        .join(ScaleHints.gated(del), Seq("n_id"), "left_semi")
-        .select("c_id").distinct()
-        .collect().map(r => s"c_id=${r.getLong(0)}").toSet
-      if (touched.isEmpty) return 0
-      val byCell = m.data.groupBy(cellOf)
-      val targets = byCell.filter { case (cell, _) => touched.contains(cell) }
-      val toStage = targets.filter { case (cell, files) =>
-        !stagedFor.get(cell).exists(_._1 == files.toSet)
-      }
-      if (toStage.nonEmpty) {
-        val merged = m.dataScan(spark, dir, toStage.values.flatten.toSet)
-          .join(ScaleHints.gated(del), Seq("n_id"), "left_anti")
-        val repaired = pq.map(GraftPq.repairCw(_, merged)).getOrElse(merged)
-        // pq = None: cw (when present) rides through / was just repaired
-        val staged = stageAssigned(dir, repaired, None)
-        stages :+= staged
-        val newByCell = staged.files.groupBy(cellOf)
-        stagedFor ++= toStage.map { case (cell, liveFiles) =>
-          cell -> (liveFiles.toSet, newByCell.getOrElse(cell, Seq.empty))
+      val touched: Set[String] =
+        if (m.data.isEmpty) Set.empty
+        else m.dataScan(spark, dir).select("n_id", "c_id")
+          .join(ScaleHints.gated(del), Seq("n_id"), "left_semi")
+          .select("c_id").distinct()
+          .collect().map(r => s"c_id=${r.getLong(0)}").toSet
+      if (touched.isEmpty) Unchanged
+      else {
+        val targets = m.data.groupBy(cellOf).filter { case (cell, _) => touched(cell) }
+        rewrites.stage(m, targets) { merged =>
+          val kept = merged.join(ScaleHints.gated(del), Seq("n_id"), "left_anti")
+          pq.map(GraftPq.repairCw(_, kept)).getOrElse(kept)
         }
+        Publish(m.copy(catalog = rewrites.catalog(m, targets)), targets.size)
       }
-      val replaced = targets.keySet
-      val nextData =
-        m.data.filterNot(f => replaced.contains(cellOf(f))) ++
-        replaced.toSeq.flatMap(c => stagedFor(c)._2) ++
-        // files that landed in a touched cell AFTER our stage: a
-        // concurrent append — later writes win over this delete
-        targets.toSeq.flatMap { case (cell, files) =>
-          files.filterNot(stagedFor(cell)._1.contains)
-        }
-      if (publish(fs, dir,
-                  Manifest(m.version + 1, m.tags ++ batchTag,
-                           m.catalog.replace("data", nextData, stages))))
-        return replaced.size
-      healTorn(fs, dir, m.version + 1)
-      publishBackoff(attempt)
-      attempt += 1
     }
-    throw new ManifestConflict(
-      s"IvfObjectStore.delete: lost the publish race $PublishRetries " +
-      s"times on $dir — serialize committers or raise retries")
   }
 
   /** Streaming opt-out/takedown ingest — the delete twin of
@@ -714,79 +328,16 @@ object IvfObjectStore {
     * semantics apply per micro-batch: rows appended AFTER a batch's
     * publish are later writes and win. */
   def deleteStream(dir: String, ids: DataFrame, streamId: String,
-                   idCol: String = "vec_id")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    graft.GraftSession.ensureExtensions(ids.sparkSession)
-    ids.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                   idCol: String = "vec_id"): DataStreamWriter[Row] =
+    taggedStream(ids, streamId, "d") { (batch, tag) =>
       delete(batch.sparkSession, dir, batch.select(col(idCol)), idCol,
-             batchTag = Some(s"${streamId}_d$batchId"))
-      ()
+             batchTag = tag)
     }
-  }
 
   private[graft] def cellOf(rel: String): String = {
     val m = "c_id=[^/]+".r.findFirstIn(rel)
     m.getOrElse(throw new ManifestStoreException(
       s"manifest data entry '$rel' carries no c_id= partition segment"))
-  }
-
-  /** Delete data/centroid objects no manifest... — precisely: objects the
-    * CURRENT manifest does not reference and whose modification time is
-    * older than `olderThanMs` — orphans of crashed/raced/compacted-away
-    * writes. The age bound keeps a write that is between its task commits
-    * and its manifest publish alive (choose it ≥ the longest append job +
-    * publish window; err long — an orphan costs bytes, a vacuumed
-    * in-flight file costs a failed publish retry, though never a torn
-    * read: the retry re-stages). Also drops superseded manifest versions
-    * older than the bound (readers mid-resolve hold at most one list-lag
-    * version; the bound dwarfs that). This is the ONLY operation that
-    * lists data directories, and eventual listing only delays collection.
-    * Returns objects deleted.
-    */
-  def vacuum(spark: SparkSession, dir: String, olderThanMs: Long): Int = {
-    require(olderThanMs > 0, s"olderThanMs must be positive: $olderThanMs")
-    val fs = fsOf(spark, dir)
-    val cur = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"IvfObjectStore.vacuum: no valid manifest under $dir"))
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    var deleted = 0
-    // superseded manifests past the bound go FIRST, so the live set
-    // below is the union over the manifests that remain readable — a
-    // data object is orphaned only when NO surviving version references
-    // it (ADVICE r15: sweeping data by the current manifest alone could
-    // delete a file a RETAINED older manifest still serves, because
-    // staging time precedes publish time)
-    val mRoot = new Path(s"$dir/manifests")
-    for (st <- fs.listStatus(mRoot)
-           if st.isFile && st.getModificationTime < cutoff &&
-              st.getPath.getName.matches("v\\d{20}\\.manifest") &&
-              st.getPath.getName < f"v${cur.version}%020d.manifest") {
-      fs.delete(st.getPath, false); deleted += 1
-    }
-    val live: Set[String] = fs.listStatus(mRoot)
-      .filter(f => f.isFile &&
-                   f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(readFully(fs, f.getPath)))
-      .flatMap(m => m.centroids ++ m.data)
-      .toSet
-    val root = new Path(dir)
-    def sweep(sub: String): Unit = {
-      val p = new Path(root, sub)
-      if (!fs.exists(p)) return
-      for (st <- fs.listStatus(p)) {
-        if (st.isDirectory) sweep(s"$sub/${st.getPath.getName}")
-        else if (st.getModificationTime < cutoff) {
-          val rel = s"$sub/${st.getPath.getName}"
-          if (!live.contains(rel)) { fs.delete(st.getPath, false); deleted += 1 }
-        }
-      }
-    }
-    sweep("centroids"); sweep("data")
-    deleted
   }
 
   /** Streaming ingest into a manifest store — the object-store twin of
@@ -796,22 +347,16 @@ object IvfObjectStore {
     * in this layout — a concurrent [[compact]] surfaces as a publish
     * conflict that append absorbs with its bounded retry, staged files
     * intact (never a failed stream; contrast the directory store's
-    * lock-wait). Tag lifetime: tags ride the manifest forever (they are
-    * one line each); no pruning needed at micro-batch cadence for years.
+    * lock-wait).
     */
   def ingestStream(dir: String, vecs: DataFrame, streamId: String,
                    idCol: String = "vec_id", vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    graft.GraftSession.ensureExtensions(vecs.sparkSession)
-    vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : DataStreamWriter[Row] =
+    taggedStream(vecs, streamId, "b") { (batch, tag) =>
       append(batch.sparkSession, dir,
              batch.select(col(idCol),
                           expr(s"transform($vecCol, x -> cast(x AS double))")
                             .as("__v")),
-             idCol, "__v", batchTag = Some(s"${streamId}_b$batchId"))
+             idCol, "__v", batchTag = tag)
     }
-  }
 }

@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-import IvfObjectStore.{ManifestConflict, ManifestStoreException}
+import ManifestLog.{Publish, Unchanged, writeVia}
 
 /** The VERSIONED AT-REST KEEP-SET — the dedup decision table
   * ([[GraftDedup.keepSet]]: id → cluster_id, keep) as a
@@ -15,10 +13,8 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   * [[GraftDedup.keepSetIncremental]] computes the new decisions, this
   * store persists them without rewriting the corpus.
   *
-  * Same substrate guarantees as [[IvfObjectStore]] / [[ImpactObjectStore]]
-  * (no rename, no listing consistency, SHA-256-trailed immutable manifest
-  * versions, torn-manifest fallback, optimistic version race) — the full
-  * argument lives on [[IvfObjectStore]]'s class doc.
+  * A store on the [[ManifestLog]], like [[IvfObjectStore]] and
+  * [[ImpactObjectStore]]; the log's scaladoc gives the substrate argument.
   *
   * Layout under `dir`:
   * {{{
@@ -31,9 +27,7 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   * and one `base|delta|tomb <path> <bytes>` line per live file;
   * [[ManifestCatalog]] plans every read from them without listing
   * `data/` or inferring a schema. A v1 manifest (bare paths, no schema
-  * lines) still reads, and the next write records what it lacked; the
-  * format only goes forward, so never downgrade graft on a store or mix
-  * writer versions on one (see [[ManifestCatalog$]]).
+  * lines) still reads, and the next write records what it lacked.
   *
   * Versioning model — base ⊕ deltas, LAST-WINS per id:
   *   - [[create]] stages the full table as the BASE of v1;
@@ -68,80 +62,33 @@ import IvfObjectStore.{ManifestConflict, ManifestStoreException}
   * increment kernel's: new ids disjoint from stored ids, pair endpoints
   * within stored ∪ new.
   */
-object KeepSetStore {
+object KeepSetStore extends ManifestStore {
+  type M = KeepSetManifest
 
-  private val Format = "graft-keepset-manifest"
-  private val NoFiles = ManifestCatalog("base", "delta", "tomb")
+  protected val name = "KeepSetStore"
+  protected val format = "graft-keepset-manifest"
+  protected val noFiles: ManifestCatalog = ManifestCatalog("base", "delta", "tomb")
+  protected val dataRoots = Seq("data")
 
   private[graft] final case class KeepSetManifest(version: Long,
                                                   tags: Set[String],
                                                   catalog: ManifestCatalog =
-                                                    NoFiles) {
+                                                    noFiles)
+      extends ManifestEntry {
+    protected def format: String = KeepSetStore.format
     def base: Seq[String] = catalog.files("base")
     def deltas: Seq[String] = catalog.files("delta")
     def tombs: Seq[String] = catalog.files("tomb")
-
-    def render: String = ManifestCatalog.render(Format,
-      s"version $version" +: tags.toSeq.sorted.map("tag " + _), catalog)
-
-    /** Lengths and schemas of an earlier-format manifest filled in, so a
-      * writer publishes a complete one ([[ManifestCatalog.resolved]]). */
-    def resolved(spark: SparkSession, dir: String): KeepSetManifest =
-      copy(catalog = catalog.resolved(spark, dir))
   }
 
-  /** Parse + integrity-check one manifest body; None if torn, a throw if
-    * its checksum holds but this build cannot read it. */
-  private[graft] def parseManifest(text: String): Option[KeepSetManifest] = {
-    var version = -1L
-    val tags = Set.newBuilder[String]
-    ManifestCatalog.parse(text, Format, NoFiles) {
-      case ("version", v) => version = v.toLong
-      case ("tag", t) => tags += t
-    }.map { cat =>
-      if (version < 1) throw ManifestCatalog.unreadable(Format, "no version")
-      KeepSetManifest(version, tags.result(), cat)
-    }
-  }
-
-  private[graft] def currentManifest(fs: FileSystem,
-                                     dir: String): Option[KeepSetManifest] = {
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return None
-    fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .sortBy(_.getPath.getName)(Ordering[String].reverse)
-      .iterator
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .nextOption()
-  }
-
-  private def publish(fs: FileSystem, dir: String,
-                      m: KeepSetManifest): Boolean = {
-    val p = new Path(f"$dir/manifests/v${m.version}%020d.manifest")
-    fs.mkdirs(p.getParent)
-    val out =
-      try fs.create(p, false)
-      catch { case _: java.io.IOException => return false }
-    try out.write(m.render.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    true
-  }
-
-  private def healTorn(fs: FileSystem, dir: String, version: Long): Unit = {
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    try {
-      val st = fs.getFileStatus(p)
-      if (st.getModificationTime < System.currentTimeMillis() -
-            IvfObjectStore.TornManifestGraceMs &&
-          parseManifest(IvfObjectStore.readFully(fs, p)).isEmpty)
-        fs.delete(p, false)
-    } catch { case _: java.io.FileNotFoundException => }
-  }
+  protected def build(version: Long, tags: Set[String],
+                      fields: Map[String, String],
+                      catalog: ManifestCatalog): KeepSetManifest =
+    KeepSetManifest(version, tags, catalog)
 
   private def stage(df: DataFrame, dir: String, v: Long,
                     idCol: String): Staged =
-    IvfObjectStore.writeVia(
+    writeVia(
       df.select(col(idCol).cast("long").as(idCol),
                 col("cluster_id").cast("long").as("cluster_id"),
                 lit(v).as("__v")),
@@ -152,17 +99,10 @@ object KeepSetStore {
     * Refuses a dir that already holds a manifest chain. */
   def create(keepSet: DataFrame, dir: String,
              idCol: String = "doc_id"): Long = {
-    val fs = IvfObjectStore.fsOf(keepSet.sparkSession, dir)
-    currentManifest(fs, dir).foreach { m =>
-      throw new ManifestStoreException(
-        s"KeepSetStore.create: $dir already holds manifest v${m.version}" +
-        " — use increment to mutate an existing store")
+    startChain(keepSet.sparkSession, dir) {
+      KeepSetManifest(1L, Set.empty,
+                      noFiles.add("base", stage(keepSet, dir, 1L, idCol)))
     }
-    val base = stage(keepSet, dir, 1L, idCol)
-    if (!publish(fs, dir, KeepSetManifest(1L, Set.empty,
-                                          NoFiles.add("base", base))))
-      throw new ManifestConflict(
-        s"KeepSetStore.create: lost the v1 publish race on $dir")
     1L
   }
 
@@ -191,38 +131,14 @@ object KeepSetStore {
     * when the store is freshly created or compacted, a per-id last-wins
     * aggregation while increments' deltas are outstanding. */
   def read(spark: SparkSession, dir: String,
-           idCol: String = "doc_id"): DataFrame = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val m = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"KeepSetStore.read: no valid manifest under $dir"))
-    resolveFrom(spark, dir, m, idCol)
-  }
+           idCol: String = "doc_id"): DataFrame =
+    resolveFrom(spark, dir, head(spark, dir), idCol)
 
   /** Time travel: the keep-set exactly as version `version` served it —
     * "which docs were kept on day N". */
   def readAt(spark: SparkSession, dir: String, version: Long,
-             idCol: String = "doc_id"): DataFrame = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val p = new Path(f"$dir/manifests/v$version%020d.manifest")
-    val m = (if (fs.exists(p))
-               parseManifest(IvfObjectStore.readFully(fs, p))
-             else None)
-      .getOrElse(throw new ManifestStoreException(
-        s"KeepSetStore.readAt: no valid manifest v$version under $dir — " +
-        s"readable versions: ${versions(spark, dir).mkString(", ")}"))
-    resolveFrom(spark, dir, m, idCol)
-  }
-
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val root = new Path(s"$dir/manifests")
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .map(_.version).toSeq.sorted
-  }
+             idCol: String = "doc_id"): DataFrame =
+    resolveFrom(spark, dir, at(spark, dir, version), idCol)
 
   /** Fold an increment into the stored table: stage ONLY the changed
     * sliver (new ids + old rows whose label the contraction remapped)
@@ -246,19 +162,9 @@ object KeepSetStore {
                 newPairs: DataFrame, idCol: String = "doc_id",
                 aCol: String = "a_id", bCol: String = "b_id",
                 batchTag: Option[String] = None): Long = {
-    batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as the " +
-      "sibling stores)"))
-    val fs = IvfObjectStore.fsOf(spark, dir)
     var staged: Staged = null
     var stagedAgainst: Seq[String] = null
-    var attempt = 0
-    while (attempt < IvfObjectStore.PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"KeepSetStore.increment: no valid manifest under $dir — " +
-          "create() first")).resolved(spark, dir)
-      if (batchTag.exists(m.tags.contains)) return m.version // replay
+    commit(spark, dir, "increment", unchanged = _.version, tag = batchTag) { m =>
       val liveFiles = m.base ++ m.deltas ++ m.tombs
       if (staged == null || stagedAgainst != liveFiles) {
         // the staged delta references the RESOLVED table three times
@@ -305,17 +211,8 @@ object KeepSetStore {
           stagedAgainst = liveFiles
         } finally { remap.unpersist(); prevLbl.unpersist() }
       }
-      val next = KeepSetManifest(m.version + 1, m.tags ++ batchTag,
-                                 m.catalog.add("delta", staged))
-      if (publish(fs, dir, next)) return next.version
-      healTorn(fs, dir, m.version + 1)
-      IvfObjectStore.publishBackoff(attempt)
-      attempt += 1
+      Publish(m.copy(catalog = m.catalog.add("delta", staged)), m.version + 1)
     }
-    throw new ManifestConflict(
-      s"KeepSetStore.increment: lost the publish race " +
-      s"${IvfObjectStore.PublishRetries} times on $dir — serialize " +
-      "committers or raise retries")
   }
 
   /** Fold base ⊕ deltas into a new single-generation base (one corpus
@@ -330,32 +227,20 @@ object KeepSetStore {
     * and no tombstones are outstanding. */
   def compact(spark: SparkSession, dir: String,
               idCol: String = "doc_id"): Long = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
     var staged: Staged = null
     var stagedAgainst: Seq[String] = null
-    var attempt = 0
-    while (attempt < IvfObjectStore.PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"KeepSetStore.compact: no valid manifest under $dir"))
-      if (m.deltas.isEmpty && m.tombs.isEmpty) return m.version
+    commit(spark, dir, "compact", unchanged = _.version) { m =>
       val liveFiles = m.base ++ m.deltas ++ m.tombs
-      if (staged == null || stagedAgainst != liveFiles) {
-        staged = stage(resolveFrom(spark, dir, m, idCol), dir,
-                       m.version + 1, idCol)
-        stagedAgainst = liveFiles
+      if (m.deltas.isEmpty && m.tombs.isEmpty) Unchanged
+      else {
+        if (staged == null || stagedAgainst != liveFiles) {
+          staged = stage(resolveFrom(spark, dir, m, idCol), dir,
+                         m.version + 1, idCol)
+          stagedAgainst = liveFiles
+        }
+        Publish(m.copy(catalog = noFiles.add("base", staged)), m.version + 1)
       }
-      if (publish(fs, dir, KeepSetManifest(m.version + 1, m.tags,
-                                           NoFiles.add("base", staged))))
-        return m.version + 1
-      healTorn(fs, dir, m.version + 1)
-      IvfObjectStore.publishBackoff(attempt)
-      attempt += 1
     }
-    throw new ManifestConflict(
-      s"KeepSetStore.compact: lost the publish race " +
-      s"${IvfObjectStore.PublishRetries} times on $dir — schedule " +
-      "compaction off the increment path")
   }
 
   /** TAKEDOWN from the dedup decision table (r16 — completing the
@@ -380,35 +265,16 @@ object KeepSetStore {
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "doc_id",
              batchTag: Option[String] = None): Long = {
-    batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as the " +
-      "sibling stores)"))
-    val fs = IvfObjectStore.fsOf(spark, dir)
     // the tombstone sliver is snapshot-independent (just the id set) —
     // stage once, retry only the publish
     var staged: Staged = null
-    var attempt = 0
-    while (attempt < IvfObjectStore.PublishRetries) {
-      val m = currentManifest(fs, dir).getOrElse(
-        throw new ManifestStoreException(
-          s"KeepSetStore.delete: no valid manifest under $dir — " +
-          "create() first")).resolved(spark, dir)
-      if (batchTag.exists(m.tags.contains)) return m.version // replay
+    commit(spark, dir, "delete", unchanged = _.version, tag = batchTag) { m =>
       if (staged == null)
-        staged = IvfObjectStore.writeVia(
+        staged = writeVia(
           ids.select(col(idCol).cast("long").as(idCol)).distinct(),
           s"$dir/data", Nil).under("data")
-      val next = KeepSetManifest(m.version + 1, m.tags ++ batchTag,
-                                 m.catalog.add("tomb", staged))
-      if (publish(fs, dir, next)) return next.version
-      healTorn(fs, dir, m.version + 1)
-      IvfObjectStore.publishBackoff(attempt)
-      attempt += 1
+      Publish(m.copy(catalog = m.catalog.add("tomb", staged)), m.version + 1)
     }
-    throw new ManifestConflict(
-      s"KeepSetStore.delete: lost the publish race " +
-      s"${IvfObjectStore.PublishRetries} times on $dir — serialize " +
-      "committers or raise retries")
   }
 
   /** Streaming opt-out twin of [[delete]] (r16 — the
@@ -420,55 +286,9 @@ object KeepSetStore {
     * after its batch commits; [[compact]] remains the physical purge on
     * its own cadence. */
   def deleteStream(dir: String, ids: DataFrame, streamId: String,
-                   idCol: String = "doc_id")
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    ids.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        delete(batch.sparkSession, dir, batch.select(col(idCol)), idCol,
-               batchTag = Some(s"${streamId}_d$batchId"))
-        ()
+                   idCol: String = "doc_id"): DataStreamWriter[Row] =
+    taggedStream(ids, streamId, "d") { (batch, tag) =>
+      delete(batch.sparkSession, dir, batch.select(col(idCol)), idCol,
+             batchTag = tag)
     }
-  }
-
-  /** Delete data objects NO surviving manifest references and superseded
-    * manifests, both older than `olderThanMs` — the time-travel
-    * retention knob, same contract as the sibling stores. The manifest
-    * sweep runs FIRST and the live set is the union over every manifest
-    * that remains readable (ADVICE r15: sweeping data by the current
-    * manifest alone could delete a file a retained older manifest still
-    * serves — staging time precedes publish time). */
-  def vacuum(spark: SparkSession, dir: String, olderThanMs: Long): Int = {
-    require(olderThanMs > 0, s"olderThanMs must be positive: $olderThanMs")
-    val fs = IvfObjectStore.fsOf(spark, dir)
-    val cur = currentManifest(fs, dir).getOrElse(
-      throw new ManifestStoreException(
-        s"KeepSetStore.vacuum: no valid manifest under $dir"))
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    var deleted = 0
-    val mRoot = new Path(s"$dir/manifests")
-    for (st <- fs.listStatus(mRoot)
-           if st.isFile && st.getModificationTime < cutoff &&
-              st.getPath.getName.matches("v\\d{20}\\.manifest") &&
-              st.getPath.getName < f"v${cur.version}%020d.manifest") {
-      fs.delete(st.getPath, false); deleted += 1
-    }
-    val live: Set[String] = fs.listStatus(mRoot)
-      .filter(f => f.isFile &&
-                   f.getPath.getName.matches("v\\d{20}\\.manifest"))
-      .flatMap(f => parseManifest(IvfObjectStore.readFully(fs, f.getPath)))
-      .flatMap(m => m.base ++ m.deltas ++ m.tombs)
-      .toSet
-    val p = new Path(s"$dir/data")
-    if (fs.exists(p))
-      for (st <- fs.listStatus(p)
-           if st.isFile && st.getModificationTime < cutoff &&
-              !live.contains(s"data/${st.getPath.getName}")) {
-        fs.delete(st.getPath, false); deleted += 1
-      }
-    deleted
-  }
 }

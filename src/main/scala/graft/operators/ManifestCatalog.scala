@@ -4,9 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import IvfObjectStore.ManifestStoreException
-
-/** The files one [[IvfObjectStore.writeVia]] committed: store-relative
+/** The files one [[ManifestLog.writeVia]] committed: store-relative
   * paths with their byte lengths, and the schema they carry (partition
   * columns excluded). */
 private[graft] final case class Staged(lens: Seq[(String, Long)],
@@ -34,7 +32,7 @@ private[graft] final case class FileFamily(
     * known, a `getFileStatus` on the driver otherwise. */
   def statuses(spark: SparkSession, dir: String,
                paths: Seq[String]): Seq[FileStatus] = {
-    val fs = IvfObjectStore.fsOf(spark, dir)
+    val fs = ManifestLog.fsOf(spark, dir)
     paths.map { rel =>
       val p = fs.makeQualified(new Path(s"$dir/$rel"))
       lens.get(rel).fold(fs.getFileStatus(p))(new FileStatus(_, false, 0, 0L, 0L, p))
@@ -166,7 +164,7 @@ private[graft] object ManifestCatalog {
     * its SHA-256). Past a valid trailer every line must be understood:
     * `field` takes the store's own `(key, value)` lines, the catalog the
     * `schema` and file lines; anything else throws
-    * [[IvfObjectStore.ManifestStoreException]]. */
+    * [[ManifestStoreException]]. */
   def parse(text: String, format: String, empty: ManifestCatalog)(
       field: PartialFunction[(String, String), Unit]): Option[ManifestCatalog] = {
     val lines = text.split("\n", -1).toSeq.dropRight(

@@ -1037,7 +1037,8 @@ object SimilarityQueries extends QueryModule {
     // path: task-reported file lists, the checksummed manifest chain,
     // and the explicit-file-list read must round-trip every value.
     // ManifestStoreSpec covers the mutation lifecycle (append, compact,
-    // vacuum, crash/race) on a mock object store.
+    // vacuum) and ManifestProtocolSpec the crash/torn/race protocol on a
+    // mock object store.
     GraftQuery(
       "ann_ivf_stored_manifest",
       (s, dir) => {

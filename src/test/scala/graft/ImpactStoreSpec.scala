@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ImpactIndex, ImpactObjectStore}
+import graft.operators.{ImpactIndex, ImpactObjectStore, ManifestStoreException}
 
 /** [[ImpactObjectStore]] — the manifest-committed object-store layout of
   * the BM25 impact index. Like ManifestStoreSpec, every test drives the
@@ -11,23 +11,12 @@ import graft.operators.{ImpactIndex, ImpactObjectStore}
   * that refuses object stores for [[ImpactIndex.write]] does not apply.
   * Covers the rebuild/read/time-travel/vacuum lifecycle, serve equality
   * with the directory layout (bit-identical addends through the shared
-  * kernel), torn-manifest fallback + slot healing, the optimistic
-  * version race, and the bucket-pruned scan shape on the manifest
-  * substrate.
+  * kernel), deletes and their tags across rebuilds, and the bucket-pruned
+  * scan shape on the manifest substrate. The crash window, torn-manifest
+  * healing and the version race are tested once for all three stores in
+  * ManifestProtocolSpec.
   */
-class ImpactStoreSpec extends GraftFunSuite {
-
-  private def withMockS3[T](body: String => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.s3a.impl", classOf[graft.testfs.MockObjectStoreFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("impact_store").toString
-    try body(base)
-    finally {
-      conf.unset("fs.s3a.impl")
-      org.apache.hadoop.fs.FileSystem.closeAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    }
-  }
+class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
 
   private def docs() = spark.read.parquet(s"$sf0001/documents.parquet")
     .select(col("doc_id"), col("text"))
@@ -85,59 +74,9 @@ class ImpactStoreSpec extends GraftFunSuite {
       val deleted = ImpactObjectStore.vacuum(spark, dir, olderThanMs = 5)
       assert(deleted > 0)
       assert(ImpactObjectStore.versions(spark, dir) == Seq(2L))
-      intercept[graft.operators.IvfObjectStore.ManifestStoreException] {
+      intercept[ManifestStoreException] {
         ImpactObjectStore.readAt(spark, dir, 1L)
       }
-      assert(serve(ImpactObjectStore.read(spark, dir)).nonEmpty)
-    }
-  }
-
-  test("torn manifest: readers fall back to the previous valid version; " +
-       "a stale torn file is healed and its slot reused by the next " +
-       "rebuild") {
-    withMockS3 { base =>
-      val d = docs()
-      val dir = s"s3a:$base/torn"
-      ImpactObjectStore.rebuild(d, dir, buckets = 4)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val torn = new org.apache.hadoop.fs.Path(
-        f"$dir/manifests/v${2L}%020d.manifest")
-      val out = fs.create(torn, false)
-      out.write("graft-impact-manifest v1\nversion 2\n".getBytes("UTF-8"))
-      out.close()
-      assert(ImpactObjectStore.currentManifest(fs, dir).get.version == 1,
-        "a torn manifest must never be served")
-      assert(serve(ImpactObjectStore.read(spark, dir)).nonEmpty)
-      // age the torn file past the grace -> the next rebuild heals the
-      // slot and publishes INTO it
-      val local = new java.io.File(s"$base/torn/manifests/" +
-        f"v${2L}%020d.manifest")
-      assert(local.setLastModified(System.currentTimeMillis() -
-        graft.operators.IvfObjectStore.TornManifestGraceMs - 1000))
-      assert(ImpactObjectStore.rebuild(d, dir, buckets = 4) == 2L)
-      assert(ImpactObjectStore.currentManifest(fs, dir).get.version == 2)
-    }
-  }
-
-  test("optimistic version race: a valid foreign manifest squatting the " +
-       "next slot is absorbed — the rebuild retries on top and the chain " +
-       "keeps both versions") {
-    withMockS3 { base =>
-      val d = docs()
-      val dir = s"s3a:$base/race"
-      ImpactObjectStore.rebuild(d, dir, buckets = 4)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val v1 = ImpactObjectStore.currentManifest(fs, dir).get
-      val squat = v1.copy(version = 2)
-      val p = new org.apache.hadoop.fs.Path(
-        f"$dir/manifests/v${2L}%020d.manifest")
-      val out = fs.create(p, false)
-      out.write(squat.render.getBytes("UTF-8")); out.close()
-      assert(ImpactObjectStore.rebuild(
-        d.filter(col("doc_id") % 2 === 0), dir, buckets = 4) == 3L)
-      assert(ImpactObjectStore.versions(spark, dir) == Seq(1L, 2L, 3L))
       assert(serve(ImpactObjectStore.read(spark, dir)).nonEmpty)
     }
   }
@@ -163,8 +102,7 @@ class ImpactStoreSpec extends GraftFunSuite {
         input.addData(optOut.take(2)); sq.processAllAvailable()
         input.addData(optOut.drop(2)); sq.processAllAvailable()
       } finally sq.stop()
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m = ImpactObjectStore.currentManifest(fs, dir).get
       assert(m.tags.contains("opt1_d0") && m.tags.contains("opt1_d1"),
         m.tags.toString)
@@ -214,8 +152,7 @@ class ImpactStoreSpec extends GraftFunSuite {
       // statistics exact (equals the directory layout on the same corpus)
       val reduced = d.filter(col("doc_id") % 7 =!= 3)
       assert(ImpactObjectStore.rebuild(reduced, dir, buckets = 8) == 3L)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       assert(ImpactObjectStore.currentManifest(fs, dir).get.tombs.isEmpty)
       val dirStore = java.nio.file.Files
         .createTempDirectory("impact_red").toString
@@ -257,27 +194,21 @@ class ImpactStoreSpec extends GraftFunSuite {
     }
   }
 
-  test("crash window between staging and publish: staged-but-unpublished " +
-       "files are invisible to readers and vacuumed later") {
+  test("rebuild carries the committed tags forward: a tagged delete " +
+       "replayed after a rebuild returns the current version and " +
+       "publishes nothing") {
     withMockS3 { base =>
       val d = docs()
-      val dir = s"s3a:$base/crash"
-      ImpactObjectStore.rebuild(d, dir, buckets = 4)
-      val before = serve(ImpactObjectStore.read(spark, dir))
-      // simulate a crashed second rebuild: stage data objects directly
-      // (the commit-protocol path) with no manifest publish
-      val orphanDf = spark.range(3).select(
-        lit("orphanterm").as("__term"), col("id").as("doc_id"),
-        lit(1L).as("__a"), lit(0).as("__bkt"))
-      graft.operators.IvfObjectStore.writeVia(
-        orphanDf, s"$dir/impacts", Seq("__bkt"))
-      // readers resolve from the manifest: the orphan rows never serve
-      val idx = ImpactObjectStore.read(spark, dir)
-      assert(idx.impacts.filter(col("__term") === "orphanterm").count() == 0)
-      assert(serve(idx) == before)
-      Thread.sleep(10)
-      assert(ImpactObjectStore.vacuum(spark, dir, olderThanMs = 5) > 0)
-      assert(serve(ImpactObjectStore.read(spark, dir)) == before)
+      val dir = s"s3a:$base/retag"
+      assert(ImpactObjectStore.rebuild(d, dir, buckets = 4) == 1L)
+      val del = d.filter(col("doc_id") % 7 === 3).select("doc_id")
+      assert(ImpactObjectStore.delete(spark, dir, del, batchTag = Some("t7")) == 2L)
+      assert(ImpactObjectStore.rebuild(d.filter(col("doc_id") % 7 =!= 3), dir,
+                                       buckets = 4) == 3L)
+      assert(ImpactObjectStore.currentManifest(fsOf(dir), dir).get.tags == Set("t7"))
+      assert(ImpactObjectStore.delete(spark, dir, del, batchTag = Some("t7")) == 3L)
+      assert(ImpactObjectStore.versions(spark, dir) == Seq(1L, 2L, 3L))
+      assert(ImpactObjectStore.currentManifest(fsOf(dir), dir).get.tombs.isEmpty)
     }
   }
 }

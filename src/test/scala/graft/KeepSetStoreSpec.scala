@@ -2,28 +2,18 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GraftDedup, KeepSetStore}
+import graft.operators.{GraftDedup, KeepSetStore, ManifestStoreException}
 
 /** [[KeepSetStore]] — the versioned at-rest keep-set. Through the mock
   * object-store scheme like the sibling manifest stores: chained
   * increments ≡ the from-scratch closure, delta files are sliver-sized,
   * last-wins resolution across repeated remaps of one id, tag-idempotent
-  * replays, compact folding, time travel, vacuum.
+  * replays, compact folding, time travel, vacuum. Create-if-absent, the
+  * crash window, torn-manifest healing and the version race are tested
+  * once for all three stores in ManifestProtocolSpec.
   */
-class KeepSetStoreSpec extends GraftFunSuite {
+class KeepSetStoreSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
-
-  private def withMockS3[T](body: String => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.s3a.impl", classOf[graft.testfs.MockObjectStoreFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("keepset_store").toString
-    try body(base)
-    finally {
-      conf.unset("fs.s3a.impl")
-      org.apache.hadoop.fs.FileSystem.closeAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    }
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
@@ -55,8 +45,7 @@ class KeepSetStoreSpec extends GraftFunSuite {
       // the delta is the CHANGED sliver, not the corpus: 5,6,10,11 moved
       // to 0, 30 joined 1, 0/40/41/50 are new — 21 and the {1,2} rows
       // stayed put and must not have been rewritten
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m2 = KeepSetStore.currentManifest(fs, dir).get
       val deltaRows = spark.read
         .parquet(m2.deltas.map(r => s"$dir/$r"): _*)
@@ -98,7 +87,7 @@ class KeepSetStoreSpec extends GraftFunSuite {
       Thread.sleep(10)
       assert(KeepSetStore.vacuum(spark, dir, olderThanMs = 5) > 0)
       assert(KeepSetStore.versions(spark, dir) == Seq(4L))
-      intercept[graft.operators.IvfObjectStore.ManifestStoreException] {
+      intercept[ManifestStoreException] {
         KeepSetStore.readAt(spark, dir, 2L)
       }
       assert(rows(KeepSetStore.read(spark, dir)) == want2)
@@ -127,8 +116,7 @@ class KeepSetStoreSpec extends GraftFunSuite {
       assert(rows(KeepSetStore.read(spark, dir)) == want)
       // the delta carries each touched id EXACTLY once — a stored id
       // that leaked through as 'new' would appear twice in one version
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m2 = KeepSetStore.currentManifest(fs, dir).get
       val delta = spark.read.parquet(m2.deltas.map(r => s"$dir/$r"): _*)
       assert(delta.count() == delta.select("doc_id").distinct().count(),
@@ -179,8 +167,7 @@ class KeepSetStoreSpec extends GraftFunSuite {
              Set((2L, 1L, false), (5L, 5L, true), (9L, 5L, false)))
       // vacuum with every manifest retained: tomb slivers survive (v2/v3
       // still serve masked), nothing deleted
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       java.nio.file.Files.walk(java.nio.file.Paths.get(s"$base/ks3/data"))
         .filter(p => java.nio.file.Files.isRegularFile(p))
         .forEach(p => assert(p.toFile.setLastModified(
@@ -227,44 +214,12 @@ class KeepSetStoreSpec extends GraftFunSuite {
         input.addData(Seq(5L)); sq.processAllAvailable()
         input.addData(Seq(2L)); sq.processAllAvailable()
       } finally sq.stop()
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m = KeepSetStore.currentManifest(fs, dir).get
       assert(m.tags.contains("opt1_d0") && m.tags.contains("opt1_d1"),
         m.tags.toString)
       assert(rows(KeepSetStore.read(spark, dir)) ==
              Set((1L, 1L, true), (9L, 9L, true)))
-    }
-  }
-
-  test("create refuses an existing chain; increment without a store " +
-       "fails loud; a squatted version slot is absorbed by the retry") {
-    withMockS3 { base =>
-      val dir = s"s3a:$base/race"
-      val ids = Seq(1L, 2L).toDF("doc_id")
-      val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
-      intercept[graft.operators.IvfObjectStore.ManifestStoreException] {
-        KeepSetStore.increment(spark, dir, ids, pairs)
-      }
-      KeepSetStore.create(GraftDedup.keepSet(ids, pairs), dir)
-      intercept[graft.operators.IvfObjectStore.ManifestStoreException] {
-        KeepSetStore.create(GraftDedup.keepSet(ids, pairs), dir)
-      }
-      // squat v2 with a valid foreign manifest: the increment's retry
-      // re-reads and lands on v3
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val v1 = KeepSetStore.currentManifest(fs, dir).get
-      val p = new org.apache.hadoop.fs.Path(
-        f"$dir/manifests/v${2L}%020d.manifest")
-      val out = fs.create(p, false)
-      out.write(v1.copy(version = 2).render.getBytes("UTF-8")); out.close()
-      assert(KeepSetStore.increment(spark, dir,
-        Seq(3L).toDF("doc_id"), Seq((3L, 1L)).toDF("a_id", "b_id")) == 3L)
-      val got = rows(KeepSetStore.read(spark, dir))
-      assert(got == rows(GraftDedup.keepSet(
-        Seq(1L, 2L, 3L).toDF("doc_id"),
-        Seq((1L, 2L), (3L, 1L)).toDF("a_id", "b_id"))))
     }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GraftDedup, GraftPq, GraftSimilarity, ImpactObjectStore,
-  IvfObjectStore, KeepSetStore}
+  IvfObjectStore, KeepSetStore, ManifestLog, ManifestStoreException}
 
 /** The manifest scan: every read of the three manifest stores plans from
   * the manifest alone — leaf statuses from the recorded lengths, the
@@ -17,20 +17,8 @@ import graft.operators.{GraftDedup, GraftPq, GraftSimilarity, ImpactObjectStore,
   * replaces, and a manifest written before lengths and schemas were
   * recorded reads the same through the same scan (driver-side footer
   * reads, still no job). */
-class ManifestScanSpec extends GraftFunSuite {
+class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
-
-  private def withMockS3[T](body: String => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.s3a.impl", classOf[graft.testfs.MockObjectStoreFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("manifest_scan").toString
-    try body(base)
-    finally {
-      conf.unset("fs.s3a.impl")
-      org.apache.hadoop.fs.FileSystem.closeAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    }
-  }
 
   private def jobs[T](body: => T): (T, Seq[String]) =
     GraftJobProbe.jobs(spark.sparkContext)(body)
@@ -42,9 +30,6 @@ class ManifestScanSpec extends GraftFunSuite {
   private def docs() = spark.read.parquet(s"$sf0001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
-  private def fsOf(dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Rows as comparable strings (binary and array columns included). */
   private def rowSet(df: DataFrame): Set[String] = {
     val cols = df.columns.sorted
@@ -54,12 +39,6 @@ class ManifestScanSpec extends GraftFunSuite {
         case o => String.valueOf(o)
       }).mkString("|")
     }.toSet
-  }
-
-  /** Publish `render` as version `v` (create-if-absent, like a writer). */
-  private def publishRaw(dir: String, v: Long, render: String): Unit = {
-    val out = fsOf(dir).create(new Path(f"$dir/manifests/v$v%020d.manifest"), false)
-    try out.write(render.getBytes("UTF-8")) finally out.close()
   }
 
   test("building read / readAt frames of all three stores launches no " +
@@ -246,15 +225,6 @@ class ManifestScanSpec extends GraftFunSuite {
     }
   }
 
-  /** `text` with its body lines edited and the SHA-256 trailer redone,
-    * so the result is a valid (not torn) manifest of whatever it says. */
-  private def resealed(text: String)(edit: Seq[String] => Seq[String]): String = {
-    val payload = edit(text.split("\n").toSeq.init).mkString("", "\n", "\n")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(payload.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    s"${payload}end $digest\n"
-  }
-
   /** A manifest as the earlier format (v1) wrote it: bare paths, no
     * schema lines. */
   private def earlierFormat(text: String): String = resealed(text) { ls =>
@@ -350,16 +320,16 @@ class ManifestScanSpec extends GraftFunSuite {
       // older than the torn grace: a torn file would be deleted now
       new java.io.File(s"$base/ahead/manifests/v${"%020d".format(2L)}.manifest")
         .setLastModified(System.currentTimeMillis() -
-                         IvfObjectStore.TornManifestGraceMs - 1000)
+                         ManifestLog.TornManifestGraceMs - 1000)
       for (op <- Seq[() => Any](
              () => IvfObjectStore.read(spark, dir),
              () => IvfObjectStore.append(spark, dir,
                      vectors().filter(col("vec_id").between(60, 69)))))
-        intercept[IvfObjectStore.ManifestStoreException](op())
+        intercept[ManifestStoreException](op())
       assert(fsOf(dir).exists(new Path(f"$dir/manifests/v${2L}%020d.manifest")))
       // an unknown line under the current header is refused the same way
       val odd = resealed(m.render)(_ :+ "sketch data/x 1")
-      intercept[IvfObjectStore.ManifestStoreException](
+      intercept[ManifestStoreException](
         IvfObjectStore.parseManifest(odd))
       // while a torn one (trailer cut) is only skipped
       assert(IvfObjectStore.parseManifest(m.render.dropRight(10)).isEmpty)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GraftSimilarity, IvfObjectStore, ManifestCommitProtocol}
+import graft.operators.{GraftSimilarity, IvfObjectStore, ManifestStoreException}
 
 /** [[IvfObjectStore]] — the manifest-committed object-store layout of the
   * at-rest IVF index. Every test here runs the store THROUGH the s3a mock
@@ -10,23 +10,12 @@ import graft.operators.{GraftSimilarity, IvfObjectStore, ManifestCommitProtocol}
   * needs no rename atomicity and no listing consistency, so the contract
   * gate that refuses object stores for the directory layout simply does
   * not apply. Covers the full lifecycle (create / tagged append+replay /
-  * compact / vacuum / streaming ingest), the crash window between data
-  * staging and manifest publish, torn-manifest healing, and the
-  * optimistic version race.
+  * compact / vacuum / streaming ingest / delete), metadata columns and
+  * the PQ tier. The crash window, torn-manifest healing and the
+  * optimistic version race are the log's, tested once for all three
+  * stores in ManifestProtocolSpec.
   */
-class ManifestStoreSpec extends GraftFunSuite {
-
-  private def withMockS3[T](body: String => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.s3a.impl", classOf[graft.testfs.MockObjectStoreFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("manifest_store").toString
-    try body(base)
-    finally {
-      conf.unset("fs.s3a.impl")
-      org.apache.hadoop.fs.FileSystem.closeAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    }
-  }
+class ManifestStoreSpec extends GraftFunSuite with ManifestStoreFixture {
 
   private def vectors() = spark.read.parquet(s"$sf0001/embeddings.parquet")
     .select(col("vec_id"),
@@ -117,8 +106,7 @@ class ManifestStoreSpec extends GraftFunSuite {
       assert(serve(IvfObjectStore.read(spark, dir), q) == serve(appended, q),
         "append + replay must serve exactly the in-memory append (no dups)")
       // compact: every cell down to one live object; untouched bytes stay
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val before = IvfObjectStore.currentManifest(fs, dir).get
       val oversized = before.data.groupBy(IvfObjectStore.cellOf)
         .filter(_._2.length > 1)
@@ -145,124 +133,6 @@ class ManifestStoreSpec extends GraftFunSuite {
         !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$r"))))
       assert(serve(IvfObjectStore.read(spark, dir), q) == serve(appended, q),
         "vacuum must never touch live objects")
-    }
-  }
-
-  test("crash between data staging and manifest publish: orphans are " +
-       "invisible to readers, the batch retry lands exactly once, vacuum " +
-       "collects the orphans") {
-    withMockS3 { base =>
-      val e = vectors()
-      val idx = GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") < 40))
-      val batch = e.filter(col("vec_id").between(40, 59))
-      val dir = s"s3a:$base/crash"
-      IvfObjectStore.create(spark, idx, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val v1 = IvfObjectStore.currentManifest(fs, dir).get
-      // simulate the crash: stage the batch's data files through the
-      // direct-write protocol (exactly what append does first) and die
-      // before any manifest publish
-      val k = "spark.sql.sources.commitProtocolClass"
-      spark.conf.set(k, classOf[ManifestCommitProtocol].getName)
-      try GraftSimilarity
-        .ivfAppend(idx, batch).assigned
-        .filter(col("n_id") >= 40)
-        .repartition(col("c_id"))
-        .write.mode("append").partitionBy("c_id")
-        // the crashed writer HAD a token — it died between commitJob and
-        // its manifest publish, so its handoff is simply never taken
-        .option(ManifestCommitProtocol.TokenKey,
-                "dead-writer-" + System.nanoTime())
-        .parquet(s"$dir/data")
-      finally spark.conf.unset(k)
-      // readers: the store still serves EXACTLY manifest v1
-      assert(IvfObjectStore.currentManifest(fs, dir).get.version ==
-               v1.version)
-      val q = batch.limit(5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      assert(serve(IvfObjectStore.read(spark, dir), q) == serve(idx, q),
-        "orphaned data objects must be invisible to the manifest read")
-      // the retry of the same logical batch commits exactly once
-      IvfObjectStore.append(spark, dir, batch, batchTag = Some("crash_b0"))
-      val viaStore = serve(IvfObjectStore.read(spark, dir), q)
-      assert(viaStore == serve(GraftSimilarity.ivfAppend(idx, batch), q),
-        "the retried batch must land exactly once beside the orphans")
-      // vacuum collects the orphans, live files survive
-      Thread.sleep(10)
-      assert(IvfObjectStore.vacuum(spark, dir, 1) > 0)
-      assert(serve(IvfObjectStore.read(spark, dir), q) == viaStore)
-    }
-  }
-
-  test("torn manifest (half-written, no atomic PUT): readers fall back to " +
-       "the previous valid version; a stale torn file is healed and its " +
-       "version slot reused; a FRESH torn file is never deleted") {
-    withMockS3 { base =>
-      val e = vectors()
-      val idx = GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") < 40))
-      val batch = e.filter(col("vec_id").between(40, 59))
-      val dir = s"s3a:$base/torn"
-      IvfObjectStore.create(spark, idx, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // plant a torn v2: a prefix of a real manifest, checksum missing
-      val torn = new org.apache.hadoop.fs.Path(
-        f"$dir/manifests/v${2L}%020d.manifest")
-      val out = fs.create(torn, false)
-      out.write("graft-ivf-manifest v1\nversion 2\n".getBytes("UTF-8"))
-      out.close()
-      assert(IvfObjectStore.currentManifest(fs, dir).get.version == 1,
-        "a torn manifest must never be served")
-      // fresh torn file: append refuses to heal it (its writer may be
-      // mid-close) and exhausts the version-2 slot retries
-      intercept[IvfObjectStore.ManifestConflict] {
-        IvfObjectStore.append(spark, dir, batch, batchTag = Some("t1"))
-      }
-      // age the torn file past the grace period -> healed and reused
-      val local = new java.io.File(s"$base/torn/manifests/" +
-        f"v${2L}%020d.manifest")
-      assert(local.setLastModified(System.currentTimeMillis() -
-        IvfObjectStore.TornManifestGraceMs - 1000))
-      IvfObjectStore.append(spark, dir, batch, batchTag = Some("t1"))
-      val m = IvfObjectStore.currentManifest(fs, dir).get
-      assert(m.version == 2 && m.tags == Set("t1"),
-        s"healed slot must be reused: v=${m.version} tags=${m.tags}")
-    }
-  }
-
-  test("optimistic version race: a competing publish in the middle of an " +
-       "append is absorbed — the retry lands ON TOP of the winner and " +
-       "both commits survive in the final chain") {
-    withMockS3 { base =>
-      val e = vectors()
-      val idx = GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") < 40))
-      val dir = s"s3a:$base/race"
-      IvfObjectStore.create(spark, idx, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // winner: publish v2 out from under the appender by appending first
-      IvfObjectStore.append(spark, dir,
-        e.filter(col("vec_id").between(40, 49)), batchTag = Some("winner"))
-      // loser-turned-retrier: a normal append now starts from v2; to force
-      // an actual conflict, squat v3 with a VALID foreign manifest first
-      val v2 = IvfObjectStore.currentManifest(fs, dir).get
-      val squat = v2.copy(version = 3)
-      val p = new org.apache.hadoop.fs.Path(
-        f"$dir/manifests/v${3L}%020d.manifest")
-      val out = fs.create(p, false)
-      out.write(squat.render.getBytes("UTF-8")); out.close()
-      IvfObjectStore.append(spark, dir,
-        e.filter(col("vec_id").between(50, 59)), batchTag = Some("loser"))
-      val m = IvfObjectStore.currentManifest(fs, dir).get
-      assert(m.version == 4 && m.tags == Set("winner", "loser"),
-        s"retry must land on top of the squatted version: v=${m.version} " +
-        s"tags=${m.tags}")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val expected = serve(GraftSimilarity.ivfAppend(idx,
-        e.filter(col("vec_id").between(40, 59))), q)
-      assert(serve(IvfObjectStore.read(spark, dir), q) == expected)
     }
   }
 
@@ -296,8 +166,7 @@ class ManifestStoreSpec extends GraftFunSuite {
       assert(spark.conf.getOption(confKey) == prevProtocol,
         "store writes must run on a forked session — the owner conf " +
         "was mutated")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m = IvfObjectStore.currentManifest(fs, dir).get
       assert(m.tags == Set("ca", "cb"), m.tags.toString)
       // every manifest data entry resolves to real bytes (no writer
@@ -341,7 +210,7 @@ class ManifestStoreSpec extends GraftFunSuite {
       IvfObjectStore.vacuum(spark, dir, 1)
       val left = IvfObjectStore.versions(spark, dir)
       assert(left == Seq(3L), s"vacuum must keep only current: $left")
-      val err = intercept[IvfObjectStore.ManifestStoreException] {
+      val err = intercept[ManifestStoreException] {
         IvfObjectStore.readAt(spark, dir, 1)
       }
       assert(err.getMessage.contains("readable versions: 3"))
@@ -372,8 +241,7 @@ class ManifestStoreSpec extends GraftFunSuite {
         input.addData(b1); sq.processAllAvailable()
         input.addData(b2); sq.processAllAvailable()
       } finally sq.stop()
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val m = IvfObjectStore.currentManifest(fs, dir).get
       assert(m.tags == Set("os1_b0", "os1_b1"), m.tags.toString)
       val q = rest.limit(5)
@@ -389,8 +257,7 @@ class ManifestStoreSpec extends GraftFunSuite {
       val e = vectors().filter(col("vec_id") < 100)
       val dir = s"s3a:$base/delstream"
       IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(e), dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       // tagged delete: a replay with the committed tag no-ops BEFORE work
       val ids1 = e.filter(col("vec_id") % 10 === 1).select("vec_id")
       assert(IvfObjectStore.delete(spark, dir, ids1,
@@ -438,8 +305,7 @@ class ManifestStoreSpec extends GraftFunSuite {
       val dir = s"s3a:$base/del"
       IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(seed), dir)
       IvfObjectStore.append(spark, dir, rest, batchTag = Some("b1"))
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(dir)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
       val preVersion = IvfObjectStore.versions(spark, dir).max

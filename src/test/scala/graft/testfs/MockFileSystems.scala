@@ -5,7 +5,7 @@ import java.net.URI
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Test-only Hadoop filesystems for StoreFsSpec: each is the LOCAL
+/** Test-only Hadoop filesystems for the store specs: each is the LOCAL
   * filesystem wearing a different scheme, so the at-rest store's
   * filesystem-contract gate can be exercised against object-store /
   * eventually-consistent / unknown schemes without any real remote
@@ -47,3 +47,20 @@ class MockInconsistentListingFs extends SchemedLocalFs("mockeventual") {
 /** An unknown scheme with default capabilities — neither allowlisted nor
   * a known object store; the gate must refuse it conservatively. */
 class MockUnknownFs extends SchemedLocalFs("mockdfs")
+
+/** The mock object store with an eventually-consistent listing:
+  * `listStatus` keeps returning every file it has listed before, also
+  * after that file is deleted — the lag of an S3-class listing, which
+  * the manifest stores must absorb (a listed manifest that is gone reads
+  * as absent). */
+class MockLaggingListingFs extends SchemedLocalFs("s3a") {
+  private val seen =
+    new java.util.concurrent.ConcurrentHashMap[Path, Map[String, FileStatus]]()
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val now = super.listStatus(f).map(st => st.getPath.getName -> st).toMap
+    seen.merge(makeQualified(f), now,
+               (before: Map[String, FileStatus], fresh: Map[String, FileStatus]) =>
+                 before ++ fresh)
+      .values.toArray.sortBy(_.getPath.getName)
+  }
+}
