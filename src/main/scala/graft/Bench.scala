@@ -102,7 +102,7 @@ object Bench {
       "dedup_embedding_cosine", "dedup_components", "dedup_semantic",
       "pipeline_sequence_pack", "text_bm25_topk",
       "ann_cosine_topk", "ann_ivf_topk", "ann_ivf_append",
-      "ann_ivf_stored", "ann_ivf_coarse", "ann_ivf_rebuild",
+      "ann_ivf_stored_manifest", "ann_ivf_coarse", "ann_ivf_rebuild",
       "ann_lsh_bucket", "ann_quantized_topk", "dedup_cdc_chunks",
       "dedup_semantic_scale",
       "text_vocab_tfidf", "text_quality_rules",
@@ -114,7 +114,7 @@ object Bench {
     // the top queries by THIS run's median join the fixed sentinel set,
     // so the contract line always carries the suite's dominant rows —
     // r16's fixed set omitted every heavy query that round optimized
-    // (ann_maxsim*, ann_ivf_delete, graph_*, ann_hybrid_*, keepset),
+    // (ann_maxsim*, ann_ivf_delete*, graph_*, ann_hybrid_*, keepset),
     // which left the driver's comparison blind exactly where the wins
     // were. Budgeted so the line stays inside the driver's 2000-char
     // output tail whole.

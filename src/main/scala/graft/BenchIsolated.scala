@@ -34,7 +34,7 @@ object BenchIsolated {
     * this round's new oracled rows, and the MaxSim family carried so the
     * stored row's amortized serve reads against its build-per-run twins. */
   val DefaultFlagged: Seq[String] = Seq(
-    "ann_ivf_stored", "events_range_join", "src_bucketed_join",
+    "ann_ivf_stored_manifest", "events_range_join", "src_bucketed_join",
     "text_bm25_topk",
     // r13 new rows
     "ann_maxsim_stored", "graph_pagerank_dangling",
@@ -56,15 +56,13 @@ object BenchIsolated {
     // rebuild-per-run baseline), incremental keep-set (vs the
     // from-scratch dedup_neardup_clusters), warm-start PageRank (vs the
     // cold graph_pagerank)
-    "text_bm25_stored", "text_bm25_pruned", "ann_hybrid_impact_stored",
-    "dedup_keepset_incremental", "graph_pagerank_warm", "graph_pagerank",
-    "dedup_neardup_clusters",
+    "text_bm25_pruned", "dedup_keepset_incremental", "graph_pagerank_warm",
+    "graph_pagerank", "dedup_neardup_clusters",
     // r15: the in-suite movers VERDICT r14 sent to arbitration (What's
     // wrong #2: text_scrub_repeats 1.54x with no touching change;
     // events_asof_join / q_window_rank opportunistically), the
     // re-distributed prefix dedup (What's wrong #1 fix — no longer a
-    // single-task window), and the manifest-layout BM25 serve (vs its
-    // directory-layout twin text_bm25_stored above)
+    // single-task window), and the at-rest BM25 serve
     "text_scrub_repeats", "events_asof_join", "q_window_rank",
     "dedup_prefix", "text_bm25_stored_manifest",
     // r15 second batch: the versioned at-rest keep-set (create +
@@ -84,10 +82,10 @@ object BenchIsolated {
     // the graph/BPE residue rows the round examined
     "ann_ivf_pq", "ann_pq_budget_sweep", "ann_ivf_stored_q4",
     "ann_ivf_stored_q8", "ann_ivf_rebuild", "ann_ivf_coarse",
-    "ann_ivf_stored_pq", "ann_ivf_pq_manifest", "ann_hybrid_pq",
+    "ann_ivf_pq_manifest", "ann_hybrid_pq",
     "ann_hybrid_q8", "ann_hybrid_ivf", "ann_hybrid_filtered",
     "ann_hybrid_rrf", "ann_ivf_kmeans", "mm_embed_ivf",
-    "ann_ivf_delete", "ann_ivf_delete_manifest",
+    "ann_ivf_delete_manifest",
     "text_bpe_segment", "text_bpe_train", "graph_hits", "graph_ppr")
 
   private def median(ts: Seq[Double]): Double = {

@@ -42,13 +42,13 @@ object PlanDump {
                     "pipeline_split_cluster_safe",
                     "ann_hybrid_rrf", "ann_hybrid_ivf",
                     "ann_recall_sweep", "ann_ivf_stored_q8",
-                    "ann_pq_adc", "ann_ivf_pq", "ann_ivf_stored_pq",
+                    "ann_pq_adc", "ann_ivf_pq",
                     "ann_ivf_pq_manifest", "ann_tier_recall",
                     "text_heavy_hitters",
                     // r12: the most expensive bench row finally pinned
-                    // (r11 verdict #1), the delete lifecycle on both
-                    // layouts, the budget sweep, hybrid over PQ
-                    "pipeline_corpus_curation", "ann_ivf_delete",
+                    // (r11 verdict #1), the delete lifecycle, the budget
+                    // sweep, hybrid over PQ
+                    "pipeline_corpus_curation",
                     "ann_ivf_delete_manifest", "ann_pq_budget_sweep",
                     "ann_hybrid_pq",
                     // r12: the int4 rung of the at-rest ladder; link
@@ -94,9 +94,9 @@ object PlanDump {
                     // guard), stored-lexical fusion, incremental
                     // keep-set (contracted-sliver closure + gated
                     // remap), warm-start PageRank (seeded state join)
-                    "text_bm25_stored", "text_bm25_pruned",
+                    "text_bm25_pruned",
                     "text_bm25_stored_manifest", "text_bm25_pruned_skew",
-                    "ann_hybrid_impact_stored", "ann_hybrid_impact_manifest",
+                    "ann_hybrid_impact_manifest",
                     "dedup_keepset_incremental", "dedup_keepset_stored",
                     "graph_pagerank_warm",
                     // r14: perceptual image/audio near-dup (banded-

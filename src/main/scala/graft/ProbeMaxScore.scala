@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.ImpactObjectStore
+import graft.queries.GraftQuery.reusedStore
+
 /** MaxScore payoff probe (VERDICT r14 missing #3): measures, on the
   * Zipf-head bench fixture ([[graft.queries.TextQueries.skewDocs]] — the
   * stopword-in-every-doc / rare-discriminative-term augmentation of the
@@ -31,11 +34,10 @@ import org.apache.spark.sql.functions._
 object ProbeMaxScore {
 
   private def syntheticIndex(spark: SparkSession, n: Long)
-      : graft.operators.ImpactIndex.StoredImpacts = {
-    val out = s"/tmp/graft_io/maxscore_synth_$n/impact_index"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/meta/_SUCCESS"))) {
+      : graft.operators.ImpactIndex.StoredImpacts =
+    ImpactObjectStore.read(spark, reusedStore(spark, s"maxscore_synth_$n",
+                                              "impact_store",
+                                              ImpactObjectStore) { out =>
       // deterministic Zipf-head corpus: dl varies with id so BM25 length
       // normalization actually discriminates; every term's tf is 1
       val docs = spark.range(n).select(
@@ -47,10 +49,8 @@ object ProbeMaxScore {
           when(col("id") % 3 === 0, lit(" pad0 pad1")).otherwise(lit("")),
           when(col("id") % 7 === 0, lit(" pad2")).otherwise(lit(""))
         ).as("text"))
-      graft.operators.ImpactIndex.write(docs, out)
-    }
-    graft.operators.ImpactIndex.read(spark, out)
-  }
+      ImpactObjectStore.rebuild(docs, out)
+    })
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0)
@@ -69,7 +69,7 @@ object ProbeMaxScore {
     val synth = """synthetic:(\d+)""".r
     val idx = sfDir match {
       case synth(n) => syntheticIndex(spark, n.toLong)
-      case _ => graft.queries.TextQueries.skewImpactIndex(spark, sfDir)
+      case _ => graft.queries.TextQueries.skewImpactStore(spark, sfDir)
     }
     val terms = Seq("uncommonmark", "spark", "the")
     // traversal, counted the way the operator builds its frames: the

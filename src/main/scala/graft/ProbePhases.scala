@@ -29,7 +29,8 @@ object ProbePhases {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    import graft.operators.{GraftSimilarity, HybridRetrieval}
+    import graft.operators.{GraftSimilarity, HybridRetrieval, IvfObjectStore}
+    import graft.queries.GraftQuery.freshStore
 
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -39,21 +40,16 @@ object ProbePhases {
     }
 
     if (mode == "pq") {
-      // ann_ivf_stored_pq phase split: where do its ~4 s go — train
+      // ann_ivf_pq_manifest phase split: where do its ~4 s go — train
       // chain, store write, or ADC serve? (VERDICT r16 next #5)
       import graft.operators.GraftPq
       (1 to reps).foreach { rep =>
-        println(s"== ann_ivf_stored_pq phases, rep $rep")
+        println(s"== ann_ivf_pq_manifest phases, rep $rep")
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"),
                   col("embedding").cast("array<double>").as("v"))
         val qb = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        val out = s"/tmp/graft_io/${new java.io.File(sfDir).getName}" +
-          "/probe_pq_store"
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
         val cb = phase("trainPq (lazy)") {
           GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
         }
@@ -61,10 +57,15 @@ object ProbePhases {
         val idx = phase("buildIvfIndex (lazy)") {
           graft.operators.GraftSimilarity.buildIvfIndex(e)
         }
-        phase("writeIvfPqStore") { GraftPq.writeIvfPqStore(idx, cbM, out) }
+        val out = freshStore(spark, sfDir, "probe_pq_store") { o =>
+          phase("IvfObjectStore.create(pq)") {
+            IvfObjectStore.create(spark, idx, o, pq = Some(cbM))
+          }
+        }
         val served = phase("serve construction") {
-          GraftPq.ivfPqTopKStored(spark, out, qb, k = 5, nprobe = 4,
-                                  rerankFactor = 4)
+          GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, out),
+                                  GraftPq.readPqCodebook(spark, out), qb,
+                                  k = 5, nprobe = 4, rerankFactor = 4)
         }
         phase("serve execution (noop)") {
           served.write.format("noop").mode("overwrite").save()
@@ -139,20 +140,17 @@ object ProbePhases {
           .select(col("doc_id").as("q_id"),
                   GraftText.whitespaceTokens(col("text")).as("q_terms"),
                   col("v").as("qv"))
-        val out = s"/tmp/graft_io/${new java.io.File(sfDir).getName}" +
-          s"/probe_$mode"
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
         if (mode == "hybrid_b1") {
           val idx = phase("buildIvfIndex (lazy)") {
             GraftSimilarity.buildIvfIndex(e)
           }
-          phase("writeIvfIndex(b1)") {
-            GraftSimilarity.writeIvfIndex(idx, out, b1 = true)
+          val out = freshStore(spark, sfDir, s"probe_$mode") { o =>
+            phase("IvfObjectStore.create(b1)") {
+              IvfObjectStore.create(spark, idx, o, b1 = true)
+            }
           }
-          val stored = phase("readIvfIndex") {
-            GraftSimilarity.readIvfIndex(spark, out)
+          val stored = phase("IvfObjectStore.read") {
+            IvfObjectStore.read(spark, out)
           }
           val sem = phase("sem leg construction") {
             GraftSimilarity.ivfTopKWithB1(stored,
@@ -175,9 +173,14 @@ object ProbePhases {
           val cb = phase("trainPq (lazy)") {
             GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
           }
-          phase("writeIvfPqStore") { GraftPq.writeIvfPqStore(idx, cb, out) }
+          val out = freshStore(spark, sfDir, s"probe_$mode") { o =>
+            phase("IvfObjectStore.create(pq)") {
+              IvfObjectStore.create(spark, idx, o, pq = Some(cb))
+            }
+          }
           val served = phase("serve construction") {
-            HybridRetrieval.hybridTopKPqStored(spark, out, docs, queries,
+            HybridRetrieval.hybridTopKWithPq(IvfObjectStore.read(spark, out),
+              GraftPq.readPqCodebook(spark, out), docs, queries,
               k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
           }
           phase("serve execution (noop)") {
@@ -200,12 +203,9 @@ object ProbePhases {
       (1 to reps).foreach { rep =>
         println(s"== text_bm25_delete_manifest phases, rep $rep")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val out = s"/tmp/graft_io/${new java.io.File(sfDir).getName}" +
-          "/probe_bm25del"
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
-        phase("rebuild #1 (full)") { ImpactObjectStore.rebuild(docs, out) }
+        val out = freshStore(spark, sfDir, "probe_bm25del") { o =>
+          phase("rebuild #1 (full)") { ImpactObjectStore.rebuild(docs, o) }
+        }
         phase("delete (tombstone)") {
           ImpactObjectStore.delete(spark, out,
             docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
@@ -307,14 +307,14 @@ object ProbePhases {
                 graft.operators.GraftText.whitespaceTokens(col("text"))
                   .as("q_terms"),
                 col("v").as("qv"))
-      val out = s"/tmp/graft_io/${new java.io.File(sfDir).getName}" +
-        "/hybrid_q8_store"
       val idx = phase("buildIvfIndex (lazy)") {
         GraftSimilarity.buildIvfIndex(e)
       }
-      phase("writeIvfIndex") { GraftSimilarity.writeIvfIndex(idx, out) }
-      val stored = phase("readIvfIndex") {
-        GraftSimilarity.readIvfIndex(spark, out)
+      val out = freshStore(spark, sfDir, "hybrid_q8_store") { o =>
+        phase("IvfObjectStore.create") { IvfObjectStore.create(spark, idx, o) }
+      }
+      val stored = phase("IvfObjectStore.read") {
+        IvfObjectStore.read(spark, out)
       }
       phase("q.count()") { queries.count() }
       val sem = phase("sem leg construction") {

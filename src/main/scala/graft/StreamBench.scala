@@ -71,7 +71,6 @@ object StreamBench {
     "sb_ivf_serve"           -> 0.001064,
     "sb_maxsim_serve"        -> 0.000065,
     "sb_maxsim_serve_cut"    -> 0.000103,
-    "sb_ivf_ingest"          -> 0.009605,
     "sb_ivf_ingest_manifest" -> 0.012619,
     "sb_pack"                -> 0.038611,
     "sb_sessionize"          -> 0.344984,
@@ -118,7 +117,7 @@ object StreamBench {
     // r15 (second baselining run, calibration 7.129 s / 14 027 rows/s):
     // the streaming keep-set ingest — foreachBatch store increments, so
     // throughput-floored only (no stream state to ceiling, the
-    // sb_ivf_ingest convention)
+    // sb_ivf_ingest_manifest convention)
     "sb_keepset_ingest"      -> 0.029620,
     // r16: the MaxScore-pruned hybrid serve (VERDICT r15 missing #3),
     // floored at 0.5x its r16 baselining run (calibration 8.914 s /
@@ -714,8 +713,8 @@ object StreamBench {
         // same two bounded aggregations + in-row fusion
         val storeDir = java.nio.file.Files
           .createTempDirectory("sb_impact_store").toString
-        graft.operators.ImpactIndex.write(docsStatic, storeDir)
-        val stored = graft.operators.ImpactIndex.read(spark, storeDir)
+        graft.operators.ImpactObjectStore.rebuild(docsStatic, storeDir)
+        val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
         rep {
           val in = MemoryStream[(Long, Timestamp, List[String], List[Double])]
           val q = sink(CorpusStreams.hybridServeStreamStored(
@@ -740,14 +739,14 @@ object StreamBench {
         // twin's.
         val skewDir = java.nio.file.Files
           .createTempDirectory("sb_impact_skew").toString
-        graft.operators.ImpactIndex.write(
+        graft.operators.ImpactObjectStore.rebuild(
           docsStatic.select(
             col("doc_id"),
             concat(col("text"), lit(" the"),
                    when(col("doc_id") % 5 === 0, lit(" uncommonmark"))
                      .otherwise(lit(""))).as("text")),
           skewDir)
-        val skewStored = graft.operators.ImpactIndex.read(spark, skewDir)
+        val skewStored = graft.operators.ImpactObjectStore.read(spark, skewDir)
         val prunedQueries = queries.map { case (id, t, _, v) =>
           (id, t, List("uncommonmark", "the"), v) }
         rep {
@@ -843,40 +842,9 @@ object StreamBench {
       } finally { idx.unpersist(); dt.unpersist(); () }
     }
 
-    // IVF streaming ingest into a fresh at-rest store (idempotent tags)
-    rep {
-      import graft.operators.GraftSimilarity
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"),
-                expr("transform(embedding, x -> cast(x AS double))").as("v"))
-      val dir = java.nio.file.Files.createTempDirectory("sb_ivf_ingest").toString
-      try {
-        GraftSimilarity.writeIvfIndex(
-          GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") % 3 === 0)), dir)
-        val batchRows = vecs.filter(_._1 % 3 != 0).map(v => (v._1, v._3))
-        val in = MemoryStream[(Long, List[Float])]
-        val q = CorpusStreams.ivfIngestStream(
-            dir, in.toDF().toDF("vec_id", "embedding"), streamId = "sb")
-          .option("checkpointLocation", s"$dir/_chk").start()
-        try {
-          val t0 = System.nanoTime()
-          chunks(batchRows, 2).foreach { c =>
-            in.addData(c); q.processAllAvailable()
-          }
-          val sec = (System.nanoTime() - t0) / 1e9
-          out += Rec("sb_ivf_ingest", batchRows.size,
-                     spark.read.parquet(s"$dir/assigned").count(), sec, 0L, 0L)
-          println(s"[streambench] sb_ivf_ingest done: ${out.last}")
-        } finally q.stop()
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
-    }
-
-    // streaming ingest into the MANIFEST-COMMITTED object-store layout:
-    // same replay as sb_ivf_ingest, but every micro-batch publishes a
-    // new manifest version via the rename-free commit protocol — the
-    // throughput delta vs the directory store IS the price of
-    // object-store-safe commits
+    // IVF streaming ingest into a fresh at-rest store: every micro-batch
+    // is one tagged append that publishes a new manifest version via the
+    // rename-free commit protocol
     rep {
       import graft.operators.{GraftSimilarity, IvfObjectStore}
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -932,7 +900,7 @@ object StreamBench {
         val pairRows = docRows.map(_._1).filter(_ % 3 != 0)
           .map(id => (id, id - id % 3))
         val in = MemoryStream[(Long, Long)]
-        val q = CorpusStreams.keepSetIncrementStream(
+        val q = KeepSetStore.incrementStream(
             dir, in.toDF().toDF("a_id", "b_id"), streamId = "sb")
           .option("checkpointLocation", s"$dir/_chk").start()
         try {

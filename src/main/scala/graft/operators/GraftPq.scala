@@ -421,12 +421,12 @@ object GraftPq {
   }
 
   // ---------------------------------------------------------------------
-  // At-rest PQ store tier (directory layout) — code words persisted as a
-  // `cw` column in the store's cell files, the codebook beside the
-  // centroids
+  // At-rest PQ store tier ([[IvfObjectStore]] with `pq`) — code words
+  // persisted as a `cw` column in the store's cell files, the codebook
+  // beside the centroids
   // ---------------------------------------------------------------------
 
-  /** Persist a trained codebook beside a directory-layout IVF store
+  /** Persist a trained codebook beside an IVF store
     * (`$dir/pq_codebook`): the m·ksub codebook rows plus constant
     * (m, ksub) meta columns. The codebook is IMMUTABLE once written —
     * appends never retrain (the [[ivfPqTopKWith]] contract), so there
@@ -443,8 +443,8 @@ object GraftPq {
                      dir: String): PqCodebook =
     readPqCodebookIfAny(spark, dir).getOrElse(throw new IllegalArgumentException(
       s"readPqCodebook: no codebook at $dir/pq_codebook — not a PQ store " +
-      "(writeIvfPqStore / IvfObjectStore.create(…, pq = Some(cb)) writes " +
-      "one; writePqCodebook attaches one to an existing store for " +
+      "(IvfObjectStore.create(…, pq = Some(cb)) writes one; " +
+      "writePqCodebook attaches one to an existing store for " +
       "compaction migration)"))
 
   /** The [[writePqCodebook]] schema: the codebook rows plus the constant
@@ -486,7 +486,7 @@ object GraftPq {
   /** Repair a merged frame's `cw` column: the null sliver (files written
     * before the PQ layout) re-encodes through the folded projection, the
     * column is added when absent entirely — the compaction-as-migration
-    * step shared by BOTH store layouts' compact paths. */
+    * step of [[IvfObjectStore.compact]] and [[IvfObjectStore.delete]]. */
   private[operators] def repairCw(cb: PqCodebook,
                                   merged: DataFrame): DataFrame = {
     val base =
@@ -496,65 +496,20 @@ object GraftPq {
       .unionByName(withCw(cb, base.filter(col("cw").isNull).drop("cw")))
   }
 
-  /** Write a directory-layout IVF store whose cell files ALSO carry the
-    * m-byte PQ code word (`cw`) beside (n_id, v, q8) — the 100-TB
-    * serving shape where the candidate scan reads ~64× fewer vector
-    * bytes than raw (~8× fewer than the q8 tier): column pruning keeps
-    * everything but (n_id, c_id, cw) out of [[ivfPqTopKStored]]'s
-    * stage-1 scan, and the n_id-sorted layout serves the survivor
-    * fetch's row-group-pruned rerank unchanged. The codebook persists
-    * at `$dir/pq_codebook` so appends encode inline without retraining.
-    */
-  def writeIvfPqStore(index: GraftSimilarity.IvfIndex, cb: PqCodebook,
-                      dir: String): Unit = {
-    val cbP = cb.persist()
-    GraftSimilarity.writeIvfIndex(
-      index.copy(assigned = withCw(cbP, index.assigned)), dir)
-    writePqCodebook(cbP, dir)
-    cbP.unpersist()
-  }
-
-  /** Append a batch to a PQ store: assignment against the stored
-    * centroids plus inline folded encode against the stored codebook —
-    * same tag/maintenance-lock semantics as
-    * [[GraftSimilarity.appendIvfStore]] (this IS that append, with the
-    * cw attach as its augment step). Appends never retrain. */
-  def appendIvfPqStore(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, batch: DataFrame,
-                       idCol: String = "vec_id", vecCol: String = "v",
-                       batchTag: Option[String] = None): Unit = {
-    val cb = readPqCodebook(spark, dir)
-    GraftSimilarity.appendIvfStore(spark, dir, batch, idCol, vecCol,
-                                   batchTag, augment = withCw(cb, _))
-  }
-
-  /** Serve top-k from an at-rest PQ store ([[writeIvfPqStore]]): probe
-    * the query's `nprobe` nearest cells, ADC-score the probed cells'
-    * members off the STORED `cw` column — the stage-1 scan ships
-    * (n_id, c_id, m bytes) and column pruning keeps the doubles (and
-    * the q8 bytes) out entirely — then exact-rerank the k·rerankFactor
+  /** Serve top-k from any cw-carrying index + codebook pair — typically
+    * an at-rest PQ store ([[IvfObjectStore.read]] + [[readPqCodebook]]):
+    * probe the query's `nprobe` nearest cells, ADC-score the probed
+    * cells' members off the STORED `cw` column — the stage-1 scan ships
+    * (n_id, c_id, m bytes) and column pruning keeps the doubles (and the
+    * q8 bytes) out entirely — then exact-rerank the k·rerankFactor
     * survivors, fetching ONLY their full vectors through the literal
     * `n_id IN (...)` pushdown that prunes row groups on the n_id-sorted
     * cell files (the [[GraftSimilarity.ivfTopKWithQ8]] stage-2 shape).
-    * A null `cw` (mixed-generation cells — files written before the PQ
-    * layout) FAILS LOUDLY; [[GraftSimilarity.compactIvfCells]] with the
-    * codebook present is the in-place migration path. `rerankFactor` is
-    * the recall knob — size it with [[pqAutoBudget]], not the default
-    * (see [[pqTopK]]'s budget warning). */
-  def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, queries: DataFrame, k: Int,
-                      nprobe: Int = 4, rerankFactor: Int = 4,
-                      qIdCol: String = "q_id", qVecCol: String = "qv")
-      : DataFrame =
-    ivfPqTopKWithCw(GraftSimilarity.readIvfIndex(spark, dir),
-                    readPqCodebook(spark, dir), queries, k, nprobe,
-                    rerankFactor, qIdCol, qVecCol)
-
-  /** The serve core over ANY cw-carrying index + codebook pair — the
-    * directory store ([[ivfPqTopKStored]]) and the manifest store
-    * ([[graft.operators.IvfObjectStore.read]] +
-    * [[readPqCodebook]]) both land here, so PQ serving is
-    * layout-independent exactly like the q8 tier. */
+    * A null `cw` (a file written before the store had a codebook) FAILS
+    * LOUDLY; [[IvfObjectStore.compact]] with the codebook present
+    * re-encodes it in every cell it rewrites. `rerankFactor` is the
+    * recall knob — size it with [[pqAutoBudget]], not the default (see
+    * [[pqTopK]]'s budget warning). */
   def ivfPqTopKWithCw(index: GraftSimilarity.IvfIndex, cb0: PqCodebook,
                       queries: DataFrame, k: Int,
                       nprobe: Int = 4, rerankFactor: Int = 4,
@@ -570,9 +525,8 @@ object GraftPq {
     graft.GraftSession.ensureExtensions(spark)
     require(index.assigned.columns.contains("cw"),
       "ivfPqTopKWithCw: index has no cw column — write the store with " +
-      "writeIvfPqStore / IvfObjectStore.create(…, pq = Some(cb)), or " +
-      "compact a pre-PQ store with its codebook present to migrate in " +
-      "place")
+      "IvfObjectStore.create(…, pq = Some(cb)), or compact a pre-PQ " +
+      "store with its codebook present to migrate in place")
     val cb = materialize(cb0)
     // persist the minibatch projection: the PQ serve evaluates it at
     // least four times — the qlutFrame join side, the survivor-fetch

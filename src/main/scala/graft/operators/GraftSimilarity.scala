@@ -491,20 +491,17 @@ object GraftSimilarity {
     }
   }
 
-  /** Fail fast on a non-integral id column: the at-rest layout
-    * ([[writeIvfIndex]]) partitions by c_id and [[readIvfIndex]] pins the
-    * long contract with a cast — a store written with string/decimal ids
-    * would read back all-null c_id and [[ivfTopKWith]] would silently
-    * serve zero rows (ADVICE r5). Checked at build/append/write time, not
-    * discovered at read time. Width is then NORMALIZED to long in the
-    * projection right after this check (ADVICE r6): blessing byte/short/
-    * int/long here but writing the native width would let a store built
-    * with int ids and appended with long ids hold parquet files with
-    * different n_id schemas in one directory — mergeSchema=false reads
-    * pick one footer and fail (or mis-width) at read time, the exact late
-    * failure this guard exists to prevent.
+  /** Fail fast on a non-integral id column: every IVF boundary (build,
+    * [[ivfAppend]], and [[IvfObjectStore]] create, append and delete)
+    * casts ids to long, and the cast is not a check — a double id `1.5`
+    * truncates to `1` and silently collides with another vector, and a
+    * non-numeric string fails late, inside the staging job (ADVICE r5).
+    * Width is then NORMALIZED to long in the projection right after this
+    * check (ADVICE r6): a store built with int ids and appended with long
+    * ids holds ONE n_id schema across its files.
     */
-  private def requireIntegralId(df: DataFrame, c: String, ctx: String): Unit = {
+  private[operators] def requireIntegralId(df: DataFrame, c: String,
+                                           ctx: String): Unit = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val dt = df.schema(c).dataType
     require(dt == ByteType || dt == ShortType || dt == IntegerType ||
@@ -545,7 +542,7 @@ object GraftSimilarity {
       s"(${LayoutCols.mkString(", ")})")
     // metadata rides beside the vectors from here on: through assignTo,
     // into the cell files (storedLayout passes it through), and back out
-    // of readIvfIndex — the filter columns of a `where` serve
+    // of IvfObjectStore.read — the filter columns of a `where` serve
     val e = collection.select(
       col(idCol).cast("long").as("n_id") +: col(vecCol).as("v") +:
         metaCols.map(col): _*)
@@ -684,71 +681,12 @@ object GraftSimilarity {
     IvfIndex(index.centroids, index.assigned.unionByName(add))
   }
 
-  /** Persist an [[IvfIndex]] at rest: centroids as plain parquet,
-    * `assigned` PARTITIONED BY cell id — the layout where "each probe
-    * reads only its cells" stops being documentation and becomes what the
-    * scan does. Serving a batch through [[ivfTopKWith]] on the
-    * [[readIvfIndex]] frames plans Spark's dynamic partition pruning on
-    * the probe join: the (broadcast-small) probe side's cell ids become a
-    * runtime partition filter on the assigned scan, so only the probed
-    * cells' files are read — no driver-side collect of cell ids, the
-    * pruning is in-plan (IvfStoreSpec pins `dynamicpruning` in the scan
-    * and result parity with the in-memory index).
-    *
-    * Scale: √N partitions of √N vectors each — directory count and file
-    * sizes both stay manageable at any N (1e9 vectors ⇒ ~31k dirs); the
-    * write shuffles once on cell id so each partition is one file, the
-    * natural bucket for cell-local rerank.
-    *
-    * Data files carry (n_id, v, q8): `q8 = graft_q8b(v)` is the scalar-
-    * quantized serving column ([[ivfTopKWithQ8]] scores candidates off
-    * it and touches `v` only for the rerank survivors — the candidate
-    * scan reads ~8× fewer vector bytes), and rows are SORTED by n_id
-    * within each cell file so the survivor fetch's `n_id IN (...)`
-    * pushdown prunes row groups on their min/max stats instead of
-    * rescanning the probed cells.
-    */
-  def writeIvfIndex(index: IvfIndex, dir: String, q4: Boolean = false,
-                    b1: Boolean = false): Unit = {
-    requireIntegralId(index.assigned, "c_id", "writeIvfIndex")
-    requireIntegralId(index.assigned, "n_id", "writeIvfIndex")
-    val conf = index.assigned.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    requireStoreFsContract(fs, p, conf, "writeIvfIndex")
-    // NOTE (r17): overlapping the centroid and assigned writes in two
-    // driver threads (guide §2.6) was MEASURED and REJECTED — interleaved
-    // A/B over 16 store rows read 0.95 (noise-to-negative): at any width
-    // the two jobs share the same executor slots, and racing the first
-    // materialization of the persisted `cents` frame can compute its
-    // partitions twice before the cache fills. Sequential writes stay.
-    index.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    storedLayout(index.assigned, q4, b1)
-      .write.mode("overwrite").partitionBy("c_id")
-      .parquet(s"$dir/assigned")
-    // a full rewrite supersedes any pending tombstones: the new assigned
-    // set is exactly what the caller wrote, and stale tombstones would
-    // silently mask ids of the NEW population on read
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-  }
-
   /** The at-rest shape of an assigned frame, shared by every path that
-    * writes cell files (full write, directory append, object-store
-    * stage): the q8 serving column attached (unless the frame already
-    * carries one — a compaction rewrite must not re-quantize), one
-    * shuffle on cell id, rows n_id-sorted within each cell file for the
-    * rerank fetch's row-group pruning. */
-  /** Quantized-column repair for a compaction rewrite: attach `colName`
-    * if the merged frame lacks it, quantize-null where a pre-tier file
-    * merged the column in as null — so compaction is also the in-place
-    * migration path to each scalar-quantized serving tier. */
-  private def quantRepair(df: DataFrame, colName: String,
-                          fn: String): DataFrame =
-    if (df.columns.contains(colName))
-      df.withColumn(colName,
-        when(col(colName).isNull, expr(s"$fn(v)")).otherwise(col(colName)))
-    else df.withColumn(colName, expr(s"$fn(v)"))
-
+    * writes cell files ([[IvfObjectStore]] create, append and cell
+    * rewrites): the q8 serving column attached (unless the frame already
+    * carries one — a cell rewrite must not re-quantize), one shuffle on
+    * cell id, rows n_id-sorted within each cell file for the rerank
+    * fetch's row-group pruning. */
   private[operators] def storedLayout(assigned: DataFrame,
                                       q4: Boolean = false,
                                       b1: Boolean = false): DataFrame = {
@@ -760,16 +698,14 @@ object GraftSimilarity {
     // is a real cost a store that never serves the int4 tier should not
     // pay (the ann_ivf_stored 1.50× regression was exactly this). A
     // frame already carrying q4 keeps it (append/compaction rewrites of
-    // a q4-carrying store must not drop the tier); writeIvfIndex(q4 =
-    // true) / IvfObjectStore.create(q4 = true) opt a new store in, and
-    // compactIvfCells(addQ4 = true) migrates an existing one in place.
+    // a q4-carrying store must not drop the tier); IvfObjectStore
+    // .create(q4 = true) opts a new store in.
     val withQ4 =
       if (withQ8.columns.contains("q4")) withQ8
       else if (q4) withQ8.withColumn("q4", expr("graft_q4b(v)"))
       else withQ8
     // the 1-bit rung follows the same opt-in-at-write / keep-on-rewrite
-    // contract (serve via ivfTopKWithB1; migrate via
-    // compactIvfCells(addB1 = true))
+    // contract (serve via ivfTopKWithB1)
     val withB1 =
       if (withQ4.columns.contains("b1")) withQ4
       else if (b1) withQ4.withColumn("b1", expr("graft_b1b(v)"))
@@ -788,732 +724,6 @@ object GraftSimilarity {
     ScaleHints.writeWidth(withB1, col("c_id"))
       .sortWithinPartitions("c_id", "n_id")
   }
-
-  /** Absorb a batch into an AT-REST index without rewriting the store:
-    * the batch is assigned against the STORED centroids (the same
-    * map-side argmax as [[ivfAppend]]) and written `mode("append")` into
-    * the cell-partitioned layout — each touched cell directory gains one
-    * file, untouched cells' files are never rewritten, so the write cost
-    * is ∝ batch while [[compactIvfCells]] bounds the per-cell file count
-    * incrementally (and [[writeIvfIndex]]'s full rewrite stays the
-    * whole-store path, shared with rebuild). Serving the re-read store is
-    * identical to serving the in-memory [[ivfAppend]] result
-    * (OperatorLibSpec pins it); appends commute here exactly as they do
-    * in memory, because a vector's cell depends only on the fixed stored
-    * centroids.
-    *
-    * `batchTag` makes the append IDEMPOTENT — the retry contract for
-    * streaming ingest ([[graft.streaming.CorpusStreams.ivfIngestStream]]
-    * passes a stream-scoped tag). Protocol: if the tag's COMMIT MARKER
-    * (`$$dir/ingest_tags/<tag>`) exists the batch already landed fully
-    * and the call is a no-op (a replay after success costs nothing and
-    * cannot duplicate — even if [[compactIvfCells]] has since merged the
-    * tag's files away, which is why the marker, not file presence, is
-    * the source of truth). Otherwise the batch stages to the
-    * tag-deterministic `$$dir/ingest_staging/<tag>` (overwrite — a
-    * retried stage replaces itself), lands in the cell dirs as files
-    * named `ingest-<tag>-<i>.parquet` after any files of EXACTLY the
-    * same tag from a previous partial attempt are deleted (exact-tag
-    * match on the parsed filename), and finally writes the marker.
-    * Cleanup only lists the cells the staged batch touches: cell
-    * assignment is deterministic in (batch, stored centroids), so a
-    * partial attempt's files can only live in cells the current staging
-    * also holds. Untagged appends keep the plain `mode("append")` fast
-    * path (batch callers own their retries).
-    *
-    * Tag discipline — the marker gate makes a tag COLLISION a silent
-    * no-op drop of the second batch, so collisions must be impossible,
-    * not unlikely: tags are REJECTED (not sanitized — two distinct raw
-    * tags must never normalize to one) unless they match
-    * `[A-Za-z0-9_]+` ('-' is the filename separator and would make the
-    * grammar ambiguous), the tag namespace is per STORE, and callers
-    * must scope tags by data source (ivfIngestStream composes
-    * `<streamId>_b<batchId>` and requires a fresh streamId per fresh
-    * checkpoint). Markers live until [[pruneIngestTags]] — tie its
-    * retention to the longest window a source could replay.
-    *
-    * Maintenance exclusion (best-effort lease, single-writer by fleet
-    * discipline, the lock catches scheduling mistakes): both append
-    * paths refuse while a FRESH [[compactIvfCells]] lock is present —
-    * compaction's list-then-merge and the append's rename-into-cell race
-    * in both directions. The tagged path additionally RE-CHECKS the lock
-    * after its (minutes-long) staging job, immediately before the
-    * rename-into-store phase, so the window between check and mutation
-    * is the rename loop, not the Spark job. A lock older than
-    * [[MaintenanceLockTtlMs]] is STALE (a crashed pass) and treated as
-    * absent — one crashed compaction bounds the write outage at the TTL
-    * instead of wedging the store until a human intervenes. The refusal
-    * is a typed error ([[MaintenanceLockHeld]]):
-    * [[graft.streaming.CorpusStreams.ivfIngestStream]] retries it
-    * in-batch with backoff up to its lock-wait bound (default: this
-    * TTL), so a routine compaction pass never fails a live ingest; only
-    * a lock outliving that bound fails the streaming query, and the
-    * RESTART (supervisor-level — Structured Streaming does not retry a
-    * failed batch within a run) replays the batch from the checkpoint;
-    * replays of already-committed batches no-op on their marker BEFORE
-    * the lock check, so a restart mid-compaction drains cleanly.
-    */
-  def appendIvfStore(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     batch: DataFrame,
-                     idCol: String = "vec_id", vecCol: String = "v",
-                     batchTag: Option[String] = None,
-                     augment: DataFrame => DataFrame = identity): Unit = {
-    requireIntegralId(batch, idCol, "appendIvfStore")
-    import org.apache.hadoop.fs.Path
-    val lock = maintenanceLock(dir)
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val fs = lock.getFileSystem(hConf)
-    requireStoreFsContract(fs, new Path(dir), hConf, "appendIvfStore")
-    def requireUnlocked(phase: String): Unit =
-      if (maintenanceLockFresh(fs, lock))
-        throw new MaintenanceLockHeld(
-          s"appendIvfStore($phase): store $dir is under compaction " +
-          s"maintenance ($lock present and fresh) — the caller retries " +
-          "after the pass (ivfIngestStream retries in-batch up to its " +
-          "lock-wait bound before failing the query)")
-    // c_id pinned long on read: a store written before the long-normalize
-    // contract may hold narrower centroid ids; the assigned files this
-    // append writes must carry ONE n_id/c_id width regardless.
-    lazy val cents = spark.read.parquet(s"$dir/centroids")
-      .withColumn("c_id", col("c_id").cast("long"))
-    // `augment` runs between assignment and the at-rest layout — the
-    // hook the PQ tier uses to attach its code-word column
-    // ([[GraftPq.appendIvfPqStore]]) without duplicating the tag /
-    // maintenance-lock machinery below
-    // the store's at-rest schema (one footer read) drives both the
-    // metadata contract and the quantized-tier set the appended files
-    // must match — a batch written without the store's q4 column would
-    // leave mixed-schema cell dirs that mergeSchema=false reads mis-read
-    lazy val storeCols = spark.read.parquet(s"$dir/assigned").columns.toSeq
-    def assigned = storedLayout(augment(assignTo(cents, {
-        // a metadata-carrying store appends metadata-carrying batches:
-        // fail-loud if the batch lacks any column
-        val meta = metaColsOf(storeCols)
-        requireMetaCols(meta, batch.columns.toSeq, "appendIvfStore")
-        batch.select(
-          col(idCol).cast("long").as("n_id") +: col(vecCol).as("v") +:
-            meta.map(col): _*)
-      })), q4 = storeCols.contains("q4"), b1 = storeCols.contains("b1"))
-    batchTag match {
-      case None =>
-        requireUnlocked("batch")
-        assigned.write.mode("append").partitionBy("c_id")
-          .parquet(s"$dir/assigned")
-      case Some(tag) =>
-        require(tag.matches("[A-Za-z0-9_]+"),
-          s"batchTag '$tag' must match [A-Za-z0-9_]+ — '-' is the " +
-          "filename separator, and silent sanitization could collide " +
-          "two distinct tags into one marker (a silent batch drop)")
-        val marker = new Path(s"$dir/ingest_tags/$tag")
-        // marker BEFORE lock: a replay of a committed batch touches no
-        // store file and must stay a no-op even mid-compaction — a
-        // restarted stream draining its checkpoint during a pass would
-        // otherwise die on batches that need no work at all
-        if (fs.exists(marker)) return
-        requireUnlocked("staging")
-        val staging = new Path(s"$dir/ingest_staging/$tag")
-        assigned.write.mode("overwrite").partitionBy("c_id")
-          .parquet(staging.toString)
-        // the staging job can run minutes: re-check before MUTATING the
-        // store so a compaction that started meanwhile is honored — from
-        // here to the marker write it's driver-side renames only
-        try requireUnlocked("landing")
-        catch { case e: Throwable => fs.delete(staging, true); throw e }
-        val assignedRoot = new Path(s"$dir/assigned")
-        val cellDirs = fs.listStatus(staging)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-        for (cd <- cellDirs) {
-          val dest = new Path(assignedRoot, cd.getPath.getName)
-          if (fs.exists(dest))
-            fs.listStatus(dest)
-              .filter(f => ingestTagOf(f.getPath.getName).contains(tag))
-              .foreach(f => fs.delete(f.getPath, false))
-          else fs.mkdirs(dest)
-          val parts = fs.listStatus(cd.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-          parts.zipWithIndex.foreach { case (f, i) =>
-            require(fs.rename(f.getPath,
-                              new Path(dest, s"ingest-$tag-$i.parquet")),
-              s"appendIvfStore: rename failed for ${f.getPath}")
-          }
-        }
-        fs.delete(staging, true)
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, true).close()
-    }
-  }
-
-  /** Parse the tag out of an `ingest-<tag>-<i>.parquet` file name. Tags
-    * are dash-free by construction (rejected otherwise), so the grammar
-    * is unambiguous and exact-tag cleanup can never touch another tag's
-    * files. */
-  private[operators] def ingestTagOf(fileName: String): Option[String] = {
-    val m = "^ingest-([A-Za-z0-9_]+)-\\d+\\.parquet$".r.findFirstMatchIn(fileName)
-    m.map(_.group(1))
-  }
-
-  // ------------------------------------------------------------------
-  // At-rest store FILESYSTEM CONTRACT
-  //
-  // Every mutation protocol of the cell-partitioned store assumes HDFS
-  // rename/listing semantics:
-  //   - appendIvfStore's tagged path stages then RENAMES files into live
-  //     cell dirs (atomic rename = a reader sees each file fully or not
-  //     at all, and a retry's exact-tag cleanup sees ALL of a partial
-  //     attempt's files);
-  //   - compactIvfCells swaps a whole cell dir via rename (retire →
-  //     land → restore), and its crash recovery keys on LISTING the
-  //     retired dir consistently;
-  //   - the `_maintenance.lock` lease relies on create(overwrite=false)
-  //     being atomic (two passes cannot both win);
-  //   - the `ingest_tags/` commit markers rely on list-after-write
-  //     visibility (a replayed batch must see its own marker).
-  //
-  // HDFS and local files provide all four. Object stores generally do
-  // NOT: S3A's rename is a non-atomic client-side copy+delete (a crash
-  // mid-rename leaves BOTH halves, which the exact-tag cleanup would
-  // misread as a complete attempt), GCS's directory rename is per-object
-  // copy, and conditional create is not surfaced as an atomic
-  // create-if-absent through every connector. The store therefore
-  // REFUSES to mutate on a filesystem not known to satisfy the contract
-  // — at store creation and on every mutation entry point — instead of
-  // corrupting quietly under exactly the failure the protocols exist to
-  // survive. Reads stay ungated: a store SNAPSHOT copied to an object
-  // store serves fine (readIvfIndex / ivfTopKWith never mutate).
-  //
-  // Degraded mode: setting `graft.ivf.store.fs.force=true` in the Hadoop
-  // conf accepts an unlisted filesystem. That is a DOCUMENTED CONTRACT
-  // SHIFT, not a free pass: the operator asserts that (a) all writers
-  // (ingest streams, compaction, rebuild) are serialized EXTERNALLY so
-  // no rename/list race can occur, and (b) crash recovery after a
-  // mid-rename failure may require manual inspection of the affected
-  // cell dirs. The intended production posture on S3/GCS is: build and
-  // maintain the store on an HDFS-semantics tier, publish immutable
-  // snapshots to the object store for serving.
-  // ------------------------------------------------------------------
-
-  /** Hadoop conf key for the documented degraded mode (see the contract
-    * note above): accept a filesystem outside the known rename-atomic
-    * set. */
-  val StoreFsForceKey = "graft.ivf.store.fs.force"
-
-  /** Filesystems known to provide atomic rename + consistent listing +
-    * atomic create-if-absent. `file` (and RawLocal's `local`) are POSIX
-    * renames; `hdfs`/`viewfs`/`webhdfs`/`hdfs-over-routers` are the
-    * NameNode's atomic namespace ops. */
-  private val RenameAtomicSchemes =
-    Set("file", "local", "hdfs", "viewfs", "webhdfs", "swebhdfs")
-
-  /** Object-store schemes whose rename is a non-atomic copy(+delete) —
-    * refused with the specific reason rather than the generic
-    * unknown-scheme message. */
-  private val ObjectStoreSchemes =
-    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "swift", "oss",
-        "cosn", "obs")
-
-  /** Typed refusal for a store filesystem outside the contract — callers
-    * either move the store or opt into [[StoreFsForceKey]]. */
-  final class StoreFsContractViolation(msg: String)
-      extends IllegalStateException(msg)
-
-  /** Gate every store MUTATION on the filesystem contract above. Called
-    * at store creation ([[writeIvfIndex]]) and on each mutation entry
-    * ([[appendIvfStore]], [[compactIvfCells]]) — cheap (no RPC beyond
-    * the capability probe), and failing at open beats failing mid-swap.
-    */
-  private[operators] def requireStoreFsContract(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration, ctx: String): Unit = {
-    if (conf.getBoolean(StoreFsForceKey, false)) return
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    def refuse(why: String): Nothing = throw new StoreFsContractViolation(
-      s"$ctx: store filesystem '$scheme://' $why. The at-rest IVF " +
-      "store's append/compaction protocols require ATOMIC RENAME, " +
-      "CONSISTENT DIRECTORY LISTING and ATOMIC CREATE-IF-ABSENT (HDFS " +
-      "semantics). Keep the mutable store on HDFS-compatible storage " +
-      "and publish snapshots to object stores for read-only serving; " +
-      s"or, if ALL writers are serialized externally, set " +
-      s"$StoreFsForceKey=true in the Hadoop conf to accept the risk " +
-      "(documented degraded mode).")
-    // a filesystem that self-reports inconsistent listing is out
-    // regardless of scheme (Hadoop CommonPathCapabilities)
-    val inconsistent =
-      try fs.hasPathCapability(dir, "fs.capability.directory.listing.inconsistent")
-      catch { case _: IllegalArgumentException | _: java.io.IOException |
-                   _: UnsupportedOperationException => false }
-    if (inconsistent) refuse("reports inconsistent directory listing")
-    if (ObjectStoreSchemes.contains(scheme))
-      refuse("is an object store whose rename is a non-atomic copy+delete")
-    if (!RenameAtomicSchemes.contains(scheme))
-      refuse("is not in the known rename-atomic set " +
-             RenameAtomicSchemes.toSeq.sorted.mkString("{", ", ", "}"))
-  }
-
-  /** Typed refusal for "a fresh compaction maintenance lease is held":
-    * [[appendIvfStore]] throws it so retry-capable callers
-    * ([[graft.streaming.CorpusStreams.ivfIngestStream]]) can wait out a
-    * routine maintenance pass instead of failing their streaming query,
-    * while any other cause still surfaces immediately. Extends
-    * IllegalStateException — the store's state, not the arguments, is
-    * what refuses the write.
-    */
-  final class MaintenanceLockHeld(msg: String)
-      extends IllegalStateException(msg)
-
-  private def maintenanceLock(dir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$dir/_maintenance.lock")
-
-  /** Lease bound for the compaction maintenance lock: a lock file older
-    * than this is a crashed pass (the pass's own runtime is minutes) and
-    * is treated as absent by appends / broken by the next compaction —
-    * one crash bounds the write outage at the TTL instead of wedging
-    * every writer until a human deletes the file. Recovery of a crashed
-    * pass's cell state is automatic at the next pass ([[compactIvfCells]]
-    * scaladoc); the TTL only governs who may write meanwhile.
-    */
-  private[graft] val MaintenanceLockTtlMs: Long = 2L * 3600 * 1000
-
-  private def maintenanceLockFresh(fs: org.apache.hadoop.fs.FileSystem,
-                                   lock: org.apache.hadoop.fs.Path): Boolean =
-    try fs.getFileStatus(lock).getModificationTime >
-        System.currentTimeMillis() - MaintenanceLockTtlMs
-    catch { case _: java.io.FileNotFoundException => false }
-
-  /** Garbage-collect commit markers older than `olderThanMs` (marker
-    * mtime). A marker is only load-bearing while its batch could still be
-    * REPLAYED — once the source's checkpoint/retention window has passed,
-    * the marker is dead weight (one tiny file per micro-batch, forever,
-    * on a long-lived ingest). Choose the age bound ≥ the longest replay
-    * window of any stream writing this store; pruning a live tag would
-    * re-admit a replay as a duplicate, so err long. Returns markers
-    * removed.
-    */
-  def pruneIngestTags(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      olderThanMs: Long): Int = {
-    require(olderThanMs > 0, s"olderThanMs must be positive: $olderThanMs")
-    import org.apache.hadoop.fs.Path
-    val root = new Path(s"$dir/ingest_tags")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val dead = fs.listStatus(root)
-      .filter(f => f.isFile && f.getModificationTime < cutoff)
-    dead.foreach(f => fs.delete(f.getPath, false))
-    dead.length
-  }
-
-  /** Incremental compaction of the at-rest layout: rewrite ONLY the cell
-    * directories holding more than `maxFilesPerCell` parquet files, each
-    * down to one file — cost ∝ oversized cells' bytes, never the store
-    * ([[writeIvfIndex]]'s full rewrite is no longer the only remedy for
-    * append fragmentation). Untouched cells' files are not opened, moved,
-    * or rewritten (OperatorLibSpec pins byte-identity via mtimes).
-    *
-    * Swap protocol per oversized cell: the merged file (deterministic
-    * name `compacted-0.parquet`) is staged under `$$dir/compact_staging`
-    * from the EXPLICIT file list the pass observed (never the directory —
-    * a file landing later must not be read), the live cell dir is renamed
-    * to a dot-prefixed sibling (hidden — Spark's file index skips
-    * dot/underscore paths, so a concurrent read never double-counts), the
-    * staged dir renamed in, any file the hidden dir holds that was NOT in
-    * the merge list (a late-landing append) is moved into the new live
-    * dir, then the hidden dir is deleted. If landing the staged dir
-    * fails, the swap ROLLS BACK in place (retire-rename undone) so the
-    * store is whole when the lock releases.
-    *
-    * Crash recovery is automatic at the START of the next pass, keyed on
-    * the deterministic merged-file name: a leftover `.compact-old-c_id=X`
-    * with no live sibling rolls back (rename it back); one whose live
-    * sibling holds `compacted-0.parquet` rolls forward (restore not-in-
-    * merge files, drop the rest); one whose live sibling was recreated by
-    * post-TTL appends has its files restored into the live dir. No state
-    * needs a human.
-    *
-    * Tagged-ingest interplay: a cell holding `ingest-<tag>-*` files whose
-    * tag has NO commit marker is an in-flight or crashed tagged batch —
-    * that cell is SKIPPED this pass. Merging uncommitted files would strand
-    * them beyond the retry's exact-tag cleanup and the replay would land
-    * the batch twice; once the retry commits (or the stream checkpoint
-    * settles), the next compaction pass picks the cell up. Committed
-    * tags' files merge freely — a post-compaction replay of a committed
-    * tag is a marker-gated no-op, so losing their file identity is safe.
-    *
-    * Writer exclusion: the pass holds `$$dir/_maintenance.lock` (created
-    * atomically, stale after [[MaintenanceLockTtlMs]] — a crashed pass
-    * bounds the outage instead of wedging the store) and
-    * [[appendIvfStore]] refuses while it is fresh, re-checking after its
-    * staging job so the check-to-mutation window is the rename loop, not
-    * a Spark job. A racing micro-batch WAITS the pass out (ivfIngestStream
-    * retries [[MaintenanceLockHeld]] in-batch up to its lock-wait bound)
-    * and only fails its query if the lock outlives that bound — then it
-    * is replayed on restart from the checkpoint (Structured Streaming
-    * does not retry within a run); scheduling compaction between ingest
-    * waves remains the low-latency choice.
-    *
-    * Returns the number of cells compacted.
-    */
-  def compactIvfCells(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      maxFilesPerCell: Int = 4,
-                      purgeTombstones: Boolean = false,
-                      addQ4: Boolean = false,
-                      addB1: Boolean = false): Int = {
-    require(maxFilesPerCell >= 1,
-      s"maxFilesPerCell must be >= 1, got $maxFilesPerCell")
-    import org.apache.hadoop.fs.Path
-    val Merged = "compacted-0.parquet"
-    val assignedRoot = new Path(s"$dir/assigned")
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val fs = assignedRoot.getFileSystem(hConf)
-    requireStoreFsContract(fs, new Path(dir), hConf, "compactIvfCells")
-    if (!fs.exists(assignedRoot)) return 0
-    val lock = maintenanceLock(dir)
-    if (fs.exists(lock) && !maintenanceLockFresh(fs, lock))
-      fs.delete(lock, false) // stale: a crashed pass past the TTL
-    // create-if-absent is atomic on HDFS/local (overwrite = false): two
-    // concurrent passes cannot both win. Best-effort on stores without
-    // atomic create — the single-maintenance-writer assumption stands.
-    try fs.create(lock, false).close()
-    catch { case e: java.io.IOException =>
-      throw new IllegalStateException(
-        s"compactIvfCells: could not take $lock — another maintenance " +
-        s"pass is running (stale locks break after " +
-        s"${MaintenanceLockTtlMs / 60000} min)", e)
-    }
-    try {
-      // ---- recover any swap a crashed pass left behind ----------------
-      for (o <- fs.listStatus(assignedRoot)
-             if o.isDirectory && o.getPath.getName.startsWith(".compact-old-")) {
-        val live = new Path(assignedRoot,
-                            o.getPath.getName.stripPrefix(".compact-old-"))
-        if (!fs.exists(live)) {
-          // crashed between retire and land: roll back
-          require(fs.rename(o.getPath, live),
-            s"compactIvfCells: recovery rename ${o.getPath} -> $live failed")
-        } else {
-          // crashed between land and cleanup (live holds the merged
-          // file), or post-TTL appends recreated the live dir: restore
-          // every hidden file the live dir does not already account for —
-          // when the merge completed those are exactly the late arrivals
-          // (merged originals are represented by Merged); when it did
-          // not, everything restores. Names are unique (uuid part files,
-          // exact-tag ingest names), so no collision.
-          val mergedLanded = fs.exists(new Path(live, Merged))
-          for (f <- fs.listStatus(o.getPath) if f.isFile) {
-            val dest = new Path(live, f.getPath.getName)
-            // merge completed ⇒ hidden files are either merged originals
-            // (drop — their rows live in Merged) or late arrivals
-            // (restore); merge absent ⇒ everything restores. A merged
-            // original is exactly a file the pass listed, i.e. one whose
-            // name cannot already exist in the landed dir — so "restore
-            // unless merged-and-absent-by-merge" reduces to: restore
-            // anything the live dir lacks UNLESS the merge landed and the
-            // file carries no tag of its own... which is indistinguishable
-            // by name alone; err on the DUPLICATE-free side: with a landed
-            // merge, restore only files that are NOT plain part-files
-            // (late tagged ingests restore; anonymous part files were the
-            // merge inputs). Without a landed merge, restore everything.
-            val restore =
-              if (!mergedLanded) true
-              else ingestTagOf(f.getPath.getName).isDefined &&
-                   !fs.exists(dest)
-            if (restore && !fs.exists(dest))
-              require(fs.rename(f.getPath, dest),
-                s"compactIvfCells: recovery restore ${f.getPath} failed")
-          }
-          fs.delete(o.getPath, true)
-        }
-      }
-      val stagingRoot = new Path(s"$dir/compact_staging")
-      // PQ stores keep their codebook at a fixed immutable path
-      // ([[GraftPq.writePqCodebook]]); load it ONCE per pass — the cw
-      // repair below re-encodes null slivers against it
-      val pqCb = GraftPq.readPqCodebookIfAny(spark, dir)
-      // one listing of the committed-tag namespace, not one exists() RPC
-      // per (cell, tag) — the loop below is O(cells) round-trips already
-      val committedTags: Set[String] = {
-        val root = new Path(s"$dir/ingest_tags")
-        if (fs.exists(root))
-          fs.listStatus(root).filter(_.isFile).map(_.getPath.getName).toSet
-        else Set.empty
-      }
-      val cellDirs = fs.listStatus(assignedRoot)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
-      // ---- tombstone awareness (deleteFromIvfStore's physical half) ----
-      // pending tombstones (explicit file list from pass start — a file
-      // landing mid-pass is next pass's work) drop out of EVERY rewrite;
-      // purge mode additionally forces a rewrite of exactly the cells
-      // still holding tombstoned rows and, when none were skipped for
-      // uncommitted in-flight tags, clears the applied tombstone files
-      val tombFiles = tombstoneFiles(fs, dir)
-      val tombIds: Option[DataFrame] =
-        if (tombFiles.isEmpty || cellDirs.isEmpty) None
-        else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
-          .select(col("n_id").cast("long").as("n_id")).distinct())
-      val tombExclude: DataFrame => DataFrame = tombIds match {
-        case None => identity
-        case Some(t) =>
-          val nT = t.count()
-          if (nT == 0) identity
-          else if (nT <= survivorFetchGate(spark)) {
-            val ids = t.collect().map(_.getLong(0)).toSeq
-            df => df.filter(!col("n_id").isin(ids: _*))
-          } else { df => df.join(ScaleHints.gated(t), Seq("n_id"), "left_anti") }
-      }
-      val tombTouched: Set[String] = tombIds match {
-        case Some(t) if purgeTombstones =>
-          // one skinny (n_id, c_id) scan locates the cells to rewrite
-          spark.read.parquet(s"$dir/assigned")
-            .select(col("n_id").cast("long").as("n_id"), col("c_id"))
-            .join(ScaleHints.gated(t), Seq("n_id"), "left_semi")
-            .select(col("c_id").cast("long")).distinct()
-            .collect().map(r => s"c_id=${r.getLong(0)}").toSet
-        case _ => Set.empty
-      }
-      var touchedSkipped = false
-      // ---- decide the rewrite set first (EXPLICIT file list per cell,
-      // never the directory — a file renamed in after this listing must
-      // not be merged: it is restored, not dropped, by the
-      // not-in-merge-list sweep below) ----------------------------------
-      // addQ4 is a whole-store migration: every committed cell rewrites
-      // (idempotent on cells already carrying the column)
-      val rewrites = cellDirs.toSeq.flatMap { cd =>
-        val parquetFiles = fs.listStatus(cd.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-        val uncommitted = parquetFiles.map(_.getName).flatMap(ingestTagOf)
-          .distinct.filterNot(committedTags.contains)
-        val needsPurge = tombTouched.contains(cd.getPath.getName)
-        if (needsPurge && uncommitted.nonEmpty) touchedSkipped = true
-        if ((parquetFiles.length > maxFilesPerCell || needsPurge || addQ4 ||
-             addB1) &&
-            uncommitted.isEmpty)
-          Some((cd.getPath, parquetFiles.map(_.getName).toSet,
-                parquetFiles.toSeq))
-        else None
-      }
-      // ---- stage EVERY rewrite cell's merge in ONE partitioned Spark
-      // job. The former cell-at-a-time read+sort+write paid one full
-      // job's fixed cost PER CELL, making purge wall-clock ∝ cell count
-      // (~45 sequential jobs on the sf0.1 store — the bulk of
-      // ann_ivf_delete's bench seconds); the batched stage writes the
-      // same per-cell single n_id-sorted file through one shuffle on
-      // c_id (guide §1.2 step 1: fewer passes, same bytes). Data files
-      // carry (n_id, v, q8…) — c_id lives in the directory name — so the
-      // read re-derives it via basePath and the partitioned write puts
-      // it back in the path. A pre-q8 store merges with null q8 —
-      // mergeSchema fills the column for old-generation files and the
-      // rewrite REPAIRS it (quantize-null after graft_q8b), so compaction
-      // is also the in-place migration path to the q8 serving tier.
-      val repaired: DataFrame => DataFrame = { merged0 =>
-        // q8 repair is unconditional (the default serving tier every
-        // store carries); q4 is OPT-IN at write, so its repair runs
-        // only when the merged files already carry the column (a
-        // partially-written q4 store heals) or the caller asked for
-        // the in-place migration (addQ4).
-        // NOTE (ADVICE r16): because the batch merges ALL rewrite cells
-        // under one mergeSchema read, `columns.contains` sees the UNION
-        // schema — a rewrite cell that never carried q4/b1 gains the
-        // column (quantize-null repaired to real values) whenever any
-        // other rewrite cell has it. That HOMOGENIZES optional quant
-        // columns across the rewritten cells: deliberate — a store whose
-        // cells disagree on optional tiers cannot serve that tier at
-        // all, so compaction converges the store toward servability
-        // (per-cell gating would reintroduce the per-cell jobs this
-        // batch exists to remove). Cells NOT in the rewrite set are
-        // untouched, so full homogenization lands once every cell has
-        // been through a rewrite.
-        val merged1 = quantRepair(merged0, "q8", "graft_q8b")
-        val merged2 =
-          if (addQ4 || merged1.columns.contains("q4"))
-            quantRepair(merged1, "q4", "graft_q4b")
-          else merged1
-        // the 1-bit rung heals / migrates under the same opt-in rule
-        val merged =
-          if (addB1 || merged2.columns.contains("b1"))
-            quantRepair(merged2, "b1", "graft_b1b")
-          else merged2
-        // same repair for the PQ code word when the store carries a
-        // codebook: pre-PQ files merge with null cw and the rewrite
-        // re-encodes exactly that sliver (folded encode — no shuffle),
-        // so compaction is also the in-place migration path to the PQ
-        // serving tier; without a codebook the column passes through
-        pqCb.map(GraftPq.repairCw(_, merged)).getOrElse(merged)
-      }
-      if (rewrites.nonEmpty) {
-        fs.delete(stagingRoot, true)
-        val allFiles = rewrites.flatMap(_._3).map(_.toString)
-        val withPq = repaired(tombExclude(
-          spark.read.option("mergeSchema", "true")
-            .option("basePath", assignedRoot.toString)
-            .parquet(allFiles: _*)))
-        // the writeIvfIndex at-rest shape: every cell hashes wholly into
-        // one task, the partitioned writer splits one file per cell, and
-        // the (c_id, n_id) sort satisfies the writer's partition-column
-        // ordering requirement while restoring the n_id ordering the
-        // rerank fetch's row-group pruning keys on (merged inputs are
-        // each sorted, their concat is not)
-        withPq
-          .repartition(col("c_id"))
-          .sortWithinPartitions("c_id", "n_id")
-          .write.mode("overwrite").partitionBy("c_id")
-          .parquet(stagingRoot.toString)
-        fs.delete(new Path(stagingRoot, "_SUCCESS"), false)
-      }
-      var compacted = 0
-      for ((cellPath, mergeList, files) <- rewrites) {
-        val staged = new Path(stagingRoot, cellPath.getName)
-        if (!fs.exists(staged)) {
-          // a cell whose every surviving row was tombstoned stages no
-          // output from the partitioned write; keep the landed shape
-          // identical to the pre-batch contract (one — here empty —
-          // merged file) with a single tiny job for this rare cell
-          repaired(tombExclude(spark.read.option("mergeSchema", "true")
-              .parquet(files.map(_.toString): _*)))
-            .coalesce(1)
-            .sortWithinPartitions("n_id")
-            .write.mode("overwrite").parquet(staged.toString)
-        }
-        val part = fs.listStatus(staged)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        require(part.length == 1, s"staged merge not a single file: $staged")
-        require(fs.rename(part.head.getPath, new Path(staged, Merged)),
-          s"compactIvfCells: could not fix the merged name in $staged")
-        fs.delete(new Path(staged, "_SUCCESS"), false)
-        val old = new Path(assignedRoot, s".compact-old-${cellPath.getName}")
-        fs.delete(old, true)
-        require(fs.rename(cellPath, old),
-          s"compactIvfCells: could not retire $cellPath")
-        if (!fs.rename(staged, cellPath)) {
-          // land failed: roll the retire back so the store is whole
-          // when the lock releases, then surface the error
-          require(fs.rename(old, cellPath),
-            s"compactIvfCells: land AND rollback failed for $cellPath" +
-            s" — live data is in $old; next pass auto-recovers it")
-          throw new IllegalStateException(
-            s"compactIvfCells: could not land $staged; swap rolled back")
-        }
-        // restore late arrivals: anything in the retired dir that was
-        // not part of the merge landed during the pass — move it in
-        for (f <- fs.listStatus(old)
-               if f.isFile && !mergeList.contains(f.getPath.getName))
-          require(fs.rename(f.getPath,
-                            new Path(cellPath, f.getPath.getName)),
-            s"compactIvfCells: late-arrival restore ${f.getPath} failed")
-        fs.delete(old, true)
-        compacted += 1
-      }
-      fs.delete(stagingRoot, true)
-      // reaching here means every attempted rewrite landed; in purge
-      // mode with no touched cell skipped (uncommitted in-flight tags),
-      // the pass-start tombstone files are fully applied — clear them.
-      // Files added DURING the pass were never in tombFiles and stay.
-      if (purgeTombstones && !touchedSkipped)
-        tombFiles.foreach(f => fs.delete(f, false))
-      compacted
-    } finally fs.delete(lock, false)
-  }
-
-  /** Load an index written by [[writeIvfIndex]]. The partition column
-    * comes back first-read as its inferred type; cast pins the long
-    * contract so served output is type-identical to the in-memory path.
-    */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): IvfIndex =
-    IvfIndex(
-      spark.read.parquet(s"$dir/centroids")
-        .withColumn("c_id", col("c_id").cast("long")),
-      applyTombstones(spark, dir,
-        spark.read.parquet(s"$dir/assigned")
-          .withColumn("c_id", col("c_id").cast("long"))
-          .withColumn("n_id", col("n_id").cast("long"))))
-
-  // ------------------------------------------------------------------
-  // Row deletion from the DIRECTORY-layout store: tombstones + purge
-  //
-  // The takedown/opt-out path a production embedding store needs as a
-  // ROUTINE operation (VERDICT r11 missing #1). Deletion is two-phase,
-  // because the layout's unit of rewrite is a whole cell file:
-  //
-  //   1. [[deleteFromIvfStore]] appends an immutable TOMBSTONE file
-  //      (just the deleted n_ids) under `$dir/tombstones/` — O(ids),
-  //      no store file touched, takes effect on the NEXT read:
-  //      [[readIvfIndex]] masks tombstoned ids, so every serve path
-  //      (ivfTopKWith / WithQ8 / PQ) excludes them immediately.
-  //   2. [[purgeIvfTombstones]] (tombstone-aware compaction, under the
-  //      maintenance lock) REWRITES exactly the cells holding
-  //      tombstoned rows — physical removal, cost ∝ touched cells'
-  //      bytes — then deletes the applied tombstone files. Any
-  //      compaction rewrite also drops tombstoned rows in passing.
-  //
-  // Masking discipline: a tombstone masks its id until purged — an
-  // append that re-adds a tombstoned id stays invisible until the purge
-  // clears the tombstone (purge first, then re-add). This is the
-  // logical-delete contract of the rename-based layout; the manifest
-  // layout's [[IvfObjectStore.delete]] is snapshot-scoped instead
-  // (physical rewrite per delete; later appends win), which is the
-  // better fit where versioned history already exists.
-  // ------------------------------------------------------------------
-
-  /** Tombstone `ids` in a directory-layout store: reads mask them
-    * immediately, [[purgeIvfTombstones]] removes the bytes. Idempotent
-    * (a repeated delete appends a redundant tombstone file; masking and
-    * purge are set-based). O(ids) — no store file is touched here. */
-  def deleteFromIvfStore(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, ids: DataFrame,
-                         idCol: String = "vec_id"): Unit = {
-    requireIntegralId(ids, idCol, "deleteFromIvfStore")
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    requireStoreFsContract(p.getFileSystem(hConf), p, hConf,
-                           "deleteFromIvfStore")
-    ids.select(col(idCol).cast("long").as("n_id")).distinct()
-      .write.mode("append").parquet(s"$dir/tombstones")
-  }
-
-  /** The store's pending tombstone files (explicit list — never a
-    * directory read downstream, so a file landing mid-pass is simply
-    * next pass's work). */
-  private def tombstoneFiles(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).toSeq
-  }
-
-  /** Mask pending tombstones on a read of the assigned frame. Below the
-    * [[SurvivorFetchMaxLiterals]] gate the mask is a literal
-    * `NOT n_id IN (...)` FILTER on the scan — no join enters the plan,
-    * so the DPP-pruned probe path and every spec-pinned serve shape
-    * survive verbatim; past it (a takedown list has no reason to be
-    * bounded) the mask is a size-gated anti-join. No tombstones → the
-    * input frame unchanged, same object. */
-  private def applyTombstones(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, assigned: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = tombstoneFiles(fs, dir)
-    if (files.isEmpty) return assigned
-    val tombs = spark.read.parquet(files.map(_.toString): _*)
-      .select(col("n_id").cast("long").as("n_id")).distinct()
-    val n = tombs.count()
-    if (n == 0) assigned
-    else if (n <= survivorFetchGate(spark)) {
-      val idList = tombs.collect().map(_.getLong(0)).toSeq
-      assigned.filter(!col("n_id").isin(idList: _*))
-    } else assigned.join(ScaleHints.gated(tombs), Seq("n_id"), "left_anti")
-  }
-
-  /** Physically remove tombstoned rows: a [[compactIvfCells]] pass that
-    * rewrites exactly the cells holding tombstoned rows (plus any cells
-    * already over the file bound) and clears the applied tombstone
-    * files. Returns cells rewritten. */
-  def purgeIvfTombstones(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Int =
-    compactIvfCells(spark, dir, maxFilesPerCell = Int.MaxValue,
-                    purgeTombstones = true)
 
   /** Per-cell occupancy — the rebuild signal for [[ivfAppend]] callers
     * (and the skew diagnostic for probe-cost modeling): one row per
@@ -1927,11 +1137,10 @@ object GraftSimilarity {
     * rerank would re-scan every probed cell's `v` and erase the q8
     * saving.)
     *
-    * Requires `q8` on `index.assigned` (stores written at r11+ carry it;
-    * [[q8Augment]] for in-memory indexes; [[compactIvfCells]] migrates
-    * pre-q8 stores in place). A mixed-generation cell read yields null
-    * q8 for old files — scored candidates FAIL LOUDLY on it rather than
-    * silently dropping from the heap.
+    * Requires `q8` on `index.assigned` (every [[IvfObjectStore]] carries
+    * it; [[q8Augment]] for in-memory indexes). A null q8 — a file written
+    * without the column — FAILS LOUDLY on the scored candidate rather than
+    * silently dropping it from the heap.
     */
   def ivfTopKWithQ8(index: IvfIndex, queries: DataFrame, k: Int,
                     nprobe: Int = 4, rerankFactor: Int = 4,
@@ -1952,9 +1161,8 @@ object GraftSimilarity {
     * (that's the rung's price — measure it with [[tierRecall]] before
     * deploying); with the budget covering the probed population the
     * result is exactly [[ivfTopKWith]]'s (spec-pinned). Requires `q4` on
-    * `index.assigned` (stores written at r12+ carry it;
-    * [[compactIvfCells]] migrates older stores in place; [[q4Augment]]
-    * for in-memory indexes). */
+    * `index.assigned` (opt-in at write: `IvfObjectStore.create(q4 =
+    * true)`; [[q4Augment]] for in-memory indexes). */
   def ivfTopKWithQ4(index: IvfIndex, queries: DataFrame, k: Int,
                     nprobe: Int = 4, rerankFactor: Int = 4,
                     qIdCol: String = "q_id", qVecCol: String = "qv",
@@ -1981,10 +1189,8 @@ object GraftSimilarity {
     * distinct values at dim 64), so candidate ties are COMMON —
     * `graft_topk`'s deterministic id-ascending tie-break is what keeps
     * the cut reproducible across engines. Requires `b1` on
-    * `index.assigned` (opt-in at write: `writeIvfIndex(b1 = true)` /
-    * `IvfObjectStore.create(b1 = true)`; [[compactIvfCells]]`(addB1 =
-    * true)` migrates an existing store in place; [[b1Augment]] for
-    * in-memory indexes). */
+    * `index.assigned` (opt-in at write: `IvfObjectStore.create(b1 =
+    * true)`; [[b1Augment]] for in-memory indexes). */
   def ivfTopKWithB1(index: IvfIndex, queries: DataFrame, k: Int,
                     nprobe: Int = 4, rerankFactor: Int = 4,
                     qIdCol: String = "q_id", qVecCol: String = "qv",
@@ -2576,7 +1782,7 @@ object GraftSimilarity {
     *
     * Why a third pair-mining tier next to [[cosinePairs]] (exact, O(N²))
     * and [[srpPairs]] (SRP-LSH): a 100-TB corpus that already maintains
-    * the at-rest IVF store ([[writeIvfIndex]]) has ALREADY paid for the
+    * the at-rest IVF store ([[IvfObjectStore]]) has ALREADY paid for the
     * cell structure — `assigned` is partitioned by `c_id` on disk, so
     * cell-local pairing reads each cell's files once and needs no new
     * sketch state; with the in-memory frame the one exchange is the

@@ -226,7 +226,7 @@ object HybridRetrieval {
     * kCand·rerankFactor survivors — completing the fusion matrix
     * (brute / IVF / q8 / q4 / PQ behind ONE rank-only contract).
     * `index.assigned` must carry `q4` (a store written with
-    * `writeIvfIndex(q4 = true)`, or [[GraftSimilarity.q4Augment]] for
+    * `IvfObjectStore.create(q4 = true)`, or [[GraftSimilarity.q4Augment]] for
     * in-memory indexes — the tier is opt-in at write). At covering
     * nprobe + covering rerankFactor the output equals [[hybridTopK]]
     * exactly, the same parity contract as the q8/PQ rungs.
@@ -298,7 +298,8 @@ object HybridRetrieval {
     * [[GraftPq.pqTopK]]'s budget warning); with `nprobe` covering every
     * cell and a covering budget the output equals [[hybridTopK]]'s
     * exactly (HybridSpec pins it). `index.assigned` must carry `cw`
-    * (a PQ store snapshot, or [[GraftPq.writeIvfPqStore]]'s layout).
+    * (an [[IvfObjectStore]] created with `pq`, read with its codebook
+    * via [[GraftPq.readPqCodebook]]).
     */
   def hybridTopKWithPq(index: IvfIndex, cb: GraftPq.PqCodebook,
                        docs: DataFrame, queries: DataFrame,
@@ -607,22 +608,4 @@ object HybridRetrieval {
               expr("graft_cosine(__qv, v)").as("rel"))
     GraftSimilarity.mmrRerank(cand, src, k, lambda)
   }
-
-  /** [[hybridTopKWithPq]] straight off an at-rest PQ store
-    * ([[GraftPq.writeIvfPqStore]] directory layout): one call from store
-    * path to fused results — the RAG deployment shape where BM25 fuses
-    * with the compressed index already being served. */
-  def hybridTopKPqStored(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, docs: DataFrame, queries: DataFrame,
-                         k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
-                         nprobe: Int = 4, rerankFactor: Int = 4,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         qIdCol: String = "q_id",
-                         qTermsCol: String = "q_terms",
-                         qVecCol: String = "qv",
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    hybridTopKWithPq(GraftSimilarity.readIvfIndex(spark, dir),
-                     GraftPq.readPqCodebook(spark, dir), docs, queries,
-                     k, kCand, rrfK, nprobe, rerankFactor, idCol, textCol,
-                     qIdCol, qTermsCol, qVecCol, k1, b)
 }

@@ -1,33 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The AT-REST BM25 impact index — the lexical analog of the IVF vector
-  * store (VERDICT r13 #1c/#2): the per-(term, document) impact addends of
-  * [[TextRank.bm25Impacts]] persisted term-bucketed, so the lexical leg
-  * of a retrieval serve is a build-once/serve-many inverted-index lookup
-  * instead of a per-deploy corpus fold.
-  *
-  * Layout under `dir`:
-  * {{{
-  *   impacts/__bkt=<b>/...parquet   (__term, doc_id, __a) rows,
-  *                                  term-bucketed by xxhash64(__term) mod
-  *                                  `buckets`, __term-sorted within files
-  *   terms/...parquet               (__term, __df, __maxa) — one row per
-  *                                  term: document frequency + MAX impact,
-  *                                  the WAND/MaxScore upper-bound table
-  *   meta/...parquet                (buckets, k1, b) — one row
-  * }}}
+/** The serve surface of the AT-REST BM25 impact index — the lexical analog
+  * of the IVF vector store (VERDICT r13 #1c/#2): the per-(term, document)
+  * impact addends of [[TextRank.bm25Impacts]] persisted term-bucketed by
+  * [[ImpactObjectStore]], so the lexical leg of a retrieval serve is a
+  * build-once/serve-many inverted-index lookup instead of a per-deploy
+  * corpus fold. A store read yields a [[StoredImpacts]] handle: the
+  * `(__term, doc_id, __a, __bkt)` impact rows, bucketed by
+  * xxhash64(__term) mod `buckets` and __term-sorted within files, plus the
+  * `(__term, __df, __maxa)` per-term table — document frequency and MAX
+  * impact, the WAND/MaxScore upper bounds.
   *
   * Scale shape:
-  *   - the build is the ungated kernel — the vocabulary-wide df attach is
-  *     a co-partitioned shuffle join (never a broadcast), and the write
-  *     shuffles once on the bucket key;
-  *   - a query's serve reads only its terms' buckets: [[impactsFor]]
-  *     emits literal `__bkt` predicates (partition pruning) plus a
-  *     `__term IN` residual (row-group stats pruning on the sorted
+  *   - a query's serve reads only its terms' buckets: [[StoredImpacts
+  *     .impactsFor]] emits literal `__bkt` predicates (partition pruning)
+  *     plus a `__term IN` residual (row-group stats pruning on the sorted
   *     files), so a 3-term query touches ≤ 3 of `buckets` partitions of
   *     the corpus-sized table;
   *   - the `terms` summary is one row per DISTINCT term (vocabulary-
@@ -36,10 +27,10 @@ import org.apache.spark.sql.functions._
   *   - deliberately NO append path (unlike the vector stores): a BM25
   *     addend bakes in GLOBAL corpus statistics (df, N, avgdl), so any
   *     corpus change invalidates every stored addend — an "append"
-  *     could only offer silently-stale scoring (the drift real
-  *     per-segment engines accept implicitly). This store's contract is
-  *     the honest one: rebuild on corpus change ([[write]] overwrites),
-  *     refresh cadence = however stale the deployment tolerates its idf;
+  *     could only offer silently-stale scoring. The store's contract is
+  *     the honest one: rebuild on corpus change
+  *     ([[ImpactObjectStore.rebuild]]), refresh cadence = however stale
+  *     the deployment tolerates its idf;
   *   - [[bm25TopKPruned]] cuts posting traversal below even that: only
   *     the ESSENTIAL (highest-max-impact) terms' postings generate
   *     candidates, with the threshold-vs-upper-bound test verifying
@@ -80,66 +71,6 @@ object ImpactIndex {
     (if (m < 0) m + buckets else m).toInt
   }
 
-  /** Build the impact table from `docs` and persist the store. The
-    * addends come from THE shared kernel ([[TextRank.bm25Impacts]],
-    * ungated), so at-rest scores are bit-equal to every in-memory BM25
-    * consumer. The `terms` summary aggregates the WRITTEN impacts (one
-    * at-rest scan) rather than recomputing the build. Overwrites any
-    * store at `dir`.
-    */
-  def write(docs: DataFrame, dir: String, idCol: String = "doc_id",
-            textCol: String = "text", k1: Double = 1.2, b: Double = 0.75,
-            buckets: Int = 64): Unit = {
-    require(buckets >= 1, s"ImpactIndex.write: buckets must be >= 1, " +
-      s"got $buckets")
-    val spark = docs.sparkSession
-    // the rebuild lifecycle is a rename-committed overwrite — the same
-    // filesystem contract the directory-layout IVF store gates on
-    // (atomic rename; a torn overwrite on an object store could serve
-    // half-old half-new buckets). Publish snapshots to object stores
-    // for read-only serving, as with writeIvfIndex.
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    GraftSimilarity.requireStoreFsContract(
-      p.getFileSystem(hConf), p, hConf, "ImpactIndex.write")
-    val imp = TextRank.bm25Impacts(
-        docs.select(col(idCol).cast("long").as("doc_id"), col(textCol)),
-        "doc_id", textCol, k1, b, termGate = None)
-      .withColumn("__bkt",
-                  pmod(xxhash64(col("__term")), lit(buckets.toLong))
-                    .cast("int"))
-    ScaleHints.writeWidth(imp, col("__bkt"))
-      .sortWithinPartitions("__bkt", "__term", "doc_id")
-      .write.mode("overwrite").partitionBy("__bkt")
-      .parquet(s"$dir/impacts")
-    // per-term bound table off the at-rest bytes (no rebuild)
-    spark.read.parquet(s"$dir/impacts")
-      .groupBy("__term")
-      .agg(count(lit(1)).as("__df"), max(col("__a")).as("__maxa"))
-      .write.mode("overwrite").parquet(s"$dir/terms")
-    import spark.implicits._
-    Seq((buckets, k1, b)).toDF("buckets", "k1", "b")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a store written by [[write]]. */
-  def read(spark: SparkSession, dir: String): StoredImpacts = {
-    val meta = spark.read.parquet(s"$dir/meta").collect() match {
-      case Array(r) => r
-      case other => throw new IllegalStateException(
-        s"ImpactIndex.read: expected one meta row under $dir, " +
-        s"got ${other.length}")
-    }
-    StoredImpacts(
-      impacts = spark.read.parquet(s"$dir/impacts")
-        .withColumn("__bkt", col("__bkt").cast("int"))
-        .withColumn("doc_id", col("doc_id").cast("long")),
-      terms = spark.read.parquet(s"$dir/terms"),
-      buckets = meta.getAs[Int]("buckets"),
-      k1 = meta.getAs[Double]("k1"),
-      b = meta.getAs[Double]("b"))
-  }
-
   private def ranked(scored: DataFrame, k: Int, idCol: String): DataFrame = {
     val top = scored
       .orderBy(col("__score").desc, col("doc_id").asc)
@@ -155,7 +86,7 @@ object ImpactIndex {
     * addends: the scan reads only the query terms' buckets, and the sum
     * is bit-equal to the from-text kernel (one formula, one grid), so
     * the `text_bm25_topk` oracle certifies this row verbatim
-    * (`text_bm25_stored`).
+    * (`text_bm25_stored_manifest`).
     */
   def bm25TopKStored(idx: StoredImpacts, queryTerms: Seq[String], k: Int,
                      idCol: String = "doc_id"): DataFrame = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import GraftSimilarity.IvfIndex
 import ManifestLog.{Publish, Unchanged, writeVia}
 
-/** The OBJECT-STORE layout of the at-rest IVF index: a store on the
+/** The at-rest IVF index: a store on the
   * [[ManifestLog]], whose scaladoc gives the substrate argument (no
   * rename, no listing consistency, torn-manifest fallback, the optimistic
   * version race, crash windows, the format rule). Mutations are
@@ -31,9 +31,8 @@ import ManifestLog.{Publish, Unchanged, writeVia}
   * left on the serving path: the newest manifest and a PQ store's
   * `pq_codebook/` directory, written once at create and never changed.
   * The `data/` keys keep the `c_id=` partition form so a manifest-driven
-  * read (`basePath` + explicit file list) yields the same cell-pruned
-  * scan shape — dynamic partition pruning included — as the directory
-  * store.
+  * read (`basePath` + explicit file list) yields a cell-pruned scan —
+  * dynamic partition pruning included.
   *
   * Scale: the manifest holds one line per live file — with compaction
   * keeping ~1 file per cell that is √N lines (~31k at 1e9 vectors, ~2 MB
@@ -74,10 +73,9 @@ object IvfObjectStore extends ManifestStore {
                       catalog: ManifestCatalog): Manifest =
     Manifest(version, tags, catalog)
 
-  // same at-rest shape as the directory layout (GraftSimilarity
-  // .storedLayout): q8 serving column + n_id-sorted cell files (plus the
-  // PQ code word when the store carries a codebook), so ivfTopKWithQ8 /
-  // ivfPqTopKWithCw serve either substrate identically
+  // the at-rest cell shape (GraftSimilarity.storedLayout): q8 serving
+  // column + n_id-sorted cell files, plus the PQ code word when the store
+  // carries a codebook (the ivfPqTopKWithCw tier)
   private def stageAssigned(dir: String, assigned: DataFrame,
                             pq: Option[GraftPq.PqCodebook],
                             q4: Boolean = false,
@@ -100,6 +98,9 @@ object IvfObjectStore extends ManifestStore {
              q4: Boolean = false,
              b1: Boolean = false): Unit = {
     graft.GraftSession.ensureExtensions(spark)
+    for (c <- Seq("c_id", "n_id"))
+      GraftSimilarity.requireIntegralId(index.assigned, c,
+                                        "IvfObjectStore.create")
     // persist the codebook across its two consumers here (folded-encode
     // collect + the at-rest write) — it is typically a LAZY train chain
     // that would otherwise run Lloyd twice
@@ -164,6 +165,7 @@ object IvfObjectStore extends ManifestStore {
     // ingest-daemon session that only reads + appends must still resolve
     // graft_cosine inside assignTo
     graft.GraftSession.ensureExtensions(spark)
+    GraftSimilarity.requireIntegralId(batch, idCol, "IvfObjectStore.append")
     // PQ stores auto-encode arriving batches against the stored codebook
     // (fixed immutable path, checked once per append — never retrained)
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
@@ -175,8 +177,7 @@ object IvfObjectStore extends ManifestStore {
         // a metadata-carrying store appends metadata-carrying batches —
         // derive the store's metadata set from the snapshot's data
         // schema (the manifest's), fail-loud if the batch lacks any
-        // column (the same contract as the directory layout's
-        // appendIvfStore)
+        // column (the ivfAppend contract)
         val snapCols =
           if (m.data.isEmpty) Nil else m.dataScan(spark, dir).columns.toSeq
         val meta = GraftSimilarity.metaColsOf(snapCols)
@@ -252,8 +253,7 @@ object IvfObjectStore extends ManifestStore {
       s"maxFilesPerCell must be >= 1, got $maxFilesPerCell")
     // the rewrite repairs null code words when the store carries a
     // codebook (the manifest's union schema surfaces the column across
-    // generations) — compaction doubles as the PQ migration path, as on
-    // the directory layout
+    // generations) — compaction doubles as the PQ migration path
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
     val rewrites = new CellRewrites(spark, dir)
     commit(spark, dir, "compact", unchanged = _ => 0) { m =>
@@ -295,6 +295,7 @@ object IvfObjectStore extends ManifestStore {
              idCol: String = "vec_id",
              batchTag: Option[String] = None): Int = {
     graft.GraftSession.ensureExtensions(spark)
+    GraftSimilarity.requireIntegralId(ids, idCol, "IvfObjectStore.delete")
     val del = ids.select(col(idCol).cast("long").as("n_id")).distinct()
     val pq = GraftPq.readPqCodebookIfAny(spark, dir)
     val rewrites = new CellRewrites(spark, dir)
@@ -340,14 +341,14 @@ object IvfObjectStore extends ManifestStore {
       s"manifest data entry '$rel' carries no c_id= partition segment"))
   }
 
-  /** Streaming ingest into a manifest store — the object-store twin of
-    * [[graft.streaming.CorpusStreams.ivfIngestStream]]: every micro-batch
+  /** Streaming ingest into the store — the write-side complement of
+    * [[graft.streaming.CorpusStreams.ivfServeStream]]: every micro-batch
     * is one tagged [[append]] (`<streamId>_b<batchId>`), so a checkpoint
-    * replay no-ops on the manifest's tag set. No maintenance lock exists
-    * in this layout — a concurrent [[compact]] surfaces as a publish
-    * conflict that append absorbs with its bounded retry, staged files
-    * intact (never a failed stream; contrast the directory store's
-    * lock-wait).
+    * replay no-ops on the manifest's tag set. RESTARTING from the same
+    * checkpoint must reuse the streamId; a FRESH checkpoint into the same
+    * store needs a new one (batch ids restart at 0). No lock exists — a
+    * concurrent [[compact]] surfaces as a publish conflict that append
+    * absorbs with its bounded retry, staged files intact.
     */
   def ingestStream(dir: String, vecs: DataFrame, streamId: String,
                    idCol: String = "vec_id", vecCol: String = "embedding")

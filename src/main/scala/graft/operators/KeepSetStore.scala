@@ -215,6 +215,31 @@ object KeepSetStore extends ManifestStore {
     }
   }
 
+  /** Streaming increments — the closing arc of online dedup (r15): the
+    * pair miners ([[graft.streaming.CorpusStreams.nearDupPairStream]],
+    * `srpPairStream`, `editDistPairStream`, `hammingPairStream`) emit
+    * verified pairs online, and every micro-batch folds in as ONE tagged
+    * [[increment]] (`<streamId>_b<batchId>`), so a checkpoint replay
+    * no-ops on the manifest's tag set and the stored decision table is
+    * always a published, time-travelable version. The batch's endpoint
+    * set rides in as CANDIDATE new ids; [[increment]] filters out the
+    * already-stored ones against the snapshot its stage resolves from
+    * (ADVICE r15). Run [[compact]] on a maintenance cadence so the
+    * per-batch resolve stays a pure scan. */
+  def incrementStream(dir: String, pairs: DataFrame, streamId: String,
+                      idCol: String = "doc_id",
+                      aCol: String = "a_id", bCol: String = "b_id")
+      : DataStreamWriter[Row] =
+    taggedStream(pairs, streamId, "b") { (batch, tag) =>
+      val p = batch.select(col(aCol).cast("long").as(aCol),
+                           col(bCol).cast("long").as(bCol))
+      val endpoints = p.select(col(aCol).as(idCol))
+        .unionAll(p.select(col(bCol).as(idCol)))
+        .distinct()
+      increment(batch.sparkSession, dir, endpoints, p, idCol, aCol, bCol,
+                batchTag = tag)
+    }
+
   /** Fold base ⊕ deltas into a new single-generation base (one corpus
     * rewrite, off the increment path) so [[read]] and the next
     * [[increment]]'s resolve are pure scans again. Doubles as the

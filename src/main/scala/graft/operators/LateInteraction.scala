@@ -134,7 +134,7 @@ object LateInteraction {
     * centroid geometry, the integer `tv` beside as metadata for exact
     * candidate dots. The collection shape [[tokenIndex]] builds over AND
     * the batch shape the index's at-rest lifecycle appends
-    * ([[GraftSimilarity.appendIvfStore]](idCol = "tok_id", vecCol = "v")
+    * ([[IvfObjectStore.append]](idCol = "tok_id", vecCol = "v")
     * — ordinals are per-document, so a batch of NEW documents' tokens
     * composes ids exactly as a full build would). */
   def tokenVectors(docToks: DataFrame,
@@ -158,12 +158,10 @@ object LateInteraction {
     * per (doc, token) under the composite id doc_id·2²⁰ + ordinal (see
     * [[tokenVectors]]). The result is an ordinary
     * [[GraftSimilarity.IvfIndex]] whose `tv` metadata column rides the
-    * full at-rest lifecycle — [[GraftSimilarity.writeIvfIndex]] /
-    * [[GraftSimilarity.readIvfIndex]] / [[GraftSimilarity.appendIvfStore]]
-    * / [[GraftSimilarity.compactIvfCells]] and the
-    * [[IvfObjectStore]] manifest substrate all preserve the array-typed
-    * column (LateInteractionSpec pins each leg; `ann_maxsim_stored`
-    * oracle-certifies the stored serve). */
+    * full at-rest lifecycle — [[IvfObjectStore]] create / read / append /
+    * compact all preserve the array-typed column (LateInteractionSpec
+    * pins each leg; `ann_maxsim_stored` oracle-certifies the stored
+    * serve). */
   def tokenIndex(docToks: DataFrame,
                  centroidFraction: Option[Double] = None,
                  metaCols: Seq[String] = Nil)

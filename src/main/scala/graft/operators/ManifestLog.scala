@@ -198,10 +198,8 @@ private[graft] trait ManifestEntry {
   * safe either way. Crash windows: dying before publish leaves orphaned
   * data files (no reader ever sees them; vacuum deletes them); dying
   * after publish IS the commit. There is no window where a reader can
-  * observe a half-applied mutation, which is what the rename-based
-  * [[GraftSimilarity.writeIvfIndex]] layout could not promise off HDFS —
-  * hence its filesystem-contract gate refuses object stores while the
-  * manifest stores are the supported way to run mutable stores on them.
+  * observe a half-applied mutation, and nothing relies on rename, so the
+  * same protocol runs on HDFS, local files and object stores alike.
   *
   * Batch tags give replays idempotence: a mutation carrying a tag the
   * head already records no-ops before any work, and the tag set rides the

@@ -331,8 +331,8 @@ object DedupQueries extends QueryModule {
     // per-id last-wins. The oracle is the SAME from-scratch recursive-CTE
     // keep-set over the union — hash-equality proves the store's
     // base ⊕ delta resolution reconstructs the full decision table
-    // exactly (the text_bm25_stored precedent, applied to the dedup
-    // decision table).
+    // exactly (the text_bm25_stored_manifest precedent, applied to the
+    // dedup decision table).
     GraftQuery(
       "dedup_keepset_stored",
       (s, dir) => {

@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.GraftText
+import graft.operators.{GraftText, ImpactIndex, ImpactObjectStore}
+import GraftQuery.reusedStore
 
 /** Text-analysis operators over the `documents` table — the
   * training-data-pipeline surface (language-ID heuristic, quality scoring,
@@ -15,12 +16,12 @@ import graft.operators.GraftText
 object TextQueries extends QueryModule {
 
   /** The exact-BM25 replay shared by `text_bm25_topk` (from text),
-    * `text_bm25_stored` (from the at-rest impact index) and
+    * `text_bm25_stored_manifest` (from the at-rest impact index) and
     * `text_bm25_pruned` (MaxScore essential-list pruning): all three
     * must produce the identical ranking — the store must preserve every
     * addend exactly, and the pruning must be invisible to correctness —
-    * so ONE oracle certifies the whole ladder (the `ann_ivf_stored` /
-    * `dedup_editdist_pairs` precedents). */
+    * so ONE oracle certifies the whole ladder (the
+    * `ann_ivf_stored_manifest` / `dedup_editdist_pairs` precedents). */
   private val bm25TopKOracleSql: String =
     """WITH d AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') tk
@@ -43,35 +44,13 @@ object TextQueries extends QueryModule {
       |  doc_id, n_terms_hit
       |FROM s ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
 
-  /** Build-or-reuse the at-rest BM25 impact index under `/tmp/graft_io`
-    * (the storedTokenIndex convention): the first caller pays the
-    * corpus fold + term-bucketed write, every later run — and every
-    * other row sharing the store — serves the amortized bucket-pruned
-    * read. Store contents are deterministic in (corpus, code); values
-    * are store-invariant, so shared oracles stay verbatim. */
-  private[queries] def storedImpactIndex(s: org.apache.spark.sql.SparkSession,
-                                         dir: String)
-      : graft.operators.ImpactIndex.StoredImpacts = {
-    val out = s"/tmp/graft_io/${new java.io.File(dir).getName}/impact_index"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/meta/_SUCCESS")))
-      graft.operators.ImpactIndex.write(t(s, dir, "documents"), out)
-    graft.operators.ImpactIndex.read(s, out)
-  }
-
-  private[graft] def manifestImpactIndex(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : graft.operators.ImpactIndex.StoredImpacts = {
-    val out =
-      s"/tmp/graft_io/${new java.io.File(dir).getName}/impact_index_manifest"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (graft.operators.ImpactObjectStore
-          .currentManifest(fs, out).isEmpty)
-      graft.operators.ImpactObjectStore.rebuild(t(s, dir, "documents"), out)
-    graft.operators.ImpactObjectStore.read(s, out)
-  }
+  /** The at-rest BM25 impact store over `documents`, built once and
+    * reused ([[GraftQuery.reusedStore]]) by every stored-lexical row. */
+  private[graft] def impactStore(s: org.apache.spark.sql.SparkSession,
+                                 dir: String): ImpactIndex.StoredImpacts =
+    ImpactObjectStore.read(s, reusedStore(s, dir, "impact_index_manifest",
+                                          ImpactObjectStore)(
+      ImpactObjectStore.rebuild(t(s, dir, "documents"), _)))
 
   /** The ZIPF-HEAD corpus for the MaxScore payoff rows (VERDICT r14
     * missing #3): the synthetic documents table has a nearly FLAT df
@@ -93,17 +72,12 @@ object TextQueries extends QueryModule {
              when(col("doc_id") % 50 === 0, lit(" uncommonmark"))
                .otherwise(lit(""))).as("text"))
 
-  private[graft] def skewImpactIndex(s: org.apache.spark.sql.SparkSession,
-                                       dir: String)
-      : graft.operators.ImpactIndex.StoredImpacts = {
-    val out =
-      s"/tmp/graft_io/${new java.io.File(dir).getName}/impact_index_skew"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/meta/_SUCCESS")))
-      graft.operators.ImpactIndex.write(skewDocs(s, dir), out)
-    graft.operators.ImpactIndex.read(s, out)
-  }
+  /** The impact store over [[skewDocs]], built once and reused. */
+  private[graft] def skewImpactStore(s: org.apache.spark.sql.SparkSession,
+                                     dir: String): ImpactIndex.StoredImpacts =
+    ImpactObjectStore.read(s, reusedStore(s, dir, "impact_skew_manifest",
+                                          ImpactObjectStore)(
+      ImpactObjectStore.rebuild(skewDocs(s, dir), _)))
 
   override def all: Seq[GraftQuery] = Seq(
 
@@ -484,46 +458,34 @@ object TextQueries extends QueryModule {
           queryTerms = Seq("spark", "vector", "join"), k = 20),
       Some(bm25TopKOracleSql)),
 
-    // The SAME BM25 top-20 served from the AT-REST impact index
-    // ([[graft.operators.ImpactIndex.bm25TopKStored]]): the store
-    // persists the shared kernel's per-(term, doc) addends term-bucketed
-    // (build once, serve many — the lexical analog of ann_ivf_stored),
-    // and the serve reads ONLY the query terms' buckets (literal __bkt
-    // partition predicates + __term row-group residual). Addends at rest
-    // are bit-identical to the from-text kernel, so the text_bm25_topk
-    // oracle certifies this row VERBATIM — the store preserved every
-    // value exactly (the ann_maxsim_stored precedent).
-    GraftQuery(
-      "text_bm25_stored",
-      (s, dir) =>
-        graft.operators.ImpactIndex.bm25TopKStored(
-          storedImpactIndex(s, dir),
-          queryTerms = Seq("spark", "vector", "join"), k = 20),
-      Some(bm25TopKOracleSql)),
-
-    // The SAME serve off the MANIFEST-committed (object-store) layout
-    // ([[graft.operators.ImpactObjectStore]] — VERDICT r14 missing #2):
-    // no rename, no listing consistency, torn-manifest fallback; bucket
-    // files direct-written and tracked in an immutable manifest version,
-    // rebuild = publish. The handle is the same StoredImpacts surface,
-    // the scan stays literal-bucket-pruned off the explicit file list,
-    // and the UNCHANGED exact oracle hash-matching proves the substrate
-    // swap preserved every addend (the ann_ivf_manifest precedent).
+    // The SAME BM25 top-20 served from the AT-REST impact store
+    // ([[graft.operators.ImpactIndex.bm25TopKStored]] over
+    // [[graft.operators.ImpactObjectStore]]): the store persists the
+    // shared kernel's per-(term, doc) addends term-bucketed (build once,
+    // serve many — the lexical analog of ann_ivf_stored_manifest), bucket
+    // files direct-written and tracked in an immutable manifest version
+    // (no rename, rebuild = publish), and the serve reads ONLY the query
+    // terms' buckets (literal __bkt partition predicates + __term
+    // row-group residual) off the manifest's explicit file list. Addends
+    // at rest are bit-identical to the from-text kernel, so the
+    // text_bm25_topk oracle certifies this row VERBATIM — the store
+    // preserved every value exactly (the ann_maxsim_stored precedent).
     GraftQuery(
       "text_bm25_stored_manifest",
       (s, dir) =>
-        graft.operators.ImpactIndex.bm25TopKStored(
-          manifestImpactIndex(s, dir),
+        ImpactIndex.bm25TopKStored(
+          impactStore(s, dir),
           queryTerms = Seq("spark", "vector", "join"), k = 20),
       Some(bm25TopKOracleSql)),
 
     // ROW DELETION from the lexical store (VERDICT r15 missing #1 — the
-    // ann_ivf_delete contract applied to the BM25 index): the row runs
-    // the full takedown lifecycle and certifies BOTH phases in one hash.
+    // ann_ivf_delete_manifest contract applied to the BM25 index): the row
+    // runs the full takedown lifecycle and certifies BOTH phases in one
+    // hash.
     // Stage 'masked': ImpactObjectStore.delete publishes an O(ids)
     // doc-tombstone sliver the serve masks immediately — deleted docs'
     // postings drop, surviving docs' scores stay bit-identical (df/N
-    // intentionally stale, the IVF mask-until-purge stance), so the
+    // intentionally stale until the purge), so the
     // oracle is full-corpus BM25 restricted to surviving docs. Stage
     // 'rebuilt': rebuild over the reduced corpus is the purge restoring
     // exact statistics — the oracle recomputes df/N/avgdl on the reduced
@@ -532,14 +494,9 @@ object TextQueries extends QueryModule {
     GraftQuery(
       "text_bm25_delete_manifest",
       (s, dir) => {
-        import graft.operators.{ImpactIndex, ImpactObjectStore}
         val docs = t(s, dir, "documents")
-        val out =
-          s"/tmp/graft_io/${new java.io.File(dir).getName}/impact_delete"
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
-        ImpactObjectStore.rebuild(docs, out)
+        val out = GraftQuery.freshStore(s, dir, "impact_delete")(
+          ImpactObjectStore.rebuild(docs, _))
         ImpactObjectStore.delete(s, out,
           docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
           batchTag = Some("takedown7"))
@@ -614,8 +571,8 @@ object TextQueries extends QueryModule {
     GraftQuery(
       "text_bm25_pruned",
       (s, dir) =>
-        graft.operators.ImpactIndex.bm25TopKPruned(
-          storedImpactIndex(s, dir),
+        ImpactIndex.bm25TopKPruned(
+          impactStore(s, dir),
           queryTerms = Seq("spark", "vector", "join"), k = 20,
           essential = 2),
       Some(bm25TopKOracleSql)),
@@ -634,8 +591,8 @@ object TextQueries extends QueryModule {
     GraftQuery(
       "text_bm25_pruned_skew",
       (s, dir) =>
-        graft.operators.ImpactIndex.bm25TopKPruned(
-          skewImpactIndex(s, dir),
+        ImpactIndex.bm25TopKPruned(
+          skewImpactStore(s, dir),
           queryTerms = Seq("uncommonmark", "spark", "the"), k = 5,
           essential = 1),
       Some("""WITH d AS (

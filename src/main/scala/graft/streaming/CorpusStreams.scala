@@ -1070,7 +1070,7 @@ object CorpusStreams {
     * shuffle-free per-row map as batch (one broadcast centroid row, in-row
     * top-nprobe — [[graft.operators.GraftSimilarity.probeCells]], shared
     * code); candidates attach via a stream-static equi join on cell id —
-    * a [[graft.operators.GraftSimilarity.readIvfIndex]] store serves
+    * a [[graft.operators.IvfObjectStore.read]] store serves
     * identically (StreamingSpec pins it; the batch serve remains the path
     * with metric-certified file pruning — micro-batch planning is not
     * asserted to prune); the per-query
@@ -1742,125 +1742,6 @@ object CorpusStreams {
       .select(col("q_id"), col("ts"), col("s.id").as("doc_id"),
               (col("p") + 1).cast("long").as("rnk"),
               col("s.score").cast("long").as("score"))
-  }
-
-  /** Streaming ingest into the at-rest IVF store — the write-side
-    * complement of [[ivfServeStream]]: each micro-batch of (id, vector)
-    * rows is assigned against the STORED centroids and appended into the
-    * cell-partitioned layout
-    * ([[graft.operators.GraftSimilarity.appendIvfStore]] — cost ∝ batch,
-    * untouched cells never rewritten). Returns the configured
-    * `DataStreamWriter`; the caller `.start()`s it (and owns checkpoint
-    * location etc.).
-    *
-    * Delivery: IDEMPOTENT per micro-batch (exactly-once at rest under
-    * Structured Streaming's batch-id replay contract): each micro-batch
-    * appends under the tag `<streamId>_b<batchId>`, so the files it
-    * lands have batch-deterministic names, a retried micro-batch is a
-    * marker-gated no-op or replaces its own partial files — never a
-    * duplicate — and replaying the same id twice serves identically to
-    * once (OperatorLibSpec pins it).
-    *
-    * `streamId` scopes the tag namespace and carries a contract:
-    * RESTARTING from the same checkpoint must REUSE the same streamId
-    * (so replays hit their markers), and a FRESH checkpoint into the
-    * same store must use a NEW streamId — batch ids restart at 0 under
-    * a fresh checkpoint, and reusing the old streamId would make the
-    * new stream's first batches collide with committed markers and be
-    * silently skipped. Commit markers accumulate one tiny file per
-    * micro-batch; prune them with
-    * [[graft.operators.GraftSimilarity.pruneIngestTags]] on an age bound
-    * ≥ the checkpoint's replay window. Rebuild/compaction remain batch
-    * concerns — run [[graft.operators.GraftSimilarity.ivfMaybeRebuild]]
-    * (full rewrite via [[graft.operators.GraftSimilarity.writeIvfIndex]])
-    * and [[graft.operators.GraftSimilarity.compactIvfCells]] between
-    * ingest waves; the compaction pass holds a maintenance lock, and a
-    * micro-batch that races it WAITS IT OUT: the batch function retries
-    * with backoff on
-    * [[graft.operators.GraftSimilarity.MaintenanceLockHeld]] for up to
-    * `lockWaitMs` (default: the maintenance lease TTL — the longest a
-    * crashed pass can hold the store), so a routine compaction never
-    * fails a healthy ingest query. Only when the lock outlives the wait
-    * bound does the batch surface the refusal and FAIL ITS QUERY rather
-    * than corrupt the store — Structured Streaming does not retry a
-    * failed batch within a run, so that tail case needs a
-    * supervisor-level restart (it resumes from the checkpoint;
-    * already-committed batches no-op on their markers, the refused batch
-    * replays). Any non-lock failure surfaces immediately, untouched.
-    */
-  /** Streaming increments into the VERSIONED at-rest keep-set — the
-    * closing arc of online dedup (r15): the pair miners
-    * ([[nearDupPairStream]], [[srpPairStream]], [[editDistPairStream]],
-    * [[hammingPairStream]]) emit verified pairs online; every
-    * micro-batch folds into [[graft.operators.KeepSetStore]] as ONE
-    * tagged [[graft.operators.KeepSetStore.increment]]
-    * (`<streamId>_b<batchId>`), so a checkpoint replay no-ops on the
-    * manifest's tag set and the stored decision table is always a
-    * published, time-travelable version. The batch's endpoint set rides
-    * into the increment as CANDIDATE new ids — the store itself filters
-    * out the already-stored ones against the very manifest snapshot its
-    * stage resolves from, re-deriving on each publish retry (ADVICE r15:
-    * a stream-side disjointness check read a DIFFERENT manifest than
-    * the stage, so a concurrent committer could make a stored id pass
-    * as 'new'). Run [[graft.operators.KeepSetStore.compact]] on a
-    * maintenance cadence so the per-batch resolve stays a pure scan.
-    */
-  def keepSetIncrementStream(dir: String, pairs: DataFrame,
-                             streamId: String,
-                             idCol: String = "doc_id",
-                             aCol: String = "a_id", bCol: String = "b_id")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    pairs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val p = batch.select(col(aCol).cast("long").as(aCol),
-                           col(bCol).cast("long").as(bCol))
-      val endpoints = p.select(col(aCol).as(idCol))
-        .unionAll(p.select(col(bCol).as(idCol)))
-        .distinct()
-      graft.operators.KeepSetStore.increment(
-        spark, dir, endpoints, p, idCol, aCol, bCol,
-        batchTag = Some(s"${streamId}_b$batchId"))
-      ()
-    }
-  }
-
-  def ivfIngestStream(dir: String, vecs: DataFrame, streamId: String,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      lockWaitMs: Long =
-                        graft.operators.GraftSimilarity.MaintenanceLockTtlMs,
-                      lockPollMs: Long = 5000L)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_]+"),
-      s"streamId '$streamId' must match [A-Za-z0-9_]+ (it prefixes the " +
-      "store's idempotency tags)")
-    require(lockWaitMs >= 0, s"lockWaitMs must be >= 0, got $lockWaitMs")
-    require(lockPollMs > 0, s"lockPollMs must be positive, got $lockPollMs")
-    vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val deadline = System.currentTimeMillis() + lockWaitMs
-      var backoffMs = lockPollMs
-      var landed = false
-      while (!landed) {
-        try {
-          graft.operators.GraftSimilarity.appendIvfStore(
-            batch.sparkSession, dir,
-            batch.select(col(idCol),
-                         expr(s"transform($vecCol, x -> cast(x AS double))")
-                           .as("__v")),
-            idCol, "__v", batchTag = Some(s"${streamId}_b$batchId"))
-          landed = true
-        } catch {
-          case e: graft.operators.GraftSimilarity.MaintenanceLockHeld =>
-            val leftMs = deadline - System.currentTimeMillis()
-            if (leftMs <= 0) throw e
-            Thread.sleep(math.min(backoffMs, leftMs))
-            backoffMs = math.min(backoffMs * 2, 60000L)
-        }
-      }
-    }
   }
 
   final case class PackDoc(shard: String, doc_id: Long, n_tokens: Long)

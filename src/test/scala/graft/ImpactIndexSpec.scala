@@ -9,17 +9,21 @@ import org.apache.spark.sql.functions._
   * MaxScore pruned serve's exact-by-refusal contract (r13 #2).
   */
 class ImpactIndexSpec extends GraftFunSuite {
-  import graft.operators.{ImpactIndex, TextRank}
+  import graft.operators.{ImpactIndex, ImpactObjectStore, TextRank}
 
   private def docs = spark.read.parquet(s"$sf0001/documents.parquet")
     .select(col("doc_id").cast("long").as("doc_id"), col("text"))
 
-  private lazy val storeDir: String = {
+  /** A fresh at-rest store over `corpus`, read back. */
+  private def stored(corpus: org.apache.spark.sql.DataFrame, buckets: Int)
+      : ImpactIndex.StoredImpacts = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_impact_spec").toString
-    ImpactIndex.write(docs, dir, buckets = 16)
-    dir
+    ImpactObjectStore.rebuild(corpus, dir, buckets = buckets)
+    ImpactObjectStore.read(spark, dir)
   }
+
+  private lazy val storeIdx = stored(docs, buckets = 16)
 
   test("shared kernel: the gated scorer's addends equal the ungated " +
        "(impact-build) addends on the gated term subset, bit-for-bit — " +
@@ -75,7 +79,7 @@ class ImpactIndexSpec extends GraftFunSuite {
        "exactly what the kernel computed; the bucket layout agrees with " +
        "the driver-side bucketOf; a term's serve scan partition-prunes " +
        "to its buckets") {
-    val idx = ImpactIndex.read(spark, storeDir)
+    val idx = storeIdx
     assert(idx.buckets == 16 && idx.k1 == 1.2 && idx.b == 0.75)
     val mem = TextRank.bm25Impacts(docs, "doc_id", "text", 1.2, 0.75, None)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -107,7 +111,7 @@ class ImpactIndexSpec extends GraftFunSuite {
        "EXACT at every covering essential (monotonicity: more essential " +
        "terms never change the answer) and REFUSES when the skipped " +
        "upper bound could reach the top-k") {
-    val idx = ImpactIndex.read(spark, storeDir)
+    val idx = storeIdx
     val terms = Seq("spark", "vector", "join")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -141,11 +145,8 @@ class ImpactIndexSpec extends GraftFunSuite {
     // k=2 under-fills (cnt < k) and k=1 ties the skipped bound (not
     // strictly below θ); both must throw, not silently prune
     import spark.implicits._
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_impact_refuse").toString
-    ImpactIndex.write(Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text"),
-                      dir2, buckets = 4)
-    val idx2 = ImpactIndex.read(spark, dir2)
+    val idx2 = stored(Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text"),
+                      buckets = 4)
     for (k <- Seq(1, 2)) {
       val e = intercept[Throwable] {
         ImpactIndex.bm25TopKPruned(idx2, Seq("x", "y"), k = k,
@@ -174,10 +175,7 @@ class ImpactIndexSpec extends GraftFunSuite {
     val corpus = (1L to 50L)
       .map(i => (i, if (i <= 3) "the zebra" else "the"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_impact_skew").toString
-    ImpactIndex.write(corpus, dir, buckets = 8)
-    val idx = ImpactIndex.read(spark, dir)
+    val idx = stored(corpus, buckets = 8)
     val terms = Seq("the", "zebra")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

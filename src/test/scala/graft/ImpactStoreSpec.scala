@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ImpactIndex, ImpactObjectStore, ManifestStoreException}
+import graft.operators.{ImpactIndex, ImpactObjectStore, ManifestStoreException,
+                        TextRank}
 
-/** [[ImpactObjectStore]] — the manifest-committed object-store layout of
-  * the BM25 impact index. Like ManifestStoreSpec, every test drives the
-  * store THROUGH the s3a mock scheme: this layout needs no rename
-  * atomicity and no listing consistency, so the filesystem-contract gate
-  * that refuses object stores for [[ImpactIndex.write]] does not apply.
-  * Covers the rebuild/read/time-travel/vacuum lifecycle, serve equality
-  * with the directory layout (bit-identical addends through the shared
-  * kernel), deletes and their tags across rebuilds, and the bucket-pruned
+/** [[ImpactObjectStore]] — the manifest-committed at-rest BM25 impact
+  * index. Like ManifestStoreSpec, every test drives the store THROUGH the
+  * s3a mock scheme: the store needs no rename atomicity and no listing
+  * consistency. Covers the rebuild/read/time-travel/vacuum lifecycle,
+  * serve equality with the from-text BM25 serve (bit-identical addends
+  * through the shared kernel), deletes and their tags across rebuilds,
+  * and the bucket-pruned
   * scan shape on the manifest substrate. The crash window, torn-manifest
   * healing and the version race are tested once for all three stores in
   * ManifestProtocolSpec.
@@ -24,11 +24,18 @@ class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
   private val terms = Seq("spark", "vector", "join")
 
   private def serve(idx: ImpactIndex.StoredImpacts, k: Int = 10) =
-    ImpactIndex.bm25TopKStored(idx, terms, k).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    rows(ImpactIndex.bm25TopKStored(idx, terms, k))
+
+  /** The exact BM25 top-k computed from the text, no store involved. */
+  private def fromText(corpus: org.apache.spark.sql.DataFrame) =
+    rows(TextRank.bm25TopK(corpus, terms, k = 10))
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .sortBy(_._1)
 
   test("lifecycle on the object-store scheme: rebuild publishes v1, the " +
-       "serve equals the directory layout bit-for-bit, a second rebuild " +
+       "serve equals the from-text BM25 serve bit-for-bit, a second rebuild " +
        "publishes v2 while v1 time-travels, vacuum retires it; the scan " +
        "stays bucket-pruned off the manifest's explicit file list") {
     withMockS3 { base =>
@@ -36,18 +43,9 @@ class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       val dir = s"s3a:$base/impact"
       assert(ImpactObjectStore.rebuild(d, dir, buckets = 8) == 1L)
       val manifestIdx = ImpactObjectStore.read(spark, dir)
-      // directory-layout twin on the LOCAL fs (its contract gate refuses
-      // the mock object scheme — the exact gap this store closes)
-      val dirStore = java.nio.file.Files
-        .createTempDirectory("impact_dir").toString
-      try {
-        ImpactIndex.write(d, dirStore, buckets = 8)
-        val a = serve(manifestIdx)
-        assert(a.nonEmpty && a == serve(ImpactIndex.read(spark, dirStore)),
-          "manifest substrate must serve the directory layout's answer")
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dirStore))
       val v1Serve = serve(manifestIdx)
+      assert(v1Serve.nonEmpty && v1Serve == fromText(d),
+        "the store must serve the from-text answer")
       // bucket pruning survives the explicit-file-list read
       val plan = manifestIdx.impactsFor(terms)
         .queryExecution.executedPlan.toString
@@ -58,14 +56,7 @@ class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       val half = d.filter(col("doc_id") % 2 === 0)
       assert(ImpactObjectStore.rebuild(half, dir, buckets = 8) == 2L)
       assert(ImpactObjectStore.versions(spark, dir) == Seq(1L, 2L))
-      val dirStore2 = java.nio.file.Files
-        .createTempDirectory("impact_dir2").toString
-      try {
-        ImpactIndex.write(half, dirStore2, buckets = 8)
-        assert(serve(ImpactObjectStore.read(spark, dir)) ==
-               serve(ImpactIndex.read(spark, dirStore2)))
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dirStore2))
+      assert(serve(ImpactObjectStore.read(spark, dir)) == fromText(half))
       assert(serve(ImpactObjectStore.readAt(spark, dir, 1L)) == v1Serve,
         "time travel must serve the pre-rebuild snapshot verbatim")
       // vacuum with a tiny age bound: the superseded manifest and every
@@ -126,7 +117,7 @@ class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       assert(ImpactObjectStore.delete(spark, dir,
         d.filter(col("doc_id") % 7 === 3).select("doc_id"),
         batchTag = Some("t7")) == 2L)
-      // layout-independent delete semantics (the ann_ivf_delete pin):
+      // the delete semantics of the ann_ivf_delete_manifest pin:
       // masked serve == the unpruned serve minus deleted docs' rows,
       // ranks recomputed — surviving scores bit-identical (stale df/N)
       val expect = full.filterNot(r => delIds(r._2)).zipWithIndex
@@ -149,19 +140,12 @@ class ImpactStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       assert(serve(ImpactObjectStore.readAt(spark, dir, 1L),
                    k = 1 << 20) == full)
       // rebuild over the reduced corpus IS the purge: tombstones cleared,
-      // statistics exact (equals the directory layout on the same corpus)
+      // statistics exact (equals the from-text serve on the same corpus)
       val reduced = d.filter(col("doc_id") % 7 =!= 3)
       assert(ImpactObjectStore.rebuild(reduced, dir, buckets = 8) == 3L)
       val fs = fsOf(dir)
       assert(ImpactObjectStore.currentManifest(fs, dir).get.tombs.isEmpty)
-      val dirStore = java.nio.file.Files
-        .createTempDirectory("impact_red").toString
-      try {
-        ImpactIndex.write(reduced, dirStore, buckets = 8)
-        assert(serve(ImpactObjectStore.read(spark, dir)) ==
-               serve(ImpactIndex.read(spark, dirStore)))
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dirStore))
+      assert(serve(ImpactObjectStore.read(spark, dir)) == fromText(reduced))
       // ADVICE r15 vacuum pin: age every DATA object far past the cutoff
       // while all manifests stay retained — nothing may be reclaimed,
       // because the live set is the union over RETAINED manifests, not

@@ -87,11 +87,6 @@ class ManifestStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       val batch = e.filter(col("vec_id").between(40, 79))
       val idx = GraftSimilarity.buildIvfIndex(seed)
       val dir = s"s3a:$base/store"
-      // the DIRECTORY layout refuses this scheme; the manifest layout is
-      // the documented alternative and must not consult that gate
-      intercept[GraftSimilarity.StoreFsContractViolation] {
-        GraftSimilarity.writeIvfIndex(idx, dir)
-      }
       IvfObjectStore.create(spark, idx, dir)
       val q = batch.limit(5)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))

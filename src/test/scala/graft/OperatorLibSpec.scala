@@ -851,17 +851,17 @@ class OperatorLibSpec extends GraftFunSuite {
 
   test("IVF index at rest: cell-partitioned layout, served batch prunes " +
        "to the probed cells via dynamic partition pruning, result parity") {
-    import graft.operators.GraftSimilarity
+    import graft.operators.{GraftSimilarity, IvfObjectStore}
     val e = spark.read.parquet(s"$sf001/embeddings.parquet")
       .select(col("vec_id"),
               expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val idx = GraftSimilarity.buildIvfIndex(e).persist()
     val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
     try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      val stored = GraftSimilarity.readIvfIndex(spark, dir)
+      IvfObjectStore.create(spark, idx, dir)
+      val stored = IvfObjectStore.read(spark, dir)
       // layout: one directory per NON-EMPTY cell
-      val cellDirs = new java.io.File(s"$dir/assigned").listFiles()
+      val cellDirs = new java.io.File(s"$dir/data").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("c_id="))
       val nonEmpty = idx.assigned.select("c_id").distinct().count()
       assert(cellDirs.toLong == nonEmpty, s"$cellDirs dirs vs $nonEmpty cells")
@@ -899,9 +899,8 @@ class OperatorLibSpec extends GraftFunSuite {
       val assignedScans = allScans(
         org.apache.spark.sql.GraftSqlBridge.queryExecution(served)
           .executedPlan)
-        .filter(_.relation.location.rootPaths.exists(
-          _.toString.contains("assigned")))
-      assert(assignedScans.nonEmpty, "no FileSourceScanExec over assigned/")
+        .filter(_.relation.partitionSchema.fieldNames.contains("c_id"))
+      assert(assignedScans.nonEmpty, "no FileSourceScanExec over data/")
       val probedCells = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("q_id").orderBy(desc("qc"), asc("c_id"))
@@ -918,14 +917,13 @@ class OperatorLibSpec extends GraftFunSuite {
       assert(filesRead < nonEmpty,
         s"filesRead=$filesRead should be < total cells $nonEmpty")
       // full lifecycle composes: append a later batch onto the STORED
-      // index, re-write, re-read, serve — identical to the in-memory
-      // append path (the store is just frames; nothing is lost at rest)
+      // index, re-read, serve — identical to the in-memory append path
+      // (the store is just frames; nothing is lost at rest)
       val twins = e.limit(40)
         .select((col("vec_id") + 500000).as("vec_id"), col("v"))
       val appendedMem = GraftSimilarity.ivfAppend(idx, twins)
-      GraftSimilarity.writeIvfIndex(
-        GraftSimilarity.ivfAppend(stored, twins), s"$dir/v2")
-      val appendedStored = GraftSimilarity.readIvfIndex(spark, s"$dir/v2")
+      IvfObjectStore.append(spark, dir, twins)
+      val appendedStored = IvfObjectStore.read(spark, dir)
       val a = GraftSimilarity.ivfTopKWith(appendedStored, q, k = 5)
         .collect().map(key).toSet
       val b = GraftSimilarity.ivfTopKWith(appendedMem, q, k = 5)
@@ -948,11 +946,11 @@ class OperatorLibSpec extends GraftFunSuite {
     val idx = GraftSimilarity.buildIvfIndex(e)
     val dir = java.nio.file.Files.createTempDirectory("ivf_pairs").toString
     try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
+      graft.operators.IvfObjectStore.create(spark, idx, dir)
       // the scaladoc's claim, executed: a store maintainer mines pairs
       // from the PERSISTED assignment — no re-assign, no new sketch
       // state, candidates are cell-local over the cell-partitioned files
-      val assigned = GraftSimilarity.readIvfIndex(spark, dir).assigned
+      val assigned = graft.operators.IvfObjectStore.read(spark, dir).assigned
       val a = assigned.select(col("c_id"), col("n_id").as("a_id"),
                               col("v").as("va"))
       val b = assigned.select(col("c_id"), col("n_id").as("b_id"),
@@ -1033,149 +1031,6 @@ class OperatorLibSpec extends GraftFunSuite {
     } finally idx.unpersist(blocking = true)
   }
 
-  test("appendIvfStore absorbs a batch into the at-rest layout without " +
-       "rewriting existing files; served results equal the in-memory " +
-       "append; streaming ingest lands identically") {
-    import graft.operators.GraftSimilarity
-    val e = spark.read.parquet(s"$sf001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val seed = e.filter(col("vec_id") % 3 === 0)
-    val rest = e.filter(col("vec_id") % 3 =!= 0)
-    val idx = GraftSimilarity.buildIvfIndex(seed).persist()
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_app").toString
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    def assignedFiles() = org.apache.commons.io.FileUtils
-      .listFiles(new java.io.File(s"$dir/assigned"),
-                 Array("parquet"), true)
-      .toArray.map(_.toString).toSet
-    try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      val before = assignedFiles()
-      GraftSimilarity.appendIvfStore(spark, dir, rest)
-      val after = assignedFiles()
-      // append-only at rest: every original file is still there untouched,
-      // and the batch landed as NEW files inside the cell dirs
-      assert(before.subsetOf(after) && after.size > before.size,
-        s"before=${before.size} after=${after.size}")
-      // serving the appended store == serving the in-memory append
-      val q = e.filter(col("vec_id") % 50 === 3)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val viaStore = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet
-      val viaMem = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.ivfAppend(idx, rest), q, k = 5)
-        .collect().map(key).toSet
-      assert(viaStore == viaMem && viaStore.nonEmpty)
-      // streaming ingest of the same batch into a fresh store lands the
-      // same served answers (two micro-batches through foreachBatch)
-      import graft.streaming.CorpusStreams
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val dir2 = java.nio.file.Files.createTempDirectory("ivf_ingest").toString
-      try {
-        GraftSimilarity.writeIvfIndex(idx, dir2)
-        val rows = rest.collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toList)).toSeq
-        val (b1, b2) = rows.splitAt(rows.size / 2)
-        val input = MemoryStream[(Long, List[Double])]
-        val sq = CorpusStreams
-          .ivfIngestStream(dir2, input.toDF().toDF("vec_id", "embedding"),
-                           streamId = "s1")
-          .option("checkpointLocation", s"$dir2/_chk")
-          .start()
-        try {
-          input.addData(b1); sq.processAllAvailable()
-          input.addData(b2); sq.processAllAvailable()
-        } finally sq.stop()
-        val viaIngest = GraftSimilarity
-          .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir2), q, k = 5)
-          .collect().map(key).toSet
-        assert(viaIngest == viaMem,
-          s"ingest-only=${viaIngest.diff(viaMem)} mem-only=${viaMem.diff(viaIngest)}")
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir2))
-    } finally {
-      idx.unpersist(blocking = true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("directory-store deletes: tombstones mask ids on every read " +
-       "immediately, an appended re-add stays masked until purge, purge " +
-       "physically removes the rows and clears applied tombstones, and a " +
-       "full rewrite supersedes pending tombstones") {
-    import graft.operators.GraftSimilarity
-    val e = spark.read.parquet(s"$sf001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-      .filter(col("vec_id") < 300)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_del").toString
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    def rawIds() = spark.read.parquet(s"$dir/assigned")
-      .select("n_id").collect().map(_.getLong(0)).toSet
-    try {
-      val full = GraftSimilarity.buildIvfIndex(e).persist()
-      GraftSimilarity.writeIvfIndex(full, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      GraftSimilarity.deleteFromIvfStore(
-        spark, dir, e.filter(col("vec_id") % 7 === 3).select("vec_id"))
-      // masked immediately on read, for the exact AND the q8 serve path
-      val masked = GraftSimilarity.readIvfIndex(spark, dir)
-      assert(masked.assigned.filter(col("n_id") % 7 === 3).count() == 0)
-      val expected = GraftSimilarity.IvfIndex(
-        full.centroids, full.assigned.filter(col("n_id") % 7 =!= 3))
-      val servedAfter = GraftSimilarity.ivfTopKWith(masked, q, k = 5)
-        .collect().map(key).toSet
-      assert(servedAfter ==
-        GraftSimilarity.ivfTopKWith(expected, q, k = 5)
-          .collect().map(key).toSet,
-        "serve-after-delete must equal serve-over-filtered-population")
-      assert(GraftSimilarity
-        .ivfTopKWithQ8(masked, q, k = 5, rerankFactor = 4).collect()
-        .forall(_.getLong(1) % 7 != 3),
-        "the q8 tier must mask tombstoned ids too")
-      // the bytes are still there (mask is logical until purge), and a
-      // re-added tombstoned id stays masked
-      assert(rawIds().exists(_ % 7 == 3), "tombstone is a mask, not a rewrite")
-      GraftSimilarity.appendIvfStore(
-        spark, dir, e.filter(col("vec_id") === 3), batchTag = Some("readd"))
-      assert(GraftSimilarity.readIvfIndex(spark, dir)
-        .assigned.filter(col("n_id") === 3).count() == 0,
-        "a tombstone masks its id until purged — re-add requires purge first")
-      // purge: physical removal, tombstone files cleared, serve unchanged
-      assert(GraftSimilarity.purgeIvfTombstones(spark, dir) > 0)
-      assert(!rawIds().exists(_ % 7 == 3), "purge must remove the bytes")
-      assert(new java.io.File(s"$dir/tombstones").listFiles() == null ||
-             !new java.io.File(s"$dir/tombstones").listFiles()
-               .exists(_.getName.endsWith(".parquet")),
-        "applied tombstone files must be cleared")
-      assert(GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet == servedAfter)
-      // after purge a re-add is visible again (purge-then-re-add)
-      GraftSimilarity.appendIvfStore(
-        spark, dir, e.filter(col("vec_id") === 3), batchTag = Some("readd2"))
-      assert(GraftSimilarity.readIvfIndex(spark, dir)
-        .assigned.filter(col("n_id") === 3).count() == 1)
-      // a FULL rewrite supersedes pending tombstones entirely
-      GraftSimilarity.deleteFromIvfStore(
-        spark, dir, e.filter(col("vec_id") % 5 === 1).select("vec_id"))
-      GraftSimilarity.writeIvfIndex(full, dir)
-      assert(GraftSimilarity.readIvfIndex(spark, dir)
-        .assigned.filter(col("n_id") % 5 === 1).count() > 0,
-        "writeIvfIndex must drop stale tombstones with the old population")
-      full.unpersist()
-      ()
-    } finally org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(dir))
-  }
-
   test("IVF drift lifecycle: skewed appends trip ivfMaybeRebuild, the " +
        "rebuild caps the occupancy tail, serve parity holds; a healthy " +
        "index passes through untouched") {
@@ -1234,12 +1089,17 @@ class OperatorLibSpec extends GraftFunSuite {
 
   test("IVF id contract: non-integral id columns fail fast at build, " +
        "append, and write — not silently at read") {
-    import graft.operators.GraftSimilarity
+    import graft.operators.{GraftSimilarity, IvfObjectStore}
     val strIds = spark.range(10)
       .select(col("id").cast("string").as("vec_id"),
               expr("array(cast(id AS double), 1D)").as("v"))
     val okIds = spark.range(10)
       .select(col("id").as("vec_id"),
+              expr("array(cast(id AS double), 1D)").as("v"))
+    // a double id: the long cast would truncate 1.5 to 1 and collide
+    // with the stored vector 1
+    val dblIds = spark.range(10)
+      .select((col("id") + 0.5).as("vec_id"),
               expr("array(cast(id AS double), 1D)").as("v"))
     intercept[IllegalArgumentException] {
       GraftSimilarity.buildIvfIndex(strIds)
@@ -1248,325 +1108,38 @@ class OperatorLibSpec extends GraftFunSuite {
     intercept[IllegalArgumentException] {
       GraftSimilarity.ivfAppend(idx, strIds)
     }
-    intercept[IllegalArgumentException] {
-      GraftSimilarity.writeIvfIndex(
-        GraftSimilarity.IvfIndex(
-          idx.centroids,
-          idx.assigned.withColumn("c_id", col("c_id").cast("string"))),
-        "/tmp/never_written_ivf")
-    }
-    intercept[IllegalArgumentException] {
-      // fails on the id check BEFORE touching the (nonexistent) store
-      GraftSimilarity.appendIvfStore(spark, "/tmp/never_read_ivf", strIds)
-    }
-  }
-
-  test("appendIvfStore with a batchTag is idempotent: replaying the same " +
-       "tag replaces its own files, the store serves identically to a " +
-       "single append") {
-    import graft.operators.GraftSimilarity
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val seed = e.filter(col("vec_id") % 3 === 0)
-    val batch = e.filter(col("vec_id") % 3 =!= 0)
-    val idx = GraftSimilarity.buildIvfIndex(seed).persist()
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idem").toString
-    def files() = org.apache.commons.io.FileUtils
-      .listFiles(new java.io.File(s"$dir/assigned"), Array("parquet"), true)
-      .toArray.map(_.toString).toSet
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val q = e.filter(col("vec_id") % 50 === 3)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val dir = java.nio.file.Files.createTempDirectory("ivf_ids").toString
     try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                     batchTag = Some("b7"))
-      val once = files()
-      assert(once.exists(_.contains("ingest-b7-")),
-        s"tagged append should land tag-named files: $once")
-      val servedOnce = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet
-      // replay the whole micro-batch (the foreachBatch retry shape):
-      // same tag + same rows ⇒ same file names, same store
-      GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                     batchTag = Some("b7"))
-      assert(files() == once,
-        s"replay must replace, not duplicate: ${files().diff(once)}")
-      val servedTwice = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet
-      assert(servedTwice == servedOnce && servedOnce.nonEmpty)
-      // row count proves no duplicate vectors hid below the serve layer
-      val n = spark.read.parquet(s"$dir/assigned").count()
-      assert(n == seed.count() + batch.count(),
-        s"store holds $n rows, expected ${seed.count() + batch.count()}")
-      // a DIFFERENT tag with the same rows appends (tags scope replays,
-      // they don't dedup content — that contract stays with the caller)
-      GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                     batchTag = Some("b8"))
-      assert(spark.read.parquet(s"$dir/assigned").count() ==
-             seed.count() + 2 * batch.count())
-      // commit markers exist for both tags
-      assert(new java.io.File(s"$dir/ingest_tags/b7").exists() &&
-             new java.io.File(s"$dir/ingest_tags/b8").exists())
-      // PARTIAL-retry cleanup is exact-tag: simulate a crashed b7 attempt
-      // (marker removed ⇒ not committed) and replay it — the cleanup must
-      // touch ONLY ingest-b7-* files, never tag b8's (prefix matching
-      // would: 'b' prefixes both; the parsed-tag equality cannot)
-      assert(new java.io.File(s"$dir/ingest_tags/b7").delete())
-      val b8Files = files().filter(_.contains("ingest-b8-"))
-      GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                     batchTag = Some("b7"))
-      assert(files().filter(_.contains("ingest-b8-")) == b8Files,
-        "replaying b7 must not disturb b8's files")
-      assert(spark.read.parquet(s"$dir/assigned").count() ==
-             seed.count() + 2 * batch.count(),
-        "partial-retry replay must not change the row count")
-      // dashed/odd tags are REJECTED, not sanitized: two distinct raw
-      // tags must never normalize onto one marker — with the marker gate
-      // a collision is a SILENT drop of the second batch
       intercept[IllegalArgumentException] {
-        GraftSimilarity.appendIvfStore(spark, dir, batch.limit(0),
-                                       batchTag = Some("2026-08-13"))
+        IvfObjectStore.create(spark,
+          GraftSimilarity.IvfIndex(
+            idx.centroids,
+            idx.assigned.withColumn("c_id", col("c_id").cast("string"))),
+          dir)
       }
-      // marker GC: young markers survive an aggressive prune window; a
-      // tiny window prunes them (mtime-based), and a replay of a PRUNED
-      // tag would land again — which is why the doc ties the age bound
-      // to the source's replay horizon
-      assert(GraftSimilarity.pruneIngestTags(spark, dir,
-               olderThanMs = 24L * 3600 * 1000) == 0)
-      Thread.sleep(20)
-      assert(GraftSimilarity.pruneIngestTags(spark, dir, olderThanMs = 1) >= 2)
-      assert(!new java.io.File(s"$dir/ingest_tags/b7").exists())
-    } finally {
-      idx.unpersist(blocking = true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("ivfIngestStream waits out a held maintenance lease: the batch " +
-       "retries until release and the query never fails; a lock outliving " +
-       "the wait bound surfaces MaintenanceLockHeld") {
-    import graft.operators.GraftSimilarity
-    import graft.streaming.CorpusStreams
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val idx = GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") < 40))
-      .persist()
-    val dir = java.nio.file.Files.createTempDirectory("ivf_lock_wait").toString
-    try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      val rows = e.filter(col("vec_id").between(40, 59)).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toList)).toSeq
-      val lockF = new java.io.File(s"$dir/_maintenance.lock")
-      assert(lockF.createNewFile(), "pre-held maintenance lease")
-      // --- a routine pass: lock released while the batch is retrying ---
-      val input = MemoryStream[(Long, List[Double])]
-      val q = CorpusStreams
-        .ivfIngestStream(dir, input.toDF().toDF("vec_id", "embedding"),
-                         streamId = "lw1",
-                         lockWaitMs = 60000L, lockPollMs = 100L)
-        .option("checkpointLocation", s"$dir/_chk1")
-        .start()
-      val releaser = new Thread(() => { Thread.sleep(1500); lockF.delete() })
-      releaser.start()
-      try {
-        input.addData(rows)
-        q.processAllAvailable() // blocks through the retry window
-        assert(q.exception.isEmpty,
-          s"a routine compaction pass must not fail the ingest: ${q.exception}")
-      } finally { q.stop(); releaser.join() }
-      val stored = spark.read.parquet(s"$dir/assigned")
-        .select("n_id").as[Long].collect().toSet
-      assert(rows.map(_._1).toSet.subsetOf(stored),
-        "the waited-out batch must have landed exactly once")
-      // --- a wedged lock: wait bound expires, the refusal surfaces ---
-      assert(lockF.createNewFile())
-      val input2 = MemoryStream[(Long, List[Double])]
-      val q2 = CorpusStreams
-        .ivfIngestStream(dir, input2.toDF().toDF("vec_id", "embedding"),
-                         streamId = "lw2",
-                         lockWaitMs = 400L, lockPollMs = 100L)
-        .option("checkpointLocation", s"$dir/_chk2")
-        .start()
-      try {
-        val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          input2.addData(rows.take(3).map(r => (r._1 + 100000L, r._2)))
-          q2.processAllAvailable()
-        }
-        val causes = Iterator.iterate[Throwable](err)(_.getCause)
-          .takeWhile(_ != null).toSeq
-        assert(causes.exists(_.isInstanceOf[GraftSimilarity.MaintenanceLockHeld]),
-          causes.map(_.getClass.getName).mkString(" | "))
-      } finally { q2.stop(); lockF.delete() }
-    } finally {
-      idx.unpersist(blocking = true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("compactIvfCells rewrites ONLY oversized cells down to one file; " +
-       "serve parity holds and untouched cells' files are byte-identical") {
-    import graft.operators.GraftSimilarity
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val idx = GraftSimilarity.buildIvfIndex(e).persist()
-    val dir = java.nio.file.Files.createTempDirectory("ivf_compact").toString
-    // four append waves of a SMALL skewed slice (fresh ids per wave) so
-    // only the slice's cells fragment and the rest stay single-file
-    val slice = e.filter(col("vec_id") % 53 === 1)
-    def cellFiles(): Map[String, Map[String, (Long, Long)]] = {
-      val root = new java.io.File(s"$dir/assigned")
-      root.listFiles().filter(d => d.isDirectory && d.getName.startsWith("c_id="))
-        .map { d =>
-          d.getName -> d.listFiles()
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(f => f.getName -> ((f.lastModified(), f.length()))).toMap
-        }.toMap
-    }
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val q = e.filter(col("vec_id") % 50 === 3)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    try {
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      for (w <- 1 to 4)
-        GraftSimilarity.appendIvfStore(spark, dir,
-          slice.select((col("vec_id") + w * 1000000L).as("vec_id"), col("v")))
-      val before = cellFiles()
-      val over = before.filter(_._2.size > 2)
-      val under = before.filter(_._2.size <= 2)
-      assert(over.nonEmpty, "test needs fragmented cells")
-      assert(under.nonEmpty, "test needs untouched cells")
-      val servedBefore = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet
-      val nCompacted = GraftSimilarity.compactIvfCells(spark, dir,
-                                                       maxFilesPerCell = 2)
-      assert(nCompacted == over.size,
-        s"compacted $nCompacted, expected ${over.size}")
-      val after = cellFiles()
-      // oversized cells collapsed to exactly one file
-      assert(over.keySet.forall(c => after(c).size == 1),
-        over.keySet.map(c => s"$c -> ${after(c).size}").mkString(", "))
-      // cells under the bound: same files, same mtime and size — never
-      // opened for write, not merely equal content
-      assert(under.forall { case (c, fs) => after(c) == fs },
-        "untouched cells must keep byte-identical files")
-      // no staging or retired-dir residue
-      assert(!new java.io.File(s"$dir/compact_staging").exists())
-      assert(new java.io.File(s"$dir/assigned").listFiles()
-        .forall(!_.getName.startsWith(".compact-old-")))
-      // store content and serve identical across the compaction
-      val servedAfter = GraftSimilarity
-        .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 5)
-        .collect().map(key).toSet
-      assert(servedAfter == servedBefore && servedAfter.nonEmpty)
-      // second pass is a no-op: nothing left over the bound
-      assert(GraftSimilarity.compactIvfCells(spark, dir, 2) == 0)
-      // UNCOMMITTED tagged batches are compaction-proof: land a tagged
-      // batch, strip its commit marker (simulated crash between rename
-      // and marker), and fragment its cells again — compaction must skip
-      // every cell holding the uncommitted tag's files (merging them
-      // would strand them beyond the retry's exact-tag cleanup and the
-      // replay would double the batch)
-      GraftSimilarity.appendIvfStore(spark, dir,
-        slice.select((col("vec_id") + 9000000L).as("vec_id"), col("v")),
-        batchTag = Some("crashed"))
-      assert(new java.io.File(s"$dir/ingest_tags/crashed").delete())
-      for (w <- 5 to 7)
-        GraftSimilarity.appendIvfStore(spark, dir,
-          slice.select((col("vec_id") + w * 1000000L).as("vec_id"), col("v")))
-      val frag = cellFiles().filter(_._2.size > 2)
-      val withUncommitted = frag.filter(_._2.keys.exists(_.startsWith("ingest-crashed-")))
-      assert(withUncommitted.nonEmpty, "test needs an uncommitted-tag cell")
-      val n2 = GraftSimilarity.compactIvfCells(spark, dir, 2)
-      assert(n2 == frag.size - withUncommitted.size,
-        s"compacted $n2 of ${frag.size}, expected to skip ${withUncommitted.size}")
-      val after2 = cellFiles()
-      assert(withUncommitted.forall { case (c, fs) => after2(c) == fs },
-        "uncommitted-tag cells must be untouched")
-      // once the tag commits (replay completes → marker), the next pass
-      // compacts the previously-skipped cells: nothing stays oversized
-      GraftSimilarity.appendIvfStore(spark, dir,
-        slice.select((col("vec_id") + 9000000L).as("vec_id"), col("v")),
-        batchTag = Some("crashed"))
-      assert(GraftSimilarity.compactIvfCells(spark, dir, 2) > 0)
-      assert(cellFiles().forall(_._2.size <= 2),
-        "post-commit pass must leave no cell over the bound")
-      // writer exclusion: while a FRESH maintenance lock is held, BOTH
-      // append paths refuse (the race would merge not-yet-committed
-      // files); the lock also excludes a second concurrent compaction
-      val lockF = new java.io.File(s"$dir/_maintenance.lock")
-      assert(!lockF.exists(), "compaction must release its lock")
-      assert(lockF.createNewFile())
-      try {
-        intercept[GraftSimilarity.MaintenanceLockHeld] {
-          GraftSimilarity.appendIvfStore(spark, dir, slice)
-        }
-        intercept[GraftSimilarity.MaintenanceLockHeld] {
-          GraftSimilarity.appendIvfStore(spark, dir, slice,
-                                         batchTag = Some("locked"))
-        }
-        intercept[IllegalStateException] {
-          GraftSimilarity.compactIvfCells(spark, dir, 2)
-        }
-        // a STALE lock (crashed pass, past the TTL) is treated as absent
-        // by appends and broken by the next compaction — one crash bounds
-        // the outage instead of wedging every writer forever
-        assert(lockF.setLastModified(System.currentTimeMillis()
-          - GraftSimilarity.MaintenanceLockTtlMs - 60000))
-        GraftSimilarity.appendIvfStore(spark, dir,
-          slice.select((col("vec_id") + 20000000L).as("vec_id"), col("v")))
-        assert(GraftSimilarity.compactIvfCells(spark, dir, 1) > 0)
-        assert(!lockF.exists(), "pass must break the stale lock and release")
-      } finally lockF.delete()
-      // ---- crash recovery, keyed on the deterministic merged name ----
-      val assignedDir = new java.io.File(s"$dir/assigned")
-      def storeCount() = spark.read.parquet(s"$dir/assigned").count()
-      // (a) retire-only crash: the live dir sits hidden, no live sibling —
-      // the next pass rolls it back untouched
-      val preA = storeCount()
-      val cellA = assignedDir.listFiles().filter(_.getName.startsWith("c_id=")).head
-      assert(cellA.renameTo(
-        new java.io.File(assignedDir, s".compact-old-${cellA.getName}")))
-      assert(GraftSimilarity.compactIvfCells(spark, dir, 100) == 0)
-      assert(new java.io.File(assignedDir, cellA.getName).exists)
-      assert(storeCount() == preA, "roll-back must restore every row")
-      // (b) landed crash: live holds the merged file, the hidden dir holds
-      // the anonymous merge INPUTS (drop — their rows live in the merge)
-      // plus a late tagged ingest file (restore)
-      val cellB = assignedDir.listFiles()
-        .filter(d => d.getName.startsWith("c_id=") &&
-                     new java.io.File(d, "compacted-0.parquet").exists).head
-      val hiddenB = new java.io.File(assignedDir, s".compact-old-${cellB.getName}")
-      assert(hiddenB.mkdir())
-      org.apache.commons.io.FileUtils.copyFile(
-        new java.io.File(cellB, "compacted-0.parquet"),
-        new java.io.File(hiddenB, "part-merge-input.parquet"))
-      val donor = assignedDir.listFiles()
-        .filter(d => d.getName.startsWith("c_id=") && d != cellB).head
-        .listFiles().filter(_.getName.endsWith(".parquet")).head
-      val lateRows = spark.read.parquet(donor.toString).count()
-      org.apache.commons.io.FileUtils.copyFile(donor,
-        new java.io.File(hiddenB, "ingest-late-0.parquet"))
-      val preB = storeCount()
-      assert(GraftSimilarity.compactIvfCells(spark, dir, 100) == 0)
-      assert(!hiddenB.exists, "recovery must consume the hidden dir")
-      assert(storeCount() == preB + lateRows,
-        "merge inputs must drop (no duplicates), late tagged file restores")
-    } finally {
-      idx.unpersist(blocking = true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+      intercept[IllegalArgumentException] {
+        IvfObjectStore.create(spark,
+          GraftSimilarity.IvfIndex(
+            idx.centroids,
+            idx.assigned.withColumn("n_id", col("n_id").cast("double"))),
+          dir)
+      }
+      IvfObjectStore.create(spark, idx, dir)
+      // every mutation fails on the id check BEFORE touching the store
+      intercept[IllegalArgumentException] {
+        IvfObjectStore.append(spark, dir, strIds)
+      }
+      intercept[IllegalArgumentException] {
+        IvfObjectStore.append(spark, dir, dblIds)
+      }
+      intercept[IllegalArgumentException] {
+        IvfObjectStore.delete(spark, dir, dblIds)
+      }
+      assert(IvfObjectStore.versions(spark, dir) == Seq(1L),
+        "a refused mutation must publish nothing")
+      assert(IvfObjectStore.read(spark, dir).assigned.count() == 10)
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
   }
 
   test("IVF id widths normalize to long at every boundary: an int-id " +
@@ -1587,12 +1160,12 @@ class OperatorLibSpec extends GraftFunSuite {
       assert(idx.assigned.schema("n_id").dataType == LongType &&
              idx.assigned.schema("c_id").dataType == LongType,
         "build must pin the long contract in memory")
-      GraftSimilarity.writeIvfIndex(idx, dir)
-      GraftSimilarity.appendIvfStore(spark, dir, longs)
-      // mixed-width appends previously landed files with different n_id
-      // schemas in one directory — the read would bind one footer's
-      // schema; now every file is long and the whole store reads cleanly
-      val stored = GraftSimilarity.readIvfIndex(spark, dir)
+      graft.operators.IvfObjectStore.create(spark, idx, dir)
+      graft.operators.IvfObjectStore.append(spark, dir, longs)
+      // mixed-width appends would land files with different n_id schemas
+      // in one store — the read would bind one schema for all; every file
+      // is long and the whole store reads cleanly
+      val stored = graft.operators.IvfObjectStore.read(spark, dir)
       assert(stored.assigned.schema("n_id").dataType == LongType)
       assert(stored.assigned.count() == 600)
       // the in-memory append path agrees (no silent unionByName widening)

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{GraftPq, GraftSimilarity}
+import graft.operators.{GraftPq, GraftSimilarity, IvfObjectStore}
 
 class PqSpec extends GraftFunSuite {
   import spark.implicits._
@@ -217,6 +218,12 @@ class PqSpec extends GraftFunSuite {
       s"covering probe must equal flat serve:\n${ivf.mkString("\n")}\nvs\n${flat.mkString("\n")}")
   }
 
+  /** The PQ serve off the store at `dir` (k = 5, nprobe = 4, rf = 4). */
+  private def storedServe(dir: String, q: DataFrame): DataFrame =
+    GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, dir),
+                            GraftPq.readPqCodebook(spark, dir), q, k = 5,
+                            nprobe = 4, rerankFactor = 4)
+
   test("at-rest PQ store: cw in n_id-sorted cell files the ADC scan can " +
        "column-prune to, stored serve equals the in-memory IVF×PQ " +
        "composition, survivor fetch pushes the literal n_id set") {
@@ -228,10 +235,10 @@ class PqSpec extends GraftFunSuite {
     val index = GraftSimilarity.buildIvfIndex(e)
     val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2).persist()
     try {
-      GraftPq.writeIvfPqStore(index, cb, dir)
+      IvfObjectStore.create(spark, index, dir, pq = Some(cb))
       // layout: every cell file carries cw and stays n_id-sorted (the
       // rerank fetch's row-group pruning keys on the sort)
-      val cellFiles = new java.io.File(s"$dir/assigned").listFiles()
+      val cellFiles = new java.io.File(s"$dir/data").listFiles()
         .filter(_.getName.startsWith("c_id="))
         .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
       assert(cellFiles.nonEmpty)
@@ -243,13 +250,12 @@ class PqSpec extends GraftFunSuite {
       }
       // the stage-1 scan shape: selecting only the code bytes prunes the
       // doubles (and q8) out of the parquet read entirely
-      val rs = spark.read.parquet(s"$dir/assigned").select("n_id", "cw")
+      val rs = spark.read.parquet(s"$dir/data").select("n_id", "cw")
         .queryExecution.executedPlan.toString
       assert(rs.contains("cw:binary") && !rs.contains("v:array"),
         s"ADC scan must column-prune to the code bytes; ReadSchema:\n" +
         rs.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
-      val served = GraftPq.ivfPqTopKStored(spark, dir, q, k = 5,
-                                           nprobe = 4, rerankFactor = 4)
+      val served = storedServe(dir, q)
       val enc = GraftPq.pqEncode(
         index.assigned.select(col("n_id").as("vec_id"), col("v"),
                               col("c_id")),
@@ -266,7 +272,8 @@ class PqSpec extends GraftFunSuite {
     } finally { cb.unpersist(); () }
   }
 
-  test("appendIvfPqStore: batches encode inline against the stored " +
+  test("IvfObjectStore.append on a PQ store: batches encode inline " +
+       "against the stored " +
        "codebook (never retrain) and the appended store serves exactly " +
        "the in-memory append composition") {
     val e = planted
@@ -279,11 +286,9 @@ class PqSpec extends GraftFunSuite {
     val seedIdx = GraftSimilarity.buildIvfIndex(seed)
     val cb = GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 2).persist()
     try {
-      GraftPq.writeIvfPqStore(seedIdx, cb, dir)
-      GraftPq.appendIvfPqStore(spark, dir, rest)
-      val served = GraftPq.ivfPqTopKStored(spark, dir, q, k = 5,
-                                           nprobe = 4, rerankFactor = 4)
-        .collect().toSet
+      IvfObjectStore.create(spark, seedIdx, dir, pq = Some(cb))
+      IvfObjectStore.append(spark, dir, rest)
+      val served = storedServe(dir, q).collect().toSet
       val fullIdx = GraftSimilarity.ivfAppend(seedIdx, rest)
       val enc = GraftPq.pqEncode(
         fullIdx.assigned.select(col("n_id").as("vec_id"), col("v"),
@@ -314,29 +319,25 @@ class PqSpec extends GraftFunSuite {
       .toString
     val index = GraftSimilarity.buildIvfIndex(e)
     val evens = index.assigned.filter(col("n_id") % 2 === 0)
-    GraftSimilarity.writeIvfIndex(index.copy(assigned = evens), dir)
-    GraftSimilarity.appendIvfStore(spark, dir,
-      e.filter(col("vec_id") % 2 === 1))
+    IvfObjectStore.create(spark, index.copy(assigned = evens), dir)
+    IvfObjectStore.append(spark, dir, e.filter(col("vec_id") % 2 === 1))
     val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2).persist()
     try {
       // no codebook at all: refused as "not a PQ store"
       val ex0 = intercept[IllegalArgumentException] {
-        GraftPq.ivfPqTopKStored(spark, dir, q, k = 5)
+        storedServe(dir, q)
       }
       assert(ex0.getMessage.contains("no codebook"))
       GraftPq.writePqCodebook(cb, dir)
       // codebook present but cell files still pre-PQ: refused on the
       // missing cw column (the migration pointer)
       val ex = intercept[IllegalArgumentException] {
-        GraftPq.ivfPqTopKStored(spark, dir, q, k = 5)
+        storedServe(dir, q)
       }
       assert(ex.getMessage.contains("no cw column"))
-      val rewritten = GraftSimilarity.compactIvfCells(spark, dir,
-                                                      maxFilesPerCell = 1)
+      val rewritten = IvfObjectStore.compact(spark, dir, maxFilesPerCell = 1)
       assert(rewritten >= 1, "compaction must rewrite the two-file cells")
-      val served = GraftPq.ivfPqTopKStored(spark, dir, q, k = 5,
-                                           nprobe = 4, rerankFactor = 4)
-        .collect().toSet
+      val served = storedServe(dir, q).collect().toSet
       val enc = GraftPq.pqEncode(
         index.assigned.select(col("n_id").as("vec_id"), col("v"),
                               col("c_id")),

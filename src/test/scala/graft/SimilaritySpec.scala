@@ -538,7 +538,7 @@ class SimilaritySpec extends GraftFunSuite {
        "the brute hybrid tier bit-for-bit, served straight off the at-rest " +
        "PQ store; lexical candidates survive any semantic cut") {
     import graft.operators.{GraftPq, GraftSimilarity, GraftText,
-                            HybridRetrieval}
+                            HybridRetrieval, IvfObjectStore}
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
@@ -550,22 +550,24 @@ class SimilaritySpec extends GraftFunSuite {
     val idx = GraftSimilarity.buildIvfIndex(e)
     val dir = java.nio.file.Files.createTempDirectory("graft_hybrid_pq")
       .toString
-    GraftPq.writeIvfPqStore(idx, GraftPq.trainPq(e, m = 4, ksub = 8,
-                                                 iters = 2), dir)
+    IvfObjectStore.create(spark, idx, dir,
+      pq = Some(GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2)))
+    val stored = IvfObjectStore.read(spark, dir)
+    val cb = GraftPq.readPqCodebook(spark, dir)
     val cells = idx.centroids.count().toInt
     val coveringRf = (e.count().toInt / 30) + 1 // kCand·rf ≥ N
     val brute = HybridRetrieval
       .hybridTopK(docs, e, queries, k = 10, kCand = 30).collect().toSet
     val pqServed = HybridRetrieval
-      .hybridTopKPqStored(spark, dir, docs, queries, k = 10, kCand = 30,
-                          nprobe = cells, rerankFactor = coveringRf)
+      .hybridTopKWithPq(stored, cb, docs, queries, k = 10, kCand = 30,
+                        nprobe = cells, rerankFactor = coveringRf)
       .collect().toSet
     assert(pqServed == brute,
       "covering probe + covering budget must reproduce the brute fusion")
     // the q8 leg behind the same fusion (the store carries q8 beside cw):
     // covering probe + covering budget equals the brute fusion too
     val q8Served = HybridRetrieval
-      .hybridTopKWithQ8(GraftSimilarity.readIvfIndex(spark, dir), docs,
+      .hybridTopKWithQ8(stored, docs,
                         queries, k = 10, kCand = 30, nprobe = cells,
                         rerankFactor = coveringRf)
       .collect().toSet
@@ -596,8 +598,8 @@ class SimilaritySpec extends GraftFunSuite {
     // a REAL cut (default budget, nprobe 1): lexically-surfaced documents
     // can never be lost — the PQ trade is confined to the semantic leg
     val pruned = HybridRetrieval
-      .hybridTopKPqStored(spark, dir, docs, queries, k = 60, kCand = 30,
-                          nprobe = 1, rerankFactor = 4)
+      .hybridTopKWithPq(stored, cb, docs, queries, k = 60, kCand = 30,
+                        nprobe = 1, rerankFactor = 4)
       .collect()
     val lexDocs = brute.toSeq.filter(!_.isNullAt(4))
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -616,10 +618,11 @@ class SimilaritySpec extends GraftFunSuite {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_q8_store")
       .toString
-    GraftSimilarity.writeIvfIndex(GraftSimilarity.buildIvfIndex(e), dir)
+    graft.operators.IvfObjectStore.create(
+      spark, GraftSimilarity.buildIvfIndex(e), dir)
     // layout: every cell file carries the q8 column and is n_id-sorted
     // (the two facts the survivor fetch's row-group pruning keys on)
-    val cellFiles = new java.io.File(s"$dir/assigned").listFiles()
+    val cellFiles = new java.io.File(s"$dir/data").listFiles()
       .filter(_.getName.startsWith("c_id="))
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
     assert(cellFiles.nonEmpty)
@@ -633,7 +636,7 @@ class SimilaritySpec extends GraftFunSuite {
       val ids = part.select("n_id").collect().map(_.getLong(0)).toSeq
       assert(ids == ids.sorted, s"cell file ${f.getName} not n_id-sorted")
     }
-    val idx = GraftSimilarity.readIvfIndex(spark, dir)
+    val idx = graft.operators.IvfObjectStore.read(spark, dir)
     val exact = GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = 4)
       .collect().toSet
     // rerankFactor covering the whole collection → the quantized cut
@@ -723,9 +726,9 @@ class SimilaritySpec extends GraftFunSuite {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_q4_store")
       .toString
-    GraftSimilarity.writeIvfIndex(GraftSimilarity.buildIvfIndex(e), dir,
-                                  q4 = true)
-    val idx = GraftSimilarity.readIvfIndex(spark, dir)
+    graft.operators.IvfObjectStore.create(
+      spark, GraftSimilarity.buildIvfIndex(e), dir, q4 = true)
+    val idx = graft.operators.IvfObjectStore.read(spark, dir)
     val exact = GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = 4)
       .collect().toSet
     val covering = e.count().toInt
@@ -790,17 +793,18 @@ class SimilaritySpec extends GraftFunSuite {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val defDir = java.nio.file.Files.createTempDirectory("graft_b1_def")
       .toString
-    GraftSimilarity.writeIvfIndex(GraftSimilarity.buildIvfIndex(e), defDir)
+    graft.operators.IvfObjectStore.create(
+      spark, GraftSimilarity.buildIvfIndex(e), defDir)
     // the 1-bit tier is OPT-IN at write: a default store pays no
     // graft_b1b pass and carries no b1 column (the q4 contract)
-    assert(!GraftSimilarity.readIvfIndex(spark, defDir)
+    assert(!graft.operators.IvfObjectStore.read(spark, defDir)
              .assigned.columns.contains("b1"),
       "default write must not carry the b1 column")
     val dir = java.nio.file.Files.createTempDirectory("graft_b1_store")
       .toString
-    GraftSimilarity.writeIvfIndex(GraftSimilarity.buildIvfIndex(e), dir,
-                                  b1 = true)
-    val idx = GraftSimilarity.readIvfIndex(spark, dir)
+    graft.operators.IvfObjectStore.create(
+      spark, GraftSimilarity.buildIvfIndex(e), dir, b1 = true)
+    val idx = graft.operators.IvfObjectStore.read(spark, dir)
     assert(idx.assigned.columns.contains("b1"))
     val exact = GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = 4)
       .collect().toSet
@@ -827,41 +831,31 @@ class SimilaritySpec extends GraftFunSuite {
                               GraftSimilarity.buildIvfIndex(e)),
                             q, k = 5, nprobe = 4, rerankFactor = covering)
              .collect().toSet == exact)
-    // compaction migrates a b1-less store in place (addB1)
-    GraftSimilarity.compactIvfCells(spark, defDir, maxFilesPerCell = 1,
-                                    addB1 = true)
-    val migrated = GraftSimilarity.readIvfIndex(spark, defDir)
-    assert(migrated.assigned.columns.contains("b1"),
-      "compactIvfCells(addB1) must attach the b1 column in place")
-    assert(GraftSimilarity
-             .ivfTopKWithB1(migrated, q, k = 5, nprobe = 4,
-                            rerankFactor = covering).collect().toSet == exact,
-      "migrated store must serve the b1 tier exactly")
   }
 
   test("survivorRerank |Q| gate: past the literal gate the q8 and PQ " +
        "stored serves switch to the broadcast-join fetch — bit-identical " +
        "results, one REUSED broadcast exchange instead of a driver " +
        "collect and an In(n_id, ...) literal plan") {
-    import graft.operators.{GraftPq, GraftSimilarity}
+    import graft.operators.{GraftPq, GraftSimilarity, IvfObjectStore}
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_gate_store")
       .toString
-    GraftPq.writeIvfPqStore(GraftSimilarity.buildIvfIndex(e),
-                            GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2),
-                            dir)
-    val idx = GraftSimilarity.readIvfIndex(spark, dir)
+    IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(e), dir,
+      pq = Some(GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)))
+    val idx = IvfObjectStore.read(spark, dir)
+    def pqServe() = GraftPq.ivfPqTopKWithCw(
+      IvfObjectStore.read(spark, dir), GraftPq.readPqCodebook(spark, dir),
+      q, k = 5, nprobe = 4, rerankFactor = 4)
     def asSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
                      r.getDouble(3))).toSet
     val q8Lit = asSet(GraftSimilarity
       .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4).collect())
-    val pqLit = asSet(GraftPq
-      .ivfPqTopKStored(spark, dir, q, k = 5, nprobe = 4, rerankFactor = 4)
-      .collect())
+    val pqLit = asSet(pqServe().collect())
     spark.conf.set("spark.graft.survivorFetchMaxLiterals", "1")
     try {
       val q8Bc = GraftSimilarity
@@ -874,8 +868,7 @@ class SimilaritySpec extends GraftFunSuite {
         s"reused exchange; plan:\n$q8Plan")
       assert(!q8Plan.contains("PushedFilters: [In(n_id"),
         "past the gate no literal n_id set may reach the scan")
-      val pqBc = GraftPq
-        .ivfPqTopKStored(spark, dir, q, k = 5, nprobe = 4, rerankFactor = 4)
+      val pqBc = pqServe()
       assert(asSet(pqBc.collect()) == pqLit,
         "PQ serve must be bit-identical on both sides of the gate")
       assert(pqBc.queryExecution.executedPlan.toString
@@ -1209,18 +1202,18 @@ class SimilaritySpec extends GraftFunSuite {
       .toString
     // q4 = true: this test serves every quantized rung off the store,
     // and the int4 tier is opt-in at write
-    GraftSimilarity.writeIvfIndex(
+    graft.operators.IvfObjectStore.create(spark,
       GraftSimilarity.buildIvfIndex(e, metaCols = Seq("label")), dir,
       q4 = true)
     // the metadata column lands in every cell file, beside the layout set
-    val cellFiles = new java.io.File(s"$dir/assigned").listFiles()
+    val cellFiles = new java.io.File(s"$dir/data").listFiles()
       .filter(_.getName.startsWith("c_id="))
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
     assert(cellFiles.nonEmpty)
     for (f <- cellFiles.take(3))
       assert(spark.read.parquet(f.getPath).columns.contains("label"),
         s"no label column in ${f.getName}")
-    val idx = GraftSimilarity.readIvfIndex(spark, dir)
+    val idx = graft.operators.IvfObjectStore.read(spark, dir)
     val pred = col("label") === 3
     val nCells = idx.centroids.count().toInt
     val cov = GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = nCells,
@@ -1266,9 +1259,8 @@ class SimilaritySpec extends GraftFunSuite {
       e.select(col("vec_id"), col("v")), m = 8, ksub = 16, iters = 1)
     val pqDir = java.nio.file.Files.createTempDirectory("graft_meta_pq")
       .toString
-    graft.operators.GraftPq.writeIvfPqStore(
-      GraftSimilarity.readIvfIndex(spark, dir), cb, pqDir)
-    val pqIdx = GraftSimilarity.readIvfIndex(spark, pqDir)
+    graft.operators.IvfObjectStore.create(spark, idx, pqDir, pq = Some(cb))
+    val pqIdx = graft.operators.IvfObjectStore.read(spark, pqDir)
     assert(pqIdx.assigned.columns.contains("label"),
       "metadata must ride through the PQ store write")
     val pqServed = graft.operators.GraftPq.ivfPqTopKWithCw(
@@ -1298,16 +1290,16 @@ class SimilaritySpec extends GraftFunSuite {
       GraftSimilarity.ivfAppend(base, batch.drop("label"))
     }
     assert(err.getMessage.contains("label"), err.getMessage)
-    // at-rest: appendIvfStore enforces the same contract
+    // at-rest: IvfObjectStore.append enforces the same contract
     val dir = java.nio.file.Files.createTempDirectory("graft_meta_append")
       .toString
-    GraftSimilarity.writeIvfIndex(base, dir)
+    graft.operators.IvfObjectStore.create(spark, base, dir)
     val err2 = intercept[IllegalArgumentException] {
-      GraftSimilarity.appendIvfStore(spark, dir, batch.drop("label"))
+      graft.operators.IvfObjectStore.append(spark, dir, batch.drop("label"))
     }
     assert(err2.getMessage.contains("label"), err2.getMessage)
-    GraftSimilarity.appendIvfStore(spark, dir, batch)
-    val rt = GraftSimilarity.readIvfIndex(spark, dir)
+    graft.operators.IvfObjectStore.append(spark, dir, batch)
+    val rt = graft.operators.IvfObjectStore.read(spark, dir)
     assert(rt.assigned.filter(col("label").isNull).count() == 0)
     // a filtered serve over the appended store sees appended rows
     val q = e.filter(col("vec_id") < 10)

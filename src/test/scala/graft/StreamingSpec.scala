@@ -1301,7 +1301,8 @@ class StreamingSpec extends GraftFunSuite {
     } finally q3.stop()
   }
 
-  test("keepSetIncrementStream: micro-batched pair mining folds into the " +
+  test("KeepSetStore.incrementStream: micro-batched pair mining folds " +
+       "into the " +
        "versioned at-rest keep-set — store ≡ from-scratch keepSet over " +
        "everything seen, checkpoint replays no-op on tags, and the " +
        "stored table warm-starts componentStream") {
@@ -1318,7 +1319,7 @@ class StreamingSpec extends GraftFunSuite {
     // the miners' output arrives in two micro-batches: 0 bridges the
     // stored clusters; 30-31 is brand new; (20, 2) is a late old-old link
     val in = MemoryStream[(Long, Long)]
-    val q = CorpusStreams.keepSetIncrementStream(
+    val q = KeepSetStore.incrementStream(
         dir, in.toDF().toDF("a_id", "b_id"), streamId = "miner")
       .start()
     try {
@@ -1636,13 +1637,13 @@ class StreamingSpec extends GraftFunSuite {
           s"batch-only=${batchServe.diff(streamed).take(5)}")
       } finally q.stop()
       // STORED-impact serve (VERDICT r13 #1c): the same stream off an
-      // at-rest ImpactIndex — addends at rest are the shared kernel's,
+      // at-rest impact store — addends at rest are the shared kernel's,
       // so stored-serve ≡ in-memory-serve ≡ batch, bit-for-bit; and the
       // batch hybridTopKWithImpacts off the same store matches too
       val storeDir = java.nio.file.Files
         .createTempDirectory("graft_impact_store").toString
-      graft.operators.ImpactIndex.write(docs, storeDir, buckets = 16)
-      val stored = graft.operators.ImpactIndex.read(spark, storeDir)
+      graft.operators.ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
+      val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
       val batchStored = HybridRetrieval.hybridTopKWithImpacts(
           idx, stored, qBatch, k = 10, kCand = 30, rrfK = 60, nprobe = 4)
         .collect().map(key).toSet
@@ -1708,7 +1709,7 @@ class StreamingSpec extends GraftFunSuite {
        "batch unpruned serve (pruning is exact by refusal), and an " +
        "uncovered query REFUSES in-stream instead of silently degrading") {
     import graft.streaming.CorpusStreams
-    import graft.operators.{GraftSimilarity, HybridRetrieval, ImpactIndex}
+    import graft.operators.{GraftSimilarity, HybridRetrieval, ImpactObjectStore}
     implicit val sqlCtx = spark.sqlContext
     GraftSession.ensureExtensions(spark)
     // Zipf-head corpus (the text_bm25_pruned_skew convention): ' the' in
@@ -1726,8 +1727,8 @@ class StreamingSpec extends GraftFunSuite {
     val idx = GraftSimilarity.buildIvfIndex(e).persist()
     val storeDir = java.nio.file.Files
       .createTempDirectory("graft_impact_pruned_stream").toString
-    ImpactIndex.write(docs, storeDir, buckets = 16)
-    val stored = ImpactIndex.read(spark, storeDir)
+    ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
+    val stored = ImpactObjectStore.read(spark, storeDir)
     try {
       val qBatch = docs.filter(col("doc_id") % 25 === 3)
         .join(e, col("doc_id") === col("vec_id"))
@@ -1891,13 +1892,13 @@ class StreamingSpec extends GraftFunSuite {
           s"stream-only=${streamed.diff(batchServe)} " +
           s"batch-only=${batchServe.diff(streamed)}")
       } finally q.stop()
-      // the same stream served against the AT-REST store (readIvfIndex
-      // frames re-scanned per micro-batch) answers identically
+      // the same stream served against the AT-REST store (store frames
+      // re-scanned per micro-batch) answers identically
       val dir = java.nio.file.Files.createTempDirectory("ivf_serve_store")
         .toString
       try {
-        GraftSimilarity.writeIvfIndex(idx, dir)
-        val stored = GraftSimilarity.readIvfIndex(spark, dir)
+        graft.operators.IvfObjectStore.create(spark, idx, dir)
+        val stored = graft.operators.IvfObjectStore.read(spark, dir)
         val input2 = MemoryStream[(Long, Timestamp, List[Double])]
         val q2 = CorpusStreams
           .ivfServeStream(stored, input2.toDF().toDF("q_id", "ts", "qv"),

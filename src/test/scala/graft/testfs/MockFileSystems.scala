@@ -6,13 +6,10 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Test-only Hadoop filesystems for the store specs: each is the LOCAL
-  * filesystem wearing a different scheme, so the at-rest store's
-  * filesystem-contract gate can be exercised against object-store /
-  * eventually-consistent / unknown schemes without any real remote
+  * filesystem wearing an object-store scheme, so the manifest stores run
+  * their full lifecycle through a foreign scheme without any real remote
   * storage. Registered per-test via `fs.<scheme>.impl` in the Hadoop
-  * conf. Because the bytes land on local disk, the FORCED (degraded)
-  * mode can run the full store lifecycle end-to-end through the foreign
-  * scheme.
+  * conf.
   *
   * File statuses are rebuilt with explicit permissions:
   * RawLocalFileSystem's deprecated lazy permission loader does
@@ -31,22 +28,8 @@ abstract class SchemedLocalFs(scheme: String) extends RawLocalFileSystem {
     super.listStatus(f).map(solid)
 }
 
-/** Local FS masquerading as an object store — must be refused by the
-  * store's mutation gate as non-atomic-rename. */
+/** Local FS masquerading as an object store. */
 class MockObjectStoreFs extends SchemedLocalFs("s3a")
-
-/** An otherwise-unknown scheme that self-reports eventual listing via
-  * Hadoop's `fs.capability.directory.listing.inconsistent` path
-  * capability — must be refused regardless of scheme lists. */
-class MockInconsistentListingFs extends SchemedLocalFs("mockeventual") {
-  override def hasPathCapability(p: Path, capability: String): Boolean =
-    capability == "fs.capability.directory.listing.inconsistent" ||
-    super.hasPathCapability(p, capability)
-}
-
-/** An unknown scheme with default capabilities — neither allowlisted nor
-  * a known object store; the gate must refuse it conservatively. */
-class MockUnknownFs extends SchemedLocalFs("mockdfs")
 
 /** The mock object store with an eventually-consistent listing:
   * `listStatus` keeps returning every file it has listed before, also
