@@ -50,16 +50,15 @@ object ProbePhases {
                   col("embedding").cast("array<double>").as("v"))
         val qb = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        val cb = phase("trainPq (lazy)") {
+        val cb = phase("trainPq") {
           GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
         }
-        val cbM = phase("codebook materialize") { GraftPq.materialize(cb) }
         val idx = phase("buildIvfIndex (lazy)") {
           graft.operators.GraftSimilarity.buildIvfIndex(e)
         }
         val out = freshStore(spark, sfDir, "probe_pq_store") { o =>
           phase("IvfObjectStore.create(pq)") {
-            IvfObjectStore.create(spark, idx, o, pq = Some(cbM))
+            IvfObjectStore.create(spark, idx, o, pq = Some(cb))
           }
         }
         val served = phase("serve construction") {
@@ -170,7 +169,7 @@ object ProbePhases {
           val idx = phase("buildIvfIndex (lazy)") {
             GraftSimilarity.buildIvfIndex(e)
           }
-          val cb = phase("trainPq (lazy)") {
+          val cb = phase("trainPq") {
             GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
           }
           val out = freshStore(spark, sfDir, s"probe_$mode") { o =>

@@ -94,9 +94,9 @@ case class GraftPqPack(child: Expression) extends UnaryExpression {
   * squared L2 with ties to the smaller code. On the integer grid every
   * distance is an exact integer-valued double, so the argmin is
   * bit-replayable as SQL's `ORDER BY dist, code LIMIT 1`. This is the
-  * train/encode hot loop — one tight codegen scan per (vector,
-  * subspace) row instead of a nested HOF fold allocating a struct per
-  * candidate code.
+  * encode hot loop — one tight codegen scan per (vector, subspace) row
+  * instead of a nested HOF fold allocating a struct per candidate code;
+  * the train runs the same scan on the driver ([[GraftPqNearest.scan]]).
   */
 case class GraftPqNearest(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -111,31 +111,8 @@ case class GraftPqNearest(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_pq_nearest"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val sv = a.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
-    val d = sv.numElements()
-    if (d == 0 || cb.numElements() % d != 0 || cb.numElements() == 0)
-      throw new IllegalArgumentException(
-        s"graft_pq_nearest: codebook length ${cb.numElements()} is not a " +
-        s"positive multiple of subvector length $d")
-    val ksub = cb.numElements() / d
-    var best = -1
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < ksub) {
-      var dist = 0.0
-      var i = 0
-      while (i < d) {
-        val diff = sv.getDouble(i) - cb.getDouble(c * d + i)
-        dist += diff * diff
-        i += 1
-      }
-      if (dist < bestD) { bestD = dist; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GraftPqNearest.scan(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -172,6 +149,36 @@ case class GraftPqNearest(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GraftPqNearest =
     copy(left = newLeft, right = newRight)
+}
+
+object GraftPqNearest {
+  /** The interpreted argmin scan: the centroid of the flat codebook `cb`
+    * nearest to `sv`, ties to the smaller code. The driver-side Lloyd
+    * rounds of [[graft.operators.GraftPq.trainPq]] assign through this
+    * same scan, so train and encode cannot disagree on a tie. */
+  def scan(sv: ArrayData, cb: ArrayData): Int = {
+    val d = sv.numElements()
+    if (d == 0 || cb.numElements() % d != 0 || cb.numElements() == 0)
+      throw new IllegalArgumentException(
+        s"graft_pq_nearest: codebook length ${cb.numElements()} is not a " +
+        s"positive multiple of subvector length $d")
+    val ksub = cb.numElements() / d
+    var best = -1
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < ksub) {
+      var dist = 0.0
+      var i = 0
+      while (i < d) {
+        val diff = sv.getDouble(i) - cb.getDouble(c * d + i)
+        dist += diff * diff
+        i += 1
+      }
+      if (dist < bestD) { bestD = dist; best = c }
+      c += 1
+    }
+    best
+  }
 }
 
 /** `graft_pq_adc(codes, lut)` → `double`: Σ_s lut[s·ksub + codes[s]],

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   StructField, StructType}
@@ -28,154 +27,126 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   * fixed-point grid, per-(subspace, code) accumulation is the exact
   * integer component sum, and the centroid is `round(sum / count)` —
   * one correctly-rounded IEEE division and one half-away-from-zero
-  * round per component, identical in any engine. Assignment distances,
-  * LUT entries and ADC sums are then all integer-valued doubles, so
+  * round per component (Spark's HALF_UP `round`), identical in any
+  * engine. The nearest code is the `graft_pq_nearest` scan (ties to the
+  * smallest code) in train and encode alike. Assignment distances, LUT
+  * entries and ADC sums are then all integer-valued doubles, so
   * `ann_pq_adc` is a DuckDB hash-checked row end to end (seed pick,
   * both Lloyd rounds, encode, ADC, rerank).
   *
-  * Scale shape of the train: the corpus never shuffles — subspace rows
-  * fold their code argmin in ONE projection against the broadcast
-  * codebook (the [[GraftSimilarity.assignTo]] pattern, per subspace),
-  * and the only exchange per Lloyd round is the `m·ksub·dsub`
-  * accumulator grid. Seeds are the `ksub` smallest (md5(id), id) rows —
-  * a TakeOrdered, not a global sort. Encode shuffles only skinny
-  * (n_id, sub_id, code) rows once to assemble code words.
+  * Scale shape of the train: ONE Spark job. A TakeOrdered collects the
+  * training sample — the `TrainRowsPerCode·ksub` smallest (md5(id), id)
+  * rows, grid-quantized in-plan with the dimension checked on every row
+  * — and the Lloyd rounds run on the driver over it; the first `ksub`
+  * sample rows are the seeds. Up to the cap the sample is the whole
+  * collection and the codebook is the full-corpus Lloyd result; past it
+  * the train sees the cap's hash-ordered rows, FAISS's training-sample
+  * rule. The driver holds at most `TrainRowsPerCode·ksub·d` doubles
+  * (2 MB at ksub = 16, d = 64), and the codebook comes back as a LOCAL
+  * relation, so every consumer (encode, both LUTs, the at-rest write)
+  * reads it without a job. Encode is one stateless projection against
+  * the collected codebook ([[encodeFolded]]) — the corpus never
+  * shuffles.
   */
 object GraftPq {
 
   private val Grid = GraftSimilarity.KmeansGrid // 2^20 fixed-point grid
 
+  /** Training-sample rows per code: the train sees at most
+    * `TrainRowsPerCode·ksub` vectors (FAISS's k-means sample bound). */
+  private[graft] val TrainRowsPerCode = 256
+
   /** A trained codebook: `codebook` is (sub_id, code, cv) with cv on the
-    * integer grid — `m·ksub` rows, broadcastable at any corpus size.
+    * integer grid — `m·ksub` rows in a local relation (as [[trainPq]] and
+    * [[readPqCodebook]] build it), so reading it launches no job.
     */
-  final case class PqCodebook(codebook: DataFrame, m: Int, ksub: Int) {
-    def persist(): PqCodebook = { codebook.persist(); this }
-    def unpersist(blocking: Boolean = false): PqCodebook = {
-      codebook.unpersist(blocking); this
-    }
-  }
+  final case class PqCodebook(codebook: DataFrame, m: Int, ksub: Int)
 
-  /** Driver-materialize a (typically lazy train-chain) codebook into a
-    * LOCAL relation: the m·ksub rows — bounded by construction, a few
-    * hundred KB at production sizes — collect once and every downstream
-    * consumer (encode assignment, dot LUT, norm LUT, at-rest write)
-    * reads the local rows. This replaces the persist-with-no-unpersist
-    * convention the one-shot serves used (ADVICE r11: cached codebooks
-    * accumulated across catalog invocations in a long-lived session):
-    * the train chain still runs exactly once, and there is nothing left
-    * behind to leak. */
-  def materialize(cb: PqCodebook): PqCodebook = {
-    val proj = cb.codebook.select(col("sub_id"), col("code"), col("cv"))
-    val rows = proj.collect()
-    require(rows.nonEmpty, "materialize: empty codebook")
-    PqCodebook(cb.codebook.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), proj.schema), cb.m, cb.ksub)
-  }
+  /** The [[PqCodebook]] row schema. */
+  private val CodebookRow = StructType(Seq(
+    StructField("sub_id", IntegerType), StructField("code", IntegerType),
+    StructField("cv", ArrayType(DoubleType))))
 
-  /** Grid-quantize and slice into `m` subspace rows (n_id, sub_id, sv,
-    * carry…). Dimension must divide evenly by `m` — enforced in-plan so
-    * a ragged collection fails loudly on first touch, not via silent
-    * truncation.
-    */
-  private def subRows(e: DataFrame, m: Int,
-                      carry: Seq[String] = Nil): DataFrame =
-    e.select(col("n_id") +: carry.map(col) :+ expr(
-        s"""CASE WHEN size(v) % $m = 0 THEN transform(v, x -> round(x * $Grid))
-           |ELSE cast(assert_true(false, concat('pq: vector dim ',
-           |       cast(size(v) AS string), ' not divisible by m=$m'))
-           |     AS array<double>) END""".stripMargin).as("__g"): _*)
-      .select(col("n_id") +: carry.map(col) :+ posexplode(expr(
-        s"""transform(sequence(0, ${m - 1}),
-           |          s -> slice(__g, s * (size(__g) div $m) + 1,
-           |                     size(__g) div $m))""".stripMargin)): _*)
-      .select(col("n_id") +: carry.map(col) :+
-              col("pos").as("sub_id") :+ col("col").as("sv"): _*)
-
-  /** Nearest code per (vector, subspace) — ties to the smallest code —
-    * folded EXCHANGE-FREE per row against the broadcast codebook
-    * grouped by sub_id; squared L2 on the integer grid, so comparisons
-    * are exact and replayable (`ORDER BY dist, code LIMIT 1` in SQL).
-    */
-  private def assignCodes(cb: DataFrame, subs: DataFrame): DataFrame = {
-    // flatten each subspace's surviving centroids in code order; the
-    // codegen kernel scans the flat array (first-wins tie = smallest
-    // code, SQL's ORDER BY dist, code), and the parallel id array maps
-    // the winning POSITION back to its code (Lloyd can drop codes, so
-    // position ≠ code in general)
-    val cbRow = broadcast(cb.groupBy("sub_id")
-      .agg(sort_array(collect_list(struct(col("code"), col("cv"))))
-        .as("__e"))
-      .select(col("sub_id"),
-              expr("transform(__e, s -> s.code)").as("__codes"),
-              expr("flatten(transform(__e, s -> s.cv))").as("__flat")))
-    subs.join(cbRow, "sub_id")
-      .select(subs.columns.toSeq.map(col) :+
-              expr("element_at(__codes, graft_pq_nearest(sv, __flat) + 1)")
-                .as("code"): _*)
-  }
+  /** Spark's `round(x)` on a double: HALF_UP over the shortest decimal
+    * form of `x`. */
+  private def roundHalfUp(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Train an (m, ksub) codebook with `iters` Lloyd rounds over the
-    * hash-picked seeds. Codes that lose all members drop out (standard
+    * hash-picked seeds: one bounded collect, then driver-side Lloyd (see
+    * the scaladoc above). Codes that lose all members drop out (standard
     * Lloyd); `ksub ≤ 256` keeps every code a single at-rest byte.
     */
   def trainPq(collection: DataFrame, m: Int, ksub: Int, iters: Int = 2,
               idCol: String = "vec_id", vecCol: String = "v"): PqCodebook = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
     require(m >= 1, s"trainPq: m must be >= 1, got $m")
     require(ksub >= 2 && ksub <= 256,
       s"trainPq: ksub must be in [2, 256] (one at-rest byte), got $ksub")
     require(iters >= 0, s"trainPq: iters must be >= 0, got $iters")
-    graft.GraftSession.ensureExtensions(collection.sparkSession)
-    val e = collection.select(col(idCol).cast("long").as("n_id"),
-                              col(vecCol).as("v"))
-    val subs = subRows(e, m)
-    // ksub smallest (md5(id), id) rows: a TakeOrdered cut, then codes
-    // 0..ksub-1 assigned by a window over just those ksub rows
-    val seedIds = e.select(col("n_id"),
-        md5(col("n_id").cast("string")).as("__h"))
-      .orderBy(col("__h"), col("n_id")).limit(ksub)
-    val sd = seedIds.withColumn("code",
-        (row_number().over(Window.orderBy(col("__h"), col("n_id"))) - 1)
-          .cast("int"))
-      .select(col("n_id"), col("code"))
-    val cb0 = subs.join(broadcast(sd), "n_id")
-      .select(col("sub_id"), col("code"), col("sv").as("cv"))
-    var cb = cb0
-    var i = 0
-    while (i < iters) {
-      // one skinny (m·ksub·dsub) accumulator exchange per round; the
-      // centroid is round(sum / count) — exact grid, see scaladoc
-      cb = assignCodes(cb, subs)
-        .groupBy("sub_id", "code")
-        .agg(expr("graft_vec_sum(sv)").as("__s"), count(lit(1)).as("__n"))
-        .select(col("sub_id"), col("code"),
-                expr("transform(__s, x -> round(x / __n))").as("cv"))
-      i += 1
+    val spark = collection.sparkSession
+    graft.GraftSession.ensureExtensions(spark)
+    // dimension ENFORCED in-plan on every row, so a ragged collection
+    // fails loudly, not via silent truncation
+    val sample = collection
+      .select(col(idCol).cast("long").as("n_id"), col(vecCol).as("v"))
+      .select(col("n_id"), expr(
+        s"""CASE WHEN size(v) % $m = 0 THEN transform(v, x -> round(x * $Grid))
+           |ELSE cast(assert_true(false, concat('pq: vector dim ',
+           |       cast(size(v) AS string), ' not divisible by m=$m'))
+           |     AS array<double>) END""".stripMargin).as("g"))
+      .orderBy(md5(col("n_id").cast("string")), col("n_id"))
+      .limit(TrainRowsPerCode * ksub)
+      .select(col("g")).collect().map(_.getSeq[Double](0).toArray)
+    require(sample.nonEmpty, "trainPq: empty collection")
+    val d = sample(0).length
+    require(sample.forall(_.length == d),
+      s"trainPq: ragged vector dims in the collection (first row has $d)")
+    val dsub = d / m
+    val rows = (0 until m).flatMap { s =>
+      val subs = sample.map(g =>
+        ArrayData.toArrayData(g.slice(s * dsub, (s + 1) * dsub)))
+      // surviving codes in code order, their centroids position-parallel
+      var codes: IndexedSeq[Int] = 0 until math.min(ksub, sample.length)
+      var cents: IndexedSeq[Array[Double]] = codes.map(sample(_)
+        .slice(s * dsub, (s + 1) * dsub))
+      for (_ <- 0 until iters) {
+        val flat = ArrayData.toArrayData(cents.flatten.toArray)
+        val sums = Array.ofDim[Double](codes.length, dsub)
+        val counts = new Array[Long](codes.length)
+        subs.foreach { sv =>
+          val p = graft.functions.GraftPqNearest.scan(sv, flat)
+          counts(p) += 1
+          var i = 0
+          while (i < dsub) { sums(p)(i) += sv.getDouble(i); i += 1 }
+        }
+        val kept = codes.indices.filter(counts(_) > 0)
+        codes = kept.map(codes)
+        cents = kept.map(p => sums(p).map(x => roundHalfUp(x / counts(p))))
+      }
+      codes.zip(cents).map { case (c, cv) =>
+        org.apache.spark.sql.Row(s, c, cv.toSeq) }
     }
-    PqCodebook(cb, m, ksub)
+    PqCodebook(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+                                     CodebookRow), m, ksub)
   }
 
   /** Encode the collection against a trained codebook: (n_id, codes
     * [, carryCols…]) with `codes` the m-element `array<int>` code word
-    * (pack with `graft_pq_pack` for the at-rest byte form). One skinny
-    * shuffle of (n_id, sub_id, code) rows assembles the words.
+    * (pack with `graft_pq_pack` for the at-rest byte form) — a
+    * projection over [[encodeFolded]], so no row moves to be encoded.
     * `carryCols` ride through unchanged (e.g. the IVF cell id, so a
     * store can hold (n_id, c_id, code word) in one table without a
     * second corpus join).
     */
   def pqEncode(collection: DataFrame, cb: PqCodebook,
                idCol: String = "vec_id", vecCol: String = "v",
-               carryCols: Seq[String] = Nil): DataFrame = {
-    graft.GraftSession.ensureExtensions(collection.sparkSession)
-    val e = collection.select(col(idCol).cast("long").as("n_id") +:
-                              col(vecCol).as("v") +:
-                              carryCols.map(col): _*)
-    assignCodes(cb.codebook, subRows(e, cb.m, carryCols))
-      .groupBy("n_id")
-      .agg(expr(
-        """transform(array_sort(collect_list(struct(sub_id, code))),
-          |          s -> s.code)""".stripMargin).as("codes"),
-        carryCols.map(c => first(col(c)).as(c)): _*)
-  }
+               carryCols: Seq[String] = Nil): DataFrame =
+    encodeFolded(collection.select(col(idCol).cast("long").as("n_id") +:
+                                   col(vecCol).as("v") +:
+                                   carryCols.map(col): _*), cb, "v")
+      .select(col("n_id") +: col("codes") +: carryCols.map(col): _*)
 
   /** ADC serve over an encoded collection: per-query LUT build (one
     * row-level fold against the broadcast codebook, bound ONCE via the
@@ -216,7 +187,7 @@ object GraftPq {
     val cbRow = broadcast(cb.codebook
       .agg(collect_list(struct(col("sub_id"), col("code"), col("cv")))
         .as("__cb")))
-    // dimension ENFORCED in-plan (the subRows/encodeFolded convention): a
+    // dimension ENFORCED in-plan (the trainPq/encodeFolded convention): a
     // query whose size(qv) ≠ m·dsub would otherwise null-pad through
     // zip_with, the null LUT slots would coalesce to 0, and the ADC cut
     // would silently rank with a partially zeroed table (ADVICE r11) —
@@ -346,9 +317,7 @@ object GraftPq {
                 qIdCol: String = "q_id", qVecCol: String = "qv")
       : DataFrame = {
     val index = GraftSimilarity.buildIvfIndex(collection, None, idCol, vecCol)
-    // materialize, not persist: the codebook feeds encode + both LUTs and
-    // a persisted frame would have no unpersist point (ADVICE r11)
-    val cb = materialize(trainPq(collection, m, ksub, iters, idCol, vecCol))
+    val cb = trainPq(collection, m, ksub, iters, idCol, vecCol)
     val enc = pqEncode(index.assigned.select(col("n_id").as("vec_id"),
                                              col("v"), col("c_id")),
                        cb, "vec_id", "v", carryCols = Seq("c_id"))
@@ -393,9 +362,9 @@ object GraftPq {
     * flat-centroid/code-id literals and each row runs m
     * `graft_pq_nearest` codegen argmin scans; no shuffle, no join, so
     * the corpus (or an arriving stream batch) never moves to be
-    * encoded. Grid quantization and argmin tie rule are [[pqEncode]]'s
-    * exactly — code words are bit-identical (PqSpec pins the parity).
-    * Appends `codes` (array<int>) and `cw` (the packed m-byte at-rest
+    * encoded. Grid quantization and argmin tie rule are [[trainPq]]'s
+    * exactly; [[pqEncode]] and the streaming encode are projections over
+    * it. Appends `codes` (array<int>) and `cw` (the packed m-byte at-rest
     * word). */
   private[graft] def encodeFolded(df: DataFrame, cb: PqCodebook,
                                   vecCol: String): DataFrame = {
@@ -449,16 +418,14 @@ object GraftPq {
 
   /** The [[writePqCodebook]] schema: the codebook rows plus the constant
     * (m, ksub) columns. */
-  private val StoredCodebook = StructType(Seq(
-    StructField("sub_id", IntegerType), StructField("code", IntegerType),
-    StructField("cv", ArrayType(DoubleType)), StructField("m", IntegerType),
-    StructField("ksub", IntegerType)))
+  private val StoredCodebook = StructType(CodebookRow ++ Seq(
+    StructField("m", IntegerType), StructField("ksub", IntegerType)))
 
   /** The codebook at `$dir/pq_codebook`, or None when there is none. One
     * directory listing (it is written by a plain `write`, outside any
     * manifest) and ONE bounded collect of its m·ksub rows under the fixed
-    * schema — no inference job — into a LOCAL relation, so [[materialize]]
-    * and [[collectCodebook]] over it launch no job either. */
+    * schema — no inference job — into a LOCAL relation, so
+    * [[collectCodebook]] over it launches no job either. */
   def readPqCodebookIfAny(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Option[PqCodebook] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/pq_codebook")
@@ -510,7 +477,7 @@ object GraftPq {
     * re-encodes it in every cell it rewrites. `rerankFactor` is the
     * recall knob — size it with [[pqAutoBudget]], not the default (see
     * [[pqTopK]]'s budget warning). */
-  def ivfPqTopKWithCw(index: GraftSimilarity.IvfIndex, cb0: PqCodebook,
+  def ivfPqTopKWithCw(index: GraftSimilarity.IvfIndex, cb: PqCodebook,
                       queries: DataFrame, k: Int,
                       nprobe: Int = 4, rerankFactor: Int = 4,
                       qIdCol: String = "q_id", qVecCol: String = "qv",
@@ -527,7 +494,6 @@ object GraftPq {
       "ivfPqTopKWithCw: index has no cw column — write the store with " +
       "IvfObjectStore.create(…, pq = Some(cb)), or compact a pre-PQ " +
       "store with its codebook present to migrate in place")
-    val cb = materialize(cb0)
     // persist the minibatch projection: the PQ serve evaluates it at
     // least four times — the qlutFrame join side, the survivor-fetch
     // collect, the |Q| count, and the final rerank broadcast — and the
@@ -608,7 +574,7 @@ object GraftPq {
     val e = collection.select(col(idCol).cast("long").as("n_id"),
                               col(vecCol).as("v"))
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    val cb = materialize(trainPq(collection, m, ksub, iters, idCol, vecCol))
+    val cb = trainPq(collection, m, ksub, iters, idCol, vecCol)
     val enc = pqEncode(collection, cb, idCol, vecCol)
     val kkMax = k * rerankFactors.max
     val rfArr = rerankFactors.sorted.mkString("array(", ", ", ")")
@@ -706,12 +672,7 @@ object GraftPq {
              rerankFactor: Int = 4,
              idCol: String = "vec_id", vecCol: String = "v",
              qIdCol: String = "q_id", qVecCol: String = "qv"): DataFrame = {
-    // materialize the m·ksub-row codebook: it feeds THREE consumers
-    // (encode assignment, dot LUT, norm LUT) and each would otherwise
-    // re-run the full iterated train chain; a local relation serves all
-    // three with nothing left behind to leak (ADVICE r11 — the previous
-    // persist had no unpersist point)
-    val cb = materialize(trainPq(collection, m, ksub, iters, idCol, vecCol))
+    val cb = trainPq(collection, m, ksub, iters, idCol, vecCol)
     pqTopKWith(cb, pqEncode(collection, cb, idCol, vecCol), collection,
                queries, k, rerankFactor, idCol, vecCol, qIdCol, qVecCol)
   }

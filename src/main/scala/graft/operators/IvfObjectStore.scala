@@ -92,7 +92,9 @@ object IvfObjectStore extends ManifestStore {
     * codebook persists at `$dir/pq_codebook` AFTER the v1 publish wins
     * (a lost create race must not leave a stray codebook that would
     * poison the winner's appends); every later append encodes against
-    * it inline — appends never retrain. */
+    * it inline — appends never retrain. The codebook is the local
+    * relation [[GraftPq.trainPq]] returns, so its two readers here (the
+    * folded encode and the codebook write) launch no train job. */
   def create(spark: SparkSession, index: IvfIndex, dir: String,
              pq: Option[GraftPq.PqCodebook] = None,
              q4: Boolean = false,
@@ -101,27 +103,21 @@ object IvfObjectStore extends ManifestStore {
     for (c <- Seq("c_id", "n_id"))
       GraftSimilarity.requireIntegralId(index.assigned, c,
                                         "IvfObjectStore.create")
-    // persist the codebook across its two consumers here (folded-encode
-    // collect + the at-rest write) — it is typically a LAZY train chain
-    // that would otherwise run Lloyd twice
-    val pqP = pq.map(_.persist())
-    try {
-      startChain(spark, dir) {
-        val cents = writeVia(index.centroids.select(
-            col("c_id").cast("long").as("c_id"), col("cv")),
-          s"$dir/centroids", Nil).under("centroids")
-        // metadata columns (anything beyond the layout set, incl. an
-        // already-attached q8/q4) ride into the staged cell objects — the
-        // filter columns of ivfTopKWith(where = ...) over this substrate
-        val meta = GraftSimilarity.metaColsOf(index.assigned.columns.toSeq)
-        val data = stageAssigned(dir, index.assigned.select(
-          col("n_id").cast("long").as("n_id") +: col("v") +:
-            col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pqP,
-          q4, b1)
-        Manifest(1, Set.empty, noFiles.add("centroid", cents).add("data", data))
-      }
-      pqP.foreach(GraftPq.writePqCodebook(_, dir))
-    } finally pqP.foreach(_.unpersist())
+    startChain(spark, dir) {
+      val cents = writeVia(index.centroids.select(
+          col("c_id").cast("long").as("c_id"), col("cv")),
+        s"$dir/centroids", Nil).under("centroids")
+      // metadata columns (anything beyond the layout set, incl. an
+      // already-attached q8/q4) ride into the staged cell objects — the
+      // filter columns of ivfTopKWith(where = ...) over this substrate
+      val meta = GraftSimilarity.metaColsOf(index.assigned.columns.toSeq)
+      val data = stageAssigned(dir, index.assigned.select(
+        col("n_id").cast("long").as("n_id") +: col("v") +:
+          col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pq,
+        q4, b1)
+      Manifest(1, Set.empty, noFiles.add("centroid", cents).add("data", data))
+    }
+    pq.foreach(GraftPq.writePqCodebook(_, dir))
   }
 
   /** Time-travel read: serve the snapshot as of manifest `version`.

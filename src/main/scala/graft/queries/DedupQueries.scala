@@ -340,19 +340,19 @@ object DedupQueries extends QueryModule {
         val pairs = minhashLshPairs(s, dir)
         def isOld(c: org.apache.spark.sql.Column) =
           substring(md5(c.cast("string")), 1, 1) < "8"
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_keepset_store").toString
-        graft.operators.KeepSetStore.create(
-          graft.operators.GraftDedup.keepSet(
-            docs.filter(isOld(col("doc_id"))),
-            pairs.filter(isOld(col("a_id")) && isOld(col("b_id")))),
-          out)
-        graft.operators.KeepSetStore.increment(
-          s, out,
-          newIds = docs.filter(!isOld(col("doc_id"))),
-          newPairs = pairs.filter(!(isOld(col("a_id")) &&
-                                    isOld(col("b_id")))),
-          batchTag = Some("increment1"))
+        val out = GraftQuery.freshStore(s, dir, "keepset_stored") { out =>
+          graft.operators.KeepSetStore.create(
+            graft.operators.GraftDedup.keepSet(
+              docs.filter(isOld(col("doc_id"))),
+              pairs.filter(isOld(col("a_id")) && isOld(col("b_id")))),
+            out)
+          graft.operators.KeepSetStore.increment(
+            s, out,
+            newIds = docs.filter(!isOld(col("doc_id"))),
+            newPairs = pairs.filter(!(isOld(col("a_id")) &&
+                                      isOld(col("b_id")))),
+            batchTag = Some("increment1"))
+        }
         graft.operators.KeepSetStore.read(s, out)
       },
       Some("""WITH RECURSIVE toks AS (
@@ -407,22 +407,22 @@ object DedupQueries extends QueryModule {
         val pairs = minhashLshPairs(s, dir)
         def isOld(c: org.apache.spark.sql.Column) =
           substring(md5(c.cast("string")), 1, 1) < "8"
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_keepset_delete").toString
-        graft.operators.KeepSetStore.create(
-          graft.operators.GraftDedup.keepSet(
-            docs.filter(isOld(col("doc_id"))),
-            pairs.filter(isOld(col("a_id")) && isOld(col("b_id")))),
-          out)
-        graft.operators.KeepSetStore.increment(
-          s, out,
-          newIds = docs.filter(!isOld(col("doc_id"))),
-          newPairs = pairs.filter(!(isOld(col("a_id")) &&
-                                    isOld(col("b_id")))),
-          batchTag = Some("increment1"))
-        graft.operators.KeepSetStore.delete(
-          s, out, docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
-          batchTag = Some("takedown1"))
+        val out = GraftQuery.freshStore(s, dir, "keepset_delete") { out =>
+          graft.operators.KeepSetStore.create(
+            graft.operators.GraftDedup.keepSet(
+              docs.filter(isOld(col("doc_id"))),
+              pairs.filter(isOld(col("a_id")) && isOld(col("b_id")))),
+            out)
+          graft.operators.KeepSetStore.increment(
+            s, out,
+            newIds = docs.filter(!isOld(col("doc_id"))),
+            newPairs = pairs.filter(!(isOld(col("a_id")) &&
+                                      isOld(col("b_id")))),
+            batchTag = Some("increment1"))
+          graft.operators.KeepSetStore.delete(
+            s, out, docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
+            batchTag = Some("takedown1"))
+        }
         graft.operators.KeepSetStore.read(s, out)
       },
       Some("""WITH RECURSIVE toks AS (

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * exactness, the de-broadcast plan shape (VERDICT r13 #1a), and the
   * MaxScore pruned serve's exact-by-refusal contract (r13 #2).
   */
-class ImpactIndexSpec extends GraftFunSuite {
+class ImpactIndexSpec extends GraftFunSuite with ManifestStoreFixture {
   import graft.operators.{ImpactIndex, ImpactObjectStore, TextRank}
 
   private def docs = spark.read.parquet(s"$sf0001/documents.parquet")
@@ -17,8 +17,7 @@ class ImpactIndexSpec extends GraftFunSuite {
   /** A fresh at-rest store over `corpus`, read back. */
   private def stored(corpus: org.apache.spark.sql.DataFrame, buckets: Int)
       : ImpactIndex.StoredImpacts = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_impact_spec").toString
+    val dir = tempStore("graft_impact_spec")
     ImpactObjectStore.rebuild(corpus, dir, buckets = buckets)
     ImpactObjectStore.read(spark, dir)
   }

@@ -5,7 +5,7 @@ import graft.operators.LateInteraction
 
 /** [[graft.operators.LateInteraction]] — ColBERT-style MaxSim over ±1
   * hash token embeddings, integer-exact end to end. */
-class LateInteractionSpec extends GraftFunSuite {
+class LateInteractionSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
 
   test("hashTokenVectors: deterministic ±1 vectors, identical tokens " +
@@ -217,8 +217,7 @@ class LateInteractionSpec extends GraftFunSuite {
         assert(inMem.nonEmpty)
         // ---- create → read on the manifest store: the serve the
         // oracled row certifies
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_tok_store").toString
+        val dir = tempStore("graft_tok_store")
         IvfObjectStore.create(spark, idx, dir)
         val rd = IvfObjectStore.read(spark, dir)
         assert(rd.assigned.schema("tv").dataType
@@ -238,8 +237,7 @@ class LateInteractionSpec extends GraftFunSuite {
         try {
           val batch = LateInteraction
             .tokenVectors(dt.filter(col("doc_id") % 3 === 2))
-          val dir2 = java.nio.file.Files
-            .createTempDirectory("graft_tok_append").toString
+          val dir2 = tempStore("graft_tok_append")
           IvfObjectStore.create(spark, baseIdx, dir2)
           IvfObjectStore.append(spark, dir2, batch,
                                 idCol = "tok_id", vecCol = "v")

@@ -43,7 +43,7 @@ class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
 
   test("building read / readAt frames of all three stores launches no " +
        "Spark job; the stored codebook costs one bounded collect and its " +
-       "materialize none") {
+       "reuse none") {
     withMockS3 { base =>
       val e = vectors().filter(col("vec_id") < 120)
       val seed = e.filter(col("vec_id") < 80)
@@ -80,10 +80,27 @@ class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
 
       val (cb, read) = jobs(GraftPq.readPqCodebook(spark, ivf))
       assert(read.size == 1, s"readPqCodebook: one collect, got $read")
-      val (_, local) = jobs(GraftPq.materialize(cb))
-      assert(local.isEmpty, s"materialize of a stored codebook: $local")
+      val (_, local) = jobs(GraftPq.collectCodebook(cb))
+      assert(local.isEmpty, s"collecting a stored codebook: $local")
       assert((cb.m, cb.ksub) == (4, 8))
       assert(GraftPq.readPqCodebookIfAny(spark, imp).isEmpty)
+    }
+  }
+
+  test("create with a freshly trained codebook launches at most 2 jobs " +
+       "more than create without one: the train and the codebook write") {
+    withMockS3 { base =>
+      val e = vectors().filter(col("vec_id") < 120)
+      val idx = GraftSimilarity.buildIvfIndex(e)
+      // a first create runs whatever the index frames cache, so the two
+      // measured creates below pay the same for the index
+      IvfObjectStore.create(spark, idx, s"s3a:$base/warm")
+      val (_, plain) = jobs(IvfObjectStore.create(spark, idx, s"s3a:$base/plain"))
+      val (_, withPq) = jobs(IvfObjectStore.create(spark, idx, s"s3a:$base/pq",
+        pq = Some(GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2))))
+      assert(withPq.size <= plain.size + 2,
+        s"create: ${plain.size} jobs plain, ${withPq.size} with pq:\n" +
+        withPq.mkString("\n"))
     }
   }
 
@@ -158,7 +175,7 @@ class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
       val seed = e.filter(col("vec_id") < 90)
       val batch = e.filter(col("vec_id") >= 90)
       val idx = GraftSimilarity.buildIvfIndex(seed).persist()
-      val cb = GraftPq.materialize(GraftPq.trainPq(seed, m = 4, ksub = 8))
+      val cb = GraftPq.trainPq(seed, m = 4, ksub = 8)
       try {
         // the mixed store: created without PQ, codebook attached later,
         // so only the appended files carry cw

@@ -1,12 +1,33 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.collection.mutable
 
-/** What the manifest-store specs share: a fresh base directory reached
-  * through a mock object-store scheme, and raw access to a store's
-  * manifest slots (planting foreign, torn or older-format manifests,
-  * ageing them). */
-trait ManifestStoreFixture { this: GraftFunSuite =>
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.scalatest.BeforeAndAfterAll
+
+/** What the store specs share: local store directories deleted when the
+  * suite ends, a fresh base directory reached through a mock object-store
+  * scheme, and raw access to a store's manifest slots (planting foreign,
+  * torn or older-format manifests, ageing them). */
+trait ManifestStoreFixture extends BeforeAndAfterAll { this: GraftFunSuite =>
+
+  private val tempStores = mutable.Buffer.empty[java.io.File]
+
+  /** A fresh local directory (named after `prefix`) for a store, deleted
+    * with everything in it when the suite ends, pass or fail (a suite may
+    * share one store across its tests). */
+  def tempStore(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempStores += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally {
+      tempStores.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      tempStores.clear()
+    }
 
   /** `body(base)` with `s3a:` served by the mock object store over a
     * fresh local directory `base`; store dirs are `s3a:$base/<name>`. */
@@ -17,12 +38,10 @@ trait ManifestStoreFixture { this: GraftFunSuite =>
   def withMockFs[T](fs: Class[_ <: FileSystem])(body: String => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.s3a.impl", fs.getName)
-    val base = java.nio.file.Files.createTempDirectory("manifest_store").toString
-    try body(base)
+    try body(tempStore("manifest_store"))
     finally {
       conf.unset("fs.s3a.impl")
       FileSystem.closeAll()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     }
   }
 

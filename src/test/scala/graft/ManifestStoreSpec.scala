@@ -38,43 +38,41 @@ class ManifestStoreSpec extends GraftFunSuite with ManifestStoreFixture {
       val seed = e.filter(col("vec_id") < 60)
       val rest = e.filter(col("vec_id") >= 60)
       val idx = GraftSimilarity.buildIvfIndex(seed)
-      val cb = GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 2).persist()
+      val cb = GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 2)
       val dir = s"s3a:$base/pq"
-      try {
-        IvfObjectStore.create(spark, idx, dir, pq = Some(cb))
-        // append WITHOUT mentioning PQ: the store auto-encodes against
-        // its persisted codebook
-        IvfObjectStore.append(spark, dir, rest, batchTag = Some("b1"))
-        val read = IvfObjectStore.read(spark, dir)
-        assert(read.assigned.columns.contains("cw"),
-          "manifest snapshot must surface the code-word column")
-        assert(read.assigned.filter(col("cw").isNull).count() == 0,
-          "every row (created + appended) must carry a code word")
-        val q = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        val cbStored = GraftPq.readPqCodebook(spark, dir)
-        val served = GraftPq.ivfPqTopKWithCw(read, cbStored, q, k = 5,
-                                             nprobe = 4, rerankFactor = 4)
-          .collect().toSet
-        val fullIdx = GraftSimilarity.ivfAppend(idx, rest)
-        val enc = GraftPq.pqEncode(
-          fullIdx.assigned.select(col("n_id").as("vec_id"), col("v"),
-                                  col("c_id")),
-          cb, "vec_id", "v", carryCols = Seq("c_id"))
-        val expected = GraftPq.ivfPqTopKWith(fullIdx, cb, enc, e, q, k = 5,
-                                             nprobe = 4, rerankFactor = 4)
-          .collect().toSet
-        assert(served == expected,
-          "manifest-served PQ tier must equal the in-memory composition")
-        // compaction keeps the tier servable (repairCw path is a no-op
-        // on an all-cw store but the rewrite must not lose the column)
-        IvfObjectStore.compact(spark, dir, maxFilesPerCell = 1)
-        val after = GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, dir),
-                                            cbStored, q, k = 5, nprobe = 4,
-                                            rerankFactor = 4)
-          .collect().toSet
-        assert(after == expected, "compaction must preserve the PQ tier")
-      } finally { cb.unpersist(); () }
+      IvfObjectStore.create(spark, idx, dir, pq = Some(cb))
+      // append WITHOUT mentioning PQ: the store auto-encodes against
+      // its persisted codebook
+      IvfObjectStore.append(spark, dir, rest, batchTag = Some("b1"))
+      val read = IvfObjectStore.read(spark, dir)
+      assert(read.assigned.columns.contains("cw"),
+        "manifest snapshot must surface the code-word column")
+      assert(read.assigned.filter(col("cw").isNull).count() == 0,
+        "every row (created + appended) must carry a code word")
+      val q = e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val cbStored = GraftPq.readPqCodebook(spark, dir)
+      val served = GraftPq.ivfPqTopKWithCw(read, cbStored, q, k = 5,
+                                           nprobe = 4, rerankFactor = 4)
+        .collect().toSet
+      val fullIdx = GraftSimilarity.ivfAppend(idx, rest)
+      val enc = GraftPq.pqEncode(
+        fullIdx.assigned.select(col("n_id").as("vec_id"), col("v"),
+                                col("c_id")),
+        cb, "vec_id", "v", carryCols = Seq("c_id"))
+      val expected = GraftPq.ivfPqTopKWith(fullIdx, cb, enc, e, q, k = 5,
+                                           nprobe = 4, rerankFactor = 4)
+        .collect().toSet
+      assert(served == expected,
+        "manifest-served PQ tier must equal the in-memory composition")
+      // compaction keeps the tier servable (repairCw path is a no-op
+      // on an all-cw store but the rewrite must not lose the column)
+      IvfObjectStore.compact(spark, dir, maxFilesPerCell = 1)
+      val after = GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, dir),
+                                          cbStored, q, k = 5, nprobe = 4,
+                                          rerankFactor = 4)
+        .collect().toSet
+      assert(after == expected, "compaction must preserve the PQ tier")
     }
   }
 

@@ -6,7 +6,7 @@ import graft.operators.{CorpusCuration, GraftDedup, GraftText}
 /** Unit coverage for the graft.operators library APIs beyond the single
   * configuration each catalog query exercises.
   */
-class OperatorLibSpec extends GraftFunSuite {
+class OperatorLibSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
 
   test("GraftText.wordNGrams matches manual n-grams for several n") {
@@ -856,7 +856,7 @@ class OperatorLibSpec extends GraftFunSuite {
       .select(col("vec_id"),
               expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val idx = GraftSimilarity.buildIvfIndex(e).persist()
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
+    val dir = tempStore("ivf_store")
     try {
       IvfObjectStore.create(spark, idx, dir)
       val stored = IvfObjectStore.read(spark, dir)
@@ -944,7 +944,7 @@ class OperatorLibSpec extends GraftFunSuite {
     val e = aug.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val idx = GraftSimilarity.buildIvfIndex(e)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_pairs").toString
+    val dir = tempStore("ivf_pairs")
     try {
       graft.operators.IvfObjectStore.create(spark, idx, dir)
       // the scaladoc's claim, executed: a store maintainer mines pairs
@@ -1108,7 +1108,7 @@ class OperatorLibSpec extends GraftFunSuite {
     intercept[IllegalArgumentException] {
       GraftSimilarity.ivfAppend(idx, strIds)
     }
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ids").toString
+    val dir = tempStore("ivf_ids")
     try {
       intercept[IllegalArgumentException] {
         IvfObjectStore.create(spark,
@@ -1154,7 +1154,7 @@ class OperatorLibSpec extends GraftFunSuite {
       .select(col("id").as("vec_id"),
               expr("array(cast(id % 13 AS double) + 0.5, " +
                    "cast(id % 7 AS double) + 1.0)").as("v"))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_widths").toString
+    val dir = tempStore("ivf_widths")
     try {
       val idx = GraftSimilarity.buildIvfIndex(ints)
       assert(idx.assigned.schema("n_id").dataType == LongType &&

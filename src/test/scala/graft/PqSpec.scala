@@ -1,11 +1,65 @@
 package graft
 
+import org.apache.spark.GraftJobProbe
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{GraftPq, GraftSimilarity, IvfObjectStore}
 
-class PqSpec extends GraftFunSuite {
+class PqSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
+
+  private def jobs[T](body: => T): (T, Seq[String]) =
+    GraftJobProbe.jobs(spark.sparkContext)(body)
+
+  private def vectors() = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    .select(col("vec_id"),
+            expr("transform(embedding, x -> cast(x AS double))").as("v"))
+
+  private def rows(cb: GraftPq.PqCodebook): Seq[(Int, Int, Seq[Double])] =
+    cb.codebook.as[(Int, Int, Seq[Double])].collect().toSeq
+      .sortBy(r => (r._1, r._2))
+
+  /** The distributed Lloyd recipe the driver-side train replaced, kept as
+    * the reference it must equal bit for bit: grid-quantized subspace
+    * rows, the `ksub` smallest (md5(id), id) rows as seeds, then per
+    * round a broadcast `graft_pq_nearest` argmin and an exact grid-sum
+    * accumulator exchange, centroid `round(sum / count)`. */
+  private def referenceTrain(collection: DataFrame, m: Int, ksub: Int,
+                             iters: Int): Seq[(Int, Int, Seq[Double])] = {
+    val grid = GraftSimilarity.KmeansGrid
+    val e = collection.select(col("vec_id").cast("long").as("n_id"), col("v"))
+    val subs = e
+      .select(col("n_id"), expr(s"transform(v, x -> round(x * $grid))").as("g"))
+      .select(col("n_id"), posexplode(expr(
+        s"""transform(sequence(0, ${m - 1}),
+           |          s -> slice(g, s * (size(g) div $m) + 1, size(g) div $m))"""
+          .stripMargin)))
+      .select(col("n_id"), col("pos").as("sub_id"), col("col").as("sv"))
+    val seeds = e.select(col("n_id"), md5(col("n_id").cast("string")).as("h"))
+      .orderBy(col("h"), col("n_id")).limit(ksub)
+      .withColumn("code",
+        (row_number().over(Window.orderBy(col("h"), col("n_id"))) - 1)
+          .cast("int"))
+      .select(col("n_id"), col("code"))
+    var cb = subs.join(broadcast(seeds), "n_id")
+      .select(col("sub_id"), col("code"), col("sv").as("cv"))
+    for (_ <- 0 until iters) {
+      val cbRow = broadcast(cb.groupBy("sub_id")
+        .agg(sort_array(collect_list(struct(col("code"), col("cv")))).as("e"))
+        .select(col("sub_id"), expr("transform(e, s -> s.code)").as("codes"),
+                expr("flatten(transform(e, s -> s.cv))").as("flat")))
+      cb = subs.join(cbRow, "sub_id")
+        .select(col("sub_id"), col("sv"),
+                expr("element_at(codes, graft_pq_nearest(sv, flat) + 1)")
+                  .as("code"))
+        .groupBy("sub_id", "code")
+        .agg(expr("graft_vec_sum(sv)").as("s"), count(lit(1)).as("n"))
+        .select(col("sub_id"), col("code"),
+                expr("transform(s, x -> round(x / n))").as("cv"))
+    }
+    cb.as[(Int, Int, Seq[Double])].collect().toSeq.sortBy(r => (r._1, r._2))
+  }
 
   // deterministic planted clusters: 5 tight clusters of 20 vectors in
   // 16 dims; within-cluster cosine ≈ 1, cross-cluster ≈ orthogonal
@@ -36,6 +90,51 @@ class PqSpec extends GraftFunSuite {
       s >= 0 && s < 4 && c >= 0 && c < 8 && cv.length == 4 &&
       cv.forall(x => x == math.rint(x))
     }, "codebook rows must be in-range with integer-grid centroids")
+  }
+
+  test("trainPq is one Spark job; collectCodebook, encodeFolded and a " +
+       "second use of the codebook launch none") {
+    val e = vectors()
+    val (cb, train) = jobs(GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2))
+    assert(train.size == 1, s"trainPq: one job, got $train")
+    val (_, reuse) = jobs {
+      GraftPq.collectCodebook(cb)
+      GraftPq.encodeFolded(e, cb, "v")
+      cb.codebook.collect()
+    }
+    assert(reuse.isEmpty, s"the trained codebook launched jobs: $reuse")
+  }
+
+  test("trainPq equals the distributed Lloyd recipe bit for bit: no " +
+       "rounds, one, two, the production shape, and rounds that drop codes") {
+    for (iters <- 0 to 2)
+      assert(rows(GraftPq.trainPq(planted, m = 4, ksub = 8, iters = iters)) ==
+               referenceTrain(planted, m = 4, ksub = 8, iters), s"iters $iters")
+    assert(rows(GraftPq.trainPq(vectors(), m = 8, ksub = 16)) ==
+             referenceTrain(vectors(), m = 8, ksub = 16, iters = 2))
+    // 40 vectors over 3 distinct values: of the 8 seeds at most 3 keep
+    // members (a tie goes to the smaller code), the rest drop out
+    val dup = (0 until 40).map { id =>
+      (id.toLong, Seq.tabulate(4)(i => ((id % 3) * 2 + i).toDouble))
+    }.toDF("vec_id", "v")
+    val ref = referenceTrain(dup, m = 2, ksub = 8, iters = 2)
+    assert(ref.size <= 2 * 3, s"no code dropped: $ref")
+    assert(rows(GraftPq.trainPq(dup, m = 2, ksub = 8, iters = 2)) == ref)
+  }
+
+  test("past TrainRowsPerCode·ksub vectors the train sees exactly the " +
+       "smallest-(md5(id), id) rows") {
+    val ksub = 2
+    val cap = GraftPq.TrainRowsPerCode * ksub
+    val big = (0 until cap + 288).map { id =>
+      (id.toLong, Seq.tabulate(8)(i => math.sin(id * 0.37 + i) * 2.0))
+    }.toDF("vec_id", "v")
+    val capped = big
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(cap)
+    val trained = rows(GraftPq.trainPq(big, m = 4, ksub = ksub, iters = 2))
+    assert(trained == rows(GraftPq.trainPq(capped, m = 4, ksub = ksub,
+                                           iters = 2)))
+    assert(trained == referenceTrain(capped, m = 4, ksub = ksub, iters = 2))
   }
 
   test("pqEncode: m codes per vector, every code exists in the codebook") {
@@ -115,7 +214,7 @@ class PqSpec extends GraftFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val batch = planted
     val cb = graft.operators.GraftPq.trainPq(batch, m = 4, ksub = 8,
-                                             iters = 2).persist()
+                                             iters = 2)
     val expected = graft.operators.GraftPq.pqEncode(batch, cb)
       .as[(Long, Seq[Int])].collect().toMap
     val data = (0 until 100).map { id =>
@@ -147,7 +246,7 @@ class PqSpec extends GraftFunSuite {
       val so = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
       assert(so.forall(_.numRowsTotal == 0),
         "pqEncodeStream must keep zero state")
-    } finally { q.stop(); cb.unpersist() }
+    } finally q.stop()
   }
 
   test("pqServeStream: watermark-closed queries answered identically to " +
@@ -158,7 +257,7 @@ class PqSpec extends GraftFunSuite {
     def tsAt(m: Int) = java.sql.Timestamp.valueOf(
       java.time.LocalDateTime.of(2026, 1, 1, 0, 0).plusMinutes(m.toLong))
     val e = planted
-    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2).persist()
+    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2)
     val enc = GraftPq.pqEncode(e, cb).persist()
     try {
       val qBatch = e.filter(col("vec_id") % 20 === 3)
@@ -201,7 +300,7 @@ class PqSpec extends GraftFunSuite {
           s"stream-only=${streamed.diff(batch)} " +
           s"batch-only=${batch.diff(streamed)}")
       } finally q.stop()
-    } finally { cb.unpersist(); enc.unpersist(); () }
+    } finally { enc.unpersist(); () }
   }
 
   test("ivfPqTopK at covering nprobe equals the flat pqTopK serve") {
@@ -230,46 +329,43 @@ class PqSpec extends GraftFunSuite {
     val e = planted
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_store")
-      .toString
     val index = GraftSimilarity.buildIvfIndex(e)
-    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2).persist()
-    try {
-      IvfObjectStore.create(spark, index, dir, pq = Some(cb))
-      // layout: every cell file carries cw and stays n_id-sorted (the
-      // rerank fetch's row-group pruning keys on the sort)
-      val cellFiles = new java.io.File(s"$dir/data").listFiles()
-        .filter(_.getName.startsWith("c_id="))
-        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-      assert(cellFiles.nonEmpty)
-      for (f <- cellFiles.take(3)) {
-        val part = spark.read.parquet(f.getPath)
-        assert(part.columns.contains("cw"), s"no cw column in ${f.getName}")
-        val ids = part.select("n_id").collect().map(_.getLong(0)).toSeq
-        assert(ids == ids.sorted, s"cell file ${f.getName} not n_id-sorted")
-      }
-      // the stage-1 scan shape: selecting only the code bytes prunes the
-      // doubles (and q8) out of the parquet read entirely
-      val rs = spark.read.parquet(s"$dir/data").select("n_id", "cw")
-        .queryExecution.executedPlan.toString
-      assert(rs.contains("cw:binary") && !rs.contains("v:array"),
-        s"ADC scan must column-prune to the code bytes; ReadSchema:\n" +
-        rs.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
-      val served = storedServe(dir, q)
-      val enc = GraftPq.pqEncode(
-        index.assigned.select(col("n_id").as("vec_id"), col("v"),
-                              col("c_id")),
-        cb, "vec_id", "v", carryCols = Seq("c_id"))
-      val inMem = GraftPq.ivfPqTopKWith(index, cb, enc, e, q, k = 5,
-                                        nprobe = 4, rerankFactor = 4)
-      assert(served.collect().toSet == inMem.collect().toSet,
-        "stored serve must equal the in-memory composition bit-for-bit")
-      val plan = served.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters: [In(n_id"),
-        "survivor fetch must push the literal n_id set to parquet; " +
-        plan.linesIterator.filter(_.contains("PushedFilters"))
-          .mkString("\n"))
-    } finally { cb.unpersist(); () }
+    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2)
+    val dir = tempStore("graft_pq_store")
+    IvfObjectStore.create(spark, index, dir, pq = Some(cb))
+    // layout: every cell file carries cw and stays n_id-sorted (the
+    // rerank fetch's row-group pruning keys on the sort)
+    val cellFiles = new java.io.File(s"$dir/data").listFiles()
+      .filter(_.getName.startsWith("c_id="))
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    assert(cellFiles.nonEmpty)
+    for (f <- cellFiles.take(3)) {
+      val part = spark.read.parquet(f.getPath)
+      assert(part.columns.contains("cw"), s"no cw column in ${f.getName}")
+      val ids = part.select("n_id").collect().map(_.getLong(0)).toSeq
+      assert(ids == ids.sorted, s"cell file ${f.getName} not n_id-sorted")
+    }
+    // the stage-1 scan shape: selecting only the code bytes prunes the
+    // doubles (and q8) out of the parquet read entirely
+    val rs = spark.read.parquet(s"$dir/data").select("n_id", "cw")
+      .queryExecution.executedPlan.toString
+    assert(rs.contains("cw:binary") && !rs.contains("v:array"),
+      s"ADC scan must column-prune to the code bytes; ReadSchema:\n" +
+      rs.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
+    val served = storedServe(dir, q)
+    val enc = GraftPq.pqEncode(
+      index.assigned.select(col("n_id").as("vec_id"), col("v"),
+                            col("c_id")),
+      cb, "vec_id", "v", carryCols = Seq("c_id"))
+    val inMem = GraftPq.ivfPqTopKWith(index, cb, enc, e, q, k = 5,
+                                      nprobe = 4, rerankFactor = 4)
+    assert(served.collect().toSet == inMem.collect().toSet,
+      "stored serve must equal the in-memory composition bit-for-bit")
+    val plan = served.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [In(n_id"),
+      "survivor fetch must push the literal n_id set to parquet; " +
+      plan.linesIterator.filter(_.contains("PushedFilters"))
+        .mkString("\n"))
   }
 
   test("IvfObjectStore.append on a PQ store: batches encode inline " +
@@ -281,25 +377,22 @@ class PqSpec extends GraftFunSuite {
     val rest = e.filter(col("vec_id") >= 60)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_append")
-      .toString
     val seedIdx = GraftSimilarity.buildIvfIndex(seed)
-    val cb = GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 2).persist()
-    try {
-      IvfObjectStore.create(spark, seedIdx, dir, pq = Some(cb))
-      IvfObjectStore.append(spark, dir, rest)
-      val served = storedServe(dir, q).collect().toSet
-      val fullIdx = GraftSimilarity.ivfAppend(seedIdx, rest)
-      val enc = GraftPq.pqEncode(
-        fullIdx.assigned.select(col("n_id").as("vec_id"), col("v"),
-                                col("c_id")),
-        cb, "vec_id", "v", carryCols = Seq("c_id"))
-      val expected = GraftPq.ivfPqTopKWith(fullIdx, cb, enc, e, q, k = 5,
-                                           nprobe = 4, rerankFactor = 4)
-        .collect().toSet
-      assert(served == expected,
-        "appended store must serve the in-memory append composition")
-    } finally { cb.unpersist(); () }
+    val cb = GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 2)
+    val dir = tempStore("graft_pq_append")
+    IvfObjectStore.create(spark, seedIdx, dir, pq = Some(cb))
+    IvfObjectStore.append(spark, dir, rest)
+    val served = storedServe(dir, q).collect().toSet
+    val fullIdx = GraftSimilarity.ivfAppend(seedIdx, rest)
+    val enc = GraftPq.pqEncode(
+      fullIdx.assigned.select(col("n_id").as("vec_id"), col("v"),
+                              col("c_id")),
+      cb, "vec_id", "v", carryCols = Seq("c_id"))
+    val expected = GraftPq.ivfPqTopKWith(fullIdx, cb, enc, e, q, k = 5,
+                                         nprobe = 4, rerankFactor = 4)
+      .collect().toSet
+    assert(served == expected,
+      "appended store must serve the in-memory append composition")
   }
 
   test("pre-PQ store: refused without cw; compaction with the codebook " +
@@ -315,39 +408,36 @@ class PqSpec extends GraftFunSuite {
       .toDF("vec_id", "v")
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_migrate")
-      .toString
     val index = GraftSimilarity.buildIvfIndex(e)
     val evens = index.assigned.filter(col("n_id") % 2 === 0)
+    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2)
+    val dir = tempStore("graft_pq_migrate")
     IvfObjectStore.create(spark, index.copy(assigned = evens), dir)
     IvfObjectStore.append(spark, dir, e.filter(col("vec_id") % 2 === 1))
-    val cb = GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2).persist()
-    try {
-      // no codebook at all: refused as "not a PQ store"
-      val ex0 = intercept[IllegalArgumentException] {
-        storedServe(dir, q)
-      }
-      assert(ex0.getMessage.contains("no codebook"))
-      GraftPq.writePqCodebook(cb, dir)
-      // codebook present but cell files still pre-PQ: refused on the
-      // missing cw column (the migration pointer)
-      val ex = intercept[IllegalArgumentException] {
-        storedServe(dir, q)
-      }
-      assert(ex.getMessage.contains("no cw column"))
-      val rewritten = IvfObjectStore.compact(spark, dir, maxFilesPerCell = 1)
-      assert(rewritten >= 1, "compaction must rewrite the two-file cells")
-      val served = storedServe(dir, q).collect().toSet
-      val enc = GraftPq.pqEncode(
-        index.assigned.select(col("n_id").as("vec_id"), col("v"),
-                              col("c_id")),
-        cb, "vec_id", "v", carryCols = Seq("c_id"))
-      val expected = GraftPq.ivfPqTopKWith(index, cb, enc, e, q, k = 5,
-                                           nprobe = 4, rerankFactor = 4)
-        .collect().toSet
-      assert(served == expected,
-        "migrated store must serve the in-memory composition")
-    } finally { cb.unpersist(); () }
+    // no codebook at all: refused as "not a PQ store"
+    val ex0 = intercept[IllegalArgumentException] {
+      storedServe(dir, q)
+    }
+    assert(ex0.getMessage.contains("no codebook"))
+    GraftPq.writePqCodebook(cb, dir)
+    // codebook present but cell files still pre-PQ: refused on the
+    // missing cw column (the migration pointer)
+    val ex = intercept[IllegalArgumentException] {
+      storedServe(dir, q)
+    }
+    assert(ex.getMessage.contains("no cw column"))
+    val rewritten = IvfObjectStore.compact(spark, dir, maxFilesPerCell = 1)
+    assert(rewritten >= 1, "compaction must rewrite the two-file cells")
+    val served = storedServe(dir, q).collect().toSet
+    val enc = GraftPq.pqEncode(
+      index.assigned.select(col("n_id").as("vec_id"), col("v"),
+                            col("c_id")),
+      cb, "vec_id", "v", carryCols = Seq("c_id"))
+    val expected = GraftPq.ivfPqTopKWith(index, cb, enc, e, q, k = 5,
+                                         nprobe = 4, rerankFactor = 4)
+      .collect().toSet
+    assert(served == expected,
+      "migrated store must serve the in-memory composition")
   }
 
   test("pqBudgetSweep: recall non-decreasing in budget, each swept row " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** ANN tier checks: exact tier is internally consistent; approximate tiers
   * (IVF, LSH) are measured for recall against the exact tier.
   */
-class SimilaritySpec extends GraftFunSuite {
+class SimilaritySpec extends GraftFunSuite with ManifestStoreFixture {
 
   private def topk(name: String): Map[Long, Seq[Long]] =
     SparkEntry.queries(name)(spark, sf0001)
@@ -548,8 +548,7 @@ class SimilaritySpec extends GraftFunSuite {
               GraftText.whitespaceTokens(col("text")).as("q_terms"),
               col("v").as("qv"))
     val idx = GraftSimilarity.buildIvfIndex(e)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hybrid_pq")
-      .toString
+    val dir = tempStore("graft_hybrid_pq")
     IvfObjectStore.create(spark, idx, dir,
       pq = Some(GraftPq.trainPq(e, m = 4, ksub = 8, iters = 2)))
     val stored = IvfObjectStore.read(spark, dir)
@@ -616,8 +615,7 @@ class SimilaritySpec extends GraftFunSuite {
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q8_store")
-      .toString
+    val dir = tempStore("graft_q8_store")
     graft.operators.IvfObjectStore.create(
       spark, GraftSimilarity.buildIvfIndex(e), dir)
     // layout: every cell file carries the q8 column and is n_id-sorted
@@ -724,8 +722,7 @@ class SimilaritySpec extends GraftFunSuite {
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q4_store")
-      .toString
+    val dir = tempStore("graft_q4_store")
     graft.operators.IvfObjectStore.create(
       spark, GraftSimilarity.buildIvfIndex(e), dir, q4 = true)
     val idx = graft.operators.IvfObjectStore.read(spark, dir)
@@ -791,8 +788,7 @@ class SimilaritySpec extends GraftFunSuite {
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val defDir = java.nio.file.Files.createTempDirectory("graft_b1_def")
-      .toString
+    val defDir = tempStore("graft_b1_def")
     graft.operators.IvfObjectStore.create(
       spark, GraftSimilarity.buildIvfIndex(e), defDir)
     // the 1-bit tier is OPT-IN at write: a default store pays no
@@ -800,8 +796,7 @@ class SimilaritySpec extends GraftFunSuite {
     assert(!graft.operators.IvfObjectStore.read(spark, defDir)
              .assigned.columns.contains("b1"),
       "default write must not carry the b1 column")
-    val dir = java.nio.file.Files.createTempDirectory("graft_b1_store")
-      .toString
+    val dir = tempStore("graft_b1_store")
     graft.operators.IvfObjectStore.create(
       spark, GraftSimilarity.buildIvfIndex(e), dir, b1 = true)
     val idx = graft.operators.IvfObjectStore.read(spark, dir)
@@ -842,8 +837,7 @@ class SimilaritySpec extends GraftFunSuite {
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate_store")
-      .toString
+    val dir = tempStore("graft_gate_store")
     IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(e), dir,
       pq = Some(GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)))
     val idx = IvfObjectStore.read(spark, dir)
@@ -1069,8 +1063,7 @@ class SimilaritySpec extends GraftFunSuite {
                .otherwise(lit(""))).as("text"))
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_serve_prod").toString
+    val root = tempStore("graft_serve_prod")
     ImpactObjectStore.rebuild(aug.filter(col("lang") === "en"),
                               s"$root/impact")
     IvfObjectStore.create(
@@ -1198,8 +1191,7 @@ class SimilaritySpec extends GraftFunSuite {
                   "label")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_meta_store")
-      .toString
+    val dir = tempStore("graft_meta_store")
     // q4 = true: this test serves every quantized rung off the store,
     // and the int4 tier is opt-in at write
     graft.operators.IvfObjectStore.create(spark,
@@ -1257,8 +1249,7 @@ class SimilaritySpec extends GraftFunSuite {
     // filtered candidate) → identical to the filtered exact serve
     val cb = graft.operators.GraftPq.trainPq(
       e.select(col("vec_id"), col("v")), m = 8, ksub = 16, iters = 1)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft_meta_pq")
-      .toString
+    val pqDir = tempStore("graft_meta_pq")
     graft.operators.IvfObjectStore.create(spark, idx, pqDir, pq = Some(cb))
     val pqIdx = graft.operators.IvfObjectStore.read(spark, pqDir)
     assert(pqIdx.assigned.columns.contains("label"),
@@ -1291,8 +1282,7 @@ class SimilaritySpec extends GraftFunSuite {
     }
     assert(err.getMessage.contains("label"), err.getMessage)
     // at-rest: IvfObjectStore.append enforces the same contract
-    val dir = java.nio.file.Files.createTempDirectory("graft_meta_append")
-      .toString
+    val dir = tempStore("graft_meta_append")
     graft.operators.IvfObjectStore.create(spark, base, dir)
     val err2 = intercept[IllegalArgumentException] {
       graft.operators.IvfObjectStore.append(spark, dir, batch.drop("label"))

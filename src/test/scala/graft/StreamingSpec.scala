@@ -7,7 +7,7 @@ import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
 /** Streaming ⇄ batch agreement for the event analytics (graft.streaming). */
-class StreamingSpec extends GraftFunSuite {
+class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
   import spark.implicits._
 
   private def ts(minute: Int): Timestamp =
@@ -1310,8 +1310,7 @@ class StreamingSpec extends GraftFunSuite {
     import graft.operators.{GraftDedup, KeepSetStore}
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("keepset_stream").toString
+    val dir = tempStore("keepset_stream")
     // day 0 at rest: clusters {1,2}, {10,11}; singleton 20
     val d0Ids = Seq(1L, 2L, 10L, 11L, 20L).toDF("doc_id")
     val d0Pairs = Seq((1L, 2L), (10L, 11L)).toDF("a_id", "b_id")
@@ -1640,8 +1639,7 @@ class StreamingSpec extends GraftFunSuite {
       // at-rest impact store — addends at rest are the shared kernel's,
       // so stored-serve ≡ in-memory-serve ≡ batch, bit-for-bit; and the
       // batch hybridTopKWithImpacts off the same store matches too
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_impact_store").toString
+      val storeDir = tempStore("graft_impact_store")
       graft.operators.ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
       val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
       val batchStored = HybridRetrieval.hybridTopKWithImpacts(
@@ -1674,8 +1672,7 @@ class StreamingSpec extends GraftFunSuite {
       // layout — ImpactObjectStore.read returns the same StoredImpacts
       // surface with bit-identical addends, so the S3-class deployment
       // serves streaming RAG too, not just batch
-      val manifestDir = java.nio.file.Files
-        .createTempDirectory("graft_impact_manifest_stream").toString
+      val manifestDir = tempStore("graft_impact_manifest_stream")
       graft.operators.ImpactObjectStore.rebuild(docs, manifestDir,
                                                 buckets = 16)
       val manifestIdx =
@@ -1725,8 +1722,7 @@ class StreamingSpec extends GraftFunSuite {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val idx = GraftSimilarity.buildIvfIndex(e).persist()
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_impact_pruned_stream").toString
+    val storeDir = tempStore("graft_impact_pruned_stream")
     ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
     val stored = ImpactObjectStore.read(spark, storeDir)
     try {
@@ -1894,8 +1890,7 @@ class StreamingSpec extends GraftFunSuite {
       } finally q.stop()
       // the same stream served against the AT-REST store (store frames
       // re-scanned per micro-batch) answers identically
-      val dir = java.nio.file.Files.createTempDirectory("ivf_serve_store")
-        .toString
+      val dir = tempStore("ivf_serve_store")
       try {
         graft.operators.IvfObjectStore.create(spark, idx, dir)
         val stored = graft.operators.IvfObjectStore.read(spark, dir)
