@@ -59,15 +59,59 @@ class SurfaceSpec extends GraftFunSuite {
   }
 
   test("reference demo parquet reads with the documented all-types schema") {
-    // the reference's own 8-row demo file (examples/datafusion.rs:26)
-    val df = spark.read.parquet("/root/reference/data/part_0.parquet")
-    assert(df.count() == 8)
-    assert(df.columns.contains("timestamp_col"))
-    val sampled = {
-      import graft.implicits._
-      df.sampleExt(1.0, Some(1L))
+    // Reads the reference's own 8-row demo file (examples/datafusion.rs:26)
+    // where it exists; otherwise writes that file from its documented
+    // layout (FIXTURES.md §1) with Spark's default Parquet writer. The
+    // schema assertion is the documented Spark-type table, so it checks
+    // the reference file too.
+    val reference = new java.io.File("/root/reference/data/part_0.parquet")
+    val generated =
+      if (reference.exists()) None
+      else Some(java.nio.file.Files.createTempDirectory("graft_demo").toFile)
+    try {
+      val path = generated.fold(reference.toString) { dir =>
+        val out = new java.io.File(dir, "part_0.parquet").toString
+        writeDemoParquet(out)
+        out
+      }
+      val df = spark.read.parquet(path)
+      assert(df.count() == 8)
+      assert(df.columns.contains("timestamp_col"))
+      val sampled = {
+        import graft.implicits._
+        df.sampleExt(1.0, Some(1L))
+      }
+      assert(sampled.count() == 8)
+      import org.apache.spark.sql.types._
+      val documented = Seq(
+        "id" -> IntegerType, "bool_col" -> BooleanType,
+        "tinyint_col" -> IntegerType, "smallint_col" -> IntegerType,
+        "int_col" -> IntegerType, "bigint_col" -> LongType,
+        "float_col" -> FloatType, "double_col" -> DoubleType,
+        "date_string_col" -> BinaryType, "string_col" -> BinaryType,
+        "timestamp_col" -> TimestampType)
+      assert(df.schema.map(f => f.name -> f.dataType) == documented,
+        df.schema.simpleString)
+    } finally generated.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
+  /** The reference demo table of FIXTURES.md §1 as one Parquet file under
+    * `dir`. `bool_col`, the 0/1 columns, `string_col` and `timestamp_col`
+    * follow the documented row pattern; `bigint_col`, `float_col`,
+    * `double_col` and `date_string_col`, which the document gives no
+    * values for, are filler. */
+  private def writeDemoParquet(dir: String): Unit = {
+    val rows = (0 until 8).map { id =>
+      val v = id % 2
+      val ts = Timestamp.from(
+        java.time.Instant.parse(s"2009-0${id / 2 + 1}-01T00:0${v}:00Z"))
+      (id, v == 0, v, v, v, v * 10L, v * 1.1f, v * 10.1,
+        s"0${id / 2 + 1}/01/09".getBytes("UTF-8"), v.toString.getBytes("UTF-8"), ts)
     }
-    assert(sampled.count() == 8)
+    rows.toDF("id", "bool_col", "tinyint_col", "smallint_col", "int_col",
+        "bigint_col", "float_col", "double_col", "date_string_col",
+        "string_col", "timestamp_col")
+      .coalesce(1).write.parquet(dir)
   }
 
   test("ANALYZE TABLE statistics feed the catalog (CBO vocabulary)") {
