@@ -202,24 +202,9 @@ case class GraftSigAgree(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_sig_agree"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    // length mismatch = different k: a silently-truncated comparison would
-    // be a biased estimate that quietly weakens the LSH prefilter guarantee
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"graft_sig_agree: signature lengths differ ($n vs ${y.numElements()})")
-    if (n == 0) return 0.0
-    var eq = 0
-    var i = 0
-    while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) eq += 1
-      i += 1
-    }
-    eq.toDouble / n
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GraftSigAgree.agree(a.asInstanceOf[ArrayData].toLongArray(),
+                        b.asInstanceOf[ArrayData].toLongArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -246,6 +231,27 @@ case class GraftSigAgree(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object GraftSigAgree {
+  /** The `graft_sig_agree` arithmetic over primitive arrays — the
+    * interpreted path and the streaming near-dup miner both call it. */
+  def agree(x: Array[Long], y: Array[Long]): Double = {
+    val n = x.length
+    // length mismatch = different k: a silently-truncated comparison would
+    // be a biased estimate that quietly weakens the LSH prefilter guarantee
+    if (n != y.length)
+      throw new IllegalArgumentException(
+        s"graft_sig_agree: signature lengths differ ($n vs ${y.length})")
+    if (n == 0) return 0.0
+    var eq = 0
+    var i = 0
+    while (i < n) {
+      if (x(i) == y(i)) eq += 1
+      i += 1
+    }
+    eq.toDouble / n
+  }
+}
+
 /** `graft_jaccard_sorted(array<long>, array<long>)` → `double`: exact
   * Jaccard similarity of two SORTED, duplicate-free long arrays via a
   * single merge-intersection pass — no hash-set build, no allocation,
@@ -270,24 +276,9 @@ case class GraftJaccardSorted(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_jaccard_sorted"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    if (nx == 0 && ny == 0) return 0.0
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < nx && j < ny) {
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv == yv) { inter += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    inter.toDouble / (nx + ny - inter)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GraftJaccardSorted.jaccard(a.asInstanceOf[ArrayData].toLongArray(),
+                               b.asInstanceOf[ArrayData].toLongArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -316,6 +307,27 @@ case class GraftJaccardSorted(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GraftJaccardSorted =
     copy(left = newLeft, right = newRight)
+}
+
+object GraftJaccardSorted {
+  /** The `graft_jaccard_sorted` merge scan over primitive arrays — the
+    * interpreted path and the streaming near-dup miner both call it. */
+  def jaccard(x: Array[Long], y: Array[Long]): Double = {
+    val nx = x.length
+    val ny = y.length
+    if (nx == 0 && ny == 0) return 0.0
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < nx && j < ny) {
+      val xv = x(i)
+      val yv = y(j)
+      if (xv == yv) { inter += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    inter.toDouble / (nx + ny - inter)
+  }
 }
 
 /** `graft_srp_sig(array<double>, nbits[, seed])` → `long`:
@@ -495,27 +507,9 @@ case class GraftCosine(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"graft_cosine: vector lengths differ ($n vs ${y.numElements()})")
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getDouble(i)
-      val yv = y.getDouble(i)
-      dot += xv * yv
-      na += xv * xv
-      nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GraftCosine.cosine(a.asInstanceOf[ArrayData].toDoubleArray(),
+                       b.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -547,4 +541,29 @@ case class GraftCosine(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GraftCosine =
     copy(left = newLeft, right = newRight)
+}
+
+object GraftCosine {
+  /** The `graft_cosine` arithmetic over primitive arrays — one loop, three
+    * accumulators, strict left-to-right — called by the interpreted path
+    * and the streaming SRP miner, so their scores are bit-identical. */
+  def cosine(x: Array[Double], y: Array[Double]): Double = {
+    val n = x.length
+    if (n != y.length)
+      throw new IllegalArgumentException(
+        s"graft_cosine: vector lengths differ ($n vs ${y.length})")
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = x(i)
+      val yv = y(i)
+      dot += xv * yv
+      na += xv * xv
+      nb += yv * yv
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }

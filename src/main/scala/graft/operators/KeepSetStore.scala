@@ -216,9 +216,8 @@ object KeepSetStore extends ManifestStore {
   }
 
   /** Streaming increments — the closing arc of online dedup (r15): the
-    * pair miners ([[graft.streaming.CorpusStreams.nearDupPairStream]],
-    * `srpPairStream`, `editDistPairStream`, `hammingPairStream`) emit
-    * verified pairs online, and every micro-batch folds in as ONE tagged
+    * pair miners of [[graft.streaming.PairBuckets]] emit verified pairs
+    * online, and every micro-batch folds in as ONE tagged
     * [[increment]] (`<streamId>_b<batchId>`), so a checkpoint replay
     * no-ops on the manifest's tag set and the stored decision table is
     * always a published, time-travelable version. The batch's endpoint

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.{GraftCosine, GraftJaccardSorted, GraftSigAgree}
+import PairBuckets.round4
 
 /** Structured Streaming forms of the corpus-curation stages — the
   * incremental twins of [[graft.operators.CorpusCuration]], for the
@@ -466,105 +468,42 @@ object CorpusStreams {
   final case class NearDupIn(id: Long, ts: java.sql.Timestamp,
                              bandId: Int, bandHash: Long,
                              sig: Array[Long], gh: Array[Long])
+      extends PairArrival
   final case class NearDupPairOut(a_id: Long, b_id: Long, jaccard: Double,
                                   ts: java.sql.Timestamp)
   final case class BucketEntry(id: Long, tsMs: Long,
                                sig: Array[Long], gh: Array[Long])
+      extends PairResident
   final case class BucketState(entries: List[BucketEntry])
-
-  /** Evict the single OLDEST resident instance from a capped bucket:
-    * smallest (tsMs, id), removed by REFERENCE so duplicate-id
-    * redelivery (an at-least-once source) evicts one entry per marker —
-    * an id-keyed filter would sweep every duplicate at once, could empty
-    * the bucket, and the tsMs-max timeout bookkeeping on the emptied
-    * list would throw, killing the query as a checkpoint-replayed
-    * poison pill. Shared by all three capped bucket loops so their
-    * eviction semantics cannot drift apart.
-    */
-  private def evictOldest[E <: AnyRef](live: List[E], tsOf: E => Long,
-                                       idOf: E => Long): (List[E], E) = {
-    val victim = live.minBy(e => (tsOf(e), idOf(e)))
-    (live.filterNot(_ eq victim), victim)
-  }
+      extends PairBucket[BucketEntry]
 
   /** Streaming MinHash+LSH near-duplicate mining — the incremental twin of
     * [[graft.operators.GraftDedup.nearDupPairs]], for crawl-as-it-arrives
     * near-dup detection where re-running the batch pair job per increment
     * would re-shuffle the whole corpus. Emits (a_id, b_id, jaccard, ts)
     * with a_id < b_id, jaccard ≥ `threshold`, exactly the batch operator's
-    * verified-pair contract, as each pair's LATER document arrives.
+    * verified-pair contract. Horizon, cap, exactly-once and warm-start
+    * semantics are the [[PairBuckets]] kernel's.
     *
-    * Shape: signature + item-hash set are the same pure-map codegen
-    * expressions as batch (`graft_minhash`, xxhash64 items); each doc
-    * explodes into (band_id, band_hash) bucket keys — the ONE shuffle —
-    * and `flatMapGroupsWithState` keeps per-bucket state: the (id, ts,
-    * sig, gh) of every doc seen in that bucket within the watermark
-    * horizon. A new arrival compares against its bucket's residents:
+    * Signature + item-hash set are the same pure-map codegen expressions
+    * as batch (`graft_minhash`, xxhash64 items); each doc explodes into
+    * (band_id, band_hash) bucket keys and resides with its (id, ts, sig,
+    * gh). A new arrival compares against its bucket's residents:
     * signature-agreement prefilter, then exact Jaccard over the sorted
-    * hashed item sets — identical math to the batch verify tier.
-    *
-    * Exactly-once pair emission WITHOUT a cross-bucket distinct (two docs
-    * collide in ~b·J^r bands): both residents' full signatures are in
-    * state, so each bucket recomputes the pair's FIRST colliding band
-    * (slot equality) and only the bucket owning that band emits —
-    * deterministic, no second stateful operator, no post-hoc dedup.
-    *
-    * State/semantics contract: a pair is found iff the two docs' event
-    * times lie within `horizonMinutes` of each other (the explicit |Δts|
-    * check makes the result independent of trigger timing); bucket
-    * residents evict once the watermark passes their ts + horizon, and
-    * event-time timeouts purge idle buckets, so state is O(docs per
-    * horizon), not O(stream) — and the constant is `bands`, which this
-    * tier sizes to its own `missTarget` bound instead of inheriting the
-    * batch geometry (r9: 64 → 14 bands at the τ=0.8 default, ~4.5× less
-    * state at a P(miss) ≤ 1e-6 recall contract — see the banding note in
-    * the body). Doc ids must be unique within the horizon
-    * (run [[dedupStream]] upstream for re-crawls). Late docs beyond the
-    * watermark are dropped by the runtime, the standard bounded-state
-    * trade.
+    * hashed item sets — identical math to the batch verify tier — and
+    * only the bucket of the pair's FIRST colliding band (slot equality)
+    * emits. A doc resides once per band, so the band count multiplies
+    * state; this tier sizes it to its own `missTarget` bound instead of
+    * inheriting the batch geometry (r9: 64 → 14 bands at the τ=0.8
+    * default, ~4.5× less state at a P(miss) ≤ 1e-6 recall contract — see
+    * the banding note in the body).
+    * Run [[dedupStream]] upstream for re-crawls.
     *
     * Input contract: `docs` carries (idCol: integral, tsCol: timestamp,
-    * itemsCol: array<string> — shingles/tokens, same as batch).
-    *
-    * `maxBucketResidents` caps a DEGENERATE bucket (constant shingle sets
-    * — e.g. empty docs — hash every arrival to the same band keys, and
-    * without a cap that one bucket's state grows to the whole horizon
-    * while its per-arrival verify scans every resident): when an arrival
-    * pushes a bucket past the cap, the OLDEST resident (smallest ts, tie
-    * → smallest id) is evicted and an overflow MARKER row is emitted —
-    * `(a_id = evicted id, b_id = -1, jaccard = -1, ts = arrival ts)`,
-    * impossible as a real pair — so capped buckets are observable, not
-    * silent. Recall effect, stated exactly: an evicted resident can no
-    * longer pair IN THAT BUCKET; a true pair is lost only if every one of
-    * its colliding bands' buckets evicted the earlier doc first, so for
-    * non-adversarial corpora a cap ≳ expected bucket occupancy × safety
-    * factor leaves recall untouched (StreamingSpec pins both: bounded
-    * state + markers under adversarial same-bucket input, unchanged
-    * output at a non-binding cap).
-    *
-    * `initialDocs` WARM-STARTS the bucket residents from at-rest state
-    * (VERDICT r15 #7 — the [[componentStream]] `initialLabels` pattern
-    * on the banded keys): a re-deploy that lost its checkpoint would
-    * otherwise restart cold, silently missing every pair that straddles
-    * the restart (an old resident × a new arrival). Pass the horizon's
-    * residents in the SAME (idCol, tsCol, itemsCol) shape as the live
-    * input — e.g. the last horizon's slice of the stored corpus; each
-    * seed doc re-derives its signature/band keys through the identical
-    * kernels and takes residence in ALL its band buckets with its own
-    * event time, so horizon aging treats seeds exactly like organically
-    * arrived docs. Seed-internal pairs are NOT re-emitted (they were
-    * emitted before the restart — that is the point of seeding state
-    * rather than replaying input); a seed × new-arrival pair emits
-    * exactly once through the usual first-colliding-band rule
-    * (StreamingSpec pins warm ≡ batch over snapshot ∪ new restricted to
-    * new-involving pairs, including a straddling pair the cold restart
-    * provably loses). A seed bucket larger than `maxBucketResidents` is
-    * REFUSED at build (the fixedSampleStream over-full stance) — the
-    * cap's eviction markers are arrival-driven and a silent seed trim
-    * would fake recall. Note the bounded residue: a seeded bucket that
-    * never sees an arrival holds its seeds until the runtime first
-    * touches that group — the residue is capped by the seed sliver
-    * size, the price of not losing straddling pairs.
+    * itemsCol: array<string> — shingles/tokens, same as batch). The cap
+    * marker is `(a_id = evicted id, b_id = -1, jaccard = -1, ts)`.
+    * `initialDocs` warm-starts from docs in the same (idCol, tsCol,
+    * itemsCol) shape, e.g. the last horizon's slice of the stored corpus.
     */
   def nearDupPairStream(docs: DataFrame, idCol: String = "doc_id",
                         itemsCol: String = "items", tsCol: String = "ts",
@@ -611,22 +550,19 @@ object CorpusStreams {
       f"$numHashes) give miss probability $achieved%.3g > missTarget " +
       f"$missTarget%.3g — raise numHashes, lower rowsPerBand, or relax " +
       "missTarget if the recall bound is acceptable")
-    val horizonMs = horizonMinutes * 60000L
     graft.GraftSession.ensureExtensions(docs.sparkSession)
     import docs.sparkSession.implicits._
 
-    val banded = docs
+    def banded(in: DataFrame): Dataset[NearDupIn] = in
       .withColumn("sig", expr(s"graft_minhash($itemsCol, $numHashes)"))
       .withColumn("gh", expr(
         s"sort_array(array_distinct(transform($itemsCol, x -> xxhash64(x))))"))
-      .withWatermark(tsCol, s"$horizonMinutes minutes")
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
               graft.operators.GraftDedup.bandKeys("sig", bands, r).as("bh"),
               col("sig"), col("gh"))
       .select(col("id"), col("ts"), col("bh.band_id").as("bandId"),
               col("bh.band_hash").as("bandHash"), col("sig"), col("gh"))
       .as[NearDupIn]
-
     def firstCollidingBand(sa: Array[Long], sb: Array[Long]): Int = {
       var b = 0
       while (b < bands) {
@@ -638,142 +574,57 @@ object CorpusStreams {
       }
       -1
     }
-    // same math as the codegen kernels graft_sig_agree / graft_jaccard_sorted
-    def sigAgree(sa: Array[Long], sb: Array[Long]): Double = {
-      var eq = 0
-      var i = 0
-      while (i < sa.length) { if (sa(i) == sb(i)) eq += 1; i += 1 }
-      if (sa.length == 0) 0.0 else eq.toDouble / sa.length
-    }
-    def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
-      if (a.length == 0 && b.length == 0) return 0.0
-      var i = 0; var j = 0; var inter = 0
-      while (i < a.length && j < b.length) {
-        if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-        else if (a(i) < b(j)) i += 1
-        else j += 1
-      }
-      inter.toDouble / (a.length + b.length - inter)
-    }
-    def round4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-    def update(key: (Int, Long), it: Iterator[NearDupIn],
-               state: GroupState[BucketState]): Iterator[NearDupPairOut] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var live = state.getOption.map(_.entries).getOrElse(Nil)
-        .filter(e => e.tsMs + horizonMs >= wmMs)
-      if (state.hasTimedOut) {
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(BucketState(live))
-          state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-        }
-        return Iterator.empty
-      }
-      val bandId = key._1
-      val out = List.newBuilder[NearDupPairOut]
-      for (e <- it.toIndexedSeq.sortBy(d => (d.ts.getTime, d.id))) {
-        val eMs = e.ts.getTime
-        for (s <- live) {
-          if (s.id != e.id && math.abs(eMs - s.tsMs) <= horizonMs &&
-              firstCollidingBand(e.sig, s.sig) == bandId &&
-              sigAgree(e.sig, s.sig) >= sf) {
-            val j = jaccardSorted(e.gh, s.gh)
-            if (j >= threshold) {
-              val (a, b) = if (e.id < s.id) (e.id, s.id) else (s.id, e.id)
-              out += NearDupPairOut(a, b, round4(j), e.ts)
-            }
-          }
-        }
-        live ::= BucketEntry(e.id, eMs, e.sig, e.gh)
-        if (maxBucketResidents != Int.MaxValue &&
-            live.length > maxBucketResidents) {
-          val (kept, victim) = evictOldest(live, (_: BucketEntry).tsMs,
-                                           (_: BucketEntry).id)
-          live = kept
-          out += NearDupPairOut(victim.id, -1L, -1.0, e.ts)
-        }
-      }
-      state.update(BucketState(live))
-      state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-      out.result().iterator
-    }
-
-    val grouped = banded.groupByKey(d => (d.bandId, d.bandHash))
-    initialDocs match {
-      case None =>
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout)(
-          update)
-      case Some(seed) =>
-        // seeds ride the SAME kernels as arrivals (one signature path,
-        // no drift), then fold per banded bucket into resident lists —
-        // newest-first like the live prepend order
-        val init = seed
-          .withColumn("sig", expr(s"graft_minhash($itemsCol, $numHashes)"))
-          .withColumn("gh", expr(
-            s"sort_array(array_distinct(" +
-            s"transform($itemsCol, x -> xxhash64(x))))"))
-          .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
-                  graft.operators.GraftDedup.bandKeys("sig", bands, r)
-                    .as("bh"),
-                  col("sig"), col("gh"))
-          .select(col("id"), col("ts"), col("bh.band_id").as("bandId"),
-                  col("bh.band_hash").as("bandHash"), col("sig"), col("gh"))
-          .as[NearDupIn]
-          .groupByKey(d => (d.bandId, d.bandHash))
-          .mapGroups { (k, rows) =>
-            val entries = rows.toList
-              .sortBy(d => (-d.ts.getTime, -d.id))
-              .map(d => BucketEntry(d.id, d.ts.getTime, d.sig, d.gh))
-            require(entries.length <= maxBucketResidents,
-              s"nearDupPairStream: seed bucket $k holds " +
-              s"${entries.length} residents > maxBucketResidents " +
-              s"$maxBucketResidents — trim the sliver upstream; a " +
-              "silent seed eviction would fake recall")
-            (k, BucketState(entries))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout,
-                                       init)(update)
-    }
+    PairBuckets.mine[(Int, Long), NearDupIn, BucketEntry, BucketState,
+                     NearDupPairOut](
+        "nearDupPairStream", banded(docs), initialDocs.map(banded),
+        horizonMinutes, maxBucketResidents)(
+      keyOf = d => (d.bandId, d.bandHash),
+      residentOf = d => BucketEntry(d.id, d.ts.getTime, d.sig, d.gh),
+      bucketOf = BucketState,
+      markerOf = NearDupPairOut(_, -1L, -1.0, _),
+      verify = key => e => s =>
+        if (firstCollidingBand(e.sig, s.sig) == key._1 &&
+            GraftSigAgree.agree(e.sig, s.sig) >= sf) {
+          val j = GraftJaccardSorted.jaccard(e.gh, s.gh)
+          Option.when(j >= threshold)(NearDupPairOut(
+            math.min(e.id, s.id), math.max(e.id, s.id), round4(j), e.ts))
+        } else None)
   }
 
   final case class SrpVecIn(id: Long, ts: java.sql.Timestamp, bandId: Int,
                             bucket: Long, bsigs: Array[Long],
                             v: Array[Double])
+      extends PairArrival
   final case class CosPairOut(a_id: Long, b_id: Long, cos: Double,
                               ts: java.sql.Timestamp)
   final case class SrpBucketEntry(id: Long, tsMs: Long, bsigs: Array[Long],
                                   v: Array[Double])
+      extends PairResident
   final case class SrpBucketState(entries: List[SrpBucketEntry])
+      extends PairBucket[SrpBucketEntry]
   final case class SrpBucketEntryQ(id: Long, tsMs: Long, bsigs: Array[Long],
                                    q: Array[Byte])
+      extends PairResident
   final case class SrpBucketStateQ(entries: List[SrpBucketEntryQ])
+      extends PairBucket[SrpBucketEntryQ]
 
   /** Streaming SRP-LSH embedding near-dup mining — the incremental twin of
     * [[graft.operators.GraftSimilarity.srpPairs]], completing the
     * streaming dedup matrix (exact: [[dedupStream]]; token near-dup:
     * [[nearDupPairStream]]; embedding near-dup: this). Emits (a_id, b_id,
     * cos, ts) with a_id < b_id and cos ≥ `threshold` — exactly the batch
-    * operator's verified-pair contract — as each pair's LATER vector
-    * arrives.
+    * operator's verified-pair contract. Horizon, cap, exactly-once and
+    * warm-start semantics are the [[PairBuckets]] kernel's.
     *
-    * Shape: per-band seeded signatures are the same codegen expression as
-    * batch (`graft_srp_sig(v, bandBits, band)`, hyperplanes cached per
-    * JVM); each vector explodes into (band, bucket) keys — the ONE
-    * shuffle — and `flatMapGroupsWithState` keeps per-bucket state: the
-    * (id, ts, all-band signatures, vector) of every resident within the
-    * watermark horizon. A new arrival exact-cosine-verifies against its
-    * bucket's residents with the same strict accumulation order as the
-    * `graft_cosine` kernel, so stream and batch scores are bit-identical.
-    *
-    * Exactly-once emission, same trick as [[nearDupPairStream]]: a true
-    * near-dup pair collides in many bands, but both residents' full
-    * band-signature arrays are in state, so every bucket recomputes the
-    * pair's FIRST colliding band and only that band's bucket emits.
+    * Per-band seeded signatures are the same codegen expression as batch
+    * (`graft_srp_sig(v, bandBits, band)`, hyperplanes cached per JVM);
+    * each vector explodes into (band, bucket) keys and resides with its
+    * (id, ts, all-band signatures, vector). A new arrival exact-cosine-
+    * verifies against its bucket's residents through the `graft_cosine`
+    * arithmetic ([[graft.functions.GraftCosine.cosine]]), so stream and
+    * batch scores are bit-identical, and only the bucket of the pair's
+    * FIRST colliding band emits.
     *
     * Band geometry defaults match batch (12 bits × 40 bands) and obey the
     * same quadratic-constant analysis — size via
@@ -783,8 +634,7 @@ object CorpusStreams {
     * longs/doubles — total ≈ |horizon| · bands · (bands + dim) values, a
     * `bands`× multiplier over the batch shuffle row. That is the price of
     * in-bucket verify with no second join; bound the horizon accordingly
-    * (the batch operator remains the path for wide lookbacks). Ids must
-    * be unique within the horizon.
+    * (the batch operator remains the path for wide lookbacks).
     *
     * `quantizedState = true` cuts the dominant per-resident term ~8×: the
     * stored vector payload becomes its `graft_q8` form (dim BYTES instead
@@ -801,24 +651,11 @@ object CorpusStreams {
     * gone by design, so no exact rerank of historic residents is possible
     * — that is the state/precision trade, stated plainly.
     *
-    * `maxBucketResidents` caps a DEGENERATE bucket — all-zero (or any
-    * constant-sign-pattern) embeddings share every band signature, so one
-    * bucket's state would otherwise grow to the whole horizon with
-    * O(residents) verify per arrival. Same contract as
-    * [[nearDupPairStream]]: oldest resident (smallest ts, tie → smallest
-    * id) evicts past the cap and an overflow marker
-    * `(a_id = evicted id, b_id = -1, cos = -1, ts = arrival ts)` is
-    * emitted; an evicted resident can still pair through its OTHER
-    * bands' buckets, so the cap costs recall only when every colliding
-    * band's bucket is hot.
-    *
-    * `initialVecs` warm-starts the bucket residents from at-rest state —
-    * the [[nearDupPairStream]] `initialDocs` contract verbatim (same
-    * (idCol, vecCol, tsCol) shape as the live input, signatures
-    * re-derived through the identical kernels, per-seed event times for
-    * horizon aging, seed-internal pairs never re-emitted, over-cap seed
-    * buckets refused, bounded never-touched-bucket residue). Under
-    * `quantizedState` the seeds quantize at build with the same q8 map
+    * The cap marker is `(a_id = evicted id, b_id = -1, cos = -1, ts)`;
+    * all-zero (or any constant-sign-pattern) embeddings share every band
+    * signature and are the degenerate bucket it bounds. `initialVecs`
+    * warm-starts from vectors in the same (idCol, vecCol, tsCol) shape;
+    * under `quantizedState` the seeds quantize with the same q8 map
     * arrivals use, so warm and cold residents are byte-identical.
     */
   def srpPairStream(vecs: DataFrame, idCol: String = "vec_id",
@@ -839,46 +676,24 @@ object CorpusStreams {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(maxBucketResidents >= 1,
       s"maxBucketResidents must be >= 1, got $maxBucketResidents")
-    val horizonMs = horizonMinutes * 60000L
     graft.GraftSession.ensureExtensions(vecs.sparkSession)
     import vecs.sparkSession.implicits._
 
-    val banded = vecs
+    def banded(in: DataFrame): Dataset[SrpVecIn] = in
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
               expr(s"transform($vecCol, x -> cast(x AS double))").as("__v"))
       .withColumn("bsigs", expr(
         s"""transform(sequence(0, ${bands - 1}),
            b -> graft_srp_sig(__v, $bandBits, b))"""))
-      .withWatermark("ts", s"$horizonMinutes minutes")
       .select(col("id"), col("ts"),
               posexplode(col("bsigs")).as(Seq("bandId", "bucket")),
               col("bsigs"), col("__v").as("v"))
       .as[SrpVecIn]
-
     def firstCollidingBand(sa: Array[Long], sb: Array[Long]): Int = {
       var b = 0
       while (b < bands) { if (sa(b) == sb(b)) return b; b += 1 }
       -1
     }
-    // identical accumulation order to the graft_cosine codegen kernel —
-    // one loop, three accumulators — so scores match batch bit-for-bit,
-    // including the strict equal-length contract (dim drift fails loudly)
-    def cosExact(x: Array[Double], y: Array[Double]): Double = {
-      if (x.length != y.length)
-        throw new IllegalArgumentException(
-          s"cosExact: vector lengths differ (${x.length} vs ${y.length})")
-      val n = x.length
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = x(i); val yv = y(i)
-        dot += xv * yv; na += xv * xv; nb += yv * yv
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def round4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
     // graft_q8's exact mapping (round half-away-from-zero of x·127/max|x|)
     // — values fit a byte by construction
@@ -919,145 +734,35 @@ object CorpusStreams {
       if (aa == 0L || bb == 0L) 0.0 else ab / math.sqrt((aa * bb).toDouble)
     }
 
-    def update(key: (Int, Long), it: Iterator[SrpVecIn],
-               state: GroupState[SrpBucketState]): Iterator[CosPairOut] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var live = state.getOption.map(_.entries).getOrElse(Nil)
-        .filter(e => e.tsMs + horizonMs >= wmMs)
-      if (state.hasTimedOut) {
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(SrpBucketState(live))
-          state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-        }
-        return Iterator.empty
-      }
-      val bandId = key._1
-      val out = List.newBuilder[CosPairOut]
-      for (e <- it.toIndexedSeq.sortBy(d => (d.ts.getTime, d.id))) {
-        val eMs = e.ts.getTime
-        for (s <- live) {
-          if (s.id != e.id && math.abs(eMs - s.tsMs) <= horizonMs &&
-              firstCollidingBand(e.bsigs, s.bsigs) == bandId) {
-            val c = cosExact(e.v, s.v)
-            if (c >= threshold) {
-              val (a, b) = if (e.id < s.id) (e.id, s.id) else (s.id, e.id)
-              out += CosPairOut(a, b, round4(c), e.ts)
-            }
-          }
-        }
-        live ::= SrpBucketEntry(e.id, eMs, e.bsigs, e.v)
-        if (maxBucketResidents != Int.MaxValue &&
-            live.length > maxBucketResidents) {
-          val (kept, victim) = evictOldest(live, (_: SrpBucketEntry).tsMs,
-                                           (_: SrpBucketEntry).id)
-          live = kept
-          out += CosPairOut(victim.id, -1L, -1.0, e.ts)
-        }
-      }
-      state.update(SrpBucketState(live))
-      state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-      out.result().iterator
-    }
-
-    // the quantized twin of `update`: residents live as q8 bytes, the
-    // arriving row quantizes itself once and scores integer-exactly
-    def updateQ(key: (Int, Long), it: Iterator[SrpVecIn],
-                state: GroupState[SrpBucketStateQ]): Iterator[CosPairOut] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var live = state.getOption.map(_.entries).getOrElse(Nil)
-        .filter(e => e.tsMs + horizonMs >= wmMs)
-      if (state.hasTimedOut) {
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(SrpBucketStateQ(live))
-          state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-        }
-        return Iterator.empty
-      }
-      val bandId = key._1
-      val out = List.newBuilder[CosPairOut]
-      for (e <- it.toIndexedSeq.sortBy(d => (d.ts.getTime, d.id))) {
-        val eMs = e.ts.getTime
-        val eq = q8(e.v)
-        for (s <- live) {
-          if (s.id != e.id && math.abs(eMs - s.tsMs) <= horizonMs &&
-              firstCollidingBand(e.bsigs, s.bsigs) == bandId) {
-            val c = q8Cos(eq, s.q)
-            if (c >= threshold) {
-              val (a, b) = if (e.id < s.id) (e.id, s.id) else (s.id, e.id)
-              out += CosPairOut(a, b, round4(c), e.ts)
-            }
-          }
-        }
-        live ::= SrpBucketEntryQ(e.id, eMs, e.bsigs, eq)
-        if (maxBucketResidents != Int.MaxValue &&
-            live.length > maxBucketResidents) {
-          val (kept, victim) = evictOldest(live, (_: SrpBucketEntryQ).tsMs,
-                                           (_: SrpBucketEntryQ).id)
-          live = kept
-          out += CosPairOut(victim.id, -1L, -1.0, e.ts)
-        }
-      }
-      state.update(SrpBucketStateQ(live))
-      state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-      out.result().iterator
-    }
-
-    val grouped = banded.groupByKey(d => (d.bandId, d.bucket))
-    // seeds ride the same signature path as arrivals; sorted newest-first
-    // to match the live prepend order, refused past the cap
-    def seedBanded(seed: DataFrame) = seed
-      .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
-              expr(s"transform($vecCol, x -> cast(x AS double))").as("__v"))
-      .withColumn("bsigs", expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           b -> graft_srp_sig(__v, $bandBits, b))"""))
-      .select(col("id"), col("ts"),
-              posexplode(col("bsigs")).as(Seq("bandId", "bucket")),
-              col("bsigs"), col("__v").as("v"))
-      .as[SrpVecIn]
-      .groupByKey(d => (d.bandId, d.bucket))
-    def refuse(k: (Int, Long), n: Int): Unit =
-      require(n <= maxBucketResidents,
-        s"srpPairStream: seed bucket $k holds $n residents > " +
-        s"maxBucketResidents $maxBucketResidents — trim the sliver " +
-        "upstream; a silent seed eviction would fake recall")
-    (quantizedState, initialVecs) match {
-      case (false, None) =>
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout)(
-          update)
-      case (true, None) =>
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout)(
-          updateQ)
-      case (false, Some(seed)) =>
-        val init = seedBanded(seed)
-          .mapGroups { (k, rows) =>
-            val entries = rows.toList.sortBy(d => (-d.ts.getTime, -d.id))
-              .map(d => SrpBucketEntry(d.id, d.ts.getTime, d.bsigs, d.v))
-            refuse(k, entries.length)
-            (k, SrpBucketState(entries))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout,
-                                       init)(update)
-      case (true, Some(seed)) =>
-        val init = seedBanded(seed)
-          .mapGroups { (k, rows) =>
-            val entries = rows.toList.sortBy(d => (-d.ts.getTime, -d.id))
-              .map(d => SrpBucketEntryQ(d.id, d.ts.getTime, d.bsigs,
-                                        q8(d.v)))
-            refuse(k, entries.length)
-            (k, SrpBucketStateQ(entries))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout,
-                                       init)(updateQ)
-    }
+    // the two state tiers differ only in the resident payload P: the
+    // vector itself, or its q8 bytes
+    def mineWith[P, E <: PairResident, S <: PairBucket[E]: Encoder](
+        payload: Array[Double] => P, residentOf: (SrpVecIn, P) => E,
+        sigsOf: E => Array[Long], payloadOf: E => P,
+        cos: (P, P) => Double, bucketOf: List[E] => S): Dataset[CosPairOut] =
+      PairBuckets.mine[(Int, Long), SrpVecIn, E, S, CosPairOut](
+          "srpPairStream", banded(vecs), initialVecs.map(banded),
+          horizonMinutes, maxBucketResidents)(
+        keyOf = d => (d.bandId, d.bucket),
+        residentOf = d => residentOf(d, payload(d.v)),
+        bucketOf = bucketOf,
+        markerOf = CosPairOut(_, -1L, -1.0, _),
+        verify = key => e => {
+          val ep = payload(e.v)
+          s => if (firstCollidingBand(e.bsigs, sigsOf(s)) == key._1) {
+            val c = cos(ep, payloadOf(s))
+            Option.when(c >= threshold)(CosPairOut(
+              math.min(e.id, s.id), math.max(e.id, s.id), round4(c), e.ts))
+          } else None
+        })
+    if (quantizedState)
+      mineWith[Array[Byte], SrpBucketEntryQ, SrpBucketStateQ](
+        q8, (d, q) => SrpBucketEntryQ(d.id, d.ts.getTime, d.bsigs, q),
+        _.bsigs, _.q, q8Cos, SrpBucketStateQ)
+    else
+      mineWith[Array[Double], SrpBucketEntry, SrpBucketState](
+        identity, (d, v) => SrpBucketEntry(d.id, d.ts.getTime, d.bsigs, v),
+        _.bsigs, _.v, GraftCosine.cosine, SrpBucketState)
   }
 
   /** Streaming serve twin of
@@ -1780,10 +1485,13 @@ object CorpusStreams {
 
   final case class EditDistIn(id: Long, ts: java.sql.Timestamp, len: Int,
                               txt: String, bucket: String)
+      extends PairArrival
   final case class EditDistPairOut(a_id: Long, b_id: Long, dist: Long,
                                    ts: java.sql.Timestamp)
   final case class EdBucketEntry(id: Long, tsMs: Long, len: Int, txt: String)
+      extends PairResident
   final case class EdBucketState(entries: List[EdBucketEntry])
+      extends PairBucket[EdBucketEntry]
 
   /** Streaming edit-distance near-dup mining — the incremental twin of
     * [[graft.operators.GraftDedup.editDistancePairs]], completing the
@@ -1797,10 +1505,11 @@ object CorpusStreams {
     * (len ≥ q·(d+1)) enters state under its FIRST q·d+1 positional
     * q-gram occurrences — any q·d+1 occurrences satisfy the ED-Join
     * survival lemma, and first-by-position needs NO global frequency
-    * table (which a stream cannot have); the hot-bucket price of skipping the batch
-    * tier's rarest-first ordering is bounded by `maxBucketResidents`
-    * (deterministic oldest-first eviction with the impossible-as-a-pair
-    * overflow marker row, the nearDupPairStream contract). An arriving
+    * table (which a stream cannot have); the hot-bucket price of skipping
+    * the batch tier's rarest-first ordering is bounded by
+    * `maxBucketResidents`, whose marker is `(a_id = evicted id, b_id = -1,
+    * dist = -1, ts)`. Horizon, cap and exactly-once semantics are the
+    * [[PairBuckets]] kernel's; this miner has no warm start. An arriving
     * document probes the buckets of ALL its distinct grams — for any
     * in-horizon pair within distance d with a long resident, the
     * resident's prefix contains a gram surviving in the arrival at
@@ -1847,7 +1556,6 @@ object CorpusStreams {
     val d = maxDist
     val prefixLen = q * d + 1
     val shortFloor = q * (d + 1)
-    val horizonMs = horizonMinutes * 60000L
     import docs.sparkSession.implicits._
 
     // one probe row per DISTINCT gram of the arrival (long-resident path)
@@ -1855,7 +1563,6 @@ object CorpusStreams {
     // pair; length keys live in a reserved "\u0000L:" namespace no q-gram
     // can collide with
     val keyed = docs
-      .withWatermark(tsCol, s"$horizonMinutes minutes")
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
               length(col(textCol)).as("len"), col(textCol).as("txt"))
       .withColumn("bucket", explode(expr(
@@ -1936,90 +1643,64 @@ object CorpusStreams {
       null
     }
 
-    def update(bucket: String, it: Iterator[EditDistIn],
-               state: GroupState[EdBucketState]): Iterator[EditDistPairOut] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var live = state.getOption.map(_.entries).getOrElse(Nil)
-        .filter(e => e.tsMs + horizonMs >= wmMs)
-      if (state.hasTimedOut) {
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(EdBucketState(live))
-          state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
+    PairBuckets.mine[String, EditDistIn, EdBucketEntry, EdBucketState,
+                     EditDistPairOut](
+        "editDistPairStream", keyed, None, horizonMinutes,
+        maxBucketResidents)(
+      keyOf = _.bucket,
+      residentOf = e => EdBucketEntry(e.id, e.ts.getTime, e.len, e.txt),
+      bucketOf = EdBucketState,
+      markerOf = EditDistPairOut(_, -1L, -1L, _),
+      verify = bucket => {
+        val isLenBucket = bucket.startsWith("\u0000L:")
+        // per-call caches: a resident's prefix walk and an arrival's
+        // gram-position map are computed ONCE per update() call, not per
+        // (resident, arrival) meeting — with the early-exit owner rule
+        // this keeps a hot bucket's cost near its true meeting count
+        val prefCache =
+          scala.collection.mutable.HashMap[Long, Array[(String, Int)]]()
+        def prefixCached(id: Long, txt: String): Array[(String, Int)] =
+          prefCache.getOrElseUpdate(id, prefixOf(txt))
+        // per-arrival codepoint decode, shared by the gram map and every
+        // DP verify this arrival participates in
+        val cpsCache = scala.collection.mutable.HashMap[Long, Array[Int]]()
+        def cpsCached(id: Long, txt: String): Array[Int] =
+          cpsCache.getOrElseUpdate(id, cpsOf(txt))
+        e => {
+          val eCps = cpsCached(e.id, e.txt)
+          val eGramPos: collection.Map[String, Array[Int]] =
+            if (isLenBucket) Map.empty
+            else gramsOf(eCps).groupBy(_._1).map { case (g, occ) =>
+              g -> occ.map(_._2) }
+          s =>
+            if (math.abs(s.len - e.len) <= d &&
+                (isLenBucket ||
+                 ownerOf(prefixCached(s.id, s.txt), eGramPos) == bucket)) {
+              val dist = lev(cpsCached(s.id, s.txt), eCps, d)
+              Option.when(dist >= 0)(EditDistPairOut(
+                math.min(e.id, s.id), math.max(e.id, s.id), dist.toLong,
+                e.ts))
+            } else None
         }
-        return Iterator.empty
-      }
-      val isLenBucket = bucket.startsWith("\u0000L:")
-      val out = List.newBuilder[EditDistPairOut]
-      // per-call caches: a resident's prefix walk and an arrival's
-      // gram-position map are computed ONCE per update() call, not per
-      // (resident, arrival) meeting — with the early-exit owner rule this
-      // keeps a hot bucket's cost near its true meeting count
-      val prefCache =
-        scala.collection.mutable.HashMap[Long, Array[(String, Int)]]()
-      def prefixCached(id: Long, txt: String): Array[(String, Int)] =
-        prefCache.getOrElseUpdate(id, prefixOf(txt))
-      // per-arrival codepoint decode, shared by the gram map and every
-      // DP verify this arrival participates in
-      val cpsCache = scala.collection.mutable.HashMap[Long, Array[Int]]()
-      def cpsCached(id: Long, txt: String): Array[Int] =
-        cpsCache.getOrElseUpdate(id, cpsOf(txt))
-      for (e <- it.toIndexedSeq.sortBy(a => (a.ts.getTime, a.id))) {
-        val eMs = e.ts.getTime
-        val eCps = cpsCached(e.id, e.txt)
-        val eGramPos: collection.Map[String, Array[Int]] =
-          if (isLenBucket) Map.empty
-          else gramsOf(eCps).groupBy(_._1).map { case (g, occ) =>
-            g -> occ.map(_._2) }
-        for (s <- live) {
-          if (s.id != e.id && math.abs(eMs - s.tsMs) <= horizonMs &&
-              math.abs(s.len - e.len) <= d &&
-              (isLenBucket ||
-               ownerOf(prefixCached(s.id, s.txt), eGramPos) == bucket)) {
-            val dist = lev(cpsCached(s.id, s.txt), eCps, d)
-            if (dist >= 0) {
-              val (a, b) = if (e.id < s.id) (e.id, s.id) else (s.id, e.id)
-              out += EditDistPairOut(a, b, dist.toLong, e.ts)
-            }
-          }
-        }
-        // residency rule: long docs live under their prefix grams, short
-        // docs under their own length key — never both, so the two paths
-        // partition the pair space
-        val isResidentHere =
-          if (isLenBucket)
-            e.len < shortFloor && bucket == s"\u0000L:${e.len}"
-          else e.len >= shortFloor && prefixOf(e.txt).exists(_._1 == bucket)
-        if (isResidentHere) {
-          live ::= EdBucketEntry(e.id, eMs, e.len, e.txt)
-          if (maxBucketResidents != Int.MaxValue &&
-              live.length > maxBucketResidents) {
-            val (kept, victim) = evictOldest(live, (_: EdBucketEntry).tsMs,
-                                             (_: EdBucketEntry).id)
-            live = kept
-            out += EditDistPairOut(victim.id, -1L, -1L, e.ts)
-          }
-        }
-      }
-      if (live.isEmpty) state.remove()
-      else {
-        state.update(EdBucketState(live))
-        state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-      }
-      out.result().iterator
-    }
-
-    keyed.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append,
-                              GroupStateTimeout.EventTimeTimeout)(update)
+      },
+      // residency rule: long docs live under their prefix grams, short
+      // docs under their own length key — never both, so the two paths
+      // partition the pair space
+      resides = (bucket, e) =>
+        if (bucket.startsWith("\u0000L:"))
+          e.len < shortFloor && bucket == s"\u0000L:${e.len}"
+        else e.len >= shortFloor && prefixOf(e.txt).exists(_._1 == bucket))
   }
 
   final case class HammingIn(id: Long, ts: java.sql.Timestamp, h64: Long,
                              bandId: Int, bandHash: Long)
+      extends PairArrival
   final case class HammingPairOut(a_id: Long, b_id: Long, hamming: Long,
                                   ts: java.sql.Timestamp)
   final case class HamBucketEntry(id: Long, tsMs: Long, h64: Long)
+      extends PairResident
   final case class HamBucketState(entries: List[HamBucketEntry])
+      extends PairBucket[HamBucketEntry]
 
   /** Streaming banded-Hamming near-dup mining over ANY 64-bit perceptual
     * signature stream — the online twin of
@@ -2027,33 +1708,23 @@ object CorpusStreams {
     * image hashes ([[imageHashStream]]), audio fingerprints
     * ([[audioHashStream]]), or SimHash signatures as they land. Emits
     * (a_id, b_id, hamming, ts) with a_id < b_id and Hamming ≤
-    * `maxHamming`, as each pair's LATER item arrives.
+    * `maxHamming`. Horizon, cap, exactly-once and warm-start semantics
+    * are the [[PairBuckets]] kernel's.
     *
-    * Shape is the [[nearDupPairStream]] machinery with the cheapest
-    * possible payload: signatures split into `bands` equal bit-slices,
-    * per-(band, slice) buckets hold (id, ts, h64) residents within the
-    * watermark horizon — 8-byte signatures, so state per resident is a
-    * few dozen bytes × bands. Exactly-once emission via the
-    * first-colliding-band ownership rule (recomputed from the two
-    * in-state signatures — no second stateful operator); the |Δts| ≤
-    * horizon check makes results trigger-independent;
-    * `maxBucketResidents` caps degenerate buckets (a constant-signature
-    * flood) with the oldest-first eviction + impossible-as-a-pair
-    * marker row (victim, -1, -1) of the other miners. Candidate recall
-    * is the banded contract ([[graft.operators.GraftDedup
-    * .hammingPairs64]]): guaranteed when maxHamming < bands, the
-    * documented LSH trade above it — stream and batch take the same
-    * trade, so stream ≡ batch within the horizon (StreamingSpec pins
-    * it on the twin-augmented image corpus).
+    * Signatures split into `bands` equal bit-slices; per-(band, slice)
+    * buckets hold (id, ts, h64) residents — 8-byte signatures, so state
+    * per resident is a few dozen bytes × bands — and only the bucket of
+    * the pair's FIRST colliding band emits. Candidate recall is the
+    * banded contract ([[graft.operators.GraftDedup.hammingPairs64]]):
+    * guaranteed when maxHamming < bands, the documented LSH trade above
+    * it — stream and batch take the same trade, so stream ≡ batch within
+    * the horizon (StreamingSpec pins it on the twin-augmented image
+    * corpus).
     *
-    * `initialHashes` warm-starts the bucket residents from at-rest
-    * state — the [[nearDupPairStream]] `initialDocs` contract verbatim
-    * (same (idCol, hashCol, tsCol) shape as the live input, band slices
-    * re-derived identically, per-seed event times for horizon aging,
-    * seed-internal pairs never re-emitted, over-cap seed buckets
-    * refused, bounded never-touched-bucket residue). The cheapest of
-    * the three warm paths: the sliver is (id, ts, h64) — 8-byte
-    * signatures straight off any stored perceptual-hash table.
+    * The cap marker is `(a_id = evicted id, b_id = -1, hamming = -1,
+    * ts)`. `initialHashes` warm-starts from hashes in the same (idCol,
+    * hashCol, tsCol) shape — the cheapest warm path: (id, ts, h64)
+    * straight off any stored perceptual-hash table.
     */
   def hammingPairStream(hashes: DataFrame, maxHamming: Int,
                         bands: Int = 4, idCol: String = "doc_id",
@@ -2071,10 +1742,8 @@ object CorpusStreams {
       s"maxBucketResidents must be >= 1, got $maxBucketResidents")
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
-    val horizonMs = horizonMinutes * 60000L
     import hashes.sparkSession.implicits._
-    val keyed = hashes
-      .withWatermark(tsCol, s"$horizonMinutes minutes")
+    def banded(in: DataFrame): Dataset[HammingIn] = in
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
               col(hashCol).cast("long").as("h64"),
               explode(expr(
@@ -2094,83 +1763,20 @@ object CorpusStreams {
       }
       -1
     }
-    def update(key: (Int, Long), it: Iterator[HammingIn],
-               state: GroupState[HamBucketState])
-        : Iterator[HammingPairOut] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var live = state.getOption.map(_.entries).getOrElse(Nil)
-        .filter(e => e.tsMs + horizonMs >= wmMs)
-      if (state.hasTimedOut) {
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(HamBucketState(live))
-          state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-        }
-        return Iterator.empty
-      }
-      val out = List.newBuilder[HammingPairOut]
-      for (e <- it.toIndexedSeq.sortBy(d => (d.ts.getTime, d.id))) {
-        val eMs = e.ts.getTime
-        for (s <- live) {
-          if (s.id != e.id && math.abs(eMs - s.tsMs) <= horizonMs &&
-              firstCollidingBand(e.h64, s.h64) == key._1) {
-            val ham = java.lang.Long.bitCount(e.h64 ^ s.h64)
-            if (ham <= maxHamming) {
-              val (a, b) = if (e.id < s.id) (e.id, s.id) else (s.id, e.id)
-              out += HammingPairOut(a, b, ham.toLong, e.ts)
-            }
-          }
-        }
-        live ::= HamBucketEntry(e.id, eMs, e.h64)
-        if (maxBucketResidents != Int.MaxValue &&
-            live.length > maxBucketResidents) {
-          val (kept, victim) = evictOldest(live, (_: HamBucketEntry).tsMs,
-                                           (_: HamBucketEntry).id)
-          live = kept
-          out += HammingPairOut(victim.id, -1L, -1L, e.ts)
-        }
-      }
-      if (live.isEmpty) state.remove()
-      else {
-        state.update(HamBucketState(live))
-        state.setTimeoutTimestamp(live.map(_.tsMs).max + horizonMs + 1)
-      }
-      out.result().iterator
-    }
-    val grouped = keyed.groupByKey(d => (d.bandId, d.bandHash))
-    initialHashes match {
-      case None =>
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout)(
-          update)
-      case Some(seed) =>
-        val init = seed
-          .select(col(idCol).cast("long").as("id"), col(tsCol).as("ts"),
-                  col(hashCol).cast("long").as("h64"),
-                  explode(expr(
-                    s"""transform(sequence(0, ${bands - 1}),
-                       b -> struct(CAST(b AS int) AS bandId,
-                                   shiftright($hashCol, $bits * b) & $mask
-                                     AS bandHash))""")).as("bh"))
-          .select(col("id"), col("ts"), col("h64"),
-                  col("bh.bandId"), col("bh.bandHash"))
-          .as[HammingIn]
-          .groupByKey(d => (d.bandId, d.bandHash))
-          .mapGroups { (k, rows) =>
-            val entries = rows.toList.sortBy(d => (-d.ts.getTime, -d.id))
-              .map(d => HamBucketEntry(d.id, d.ts.getTime, d.h64))
-            require(entries.length <= maxBucketResidents,
-              s"hammingPairStream: seed bucket $k holds " +
-              s"${entries.length} residents > maxBucketResidents " +
-              s"$maxBucketResidents — trim the sliver upstream; a " +
-              "silent seed eviction would fake recall")
-            (k, HamBucketState(entries))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState(OutputMode.Append,
-                                       GroupStateTimeout.EventTimeTimeout,
-                                       init)(update)
-    }
+    PairBuckets.mine[(Int, Long), HammingIn, HamBucketEntry, HamBucketState,
+                     HammingPairOut](
+        "hammingPairStream", banded(hashes), initialHashes.map(banded),
+        horizonMinutes, maxBucketResidents)(
+      keyOf = d => (d.bandId, d.bandHash),
+      residentOf = d => HamBucketEntry(d.id, d.ts.getTime, d.h64),
+      bucketOf = HamBucketState,
+      markerOf = HammingPairOut(_, -1L, -1L, _),
+      verify = key => e => s =>
+        if (firstCollidingBand(e.h64, s.h64) == key._1) {
+          val ham = java.lang.Long.bitCount(e.h64 ^ s.h64)
+          Option.when(ham <= maxHamming)(HammingPairOut(
+            math.min(e.id, s.id), math.max(e.id, s.id), ham.toLong, e.ts))
+        } else None)
   }
 
   /** Stateless perceptual-hash map for an arriving image-payload

@@ -13,6 +13,83 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
 
+  // a stream ≡ batch check compares sets, where a pair emitted twice
+  // would hide: the emitted (a_id, b_id) must be distinct
+  private def assertEachPairOnce(rows: Array[org.apache.spark.sql.Row]): Unit = {
+    val ids = rows.map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ids.distinct.length == ids.length,
+      s"pairs emitted twice: ${ids.diff(ids.distinct).take(5)}")
+  }
+
+  /** A bucket-pair miner fed the SAME payload on every row (up to a
+    * positive vector scale) — the degenerate hot bucket: every row shares
+    * every bucket key and each pair verifies at score `same`. `run`
+    * feeds micro-batches of (id, ts) rows with a horizon (minutes) and a
+    * cap, and returns the output as (a_id, b_id, score) plus the state
+    * store's bytes at the last progress. */
+  private final case class ConstMiner(
+      label: String, same: Double,
+      run: (Seq[Seq[(Long, Timestamp)]], Long, Int) =>
+        (Seq[(Long, Long, Double)], Long))
+
+  private val constRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  private def constMiner[T: scala.reflect.runtime.universe.TypeTag](
+      label: String, same: Double, payload: Long => T)(
+      mine: (org.apache.spark.sql.DataFrame, Long, Int) =>
+        org.apache.spark.sql.Dataset[_]): ConstMiner =
+    ConstMiner(label, same, (batches, horizon, cap) => {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[(Long, Timestamp, T)]
+      val name = s"const_${label}_${constRuns.incrementAndGet()}"
+      val q = mine(input.toDF().toDF("id", "ts", "payload"), horizon, cap)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        for (b <- batches) {
+          input.addData(b.map { case (id, t) => (id, t, payload(id)) })
+          q.processAllAvailable()
+        }
+        assert(q.exception.isEmpty, q.exception.toString)
+        (spark.table(name).collect().toSeq.map(r =>
+           (r.getLong(0), r.getLong(1),
+            r.get(2).asInstanceOf[Number].doubleValue)),
+         q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum)
+      } finally q.stop()
+    })
+
+  /** The four bucket-pair miners (srp in both state tiers). */
+  private lazy val constMiners: Seq[ConstMiner] = {
+    import graft.streaming.CorpusStreams
+    val tokens = (1 to 40).map(i => s"tok$i").toList
+    val srp = (quantized: Boolean) =>
+      constMiner(if (quantized) "srp_q8" else "srp", 1.0,
+                 id => (1 to 8).map(_ * id.toFloat).toList) { (df, h, cap) =>
+        CorpusStreams.srpPairStream(df, idCol = "id", vecCol = "payload",
+          threshold = 0.9, horizonMinutes = h, quantizedState = quantized,
+          maxBucketResidents = cap)
+      }
+    Seq(
+      constMiner("neardup", 1.0, _ => tokens) { (df, h, cap) =>
+        CorpusStreams.nearDupPairStream(df, idCol = "id", itemsCol = "payload",
+          threshold = 0.8, horizonMinutes = h, maxBucketResidents = cap)
+      },
+      srp(false), srp(true),
+      constMiner("hamming", 0.0, _ => 0x1234L) { (df, h, cap) =>
+        CorpusStreams.hammingPairStream(df, maxHamming = 2, bands = 4,
+          idCol = "id", hashCol = "payload", horizonMinutes = h,
+          maxBucketResidents = cap)
+      },
+      // long enough (19 ≥ q·(d+1) = 9) to reside under its 7 distinct
+      // prefix grams, so the gram path and its ownership rule are the
+      // ones exercised
+      constMiner("editdist", 0.0, _ => "the quick brown fox") { (df, h, cap) =>
+        CorpusStreams.editDistPairStream(df, maxDist = 2, q = 3,
+          idCol = "id", textCol = "payload", horizonMinutes = h,
+          maxBucketResidents = cap)
+      })
+  }
+
   test("windowed hourly counts: streaming (complete mode) equals batch") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String, Double)]
@@ -668,8 +745,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(h1); q.processAllAvailable()
       input.addData(h2); q.processAllAvailable()
-      val streamed = spark.table("neardup_stream")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val out = spark.table("neardup_stream").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(streamed == batch,
         s"stream-only=${streamed.diff(batch)} batch-only=${batch.diff(streamed)}")
     } finally q.stop()
@@ -892,8 +971,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(h1); q.processAllAvailable()
       input.addData(h2); q.processAllAvailable()
-      val streamed = spark.table("editdist_stream")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val out = spark.table("editdist_stream").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batch,
         s"stream-only=${streamed.diff(batch)} batch-only=${batch.diff(streamed)}")
     } finally q.stop()
@@ -945,8 +1026,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(rows.map { case (id, txt) => (id, ts(id.toInt), txt) })
       q.processAllAvailable()
-      val streamed = spark.table("editdist_nonbmp")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val out = spark.table("editdist_nonbmp").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batch,
         s"stream-only=${streamed.diff(batch)} batch-only=${batch.diff(streamed)}")
     } finally q.stop()
@@ -998,8 +1081,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(h1); q.processAllAvailable()
       input.addData(h2); q.processAllAvailable()
-      val streamed = spark.table("hamming_stream")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val out = spark.table("hamming_stream").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batch,
         s"stream-only=${streamed.diff(batch).take(5)} " +
         s"batch-only=${batch.diff(streamed).take(5)}")
@@ -1426,28 +1511,16 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
 
   test("nearDupPairStream: docs farther apart than the horizon never pair, " +
        "and each pair is emitted exactly once") {
-    import graft.streaming.CorpusStreams
-    implicit val sqlCtx = spark.sqlContext
-    val items = (1 to 40).map(i => s"tok$i").toList
-    val input = MemoryStream[(Long, Timestamp, List[String])]
-    val df = input.toDF().toDF("doc_id", "ts", "items")
-    val q = CorpusStreams
-      .nearDupPairStream(df, threshold = 0.8, horizonMinutes = 30)
-      .writeStream.format("memory").queryName("neardup_horizon")
-      .outputMode("append").start()
-    try {
-      // identical docs 10 min apart: ONE pair row despite colliding in all
-      // 64 bands (first-colliding-band ownership dedups emission)
-      input.addData(Seq((1L, ts(0), items), (2L, ts(10), items)))
-      q.processAllAvailable()
-      // identical doc 100 min after doc 2: beyond the 30-min horizon of
-      // both residents — no new pair
-      input.addData(Seq((3L, ts(110), items)))
-      q.processAllAvailable()
-      val got = spark.table("neardup_horizon")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(got.toSeq == Seq((1L, 2L, 1.0)), got.mkString(","))
-    } finally q.stop()
+    // every bucket-pair miner: identical payloads 10 min apart give ONE
+    // pair row despite colliding in every bucket (the ownership rule
+    // dedups emission); an identical row 100 min after the second, in a
+    // later micro-batch, is beyond the 30-min horizon of both residents
+    // — no new pair
+    for (m <- constMiners) {
+      val (got, _) = m.run(Seq(Seq((1L, ts(0)), (2L, ts(10))),
+                               Seq((3L, ts(110)))), 30, Int.MaxValue)
+      assert(got == Seq((1L, 2L, m.same)), s"${m.label}: ${got.mkString(",")}")
+    }
   }
 
   test("srpPairStream: stream pairs equal batch srpPairs on the augmented " +
@@ -1487,8 +1560,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(h1); q.processAllAvailable()
       input.addData(h2); q.processAllAvailable()
-      val streamed = spark.table("srp_stream")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val out = spark.table("srp_stream").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(streamed == batch,
         s"stream-only=${streamed.diff(batch)} batch-only=${batch.diff(streamed)}")
     } finally q.stop()
@@ -1540,8 +1615,10 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
     try {
       input.addData(h1); q.processAllAvailable()
       input.addData(h2); q.processAllAvailable()
-      val streamed = spark.table("srp_stream_q8")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val out = spark.table("srp_stream_q8").collect()
+      assertEachPairOnce(out)
+      val streamed =
+        out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(streamed == expected,
         s"stream-only=${streamed.diff(expected)} " +
         s"batch-only=${expected.diff(streamed)}")
@@ -1972,35 +2049,13 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
   test("srpPairStream: vectors beyond the horizon never pair, and a pair " +
        "colliding in every band is emitted exactly once — both state " +
        "tiers (exact and quantized)") {
-    import graft.streaming.CorpusStreams
-    implicit val sqlCtx = spark.sqlContext
-    val v = (1 to 16).map(_.toFloat / 16f).toList
-    // the eviction/ownership logic is duplicated between update and
-    // updateQ, so both tiers get the identical pin
-    for (quantized <- Seq(false, true)) {
-      val input = MemoryStream[(Long, Timestamp, List[Float])]
-      val df = input.toDF().toDF("vec_id", "ts", "embedding")
-      val name = if (quantized) "srp_horizon_q8" else "srp_horizon"
-      val q = CorpusStreams
-        .srpPairStream(df, threshold = 0.9, horizonMinutes = 30,
-                       quantizedState = quantized)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        // identical vectors 10 min apart: cos = 1 (q8 of identical
-        // vectors is identical ⇒ q8 cosine 1 too), colliding in ALL 40
-        // bands — first-colliding-band ownership must yield ONE pair row
-        input.addData(Seq((1L, ts(0), v), (2L, ts(10), v)))
-        q.processAllAvailable()
-        // identical vector 100 min later: beyond the 30-min horizon of
-        // both residents — no new pair
-        input.addData(Seq((3L, ts(110), v)))
-        q.processAllAvailable()
-        val got = spark.table(name)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        assert(got.toSeq == Seq((1L, 2L, 1.0)),
-          s"quantized=$quantized: ${got.mkString(",")}")
-      } finally q.stop()
+    // the same pin as the nearDupPairStream horizon test, with all three
+    // rows in ONE micro-batch: no watermark has aged the residents yet,
+    // so the explicit |Δts| ≤ horizon check alone keeps row 3 unpaired
+    for (m <- constMiners) {
+      val (got, _) = m.run(Seq(Seq((1L, ts(0)), (2L, ts(10)), (3L, ts(110)))),
+                           30, Int.MaxValue)
+      assert(got == Seq((1L, 2L, m.same)), s"${m.label}: ${got.mkString(",")}")
     }
   }
 
@@ -2041,109 +2096,74 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
   test("srpPairStream hot-bucket cap: adversarial same-bucket input keeps " +
        "state bounded with deterministic eviction markers; a non-binding " +
        "cap changes nothing — both state tiers") {
-    import graft.streaming.CorpusStreams
-    implicit val sqlCtx = spark.sqlContext
-    // every vector is a positive scaling of one direction: identical SRP
-    // signatures in ALL 40 bands (the degenerate hot bucket), cosine 1.0
-    val base = (1 to 8).map(_.toFloat).toList
-    val rows = (1 to 60).map(i => (i.toLong, ts(5), base.map(_ * i))).toList
-    def run(cap: Int, quantized: Boolean): (Set[(Long, Long)], Set[Long], Long) = {
-      val input = MemoryStream[(Long, Timestamp, List[Float])]
-      val name = s"srp_cap_${cap}_$quantized"
-      val q = CorpusStreams
-        .srpPairStream(input.toDF().toDF("vec_id", "ts", "embedding"),
-                       threshold = 0.9, horizonMinutes = 60,
-                       quantizedState = quantized, maxBucketResidents = cap)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        input.addData(rows); q.processAllAvailable()
-        val out = spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        (out.filter(_._2 != -1L).toSet, out.filter(_._2 == -1L).map(_._1).toSet,
-         q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum)
-      } finally q.stop()
-    }
-    for (quantized <- Seq(false, true)) {
-      val (pairsFree, markersFree, bytesFree) = run(Int.MaxValue, quantized)
-      assert(markersFree.isEmpty, "uncapped run must emit no markers")
-      val (pairsCap, markersCap, bytesCap) = run(8, quantized)
+    // every miner, srp in both tiers: 60 rows at one event time, all in
+    // every bucket they key to
+    val rows = (1 to 60).map(i => (i.toLong, ts(5)))
+    for (m <- constMiners) {
+      def run(cap: Int): (Set[(Long, Long)], Set[Long], Long) = {
+        val (out, bytes) = m.run(Seq(rows), 60, cap)
+        (out.filter(_._2 != -1L).map(p => (p._1, p._2)).toSet,
+         out.filter(_._2 == -1L).map(_._1).toSet, bytes)
+      }
+      val (pairsFree, markersFree, bytesFree) = run(Int.MaxValue)
+      assert(markersFree.isEmpty, s"${m.label}: uncapped run must emit no markers")
+      val (pairsCap, markersCap, bytesCap) = run(8)
       // deterministic oldest-first eviction: same ts ⇒ smallest id goes;
       // arrivals 9..60 each push out one resident ⇒ ids 1..52 marked
       assert(markersCap == (1L to 52L).toSet,
-        s"quantized=$quantized markers=$markersCap")
+        s"${m.label} markers=$markersCap")
       // a capped bucket pairs an arrival only with its 8 retained
       // residents — every emitted pair spans at most 8 arrival ranks,
       // and is a subset of the uncapped pair set (the recall trade)
-      assert(pairsCap.nonEmpty && pairsCap.subsetOf(pairsFree))
+      assert(pairsCap.nonEmpty && pairsCap.subsetOf(pairsFree), m.label)
       assert(pairsCap.forall { case (a, b) => b - a <= 8 },
-        s"quantized=$quantized: ${pairsCap.filter(p => p._2 - p._1 > 8)}")
-      // the point of the cap: state is bounded by cap·bands, not horizon
+        s"${m.label}: ${pairsCap.filter(p => p._2 - p._1 > 8)}")
+      // the point of the cap: state is bounded by cap·buckets, not horizon
       assert(bytesCap < bytesFree,
-        s"quantized=$quantized: capped state $bytesCap !< $bytesFree")
+        s"${m.label}: capped state $bytesCap !< $bytesFree")
       // non-binding cap: byte-for-byte the uncapped output, no markers
-      val (pairsLoose, markersLoose, _) = run(100, quantized)
-      assert(pairsLoose == pairsFree && markersLoose.isEmpty)
+      val (pairsLoose, markersLoose, _) = run(100)
+      assert(pairsLoose == pairsFree && markersLoose.isEmpty, m.label)
     }
   }
 
   test("nearDupPairStream hot-bucket cap: constant shingle sets bound " +
        "state with markers; pairs only span retained residents") {
-    import graft.streaming.CorpusStreams
-    implicit val sqlCtx = spark.sqlContext
-    val items = List("alpha", "beta", "gamma")
-    val rows = (1 to 30).map(i => (i.toLong, ts(5), items)).toList
-    val input = MemoryStream[(Long, Timestamp, List[String])]
-    val q = CorpusStreams
-      .nearDupPairStream(input.toDF().toDF("doc_id", "ts", "items"),
-                         threshold = 0.8, horizonMinutes = 60,
-                         maxBucketResidents = 5)
-      .writeStream.format("memory").queryName("neardup_cap")
-      .outputMode("append").start()
-    try {
-      input.addData(rows); q.processAllAvailable()
-      val out = spark.table("neardup_cap").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // every miner: 30 constant-payload rows at one event time, cap 5
+    val rows = (1 to 30).map(i => (i.toLong, ts(5)))
+    for (m <- constMiners) {
+      val (out, _) = m.run(Seq(rows), 60, 5)
       val markers = out.filter(_._2 == -1L)
       val pairs = out.filterNot(_._2 == -1L)
-      assert(markers.forall(_._3 == -1.0))
+      assert(markers.forall(_._3 == -1.0), m.label)
       assert(markers.map(_._1).toSet == (1L to 25L).toSet,
-        s"markers=${markers.map(_._1).toSet}")
-      // identical docs: every retained-resident pair verifies at 1.0, and
-      // no pair reaches past the 5 retained residents
-      assert(pairs.nonEmpty && pairs.forall(_._3 == 1.0))
+        s"${m.label} markers=${markers.map(_._1).toSet}")
+      // identical payloads: every retained-resident pair verifies at the
+      // identical-pair score, and no pair reaches past the 5 retained
+      // residents
+      assert(pairs.nonEmpty && pairs.forall(_._3 == m.same), m.label)
       assert(pairs.forall { case (a, b, _) => b - a <= 5 },
-        pairs.filter(p => p._2 - p._1 > 5).mkString(","))
-    } finally q.stop()
+        s"${m.label}: " + pairs.filter(p => p._2 - p._1 > 5).mkString(","))
+    }
   }
 
   test("hot-bucket eviction removes exactly one resident: duplicate-id " +
        "redelivery at cap=1 cannot empty a bucket and kill the query") {
-    import graft.streaming.CorpusStreams
-    implicit val sqlCtx = spark.sqlContext
-    // at-least-once shape: the same vec_id delivered twice, plus a third
-    // vector in the same (degenerate) bucket. An id-keyed eviction filter
-    // would remove BOTH duplicates at once, empty the bucket, and throw
-    // on the empty tsMs max — a checkpoint-replayed poison pill.
-    val v = (1 to 8).map(_.toFloat).toList
-    val rows = Seq((1L, ts(0), v), (1L, ts(0), v),
-                   (2L, ts(1), v.map(_ * 2f)), (3L, ts(2), v.map(_ * 3f)))
-    val input = MemoryStream[(Long, Timestamp, List[Float])]
-    val q = CorpusStreams
-      .srpPairStream(input.toDF().toDF("vec_id", "ts", "embedding"),
-                     threshold = 0.9, horizonMinutes = 60,
-                     maxBucketResidents = 1)
-      .writeStream.format("memory").queryName("srp_dup_evict")
-      .outputMode("append").start()
-    try {
-      input.addData(rows)
-      q.processAllAvailable() // must not throw
-      val out = spark.table("srp_dup_evict").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // at-least-once shape, for every miner: the same id delivered twice,
+    // plus two more rows in the same (degenerate) buckets. An id-keyed
+    // eviction filter would remove BOTH duplicates at once, empty the
+    // bucket, and throw on the empty tsMs max — a checkpoint-replayed
+    // poison pill. `run` rethrows a failed query.
+    for (m <- constMiners) {
+      val (out, _) = m.run(Seq(Seq((1L, ts(0)), (1L, ts(0)),
+                                   (2L, ts(1)), (3L, ts(2)))), 60, 1)
       // markers flowed (cap 1 forces evictions); the stream survived them
-      assert(out.count(_._2 == -1L) > 0, s"expected eviction markers: $out")
-      assert(q.exception.isEmpty, q.exception.toString)
-    } finally q.stop()
+      assert(out.count(_._2 == -1L) > 0, s"${m.label}: expected markers: $out")
+      // the duplicate's eviction took ONE instance of id 1, so the other
+      // still pairs with 2; 3 then meets only 2, the one resident left
+      assert(out.filter(_._2 != -1L).map(p => (p._1, p._2)).toSet ==
+               Set((1L, 2L), (2L, 3L)), s"${m.label}: $out")
+    }
   }
 
   test("ivfServeStream drops a zero-norm query instead of dying: the " +
