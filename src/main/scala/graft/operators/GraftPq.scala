@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   StructField, StructType}
@@ -148,68 +148,65 @@ object GraftPq {
                                    carryCols.map(col): _*), cb, "v")
       .select(col("n_id") +: col("codes") +: carryCols.map(col): _*)
 
-  /** ADC serve over an encoded collection: per-query LUT build (one
-    * row-level fold against the broadcast codebook, bound ONCE via the
-    * single-element-array lambda so projection collapse can't rebind
-    * it per LUT slot — the r10 winnowing lesson), `graft_pq_adc`
-    * candidate scoring over PACKED code bytes, `graft_topk` cut at
-    * k·rerankFactor, exact rerank through the original vectors.
-    * `collection` supplies the rerank vectors and must carry the same
-    * ids the encoding was built from.
-    */
-  /** Scatter (sub_id, code) entries into a dense LUT array at position
-    * s·ksub + code (bind-once lambda — see [[pqTopKWith]]); holes (codes
-    * Lloyd dropped) fill 0 and are unreachable — every stored code
-    * exists in the codebook it was assigned from.
-    */
-  private def scatter(entries: String, lutLen: Int): String =
-    s"""transform(array(map_from_entries($entries)), lm ->
-       |  transform(sequence(0, ${lutLen - 1}),
-       |            i -> coalesce(element_at(lm, i), 0D)))[0]""".stripMargin
+  /** The query-independent codeword-norm LUT (Σ cv² at position
+    * s·ksub + code; holes — codes Lloyd dropped — are 0 and unreachable,
+    * every stored code exists in the codebook it was assigned from) as
+    * ONE plan literal, computed on the driver from [[collectCodebook]]. */
+  private[graft] def normLut(cb: PqCodebook): Column = {
+    val lut = new Array[Double](cb.m * cb.ksub)
+    for ((s, code, cv) <- codewords(collectCodebook(cb)))
+      lut(s * cb.ksub + code) = cv.foldLeft(0.0)((acc, x) => acc + x * x)
+    typedLit(lut.toSeq)
+  }
 
-  /** ONE broadcast row holding the query-independent codeword-norm LUT
-    * (`__nlut`). */
-  private[graft] def normLutRow(cb: PqCodebook): DataFrame =
-    broadcast(cb.codebook
-      .agg(collect_list(struct(col("sub_id"), col("code"),
-        expr("aggregate(cv, 0D, (acc, x) -> acc + x * x)").as("nn")))
-        .as("__cbn"))
-      .select(expr(scatter(
-        s"transform(__cbn, c -> struct(c.sub_id * ${cb.ksub} + c.code, c.nn))",
-        cb.m * cb.ksub)).as("__nlut")))
+  /** The (sub_id, code, cv) rows of a collected codebook. */
+  private def codewords(cc: CollectedCodebook)
+      : IndexedSeq[(Int, Int, Seq[Double])] =
+    for (s <- 0 until cc.m; (code, j) <- cc.ids(s).zipWithIndex)
+      yield (s, code, cc.flat(s).slice(j * cc.dsub, (j + 1) * cc.dsub))
 
-  /** Per-query ADC state: (q_id [, carry…], __qn exact grid norm, __lut
-    * dense dot LUT) — one row-level fold against the broadcast codebook.
-    * `carry` columns ride through untouched (the streaming serve twin
-    * carries its event-time and raw query vector). */
+  /** The per-query ADC state as a projection of `q`: (q_id [, carry…],
+    * __qn exact grid norm, __lut dense dot LUT at position s·ksub + code).
+    * The codebook rides as a literal from [[collectCodebook]], so the LUT
+    * is computed on whatever rows carry `qv` — a probe row, a query row,
+    * a stream row — with no join and no broadcast. `carry` columns ride
+    * through untouched (the streaming serve twin carries its event time
+    * and raw query vector; the IVF serves carry the probed cell). */
   private[graft] def qlutFrame(cb: PqCodebook, q: DataFrame,
                                carry: Seq[String] = Nil): DataFrame = {
-    val cbRow = broadcast(cb.codebook
-      .agg(collect_list(struct(col("sub_id"), col("code"), col("cv")))
-        .as("__cb")))
+    val cc = collectCodebook(cb)
+    val entries = codewords(cc).map { case (s, code, cv) => Row(s, code, cv) }
+    val d = cc.m * cc.dsub
     // dimension ENFORCED in-plan (the trainPq/encodeFolded convention): a
     // query whose size(qv) ≠ m·dsub would otherwise null-pad through
     // zip_with, the null LUT slots would coalesce to 0, and the ADC cut
     // would silently rank with a partially zeroed table (ADVICE r11) —
     // fail loudly on first touch instead
-    q.crossJoin(cbRow)
+    q.withColumn("__cb",
+        GraftSimilarity.literalOf(entries, ArrayType(CodebookRow)))
       .withColumn("__qg", expr(
-        s"""CASE WHEN size(qv) = ${cb.m} * size(element_at(__cb, 1).cv)
+        s"""CASE WHEN size(qv) = $d
            |THEN transform(qv, x -> round(x * $Grid))
            |ELSE cast(assert_true(false, concat('pq serve: query dim ',
-           |       cast(size(qv) AS string), ' != codebook dim ',
-           |       cast(${cb.m} * size(element_at(__cb, 1).cv) AS string)))
+           |       cast(size(qv) AS string), ' != codebook dim $d'))
            |     AS array<double>) END""".stripMargin))
       .withColumn("__qn",
         expr("aggregate(__qg, 0D, (acc, x) -> acc + x * x)"))
-      .select(col("q_id") +: carry.map(col) :+ col("__qn") :+ expr(scatter(
-        s"""transform(__cb, c -> struct(c.sub_id * ${cb.ksub} + c.code,
-           |  aggregate(zip_with(slice(__qg,
-           |                           c.sub_id * (size(__qg) div ${cb.m}) + 1,
-           |                           size(__qg) div ${cb.m}),
-           |                     c.cv, (a, b) -> a * b),
-           |            0D, (acc, x) -> acc + x)))""".stripMargin,
-        cb.m * cb.ksub)).as("__lut"): _*)
+      // scatter (s·ksub + code → dot) into the dense LUT; the
+      // single-element-array lambda binds the entry map ONCE, so
+      // projection collapse cannot rebuild it per LUT slot (the r10
+      // winnowing lesson); holes fill 0 and are unreachable
+      .select(col("q_id") +: carry.map(col) :+ col("__qn") :+ expr(
+        s"""transform(array(map_from_entries(
+           |  transform(__cb, c -> struct(c.sub_id * ${cb.ksub} + c.code,
+           |    aggregate(zip_with(slice(__qg,
+           |                             c.sub_id * ${cc.dsub} + 1,
+           |                             ${cc.dsub}),
+           |                       c.cv, (a, b) -> a * b),
+           |              0D, (acc, x) -> acc + x))))), lm ->
+           |  transform(sequence(0, ${cb.m * cb.ksub - 1}),
+           |            i -> coalesce(element_at(lm, i), 0D)))[0]""".stripMargin)
+        .as("__lut"): _*)
   }
 
   /** Stage 1 + 2 of every PQ serve: ADC-score (q_id, n_id, __cw, __lut,
@@ -222,7 +219,7 @@ object GraftPq {
                              e: DataFrame, q: DataFrame,
                              k: Int, kk: Int): DataFrame = {
     val cand = pairs
-      .crossJoin(normLutRow(cb))
+      .withColumn("__nlut", normLut(cb))
       .select(col("q_id"), col("n_id"), expr(
         """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
           |ELSE graft_pq_adc(__cw, __lut)
@@ -239,6 +236,13 @@ object GraftPq {
                   GraftSimilarity.cosine("qv", "v").as("c")), k)
   }
 
+  /** ADC serve over an encoded collection: the per-query LUT
+    * ([[qlutFrame]]) and the codeword-norm LUT ([[normLut]]) against the
+    * literal codebook, `graft_pq_adc` candidate scoring over PACKED code
+    * bytes, `graft_topk` cut at k·rerankFactor, exact rerank through the
+    * original vectors. `collection` supplies the rerank vectors and must
+    * carry the same ids the encoding was built from.
+    */
   def pqTopKWith(cb: PqCodebook, encoded: DataFrame, collection: DataFrame,
                  queries: DataFrame, k: Int, rerankFactor: Int = 4,
                  idCol: String = "vec_id", vecCol: String = "v",
@@ -295,8 +299,7 @@ object GraftPq {
     val probes = GraftSimilarity.probeCells(q, index.centroids, nprobe,
                                             Seq("q_id", "qv"))
     // (q_id, c_id, LUT) — |Q|·nprobe rows, broadcastable at any N
-    val probeLut = broadcast(probes.select(col("q_id"), col("c_id"))
-      .join(qlutFrame(cb, q), "q_id"))
+    val probeLut = broadcast(qlutFrame(cb, probes, carry = Seq("c_id")))
     val pairs = encodedWithCells
       .select(col("n_id"), col("c_id"),
               expr("graft_pq_pack(codes)").as("__cw"))
@@ -421,11 +424,27 @@ object GraftPq {
   private val StoredCodebook = StructType(CodebookRow ++ Seq(
     StructField("m", IntegerType), StructField("ksub", IntegerType)))
 
+  /** Codebook rows already read, keyed by the qualified (path, length,
+    * modification time) of each of their files. A written codebook is
+    * immutable, so a repeat read of the same files is a driver lookup; a
+    * rewritten one lists different statuses and reads afresh. Holds the
+    * last [[CodebookMemoSize]] codebooks (m·ksub rows each). */
+  private val CodebookMemoSize = 16
+  private val codebookMemo =
+    new java.util.LinkedHashMap[Seq[(String, Long, Long)], Array[Row]](
+        CodebookMemoSize, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[(String, Long, Long)], Array[Row]])
+          : Boolean = size() > CodebookMemoSize
+    }
+
   /** The codebook at `$dir/pq_codebook`, or None when there is none. One
     * directory listing (it is written by a plain `write`, outside any
-    * manifest) and ONE bounded collect of its m·ksub rows under the fixed
-    * schema — no inference job — into a LOCAL relation, so
-    * [[collectCodebook]] over it launches no job either. */
+    * manifest); the first read of a set of files is ONE bounded collect
+    * of its m·ksub rows under the fixed schema — no inference job — and
+    * later reads of the same files hit the driver memo. Either way the
+    * codebook is a LOCAL relation, so [[collectCodebook]] over it
+    * launches no job. */
   def readPqCodebookIfAny(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Option[PqCodebook] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/pq_codebook")
@@ -435,8 +454,17 @@ object GraftPq {
                                       !f.getPath.getName.startsWith("_") &&
                                       !f.getPath.getName.startsWith("."))
       catch { case _: java.io.FileNotFoundException => return None }
-    val rows = org.apache.spark.sql.GraftSqlBridge.parquetScan(
-      spark, parts.toSeq, StoredCodebook, None).collect()
+    val key = parts.toSeq
+      .map(f => (fs.makeQualified(f.getPath).toString, f.getLen,
+                 f.getModificationTime))
+      .sorted
+    val memo = codebookMemo.synchronized(Option(codebookMemo.get(key)))
+    val rows = memo.getOrElse {
+      val read = org.apache.spark.sql.GraftSqlBridge.parquetScan(
+        spark, parts.toSeq, StoredCodebook, None).collect()
+      if (read.nonEmpty) codebookMemo.synchronized(codebookMemo.put(key, read))
+      read
+    }
     require(rows.nonEmpty, s"readPqCodebook: empty codebook at $dir")
     Some(PqCodebook(
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), StoredCodebook)
@@ -494,18 +522,16 @@ object GraftPq {
       "ivfPqTopKWithCw: index has no cw column — write the store with " +
       "IvfObjectStore.create(…, pq = Some(cb)), or compact a pre-PQ " +
       "store with its codebook present to migrate in place")
-    // persist the minibatch projection: the PQ serve evaluates it at
-    // least four times — the qlutFrame join side, the survivor-fetch
-    // collect, the |Q| count, and the final rerank broadcast — and the
-    // caller's derivation is often a corpus join (guide §1.2 fewer
-    // passes; the ivfTopKQuant/qBatch precedent). Lazy; streaming
-    // frames pass through untouched.
-    val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    if (!q.isStreaming) q.persist()
-    val probes = GraftSimilarity.probeCells(q, index.centroids, nprobe,
+    // the minibatch is collected once (the ivfTopKQuant precedent): the
+    // survivor-fetch collect, |Q| and the rerank's query vectors read
+    // driver values, and the LUTs are computed on the probe rows, which
+    // already carry qv, against the literal codebook
+    val q = GraftSimilarity.queryBatch(
+      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")),
+      "ivfPqTopKWithCw")
+    val probes = GraftSimilarity.probeCells(q.frame, index.centroids, nprobe,
                                             Seq("q_id", "qv"))
-    val probeLut = broadcast(probes.select(col("q_id"), col("c_id"))
-      .join(qlutFrame(cb, q), "q_id"))
+    val probeLut = broadcast(qlutFrame(cb, probes, carry = Seq("c_id")))
     val kk = k * rerankFactor
     // metadata-filtered PQ serve: the predicate cuts the candidate scan
     // BEFORE the ADC scoring — same placement/pushdown story as
@@ -515,7 +541,7 @@ object GraftPq {
     val cand = scan0.select(col("n_id"), col("c_id"), col("cw"))
       .join(probeLut, "c_id")
       .filter(col("n_id") =!= col("q_id"))
-      .crossJoin(normLutRow(cb))
+      .withColumn("__nlut", normLut(cb))
       .select(col("q_id"), col("n_id"), expr(
         """CASE WHEN isnull(cw) THEN cast(assert_true(false,
           |  'ivfPqTopKWithCw: null cw — mixed-generation cell files;
@@ -532,7 +558,7 @@ object GraftPq {
     // (GraftSimilarity.survivorRerank — the q8 tier's exact stage-2)
     GraftSimilarity.survivorRerank(
       cand, index.assigned.select(col("n_id"), col("v")), q, k,
-      q.count() * kk)
+      q.size * kk)
   }
 
   /** Recall of the PQ tier against exact truth across a rerank-budget
@@ -584,7 +610,7 @@ object GraftPq {
       .select(col("n_id"), expr("graft_pq_pack(codes)").as("__cw"))
       .crossJoin(broadcast(qlutFrame(cb, q)))
       .filter(col("n_id") =!= col("q_id"))
-      .crossJoin(normLutRow(cb))
+      .withColumn("__nlut", normLut(cb))
       .select(col("q_id"), col("n_id"), expr(
         """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
           |ELSE graft_pq_adc(__cw, __lut)

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
 
 /** Reusable approximate-nearest-neighbor search — the library form of the
   * machinery behind the `ann_*` catalog queries. Callers bring a collection
@@ -1052,13 +1053,61 @@ object GraftSimilarity {
     * row-free; the two broadcasts are the same subtree, so ONE exchange
     * computes and ships (ReuseExchange — SimilaritySpec pins the plan).
     * Same convention as [[GraftPca.ProjectLiteralMaxDoubles]]; override
-    * per session with `spark.graft.survivorFetchMaxLiterals`. */
+    * per session with `spark.graft.survivorFetchMaxLiterals`. The same
+    * gate bounds a serve's query minibatch ([[queryBatch]]), whose rows
+    * ride in the plan as literals on every path. */
   val SurvivorFetchMaxLiterals: Long = 1L << 16
 
   private[operators] def survivorFetchGate(
       spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption("spark.graft.survivorFetchMaxLiterals")
       .map(_.toLong).getOrElse(SurvivorFetchMaxLiterals)
+
+  /** A serve's query minibatch on the driver: the rows of ONE bounded
+    * collect and the local relation over them. The serving contract
+    * already bounds the batch (it is the broadcast side of every serve),
+    * so holding it on the driver adds no new bound, and each use after
+    * the collect — probe rows, `|Q|`, the lexical term sets, the
+    * rerank's query vectors — reads driver values instead of
+    * re-evaluating the caller's derivation (often a corpus join). Column
+    * 0 is `q_id`. */
+  private[operators] final case class QueryBatch(frame: DataFrame,
+                                                 rows: Array[Row]) {
+    def size: Long = rows.length.toLong
+
+    /** `q_id` → column `c` of the same query, as one literal map. */
+    def literalBy(c: String): Column = {
+      val i = frame.schema.fieldIndex(c)
+      literalOf(rows.map(r => r.get(0) -> r.get(i)).toMap,
+                MapType(frame.schema(0).dataType, frame.schema(i).dataType))
+    }
+  }
+
+  /** Collect the minibatch `q` (q_id first) once, bounded by
+    * [[survivorFetchGate]]: a batch past it fails loudly, naming the
+    * bound, instead of materializing an unbounded frame on the driver.
+    * A `q` already local (a projection over a local relation) collects
+    * without a Spark job. */
+  private[operators] def queryBatch(q: DataFrame, ctx: String): QueryBatch = {
+    require(!q.isStreaming,
+      s"$ctx: a streaming query frame — serve it through the " +
+      "graft.streaming.CorpusStreams twins")
+    val spark = q.sparkSession
+    val gate = survivorFetchGate(spark)
+    val rows = q.limit((gate + 1L).min(Int.MaxValue).toInt).collect()
+    require(rows.length <= gate,
+      s"$ctx: the query minibatch holds more than $gate rows, the " +
+      "serving bound (spark.graft.survivorFetchMaxLiterals) — split the " +
+      "batch")
+    QueryBatch(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+                                     q.schema), rows)
+  }
+
+  /** A driver-side value as a plan literal of type `dt` (Scala maps,
+    * sequences and rows convert to their Catalyst forms). */
+  private[operators] def literalOf(value: Any, dt: DataType): Column =
+    org.apache.spark.sql.GraftSqlBridge.columnOf(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(value, dt))
 
   /** Stage 2 of every quantized serve (q8 and PQ): exact-rerank the
     * quantized cut's survivors `cand` (q_id, n_id) through the original
@@ -1068,19 +1117,28 @@ object GraftSimilarity {
     * are bit-identical (SimilaritySpec pins it); see
     * [[SurvivorFetchMaxLiterals]] for the trade. */
   private[operators] def survivorRerank(cand: DataFrame, source: DataFrame,
-                                        q: DataFrame, k: Int,
+                                        q: QueryBatch, k: Int,
                                         boundRows: Long): DataFrame = {
     val spark = cand.sparkSession
     if (boundRows <= survivorFetchGate(spark)) {
       // bounded driver materialization buys the literal pushdown: with the
       // store's n_id-sorted cell files, row-group min/max stats prune the
-      // exact-vector read to the pages actually holding survivors
+      // exact-vector read to the pages actually holding survivors. The
+      // pairs and the query vectors ride in the plan as literal maps
+      // (survivor → its queries, query → its vector), so the rerank is a
+      // projection over the fetch with no join and no hashed broadcast.
       val candRows = cand.collect()
-      val pairs = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(candRows: _*), cand.schema))
+      val queriesOf = literalOf(
+        candRows.groupBy(_.get(1))
+          .map { case (n, rs) => n -> rs.map(_.get(0)).toSeq },
+        MapType(cand.schema("n_id").dataType,
+                ArrayType(cand.schema("q_id").dataType)))
       val survivorIds = candRows.map(_.get(1)).distinct.toSeq
       val fetched = source.filter(col("n_id").isin(survivorIds: _*))
-      topK(pairs.join(fetched, "n_id").join(broadcast(q), "q_id")
+      topK(fetched
+             .select(explode(element_at(queriesOf, col("n_id"))).as("q_id"),
+                     col("n_id"), col("v"))
+             .withColumn("qv", element_at(q.literalBy("qv"), col("q_id")))
              .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
     } else {
       // distributed fetch: broadcast(cand) twice — identical subtrees, so
@@ -1088,7 +1146,8 @@ object GraftSimilarity {
       // broadcast; the semi join filters the vector read without any
       // driver round-trip or plan-literal growth
       val fetched = source.join(broadcast(cand), Seq("n_id"), "left_semi")
-      topK(broadcast(cand).join(fetched, "n_id").join(broadcast(q), "q_id")
+      topK(broadcast(cand).join(fetched, "n_id")
+             .join(broadcast(q.frame), "q_id")
              .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
     }
   }
@@ -1220,15 +1279,13 @@ object GraftSimilarity {
       s"the $quantCol layout (or compact an older store to migrate it), " +
       s"or wrap an in-memory index with $augmentHint")
     graft.GraftSession.ensureExtensions(queries.sparkSession)
-    // persist the (serving-contract-bounded) minibatch projection: a
-    // quantized serve evaluates it at least three times — the |Q| count
-    // below, the survivor-fetch collect of `cand` (whose probe side
-    // embeds it), and the final rerank plan's broadcast(q) — and the
-    // caller's derivation is often a corpus join (guide §1.2 fewer
-    // passes; r17 ProbePhases). Lazy; streaming frames pass through.
-    val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    if (!q.isStreaming) q.persist()
-    val probes = probeCells(q, index.centroids, nprobe, Seq("q_id", "qv"))
+    // the minibatch is collected once: the survivor-fetch collect, |Q| and
+    // the rerank's query vectors then read driver values, not the
+    // caller's derivation again
+    val q = queryBatch(
+      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")), label)
+    val probes = probeCells(q.frame, index.centroids, nprobe,
+                            Seq("q_id", "qv"))
     val pq = broadcast(probes.withColumn("__qq", expr(s"$encodeFn(qv)")))
     val kk = k * rerankFactor
     // stage 1: integer candidate scoring over (n_id, c_id, quant) — column
@@ -1253,10 +1310,9 @@ object GraftSimilarity {
       .select(col("q_id"), explode(col("tk.id")).as("n_id"))
     // stage 2, gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
     // row-group-pruned fetch below the gate, broadcast-join fetch past it
-    // (see survivorRerank / SurvivorFetchMaxLiterals). |Q| costs one count
-    // over the (bounded by the serving contract) query batch.
+    // (see survivorRerank / SurvivorFetchMaxLiterals)
     survivorRerank(cand, index.assigned.select(col("n_id"), col("v")),
-                   q, k, q.count() * kk)
+                   q, k, q.size * kk)
   }
 
   /** Fixed-point grid for [[kmeansRefine]]'s centroid accumulation:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import GraftSimilarity.IvfIndex
+import GraftSimilarity.{IvfIndex, QueryBatch}
 
 /** Hybrid lexical + semantic retrieval with reciprocal-rank fusion —
   * the standard RAG serving recipe (Cormack/Clarke/Büttcher's RRF,
@@ -29,11 +29,17 @@ import GraftSimilarity.IvfIndex
   *     output equals [[hybridTopK]]'s exactly (HybridSpec pins it).
   *
   * Scale shape — each leg is the already-audited retrieval kernel:
+  *   - the query minibatch is collected ONCE ([[qBatch]], bounded by
+  *     the serving contract) and every query-bounded side rides in the
+  *     legs' plans as a driver value — literal arrays, maps and `IN`
+  *     sets — so a serve builds no hashed broadcast keyed on a term and
+  *     persists nothing.
   *   - lexical: [[TextRank.bm25Scores]] — THE single BM25 kernel (also
   *     behind [[TextRank.bm25TopK]]; one formula, one home, r10's dual
-  *     kernels consolidated): corpus token stream gated by a broadcast
-  *     semi-join on the query-term set, per-(doc, term) stats shared
-  *     across queries, df/corpus stats as skinny broadcast aggregates.
+  *     kernels consolidated): corpus token stream gated by a literal
+  *     `IN` set of the query terms, per-(doc, term) stats shared across
+  *     queries, df/corpus stats one bounded collect folded in as
+  *     literals.
   *   - semantic: broadcast query block → pure map over the embedding
   *     scan (brute tier), or broadcast probe rows → DPP-pruned cell scan
   *     (served tier); either way `graft_topk`'s k-slot heap moves only
@@ -54,18 +60,17 @@ import GraftSimilarity.IvfIndex
 object HybridRetrieval {
 
   /** Lexical leg: per-query BM25 top-`kCand` ranks via the shared
-    * [[TextRank.bm25Scores]] kernel. The query's own document is
-    * excluded AFTER the aggregation — sound because groups are atomic in
-    * (q_id, doc_id). The per-query kCand cut rides the mergeable
-    * `graft_topk` heap (long scores < 2^53 are exact as doubles);
-    * position in the heap output IS the rank.
+    * [[TextRank.bm25Scores]] kernel, over the minibatch's (q_id, __qtk)
+    * rows. The query's own document is excluded AFTER the aggregation —
+    * sound because groups are atomic in (q_id, doc_id). The per-query
+    * kCand cut rides the mergeable `graft_topk` heap (long scores < 2^53
+    * are exact as doubles); position in the heap output IS the rank.
     */
-  private def lexRanks(docs: DataFrame, q: DataFrame, kCand: Int,
+  private def lexRanks(docs: DataFrame, q: QueryBatch, kCand: Int,
                        idCol: String, textCol: String,
-                       k1: Double, b: Double): DataFrame = {
-    val qTerms = q.select(col("q_id"),
-                          explode(array_distinct(col("__qtk"))).as("__term"))
-    TextRank.bm25Scores(docs, qTerms, idCol, textCol, k1, b)
+                       k1: Double, b: Double): DataFrame =
+    TextRank.bm25Scores(docs, termQueries(q), q.frame.schema("q_id").dataType,
+                        idCol, textCol, k1, b)
       .filter(col("doc_id") =!= col("q_id"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk(cast(__score AS double), doc_id, $kCand)")
@@ -73,6 +78,15 @@ object HybridRetrieval {
       .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
       .select(col("q_id"), col("s.id").as("doc_id"),
               (col("p") + 1).cast("long").as("lex_rank"))
+
+  /** Each distinct non-null term of the minibatch's `__qtk` arrays → the
+    * ids of the queries holding it (a driver-side value). */
+  private def termQueries(q: QueryBatch): Map[String, Seq[Any]] = {
+    val tk = q.frame.schema.fieldIndex("__qtk")
+    q.rows.toSeq
+      .flatMap(r => Option(r.getSeq[String](tk)).toSeq
+        .flatMap(_.filter(_ != null).distinct).map(_ -> r.get(0)))
+      .groupMap(_._1)(_._2)
   }
 
   /** Fuse two per-query rank lists (≤ kCand rows each) by reciprocal
@@ -104,24 +118,22 @@ object HybridRetrieval {
   }
 
   /** Project the caller's query minibatch to the canonical (q_id, __qtk,
-    * __qv) frame and PERSIST it: the minibatch is small by the serving
-    * contract but its DERIVATION is the caller's — often a join against
-    * the corpus (the bench rows derive it docs⋈embeddings) — and one
-    * fused serve evaluates the subtree repeatedly: the term-set /
-    * survivor collects and the |Q| count are driver actions, then the
-    * final plan evaluates it again in each leg (r17 ProbePhases measured
-    * 3-5 evaluations, ~0.12 s each, per serve at sf0.1 — guide §1.2,
-    * fewer passes). Persist is lazy (first action materializes, the rest
-    * read cache) and scale-safe (the serving contract bounds |Q|);
-    * streaming frames pass through untouched — persist throws on them.
+    * __qv) frame and collect it ONCE ([[GraftSimilarity.queryBatch]]):
+    * the minibatch is small by the serving contract but its DERIVATION
+    * is the caller's — often a join against the corpus (the bench rows
+    * derive it docs⋈embeddings) — and one fused serve reads it in every
+    * leg. After the collect the lexical term sets, |Q| and the rerank's
+    * query vectors are driver values, and the legs' plans read a local
+    * relation: nothing is persisted, nothing re-evaluates the caller's
+    * derivation.
     */
   private def qBatch(queries: DataFrame, qIdCol: String, qTermsCol: String,
-                     qVecCol: String, castId: Boolean = false): DataFrame = {
+                     qVecCol: String, ctx: String,
+                     castId: Boolean = false): QueryBatch = {
     val id = if (castId) col(qIdCol).cast("long") else col(qIdCol)
-    val q = queries.select(id.as("q_id"), col(qTermsCol).as("__qtk"),
-                           col(qVecCol).as("__qv"))
-    if (!q.isStreaming) q.persist()
-    q
+    GraftSimilarity.queryBatch(
+      queries.select(id.as("q_id"), col(qTermsCol).as("__qtk"),
+                     col(qVecCol).as("__qv")), ctx)
   }
 
   /** Fused top-`k` per query, exact-cosine semantic leg. `queries`
@@ -141,9 +153,9 @@ object HybridRetrieval {
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     requireParams(k, kCand, rrfK, "hybridTopK")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopK")
     val sem = GraftSimilarity.bruteForceTopK(
-        vecs, q.select(col("q_id"), col("__qv").as("qv")), kCand,
+        vecs, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
         idCol = vecIdCol, vecCol = vecCol)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
@@ -171,7 +183,7 @@ object HybridRetrieval {
     requireParams(k, kCand, rrfK, "hybridTopKWith")
     require(nprobe >= 1, s"hybridTopKWith: nprobe must be >= 1, got $nprobe")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWith")
     // METADATA-FILTERED fusion: `where` filters the SEMANTIC leg's
     // candidate population (the predicate lives in the index — see
     // ivfTopKWith). The LEXICAL leg's population is the `docs` frame the
@@ -180,8 +192,8 @@ object HybridRetrieval {
     // correct pre-filter statistic; a post-hoc doc filter would keep the
     // unfiltered corpus's term weights).
     val sem = GraftSimilarity.ivfTopKWith(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand, nprobe,
-        where = where)
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
+        nprobe, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
@@ -211,9 +223,9 @@ object HybridRetrieval {
     require(rerankFactor >= 1,
       s"hybridTopKWithQ8: rerankFactor must be >= 1, got $rerankFactor")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithQ8")
     val sem = GraftSimilarity.ivfTopKWithQ8(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
         nprobe, rerankFactor, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
@@ -244,9 +256,9 @@ object HybridRetrieval {
     require(rerankFactor >= 1,
       s"hybridTopKWithQ4: rerankFactor must be >= 1, got $rerankFactor")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithQ4")
     val sem = GraftSimilarity.ivfTopKWithQ4(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
         nprobe, rerankFactor, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
@@ -279,9 +291,9 @@ object HybridRetrieval {
     require(rerankFactor >= 1,
       s"hybridTopKWithB1: rerankFactor must be >= 1, got $rerankFactor")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithB1")
     val sem = GraftSimilarity.ivfTopKWithB1(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
         nprobe, rerankFactor, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
@@ -315,10 +327,10 @@ object HybridRetrieval {
     require(rerankFactor >= 1,
       s"hybridTopKWithPq: rerankFactor must be >= 1, got $rerankFactor")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithPq")
     val sem = GraftPq.ivfPqTopKWithCw(
-        index, cb, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
+        index, cb, q.frame.select(col("q_id"), col("__qv").as("qv")),
+        kCand, nprobe, rerankFactor, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
@@ -353,17 +365,18 @@ object HybridRetrieval {
     require(nprobe >= 1,
       s"hybridTopKWithMaxSim: nprobe must be >= 1, got $nprobe")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
-    // same minibatch-persist rationale as qBatch (text shape: both legs
-    // re-derive from __qtext — tokens lexically, ±1 hash vectors
-    // semantically — so the subtree is evaluated at least twice)
-    val q = queries.select(col(qIdCol).cast("long").as("q_id"),
-                           col(qTextCol).as("__qtext"))
-    if (!q.isStreaming) q.persist()
-    val lexQ = q.select(col("q_id"),
-                        GraftText.whitespaceTokens(col("__qtext"))
-                          .as("__qtk"))
+    // the qBatch stance in text shape: both legs derive from __qtext —
+    // tokens lexically, ±1 hash vectors semantically — off ONE collect
+    // (the token projection over the local batch collects with no job)
+    val q = GraftSimilarity.queryBatch(
+      queries.select(col(qIdCol).cast("long").as("q_id"),
+                     col(qTextCol).as("__qtext")), "hybridTopKWithMaxSim")
+    val lexQ = GraftSimilarity.queryBatch(
+      q.frame.select(col("q_id"),
+                     GraftText.whitespaceTokens(col("__qtext")).as("__qtk")),
+      "hybridTopKWithMaxSim")
     val qToks = LateInteraction.hashTokenVectors(
-        q.select(col("q_id").as("doc_id"), col("__qtext").as("text")),
+        q.frame.select(col("q_id").as("doc_id"), col("__qtext").as("text")),
         dim = dim, maxTokens = maxTokens)
       .select(col("doc_id").as("q_id"), col("tok"), col("tv"))
     val sem = LateInteraction.maxSimTopKWith(index, qToks, kCand, nprobe)
@@ -428,9 +441,10 @@ object HybridRetrieval {
     * (the `ann_hybrid_ivf` oracle certifies this row verbatim) while
     * the corpus text is never re-tokenized at serve time. The scan
     * reads only the query terms' buckets: the minibatch's distinct term
-    * set is collected once (model-sized, the survivor-fetch precedent)
-    * and becomes literal partition predicates through
-    * [[ImpactIndex.StoredImpacts.impactsFor]].
+    * set, read off the collected batch, becomes literal partition
+    * predicates through [[ImpactIndex.StoredImpacts.impactsFor]], and
+    * each posting fans out to its queries through a literal term →
+    * queries map.
     *
     * The impact store must describe the same corpus the IVF index
     * serves and be built at the same (k1, b) — both live beside the
@@ -449,19 +463,19 @@ object HybridRetrieval {
     require(nprobe >= 1,
       s"hybridTopKWithImpacts: nprobe must be >= 1, got $nprobe")
     graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
-    val qt = q.select(col("q_id"),
-                      explode(array_distinct(col("__qtk"))).as("__term"))
-    val termList = qt.select(col("__term")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol,
+                   "hybridTopKWithImpacts")
+    val terms = termQueries(q)
     val lex =
-      if (termList.isEmpty)
+      if (terms.isEmpty)
         // no query terms at all: the lexical leg is empty, fusion
         // degrades to the semantic leg (the full-outer fuse contract)
-        q.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
-                          lit(0L).as("lex_rank"))
-      else impacts.impactsFor(termList)
-        .join(broadcast(qt), "__term")
+        q.frame.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
+                                lit(0L).as("lex_rank"))
+      else impacts.impactsFor(terms.keys.toSeq)
+        .select(TextRank.queriesOfTerm(terms,
+                  q.frame.schema("q_id").dataType),
+                col("doc_id"), col("__a"))
         .filter(col("doc_id") =!= col("q_id"))
         .groupBy(col("q_id"), col("doc_id"))
         .agg(sum(col("__a")).as("__score"))
@@ -472,8 +486,8 @@ object HybridRetrieval {
         .select(col("q_id"), col("s.id").as("doc_id"),
                 (col("p") + 1).cast("long").as("lex_rank"))
     val sem = GraftSimilarity.ivfTopKWith(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand, nprobe,
-        where = where)
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
+        nprobe, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     fuse(lex, sem, k, rrfK)
@@ -539,15 +553,15 @@ object HybridRetrieval {
     require(lambda >= 0.0 && lambda <= 1.0,
       s"serveProduction: lambda must be in [0, 1], got $lambda")
     graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, castId = true)
-    val qt = q.select(col("q_id"),
-                      explode(array_distinct(col("__qtk"))).as("__term"))
-    val termList = qt.select(col("__term")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "serveProduction",
+                   castId = true)
+    val qt = q.frame.select(col("q_id"),
+                            explode(array_distinct(col("__qtk"))).as("__term"))
+    val termList = termQueries(q).keys.toSeq
     val lex =
       if (termList.isEmpty)
-        q.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
-                          lit(0L).as("lex_rank"))
+        q.frame.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
+                                lit(0L).as("lex_rank"))
       else {
         // per-query impact ordering: terms absent from the store have no
         // postings and drop from the split (the bm25TopKPruned rule)
@@ -576,7 +590,7 @@ object HybridRetrieval {
         // zero-candidate queries, which never reach `top`
         val stats = top.groupBy(col("q_id"))
           .agg(count(lit(1)).as("__cnt"), min(col("__l")).as("__th"))
-        val guard = q.select(col("q_id"))
+        val guard = q.frame.select(col("q_id"))
           .join(ne, Seq("q_id"), "left")
           .join(stats, Seq("q_id"), "left")
           .filter(assert_true(
@@ -594,12 +608,12 @@ object HybridRetrieval {
           .select(col("q_id"), col("doc_id"), col("lex_rank"))
       }
     val sem = GraftSimilarity.ivfTopKWithQ8(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
+        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
         nprobe, rerankFactor, where = where)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     val fused = fuse(lex, sem, kCand, rrfK)
-    val qv = broadcast(q.select(col("q_id"), col("__qv")))
+    val qv = broadcast(q.frame.select(col("q_id"), col("__qv")))
     val src = index.assigned.select(col("n_id"), col("v"))
     val cand = fused.select(col("q_id"), col("doc_id").as("n_id"))
       .join(ScaleHints.gated(src), "n_id")

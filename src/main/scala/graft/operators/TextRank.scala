@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StringType}
 
 /** BM25 keyword retrieval over a document corpus — the classic
   * Robertson/Spärck-Jones ranking (the +1-smoothed IDF variant Lucene
@@ -12,9 +14,9 @@ import org.apache.spark.sql.functions._
   * query terms happens INSIDE the explode-select, so only matching-term
   * rows ever reach the (doc_id, term) aggregation — a corpus-size map
   * stage followed by shuffles proportional to matching rows, not corpus
-  * tokens. Document-frequency and corpus stats are tiny aggregates that
-  * attach by broadcast. Top-k is TakeOrderedAndProject (never a global
-  * sort). No collect, no UDFs.
+  * tokens. Document-frequency and corpus stats are one bounded collect
+  * (|query terms| + 1 rows) folded into the plan as literals. Top-k is
+  * TakeOrderedAndProject (never a global sort). No UDFs.
   */
 object TextRank {
 
@@ -22,19 +24,21 @@ object TextRank {
     * integer-grid determinism stance, shared by [[bm25TopK]] (one query,
     * literal terms) and [[graft.operators.HybridRetrieval]]'s lexical leg
     * (a query minibatch): two copies of one formula drift, so there is
-    * exactly one (ADVICE/VERDICT r10). `qTerms` carries one row per
-    * (q_id, __term) — distinct per query by the callers' construction.
-    * Returns (q_id, doc_id, __score: long, n_terms_hit: long); only
-    * documents containing ≥ 1 of the query's terms appear (standard
-    * retrieval semantics). No self-exclusion here — groups are atomic in
-    * (q_id, doc_id), so callers filter the output when they need it.
+    * exactly one (ADVICE/VERDICT r10). `termQueries` maps each query term
+    * to the ids (of type `qIdType`) of the queries holding it — a
+    * driver-side value, bounded by the minibatch. Returns (q_id, doc_id,
+    * __score: long, n_terms_hit: long); only documents containing ≥ 1 of
+    * the query's terms appear (standard retrieval semantics). No
+    * self-exclusion here — groups are atomic in (q_id, doc_id), so
+    * callers filter the output when they need it.
     *
-    * Scale shape: the corpus token stream filters to the distinct
-    * query-term set INSIDE the explode-select (a broadcast semi-join), so
-    * only matching-term rows ever shuffle; per-(doc, term) stats are
-    * computed ONCE and shared across queries hitting the term; df and
-    * corpus stats are skinny broadcast aggregates; the (q_id, term) fan-
-    * out join is bounded by the minibatch size.
+    * Scale shape: the corpus token stream filters to the query-term set
+    * INSIDE the explode-select (a literal `IN` set), so only
+    * matching-term rows ever shuffle; per-(doc, term) stats are computed
+    * ONCE and shared across queries hitting the term; df and corpus
+    * stats are one bounded collect folded in as literals
+    * ([[bm25Impacts]]); the fan-out to queries is an explode of the
+    * literal term → queries map, bounded by the minibatch size.
     *
     * Determinism: each per-term score is quantized to an integer 1e6
     * micro-grid BEFORE the per-(query, document) sum — a float Σ rounds
@@ -50,16 +54,40 @@ object TextRank {
     * express BM25's idf·tf saturation product, so the grid is the best
     * available contract here.
     */
-  private[operators] def bm25Scores(docs: DataFrame, qTerms: DataFrame,
+  private[operators] def bm25Scores(docs: DataFrame,
+                                    termQueries: Map[String, Seq[Any]],
+                                    qIdType: DataType,
                                     idCol: String, textCol: String,
                                     k1: Double, b: Double): DataFrame = {
-    val qt = qTerms.select(col("q_id"), col("__term"))
-    val qTermSet = qt.select(col("__term")).distinct()
-    bm25Impacts(docs, idCol, textCol, k1, b, termGate = Some(qTermSet))
-      .join(broadcast(qt), "__term")
+    bm25Impacts(docs, idCol, textCol, k1, b,
+                termGate = Some(termQueries.keys.toSeq))
+      .select(queriesOfTerm(termQueries, qIdType), col("doc_id"), col("__a"))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("__a")).as("__score"),
            count(lit(1)).as("n_terms_hit"))
+  }
+
+  /** `q_id`, exploded: the fan-out of a `__term`-carrying row to the
+    * queries holding its term, through ONE literal term → queries map
+    * (no join, no hashed broadcast). */
+  private[operators] def queriesOfTerm(termQueries: Map[String, Seq[Any]],
+                                       qIdType: DataType): Column =
+    explode(element_at(GraftSimilarity.literalOf(termQueries,
+                         MapType(StringType, ArrayType(qIdType))),
+                       col("__term"))).as("q_id")
+
+  /** THE BM25 addend formula, written once: the 10⁻⁶-grid quantized
+    * per-(term, doc) score over `__tf` and `__dl` columns, given the
+    * term's document frequency `df` and the corpus stats `n` (documents)
+    * and `avgdl` — columns of an attach on the ungated build, literals
+    * on the gated serve, the same expression either way. */
+  private def addend(k1: Double, b: Double, df: Column, n: Column,
+                     avgdl: Column): Column = {
+    val idf = log((n - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+    val termScore = idf * (col("__tf") * (lit(k1) + 1)) /
+      (col("__tf") + lit(k1) *
+        (lit(1 - b) + lit(b) * col("__dl") / avgdl))
+    round(termScore * lit(1e6), 0).cast("long")
   }
 
   /** The per-(term, document) BM25 impact ADDENDS — the one home of the
@@ -72,61 +100,82 @@ object TextRank {
     * a (query, doc) BM25 score is exactly Σ __a over the query's matched
     * terms, so every consumer is bit-equal by construction.
     *
-    * `termGate`: with a (query-bounded, distinct) term set, the corpus
-    * token stream filters INSIDE the explode-select via a broadcast
-    * semi-join and the df table is query-bounded → broadcast attach.
-    * WITHOUT a gate (the impact-index build — query-invariant, so it
-    * CANNOT gate), df spans the whole VOCABULARY: at 100 TB that is
-    * 10⁸–10⁹ distinct terms, a multi-GB broadcast OOM — and `tf` is
-    * already hash-partitioned by `__term` from its own aggregation, so
-    * the plain shuffle join co-partitions for free. The gate therefore
-    * also selects the df attach strategy. `stats` is one row either way.
+    * `termGate`: with a (query-bounded) term set, the serve's df and
+    * corpus stats are ONE bounded collect of |terms| + 1 rows — each
+    * document emits its distinct gated terms plus one null-term row, so
+    * a single aggregate yields every term's df and, under the null term,
+    * N and the mean doc length — and fold into the addend as a literal
+    * df map and two literals; the token stream filters to the gate
+    * through a literal `IN` set inside the explode. The corpus is
+    * tokenized twice (the collect, then tf), with no join and no
+    * exchange beyond tf's own. WITHOUT a gate (the impact-index build —
+    * query-invariant, so it CANNOT gate), df spans the whole VOCABULARY:
+    * at 100 TB that is 10⁸–10⁹ distinct terms, a multi-GB driver value
+    * or broadcast — and `tf` is already hash-partitioned by `__term`
+    * from its own aggregation, so the plain shuffle join co-partitions
+    * for free; `stats` is one row, cross-joined by broadcast.
     */
   private[graft] def bm25Impacts(docs: DataFrame, idCol: String,
                                  textCol: String, k1: Double, b: Double,
-                                 termGate: Option[DataFrame]): DataFrame = {
-    // On the UNGATED (impact-index build) path, fanOut buys two things
-    // when the corpus packs into fewer read splits than cores
-    // (self-canceling at scale — see ScaleHints): the tokenize+explode
-    // stage runs at session width instead of one task per file split,
-    // and the tf branch and the stats branch read ONE ReuseExchange
-    // instead of each re-tokenizing the corpus. The GATED (per-serve)
-    // path stays fused with the scan — a serve should not pay a corpus
-    // exchange for its one bounded query minibatch.
+                                 termGate: Option[Seq[String]]): DataFrame = {
     val toks0 = docs.select(
       col(idCol).as("doc_id"),
       GraftText.whitespaceTokens(col(textCol)).as("__tk"))
-    val toks =
-      if (termGate.isDefined) toks0
-      else ScaleHints.fanOut(toks0, col("doc_id"))
-    val base0 = toks.select(
-      col("doc_id"),
-      size(col("__tk")).cast("long").as("__dl"),
-      explode(col("__tk")).as("__term"))
-    val base = termGate.fold(base0)(g => base0.join(broadcast(g), "__term"))
-    // per-(doc, term) term frequency, doc length riding along
-    val tf = base.groupBy(col("doc_id"), col("__term"))
-      .agg(count(lit(1)).as("__tf"), max(col("__dl")).as("__dl"))
-    // per-term document frequency — derived from tf, so the ungated join
-    // back is ALREADY co-partitioned on __term
-    val df = tf.groupBy(col("__term")).agg(count(lit(1)).as("__df"))
-    // corpus stats: N docs, mean doc length (exact long sum / count) —
-    // computed over the FULL corpus in both modes (query-invariant)
-    val stats = toks.agg(
-      count(lit(1)).as("__n"),
-      avg(size(col("__tk")).cast("long")).as("__avgdl"))
-    val idf = log(
-      (col("__n") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5))
-        + lit(1.0))
-    val termScore = idf * (col("__tf") * (lit(k1) + 1)) /
-      (col("__tf") + lit(k1) *
-        (lit(1 - b) + lit(b) * col("__dl") / col("__avgdl")))
-    val dfSide = if (termGate.isDefined) broadcast(df) else df
-    tf
-      .join(dfSide, "__term")
-      .crossJoin(broadcast(stats))
-      .select(col("__term"), col("doc_id"),
-              round(termScore * lit(1e6), 0).cast("long").as("__a"))
+    val dl = size(col("__tk")).cast("long")
+    termGate match {
+      case Some(gate) =>
+        val terms = gate.filter(_ != null).distinct
+        def gated(tk: Column): Column = filter(tk, _.isin(terms: _*))
+        val side =
+          if (terms.isEmpty) Array.empty[Row]
+          else toks0
+            .select(dl.as("__dl"), explode(concat(
+              array(lit(null).cast("string")),
+              coalesce(array_distinct(gated(col("__tk"))),
+                       typedLit(Seq.empty[String])))).as("__term"))
+            .groupBy(col("__term"))
+            .agg(count(lit(1)).as("__df"), avg(col("__dl")).as("__avgdl"))
+            .collect()
+        val stats = side.find(_.isNullAt(0))
+        val df = side.filterNot(_.isNullAt(0))
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val n = lit(stats.fold(0L)(_.getLong(1)))
+        val avgdl = stats.filterNot(_.isNullAt(2))
+          .fold(lit(null).cast("double"))(r => lit(r.getDouble(2)))
+        // the GATED path stays fused with the scan — a serve should not
+        // pay a corpus exchange for its one bounded query minibatch
+        toks0
+          .select(col("doc_id"), dl.as("__dl"),
+                  explode(gated(col("__tk"))).as("__term"))
+          .groupBy(col("doc_id"), col("__term"))
+          .agg(count(lit(1)).as("__tf"), max(col("__dl")).as("__dl"))
+          .select(col("__term"), col("doc_id"),
+                  addend(k1, b, element_at(typedLit(df), col("__term")),
+                         n, avgdl).as("__a"))
+      case None =>
+        // fanOut buys two things when the corpus packs into fewer read
+        // splits than cores (self-canceling at scale — see ScaleHints):
+        // the tokenize+explode stage runs at session width instead of one
+        // task per file split, and the tf branch and the stats branch
+        // read ONE ReuseExchange instead of each re-tokenizing the corpus
+        val toks = ScaleHints.fanOut(toks0, col("doc_id"))
+        // per-(doc, term) term frequency, doc length riding along
+        val tf = toks
+          .select(col("doc_id"), dl.as("__dl"),
+                  explode(col("__tk")).as("__term"))
+          .groupBy(col("doc_id"), col("__term"))
+          .agg(count(lit(1)).as("__tf"), max(col("__dl")).as("__dl"))
+        // per-term document frequency — derived from tf, so the join
+        // back is ALREADY co-partitioned on __term
+        val df = tf.groupBy(col("__term")).agg(count(lit(1)).as("__df"))
+        // corpus stats: N docs, mean doc length (exact long sum / count)
+        val stats = toks.agg(count(lit(1)).as("__n"), avg(dl).as("__avgdl"))
+        tf.join(df, "__term")
+          .crossJoin(broadcast(stats))
+          .select(col("__term"), col("doc_id"),
+                  addend(k1, b, col("__df"), col("__n"), col("__avgdl"))
+                    .as("__a"))
+    }
   }
 
   /** Top-`k` documents for `queryTerms` by BM25, as
@@ -142,10 +191,8 @@ object TextRank {
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
     require(k > 0, s"k must be positive, got $k")
-    val qt = docs.sparkSession.range(1).select(
-      lit(0L).as("q_id"),
-      explode(array(queryTerms.distinct.map(lit): _*)).as("__term"))
-    val scored = bm25Scores(docs, qt, idCol, textCol, k1, b)
+    val scored = bm25Scores(docs, queryTerms.map(_ -> Seq(0L)).toMap,
+                            LongType, idCol, textCol, k1, b)
     val top = scored
       .orderBy(col("__score").desc, col("doc_id").asc)
       .limit(k)

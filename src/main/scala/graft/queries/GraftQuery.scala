@@ -16,6 +16,32 @@ object GraftQuery {
   import org.apache.spark.sql.functions.{col, expr}
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema is read on the driver from the footer of the file Spark's own
+    * inference reads — the first data file of the path's listing in path
+    * order (`_`- and `.`-prefixed names are not data) — under the
+    * session's parquet conversion settings, and passed to
+    * `spark.read.schema`. */
+  private[graft] def readParquet(spark: SparkSession,
+                                 path: String): DataFrame = {
+    import org.apache.hadoop.fs.FileStatus
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def data(f: FileStatus): Boolean = {
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(data).flatMap(leaves)
+    val first =
+      try leaves(fs.getFileStatus(p)).minByOption(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => None } // Spark's error
+    first.fold(spark.read.parquet(path))(f => spark.read.schema(
+      org.apache.spark.sql.GraftSqlBridge.parquetFooterSchema(spark, Seq(f)))
+      .parquet(path))
+  }
+
   private def storeFs(s: SparkSession, out: String) =
     new org.apache.hadoop.fs.Path(out)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -102,7 +128,7 @@ trait QueryModule {
   def all: Seq[GraftQuery]
 
   protected def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    GraftQuery.readParquet(spark, s"$dir/$name.parquet")
 
   /** See [[graft.operators.ScaleHints.gated]] — size-gated broadcast vs
     * SHUFFLE_HASH for attach joins.
@@ -126,6 +152,7 @@ trait QueryModule {
     */
   protected def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    GraftQuery.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    GraftQuery.normalizeTs(
+      GraftQuery.readParquet(spark, s"$dir/events.parquet"))
   }
 }

@@ -269,8 +269,9 @@ object CorpusStreams {
     * lifecycle, mirroring [[ivfServeStream]] for the compressed tier.
     *
     * Plan shape, all stream-static: the per-query ADC LUT is ONE
-    * stateless projection against the broadcast codebook row (the batch
-    * `qlutFrame`, event time and raw vector carried through); candidates
+    * stateless projection against the literal codebook (the batch
+    * `qlutFrame`, event time and raw vector carried through; the
+    * codeword-norm LUT is the batch `normLut` literal); candidates
     * attach via a per-batch stream-static cross join against the
     * (n_id, packed-code) frame — the scan side ships m bytes per
     * candidate exactly like batch — and the quantized cut runs
@@ -319,7 +320,7 @@ object CorpusStreams {
     val cand = qlut
       .crossJoin(enc)
       .filter(col("n_id") =!= col("q_id"))
-      .crossJoin(GraftPq.normLutRow(cb))
+      .withColumn("__nlut", GraftPq.normLut(cb))
       .select(col("q_id"), col("ts"), col("qv"), col("n_id"), expr(
         """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
           |ELSE graft_pq_adc(__cw, __lut)

@@ -27,13 +27,11 @@ class ImpactIndexSpec extends GraftFunSuite with ManifestStoreFixture {
   test("shared kernel: the gated scorer's addends equal the ungated " +
        "(impact-build) addends on the gated term subset, bit-for-bit — " +
        "one formula, one grid, no dual-kernel drift") {
-    import spark.implicits._
     val terms = Seq("spark", "vector", "join")
-    val gate = terms.toDF("__term")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val gated = rows(TextRank.bm25Impacts(
-      docs, "doc_id", "text", 1.2, 0.75, Some(gate)))
+      docs, "doc_id", "text", 1.2, 0.75, Some(terms)))
     val ungated = rows(TextRank.bm25Impacts(
         docs, "doc_id", "text", 1.2, 0.75, None)
       .filter(col("__term").isin(terms: _*)))
@@ -46,7 +44,8 @@ class ImpactIndexSpec extends GraftFunSuite with ManifestStoreFixture {
        "NO broadcast HINT on the vocabulary-wide df attach — with stat-" +
        "based auto-broadcast off, it plans as a co-partitioned shuffle " +
        "join (a hinted broadcast, like the one r13 flagged, would " +
-       "survive) — while the gated scorer's query-bounded hints persist") {
+       "survive) — while the gated scorer's query-bounded attaches are " +
+       "plan literals: no join at all") {
     // threshold -1 kills STAT-based broadcasts (which are legitimate on
     // this tiny corpus and impossible on a 100-TB vocabulary) but not
     // HINTED ones — exactly the discriminator for the r13 defect, whose
@@ -63,14 +62,12 @@ class ImpactIndexSpec extends GraftFunSuite with ManifestStoreFixture {
           .mkString("\n"))
       assert(ungatedPlan.contains("BroadcastNestedLoopJoin"),
         "the one-row stats attach should still broadcast (hinted)")
-      import spark.implicits._
       val gatedPlan = TextRank.bm25Impacts(
-        docs, "doc_id", "text", 1.2, 0.75,
-        Some(Seq("spark").toDF("__term")))
+        docs, "doc_id", "text", 1.2, 0.75, Some(Seq("spark")))
         .queryExecution.sparkPlan.toString
-      assert(gatedPlan.contains("BroadcastHashJoin"),
-        "the gated scorer's query-bounded gate/df attaches are hinted " +
-        "broadcasts and must persist")
+      assert(!gatedPlan.contains("Join"),
+        "the gated scorer's query-bounded gate, df and stats attaches " +
+        s"must fold into the plan as literals, not joins:\n$gatedPlan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
 

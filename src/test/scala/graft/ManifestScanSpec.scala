@@ -50,6 +50,16 @@ class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
       val ivf = s"s3a:$base/ivf"
       IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(seed), ivf,
         pq = Some(GraftPq.trainPq(seed, m = 4, ksub = 8, iters = 1)))
+      def cbRows(cb: GraftPq.PqCodebook) =
+        cb.codebook.collect().map(_.toString).toSet
+      // one bounded collect on the first read of the codebook files, none
+      // on a repeat read, one again once the files change (below)
+      val (cb, read) = jobs(GraftPq.readPqCodebook(spark, ivf))
+      assert(read.size == 1, s"readPqCodebook: one collect, got $read")
+      val (again, reread) = jobs(GraftPq.readPqCodebook(spark, ivf))
+      assert(reread.isEmpty,
+        s"a repeat read of the same codebook files launched jobs: $reread")
+      assert(cbRows(again) == cbRows(cb) && (again.m, again.ksub) == (4, 8))
       IvfObjectStore.append(spark, ivf, e.filter(col("vec_id") >= 80))
       val imp = s"s3a:$base/impact"
       ImpactObjectStore.rebuild(docs(), imp, buckets = 4)
@@ -78,12 +88,22 @@ class ManifestScanSpec extends GraftFunSuite with ManifestStoreFixture {
       assert(KeepSetStore.read(spark, ks).select("doc_id").as[Long]
                .collect().toSet == Set(1L, 2L, 3L, 5L))
 
-      val (cb, read) = jobs(GraftPq.readPqCodebook(spark, ivf))
-      assert(read.size == 1, s"readPqCodebook: one collect, got $read")
       val (_, local) = jobs(GraftPq.collectCodebook(cb))
       assert(local.isEmpty, s"collecting a stored codebook: $local")
       assert((cb.m, cb.ksub) == (4, 8))
       assert(GraftPq.readPqCodebookIfAny(spark, imp).isEmpty)
+      // rewritten files (new names and statuses) are never served stale
+      val cbDir = new Path(s"$ivf/pq_codebook")
+      cbDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(cbDir, true)
+      GraftPq.writePqCodebook(GraftPq.PqCodebook(
+        cb.codebook.withColumn("cv", transform(col("cv"), x => x + 1.0)),
+        cb.m, cb.ksub), ivf)
+      val (fresh, rewritten) = jobs(GraftPq.readPqCodebook(spark, ivf))
+      assert(rewritten.size == 1,
+        s"the first read of rewritten codebook files: one collect, got " +
+        rewritten)
+      assert(cbRows(fresh) != cbRows(cb), "a stale codebook was served")
     }
   }
 

@@ -299,8 +299,16 @@ class PlanSpec extends GraftFunSuite {
        "not a global sort") {
     val bm25 = planOf("text_bm25_topk")
     assert(bm25.contains("TakeOrderedAndProject"), bm25)
-    assert(bm25.contains("BroadcastHashJoin"),
-      s"df attach must broadcast:\n$bm25")
+    // the df attach never shuffles the token stream: the df and corpus
+    // stats fold in as literals, so no join is left and the only
+    // exchanges are the two score aggregates' (tf, then per-document)
+    assert(!bm25.contains("SortMergeJoin") && !bm25.contains("Join"),
+      s"the df attach must not join the token stream:\n$bm25")
+    val exchanges = bm25.linesIterator.filter(_.contains("Exchange"))
+      .toSeq
+    assert(exchanges.size == 2 &&
+           exchanges.forall(_.contains("Exchange hashpartitioning(")),
+      s"only the score aggregates may exchange:\n$bm25")
     val ws = planOf("sample_weighted")
     assert(ws.contains("TakeOrderedAndProject"), ws)
     assert(!ws.contains("rangepartitioning"),

@@ -366,6 +366,9 @@ class PqSpec extends GraftFunSuite with ManifestStoreFixture {
       "survivor fetch must push the literal n_id set to parquet; " +
       plan.linesIterator.filter(_.contains("PushedFilters"))
         .mkString("\n"))
+    // the survivor pairs and the query vectors attach as literal maps:
+    // the rerank is a projection over the fetch, with no join
+    assert(!plan.contains("Join"), s"rerank plan holds a join:\n$plan")
   }
 
   test("IvfObjectStore.append on a PQ store: batches encode inline " +

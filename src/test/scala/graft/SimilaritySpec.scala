@@ -847,10 +847,19 @@ class SimilaritySpec extends GraftFunSuite with ManifestStoreFixture {
     def asSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
                      r.getDouble(3))).toSet
-    val q8Lit = asSet(GraftSimilarity
-      .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4).collect())
+    val q8LitDf = GraftSimilarity
+      .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4)
+    val q8Lit = asSet(q8LitDf.collect())
+    // below the gate the rerank attaches the survivor pairs and the query
+    // vectors as literal maps: the fetch plan holds no join at all
+    val q8LitPlan = q8LitDf.queryExecution.executedPlan.toString
+    assert(q8LitPlan.contains("PushedFilters: [In(n_id") &&
+           !q8LitPlan.contains("Join"),
+      s"literal-path rerank must be a projection over the fetch:\n$q8LitPlan")
     val pqLit = asSet(pqServe().collect())
-    spark.conf.set("spark.graft.survivorFetchMaxLiterals", "1")
+    // a gate of |Q| = 10 still admits the minibatch but not its
+    // |Q|·k·rf = 200 survivors
+    spark.conf.set("spark.graft.survivorFetchMaxLiterals", "10")
     try {
       val q8Bc = GraftSimilarity
         .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4)
@@ -867,6 +876,15 @@ class SimilaritySpec extends GraftFunSuite with ManifestStoreFixture {
         "PQ serve must be bit-identical on both sides of the gate")
       assert(pqBc.queryExecution.executedPlan.toString
                .contains("ReusedExchange"))
+      // a minibatch past the gate is refused, naming the bound
+      spark.conf.set("spark.graft.survivorFetchMaxLiterals", "9")
+      for (serve <- Seq(() => pqServe(), () => GraftSimilarity
+             .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4))) {
+        val err = intercept[IllegalArgumentException](serve())
+        assert(err.getMessage.contains("more than 9 rows") &&
+               err.getMessage.contains("spark.graft.survivorFetchMaxLiterals"),
+          err.getMessage)
+      }
     } finally spark.conf.unset("spark.graft.survivorFetchMaxLiterals")
   }
 

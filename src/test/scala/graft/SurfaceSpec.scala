@@ -27,6 +27,30 @@ class SurfaceSpec extends GraftFunSuite {
     }
   }
 
+  test("catalog tables read with their footer schema and no inference " +
+       "job: the schema equals spark.read.parquet's for all ten tables " +
+       "(events under nanosAsLong too), and building a frame runs no job") {
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(key)
+    def check(name: String): Unit = {
+      val path = s"$sf0001/$name.parquet"
+      val (df, jobs) = org.apache.spark.GraftJobProbe.jobs(
+        spark.sparkContext)(graft.queries.GraftQuery.readParquet(spark, path))
+      assert(jobs.isEmpty, s"$name: building the frame launched $jobs")
+      assert(df.schema == spark.read.parquet(path).schema,
+        s"$name: ${df.schema.treeString} vs " +
+        spark.read.parquet(path).schema.treeString)
+    }
+    try {
+      spark.conf.set(key, "false")
+      tables.foreach(check)
+      spark.conf.set(key, "true")
+      check("events")
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("TABLESAMPLE: SQL reach for sampling (built-in twin of sampleExt)") {
     spark.read.parquet(s"$sf0001/lineitem.parquet")
       .createOrReplaceTempView("graft_li_ts")
