@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for dedup_ngram_jaccard stage costs (dev tool). */
 object ProbeNgram {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureExtensions(spark)
+    val spark = GraftSession.getOrCreate("local[32]")
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement probe (optimization guide §1, r17): split ONE hybrid
@@ -20,11 +19,8 @@ object ProbePhases {
     val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -84,7 +80,7 @@ object ProbePhases {
       (1 to reps).foreach { rep =>
         println(s"== dedup_keepset_delete phases, rep $rep")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val pairs = phase("minhashLshPairs (memo)") {
+        val pairs = phase("minhashLshPairs (leaf)") {
           DedupQueries.minhashLshPairs(spark, sfDir)
         }
         phase("pairs materialize (count)") { pairs.count() }
@@ -114,7 +110,6 @@ object ProbePhases {
           KeepSetStore.read(spark, out)
             .write.format("noop").mode("overwrite").save()
         }
-        DedupQueries.unpersistCache()
         spark.catalog.clearCache()
         System.gc()
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement main behind SCALE.md's "two-level centroid probe" section:
@@ -18,13 +17,7 @@ object ProbeScale {
     val nq = args.lift(1).map(_.toInt).getOrElse(256)
     val dims = args.lift(2).map(_.split(',').map(_.toInt).toSeq)
       .getOrElse(Seq(64, 256, 1024))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureExtensions(spark)
+    val spark = GraftSession.getOrCreate("local[32]")
     import graft.operators.GraftSimilarity
 
     def synth(n: Int, dim: Int, salt: Int) = spark.range(n)

@@ -39,7 +39,7 @@ object CorpusCuration {
   /** Remove the losing side of near-duplicate pairs (e.g. from
     * [[GraftDedup.nearDupPairs]]): every `loserCol` id in `pairs` is dropped
     * from `docs`. The anti-join side is size-gated on its EXACT count — a
-    * Catalyst estimate can flip across cache materialization and a flipping
+    * Catalyst estimate depends on how `pairs` was built, and a flipping
     * join strategy changes downstream partitioning, which would break
     * same-partitioning determinism under the position-seeded sampler.
     */
@@ -188,14 +188,13 @@ object CorpusCuration {
               array_distinct(GraftText.wordNGrams(col("__tk"), shingleN))
                 .as("__sh"))
     // both signature tables feed the band join AND two verify attaches —
-    // persisted and pinned under GraftDedup.unpersistAll like the
-    // self-join path's table
-    val sigT = GraftDedup.pin(
+    // leaves, like the self-join path's table
+    val sigT =
       GraftDedup.signatures(shingled(train), idCol, "__sh", Nil, numHashes)
-        .persist())
-    val sigQ = GraftDedup.pin(
+        .localCheckpoint(eager = false)
+    val sigQ =
       GraftDedup.signatures(shingled(test), idCol, "__sh", Nil, numHashes)
-        .persist())
+        .localCheckpoint(eager = false)
     def banded(sig: DataFrame, as: String) = sig
       .select(col(idCol).as(as),
               GraftDedup.bandKeys("sig", bands, r).as("__bh"))
@@ -459,19 +458,19 @@ object CorpusCuration {
     val dup = grams.groupBy("__gk").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= minCount).select("__gk")
     // occ (the duplicated-occurrence sliver — skinny (id, pos) rows) feeds
-    // the coverage ANTI join AND the hit-id gate: persist it so the full
+    // the coverage ANTI join AND the hit-id gate: a leaf, so the full
     // gram explode + dup aggregation above it runs ONCE, not once per
-    // consumer (pinned under GraftDedup.unpersistAll like the signature
-    // tables)
-    val occ = GraftDedup.pin(grams.join(ScaleHints.gated(dup), "__gk")
-      .select(col(idCol).as("__oid"), col("__gpos")).persist())
+    // consumer
+    val occ = grams.join(ScaleHints.gated(dup), "__gk")
+      .select(col(idCol).as("__oid"), col("__gpos"))
+      .localCheckpoint(eager = false)
     // Only documents actually HIT by a duplicated gram pay the token-level
     // pass — at corpus scale boilerplate-carrying docs are a sliver, so the
     // expensive explode+anti-join runs over that sliver, and every other
     // document short-circuits to a per-row md5 of its normalized tokens
     // (identical to what reassembly-of-everything would produce).
-    val hitIds = GraftDedup.pin(
-      occ.select(col("__oid").as(idCol)).distinct().persist())
+    val hitIds = occ.select(col("__oid").as(idCol)).distinct()
+      .localCheckpoint(eager = false)
     val tk = base.join(ScaleHints.gated(hitIds), Seq(idCol), "left_semi")
       .select(col(idCol), posexplode(col("__tk")).as(Seq("__pos", "__token")))
     val kept = tk.join(occ,
@@ -545,14 +544,15 @@ object CorpusCuration {
            min(struct(col(idCol).as("d"), col("__gpos").as("p"))).as("__canon"))
       .filter(col("__c") >= minCount)
       .select(col("__gk"), col("__canon.d").as("__cd"), col("__canon.p").as("__cp"))
-    // same sliver-persist rationale as scrubRepeatedSpans: occ and the
+    // same sliver-leaf rationale as scrubRepeatedSpans: occ and the
     // hit-id gate each feed multiple consumers; one materialization of
     // the skinny sliver replaces a full gram-explode pass per consumer
-    val occ = GraftDedup.pin(grams.join(ScaleHints.gated(dup), "__gk")
+    val occ = grams.join(ScaleHints.gated(dup), "__gk")
       .filter(!(col(idCol) === col("__cd") && col("__gpos") === col("__cp")))
-      .select(col(idCol).as("__oid"), col("__gpos")).persist())
-    val hitIds = GraftDedup.pin(
-      occ.select(col("__oid").as(idCol)).distinct().persist())
+      .select(col(idCol).as("__oid"), col("__gpos"))
+      .localCheckpoint(eager = false)
+    val hitIds = occ.select(col("__oid").as(idCol)).distinct()
+      .localCheckpoint(eager = false)
     val tk = base.join(ScaleHints.gated(hitIds), Seq(idCol), "left_semi")
       .select(col(idCol), posexplode(col("__tk")).as(Seq("__pos", "__token")))
     val kept = tk.join(occ,
@@ -630,11 +630,12 @@ object CorpusCuration {
       .filter(col("__c") >= 2)
       .select(col(idCol), col("__gpos"))
     // the coverage sliver feeds both the hit-id gate and the char-sum
-    // join — persist so the 5-gram explode + dup window runs once
-    val cov = GraftDedup.pin(occ
+    // join — a leaf, so the 5-gram explode + dup window runs once
+    val cov = occ
       .select(col(idCol),
               explode(sequence(col("__gpos"), col("__gpos") + 4)).as("__pos"))
-      .distinct().persist())
+      .distinct()
+      .localCheckpoint(eager = false)
     val hitIds = cov.select(col(idCol)).distinct()
     val tokChars = base.join(ScaleHints.gated(hitIds), Seq(idCol), "left_semi")
       .select(col(idCol), posexplode(col("__tk")).as(Seq("__pos", "__token")))
@@ -710,15 +711,15 @@ object CorpusCuration {
                   textCol: String = "text"): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
-    // counts is B rows but sits atop a full corpus gram explode; persist
-    // it so totals (and the dense join below) don't re-scan the corpus
-    val counts = GraftDedup.pin(
+    // counts is B rows but sits atop a full corpus gram explode; a leaf,
+    // so totals (and the dense join below) don't re-scan the corpus
+    val counts =
       dsirGramBuckets(docs, isTarget, buckets, "__none", textCol,
                       needId = false)
         .groupBy("__b").agg(
           count(lit(1)).as("__cr"),
           sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
-        .persist())
+        .localCheckpoint(eager = false)
     val totals = counts.agg(
       (sum("__cr") + buckets).as("__nrb"), (sum("__ct") + buckets).as("__ntb"))
     // densify: every bucket scores, hit or not (the B-row range frame is

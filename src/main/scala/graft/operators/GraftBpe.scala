@@ -70,12 +70,9 @@ object GraftBpe {
                merges: Int = 4): DataFrame = {
     require(merges >= 1 && merges <= 16,
       s"bpeTrain: merges must be in [1, 16], got $merges")
-    // the vocab is the per-round input; persisting it is what makes each
-    // round vocab-sized instead of corpus-sized; pinned under
-    // GraftDedup.unpersistAll like the module's other persisted slivers,
-    // so long-lived sessions can release it between corpora
-    val v0 = GraftDedup.pin(vocab(docs, textCol).persist())
-    var v = v0
+    // the vocab is the per-round input; a leaf, which is what makes each
+    // round vocab-sized instead of corpus-sized
+    var v = vocab(docs, textCol).localCheckpoint(eager = false)
     var result: DataFrame = null
     for (k <- 1 to merges) {
       val best = bestPair(v)

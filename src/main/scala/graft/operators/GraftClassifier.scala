@@ -83,17 +83,16 @@ object GraftClassifier {
       .select(col(labelCol).cast("string").as("label"),
               GraftText.whitespaceTokens(col(textCol)).as("__tk"))
       .filter(size(col("__tk")) >= 1)
-    // (label, bucket) gram counts — the one corpus-sized job; persist the
-    // ≤ C×B result so the dense join + totals below don't re-scan the
-    // corpus (pinned under GraftDedup.unpersistAll like the module's
-    // other cached slivers)
-    val counts = GraftDedup.pin(base
+    // (label, bucket) gram counts — the one corpus-sized job; the ≤ C×B
+    // result is a leaf so the dense join + totals below don't re-scan the
+    // corpus
+    val counts = base
       .select(col("label"), explode(col("__tk")).as("__w"))
       .filter(length(col("__w")) > 0)
       .select(col("label"),
               pmod(xxhash64(col("__w")), lit(buckets.toLong)).as("__b"))
       .groupBy("label", "__b").agg(count(lit(1)).as("__n"))
-      .persist())
+      .localCheckpoint(eager = false)
     val labelTotals = counts.groupBy("label")
       .agg(sum("__n").as("__nc"))
       .select(col("label").as("__lt_label"), col("__nc"))

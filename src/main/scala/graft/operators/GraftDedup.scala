@@ -24,33 +24,20 @@ import org.apache.spark.sql.functions._
   *
   * Recall: with b bands of r rows, P(miss | J) = (1 − J^r)^b. The defaults
   * used by the catalog (b=64, r=2 at threshold 0.8) give ≤ 4e-13.
+  *
+  * Lifetime of intermediates (the rule for every operator in
+  * `graft.operators`): an operator that reads an intermediate frame more
+  * than once makes it a lazy `localCheckpoint(eager = false)` leaf, and a
+  * frame with a single consumer is not materialized at all. A leaf's
+  * blocks live exactly as long as the caller holds a frame built on it —
+  * the ContextCleaner frees them once that frame is unreachable — so there
+  * is no release call to forget and no CacheManager entry outlives the
+  * operator. Under AQE, building a leaf runs its subtree's shuffle stages;
+  * its last stage runs in the caller's first action. The only `persist()`
+  * calls left are user-scoped ([[GraftSimilarity.IvfIndex.persist]]) or
+  * released in a `finally` ([[KeepSetStore.increment]]).
   */
 object GraftDedup {
-
-  /** Every frame this module `.persist()`ed and has not yet released —
-    * long-lived sessions (a multi-corpus curation service) call
-    * [[unpersistAll]] between corpora so one corpus's signature tables
-    * don't pin executor storage while the next one runs.
-    */
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[operators] def pin(df: DataFrame): DataFrame = { pinned.add(df); df }
-
-  /** Release every intermediate this module persisted (blocking). Returns
-    * how many frames were released. Safe while results built on them are
-    * still alive — Spark just recomputes the subtree on next use.
-    */
-  def unpersistAll(): Int = {
-    var n = 0
-    var df = pinned.poll()
-    while (df != null) {
-      df.unpersist(blocking = true)
-      n += 1
-      df = pinned.poll()
-    }
-    n
-  }
 
   /** The analytic recall bound of MinHash banding — the probability that
     * a pair at EXACTLY the decision threshold collides in NO band:
@@ -146,8 +133,9 @@ object GraftDedup {
     *
     * `tbl` must carry (idCol, sig: array<long>, gh: array<long>) — the
     * MinHash signature and the (distinct, sorted) 64-bit-hashed item set;
-    * callers should `.persist()` it, since it feeds the band self-join and
-    * all four verify attaches. Cost shape, in order:
+    * callers should make it a leaf (`localCheckpoint(eager = false)`), since
+    * it feeds the band self-join and all four verify attaches. Cost shape,
+    * in order:
     *   1. per-row data is attached through [[ScaleHints.gated]];
     *   2. `graft_sig_agree` (native codegen, numHashes long compares) drops
     *      most low-similarity candidates at `sigFilter` (margin ≥ 0.15
@@ -213,17 +201,17 @@ object GraftDedup {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxDocFreq >= 2, s"maxDocFreq must be >= 2, got $maxDocFreq")
     // the (id, fingerprint) sliver feeds the df-cap build AND both sides
-    // of the pairing self-join — persist it so the tokenize+hash+window
+    // of the pairing self-join — a leaf, so the tokenize+hash+window
     // projection runs once, not three times (it is skinny: one long per
     // winnowed fingerprint, ~2/(w+1) of the gram count)
-    val ex = pin(docs
+    val ex = docs
       .select(col(idCol).as("__id"),
               GraftText.whitespaceTokens(col(textCol)).as("__tk"))
       .filter(size(col("__tk")) >= k)
       .select(col("__id"),
               explode(GraftText.winnowFingerprints(col("__tk"), k, w))
                 .as("__f"))
-      .persist())
+      .localCheckpoint(eager = false)
     val hot = ex.groupBy("__f").agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDocFreq).select("__f")
     val kept = ex.join(ScaleHints.gated(hot), Seq("__f"), "left_anti")
@@ -315,16 +303,14 @@ object GraftDedup {
     * `repartitionByRange` on (text, id) gives a global order as the
     * concatenation of partitions in partition-id order (Spark's range
     * partitioner samples boundaries; no SinglePartition exchange), the
-    * sorted+pid frame is PERSISTED once before the two consumers fork
-    * (pid is computed by exactly one exchange instance — ADVICE r15: two
+    * sorted+pid frame is a leaf before the two consumers fork (pid is
+    * computed by exactly one exchange instance — ADVICE r15: two
     * independent range exchanges under a nondeterministic upstream
     * shuffle could sample different boundaries and silently disagree on
-    * pid; cache eviction is safe because a recomputed cache partition
-    * re-fetches the SAME exchange instance's shuffle blocks — boundaries
-    * are fixed per instance, never re-sampled), the within-partition
-    * successor comes from ONE narrow per-partition pass over the sorted
-    * cache (no second corpus shuffle — r15 hash-exchanged the corpus
-    * again for a window by pid), and the only cross-partition fact each
+    * pid), the within-partition successor comes from ONE narrow
+    * per-partition pass over the sorted leaf (no second corpus
+    * shuffle — r15 hash-exchanged the corpus again for a window by
+    * pid), and the only cross-partition fact each
     * partition needs — the FIRST text of the next non-empty partition,
     * for its own last row — is an O(numPartitions) boundary table
     * (min-struct per pid, lead over pid) broadcast back. Nulls sort
@@ -336,14 +322,14 @@ object GraftDedup {
       : DataFrame = {
     val pid = "__pfx_pid"
     // explicit partition count: AQE must not be free to coalesce the
-    // range exchange after the fact (pid values are baked into the cache)
+    // range exchange after the fact (pid values are baked into the leaf)
     val nParts =
       df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = pin(df
+    val ranged = df
       .repartitionByRange(nParts, col(textCol).asc, col(idCol).asc)
       .sortWithinPartitions(col(textCol).asc, col(idCol).asc)
       .withColumn(pid, spark_partition_id())
-      .persist())
+      .localCheckpoint(eager = false)
     val tIdx = ranged.schema.fieldIndex(textCol)
     val outSchema = ranged.schema
       .add("__pfx_next", org.apache.spark.sql.types.StringType)
@@ -392,7 +378,7 @@ object GraftDedup {
               expr(s"graft_cdc_chunks($textCol, $minLen, ${mask}L)").as("ch"))
       .withColumn("gh", expr("sort_array(array_distinct(ch))"))
       .select(col(idCol), col("gh"))
-    pin(tbl.persist())
+      .localCheckpoint(eager = false)
     val e = tbl.select(col(idCol), explode(col("gh")).as("chunk"))
     val cand = e.as("x")
       .join(e.as("y"),
@@ -415,9 +401,9 @@ object GraftDedup {
     * a, b, c in ONE cluster even when a≉c directly, so "keep one doc per
     * cluster" drops the whole chain, not just pair losers.
     *
-    * Two tiers, dispatched on the EXACT pair count (the pair frame is
-    * persisted first, so the count pass is the same job either tier
-    * consumes):
+    * Two tiers, dispatched on the EXACT pair count (the long-id pair
+    * frame is a leaf, so the count pass also materializes what the
+    * union-find tier reads):
     *
     *   - ≤ `smallGraphPairs` long-id pairs (the normal case — near-dup
     *     pairs are rare relative to the corpus, ~1% of docs even at 100 TB):
@@ -431,8 +417,8 @@ object GraftDedup {
     *     takes the min label in its closed neighborhood THEN shortcuts to
     *     its label's label, so convergence is O(log cluster diameter)
     *     rounds (maxIter 20 covers diameters past 10^6), two skinny
-    *     (id, label) shuffles per round, per-round persist with a
-    *     convergence probe on the cached frame. Throws rather than return
+    *     (id, label) shuffles per round, a per-round checkpoint with a
+    *     convergence probe on its blocks. Throws rather than return
     *     unconverged (= wrong) labels if `maxIter` is ever exhausted. The
     *     BSP/Pregel shape — the one operator family where driver-side
     *     iteration is the correct design.
@@ -453,14 +439,20 @@ object GraftDedup {
     }
     val integral = isIntegral(aCol) && isIntegral(bCol)
     if (integral) {
-      val p = pin(pairs.select(col(aCol).cast("long").as("a"),
-                               col(bCol).cast("long").as("b")).persist())
-      if (p.count() <= smallGraphPairs) return unionFindComponents(p)
+      val p = pairs.select(col(aCol).cast("long").as("a"),
+                           col(bCol).cast("long").as("b"))
+        .localCheckpoint(eager = false)
+      val n = p.count()
+      // restated with its exact size, so a consumer's size gate sees a
+      // pair-sliver-sized label table, not the pair plan's estimate
+      if (n <= smallGraphPairs)
+        return unionFindComponents(
+          org.apache.spark.sql.GraftSqlBridge.countedLeaf(p, n))
     }
     iterativeComponents(pairs, aCol, bCol, maxIter)
   }
 
-  /** Single-executor-task union-find over a (persisted, counted-small)
+  /** Single-executor-task union-find over a (checkpointed, counted-small)
     * long-id edge list: path compression + union-by-min ⇒ every root is
     * its component's min id.
     */
@@ -504,8 +496,8 @@ object GraftDedup {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
-      .persist()
-    // localCheckpoint (not persist) each round: the round body references
+      .localCheckpoint(eager = false)
+    // localCheckpoint each round: the round body references
     // `labels` three times, so carrying lineage across rounds would grow
     // the logical plan 3^rounds — checkpointing makes each round's result
     // a leaf (blocks are reclaimed by the ContextCleaner as old rounds
@@ -548,7 +540,6 @@ object GraftDedup {
       labels = next.select("id", "component")
       iter += 1
     }
-    edges.unpersist()
     if (!converged) {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
@@ -569,12 +560,10 @@ object GraftDedup {
     * recall bound ([[bandMissProb]] ≤ `missTarget`), so a geometry that
     * would silently drop above-threshold pairs is refused instead of run.
     *
-    * The intermediate signature table is persisted — it feeds the band
+    * The intermediate signature table is a leaf — it feeds the band
     * self-join (both sides) and four verify attaches, and would otherwise
-    * recompute the signature subtree ~5×. Callers running many corpora
-    * through one session should call [[unpersistAll]] after consuming each
-    * corpus's pairs (or manage persistence themselves via the lower-level
-    * [[signatures]]/[[lshCandidates]]/[[verifyJaccard]] pieces).
+    * recompute the signature subtree ~5×. Its blocks are freed with the
+    * returned frame.
     */
   def nearDupPairs(df: DataFrame, idCol: String, itemsCol: String,
                    threshold: Double, blockCols: Seq[String] = Nil,
@@ -584,7 +573,8 @@ object GraftDedup {
     val (r, bands) = minhashBanding(threshold, numHashes, rowsPerBand,
                                     missTarget)
     val sf = if (sigFilter.isNaN) math.max(0.0, threshold - 0.2) else sigFilter
-    val tbl = pin(signatures(df, idCol, itemsCol, blockCols, numHashes).persist())
+    val tbl = signatures(df, idCol, itemsCol, blockCols, numHashes)
+      .localCheckpoint(eager = false)
     val cand = lshCandidates(tbl, idCol, blockCols,
                              bands = bands, rowsPerBand = r)
     verifyJaccard(cand, tbl, idCol, threshold, sf)
@@ -675,8 +665,8 @@ object GraftDedup {
     val endpoints = newPairs.select(col(aCol).as(idCol))
       .unionAll(newPairs.select(col(bCol).as(idCol)))
       .distinct()
-    val touched = pin(
-      prevLbl.join(broadcast(endpoints), Seq(idCol), "left_semi").persist())
+    val touched = prevLbl.join(broadcast(endpoints), Seq(idCol), "left_semi")
+      .localCheckpoint(eager = false)
     // contract each new pair's endpoints through the stored labels —
     // endpoints outside prev (the new ids) name themselves
     val contracted = newPairs

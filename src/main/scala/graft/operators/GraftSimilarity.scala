@@ -517,16 +517,16 @@ object GraftSimilarity {
     * why not id-modulo), optionally Lloyd-refine them, and assign every
     * vector to its nearest cell via the map-side partial argmax. One
     * broadcast-assign pass over the collection; `assigned` is never
-    * persisted here — callers persist (or write out) the corpus-sized
-    * frame to amortize. The CENTROID frame is persisted at build (√N
-    * rows — broadcastable, hence cacheable, at any N): its subtree costs
-    * TWO corpus scans per evaluation (the __N count and the md5-threshold
-    * filter) and every consumer evaluates it repeatedly — `assigned`
-    * embeds it in the assign argmax, a serve folds it again into the
-    * probe broadcast, and a store write materializes it a third time —
-    * so one serve-after-build was paying ~6 corpus scans for a √N-row
-    * frame (r17 ProbePhases; guide §1.2 fewer passes). Lazy persist: the
-    * first action materializes, everything after reads the cache.
+    * materialized here — callers persist (or write out) the corpus-sized
+    * frame to amortize. The CENTROID frame is a lazy checkpoint leaf (√N
+    * rows): its subtree costs TWO corpus scans per evaluation (the __N
+    * count and the md5-threshold filter) and every consumer evaluates it
+    * repeatedly — `assigned` embeds it in the assign argmax, a serve
+    * folds it again into the probe broadcast, and a store write
+    * materializes it a third time — so one serve-after-build was paying
+    * ~6 corpus scans for a √N-row frame (r17 ProbePhases). The first
+    * action materializes the leaf, everything after reads its blocks,
+    * and they are freed with the index.
     */
   def buildIvfIndex(collection: DataFrame,
                     centroidFraction: Option[Double] = None,
@@ -566,13 +566,15 @@ object GraftSimilarity {
     val cents0 = withN
       .filter(substring(md5(col("n_id").cast("string")), 1, 8) < cut)
       .select(col("n_id").as("c_id"), col("v").as("cv"))
-    val cents =
+    val refined =
       if (refineIters > 0) kmeansRefine(e, cents0, refineIters)
       else cents0
     // see the scaladoc: √N rows, 2 corpus scans per evaluation, evaluated
-    // by every consumer — persist at build (streaming frames pass
-    // through untouched; persist would throw on them)
-    if (!cents.isStreaming) cents.persist()
+    // by every consumer — a leaf (streaming frames pass through
+    // untouched; they cannot be checkpointed)
+    val cents =
+      if (refined.isStreaming) refined
+      else refined.localCheckpoint(eager = false)
     IvfIndex(cents, assignTo(cents, e))
   }
 
@@ -1865,13 +1867,12 @@ object GraftSimilarity {
                       expr(s"transform($vecCol, x -> cast(x AS double))")
                         .as("qv"))
     val cents = buildIvfIndex(v, idCol = "n_id", vecCol = "qv").centroids
-    // both sides of the cell self-join consume the assignment — persisted
-    // (and pinned under GraftDedup.unpersistAll, the shared dedup-tier
-    // release hook) so the N·√N assign runs once, not once per side; a
-    // caller pairing over the at-rest store reads `assigned` from disk
-    // instead and skips this entirely
-    val assigned = GraftDedup.pin(
-      probeCells(v, cents, nprobe, keep = Seq("n_id", "qv")).persist())
+    // both sides of the cell self-join consume the assignment — a leaf, so
+    // the N·√N assign runs once, not once per side; a caller pairing over
+    // the at-rest store reads `assigned` from disk instead and skips this
+    // entirely
+    val assigned = probeCells(v, cents, nprobe, keep = Seq("n_id", "qv"))
+      .localCheckpoint(eager = false)
     val a = assigned.select(col("c_id"), col("n_id").as("a_id"),
                             col("qv").as("__va"))
     val b = assigned.select(col("c_id"), col("n_id").as("b_id"),

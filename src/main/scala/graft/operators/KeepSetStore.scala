@@ -176,7 +176,9 @@ object KeepSetStore extends ManifestStore {
         // and unpersist before returning: bounded lifetime, no r11 leak.
         // remap is pair-sliver-sized by construction; the resolved table
         // is corpus-KEYED but skinny (two longs per id), and it is
-        // re-derived per retry attempt, so nothing outlives the call.
+        // re-derived per retry attempt. The remap kernel's own
+        // intermediates are checkpoint leaves freed with these frames
+        // (GraftDedup's lifetime rule), so nothing outlives the call.
         val prevLbl = resolveFrom(spark, dir, m, idCol)
           .select(col(idCol), col("cluster_id")).persist()
         val remap = GraftDedup.keepSetRemap(prevLbl, newPairs, idCol,

@@ -23,8 +23,8 @@ object ScaleHints {
     pick(side, side.queryExecution.optimizedPlan.stats.sizeInBytes)
 
   /** Like [[gated]], but decided by an exact byte size the caller measured
-    * (e.g. count × row width of an already-persisted table). Catalyst's
-    * estimate can flip across cache materialization, and a flipping join
+    * (e.g. count × row width of the side). Catalyst's estimate
+    * depends on how the side was built, and a flipping join
     * strategy changes the partitioning seen downstream — fatal under a
     * position-seeded sampler that promises same-partitioning determinism.
     */

@@ -36,13 +36,11 @@ object PipelineQueries extends QueryModule {
         // 1. exact dedup (digest-keyed shuffle, keep lowest doc_id)
         val exactKept = CorpusCuration.exactDedup(docs)
         // 2. near-dup removal: drop the b-side of every LSH-verified pair.
-        // minhashLshPairs is persisted + memoized per (session, dir), so a
-        // run that also executes dedup_minhash_lsh pays the signature+verify
-        // job once, not twice (VERDICT r1 item 4). The anti-join side is
-        // gated on its EXACT count inside removeNearDups — a Catalyst
-        // estimate flips across cache materialization, and a flipping join
-        // strategy would change the partitioning under the sampler below,
-        // breaking the pipeline's end-to-end determinism.
+        // The pairs are a checkpoint leaf: removeNearDups counts them and
+        // then joins them, and they are mined once. The anti-join side is
+        // gated on its EXACT count inside removeNearDups, so the join
+        // strategy — hence the partitioning under the sampler below — is
+        // fixed by the data, never by a Catalyst estimate.
         val deduped = CorpusCuration.removeNearDups(
           exactKept, DedupQueries.minhashLshPairs(s, dir))
         // 3. quality filter (pure map; keeps the tk column for stage 5)

@@ -809,7 +809,7 @@ object CorpusStreams {
       s"latenessMinutes must be positive, got $latenessMinutes")
     graft.GraftSession.ensureExtensions(queries.sparkSession)
     // the index's embedding dim, read once at stream setup from the tiny
-    // centroids frame (√N rows, usually persisted) — used to screen
+    // centroids frame (√N rows, a checkpoint leaf) — used to screen
     // malformed queries below
     val indexDim = index.centroids
       .select(org.apache.spark.sql.functions.size(col("cv")).as("d"))

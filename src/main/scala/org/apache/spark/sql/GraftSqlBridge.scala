@@ -5,9 +5,10 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -43,27 +44,47 @@ object GraftSqlBridge {
   def queryExecution(df: DataFrame): QueryExecution =
     df.asInstanceOf[CDataset[Row]].queryExecution
 
+  /** A `localCheckpoint` leaf restated with its exact row count, known once
+    * an action has run over it. A leaf otherwise carries the estimate of
+    * the plan it was cut from — for a join product, orders of magnitude
+    * past a size gate. */
+  def countedLeaf(leaf: DataFrame, rows: Long): DataFrame = {
+    val l = logicalPlan(leaf).asInstanceOf[LogicalRDD]
+    val stats = Statistics(EstimationUtils.getSizePerRow(l.output) * rows,
+                           Some(BigInt(rows)))
+    ofRows(leaf.sparkSession,
+      LogicalRDD(l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
+                 l.isStreaming)(classicSession(leaf.sparkSession), Some(stats)))
+  }
+
   /** Idempotently install graft planner strategies on an existing session
-    * (for sessions not built via `SparkSession.builder().withExtensions`).
+    * (for sessions not built via `SparkSession.builder().withExtensions`):
+    * a strategy the session's planner already holds, injected or added
+    * here, is not added again.
     */
   def ensureStrategy(
       spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = classicSession(spark).experimental
-    if (!exp.extraStrategies.contains(strategy)) {
+    val session = classicSession(spark)
+    if (!session.sessionState.planner.strategies.contains(strategy)) {
+      val exp = session.experimental
       exp.extraStrategies = exp.extraStrategies :+ strategy
     }
   }
 
   /** Idempotently add an optimizer rule to an existing session (post-hoc
-    * analog of `SparkSessionExtensions.injectOptimizerRule`).
+    * analog of `SparkSessionExtensions.injectOptimizerRule`, and a no-op
+    * when that injection already installed it).
     */
   def ensureOptimizerRule(
       spark: SparkSession,
       rule: org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val exp = classicSession(spark).experimental
-    if (!exp.extraOptimizations.contains(rule)) {
+    val session = classicSession(spark)
+    val exp = session.experimental
+    if (!exp.extraOptimizations.contains(rule) &&
+        !session.sessionState.optimizer.extendedOperatorOptimizationRules
+          .contains(rule)) {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }

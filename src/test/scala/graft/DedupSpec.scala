@@ -478,7 +478,6 @@ class DedupSpec extends GraftFunSuite {
     } finally {
       prevGate.fold(conf.unset("spark.graft.broadcastGateBytes"))(
         conf.set("spark.graft.broadcastGateBytes", _))
-      GraftDedup.unpersistAll()
     }
   }
 }

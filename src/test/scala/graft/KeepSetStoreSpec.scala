@@ -222,4 +222,47 @@ class KeepSetStoreSpec extends GraftFunSuite with ManifestStoreFixture {
              Set((1L, 1L, true), (9L, 9L, true)))
     }
   }
+
+  test("increment and incrementStream leave no CacheManager entry: the " +
+       "remap kernel's intermediates are checkpoint leaves and the " +
+       "staging persists are released before each call returns") {
+    withMockS3 { base =>
+      val dir = s"s3a:$base/ks5"
+      val cache = spark.sharedState.cacheManager
+      // start from an empty CacheManager whatever earlier suites left
+      spark.catalog.clearCache()
+      val ids0 = Seq(1L, 2L, 5L, 6L, 9L).toDF("doc_id")
+      val pairs0 = Seq((1L, 2L), (5L, 6L)).toDF("a_id", "b_id")
+      assert(KeepSetStore.create(GraftDedup.keepSet(ids0, pairs0), dir) == 1L)
+      assert(cache.isEmpty, "create left a cached frame")
+      val increments = Seq(
+        (Seq(10L, 11L), Seq((10L, 11L), (11L, 6L))),
+        (Seq(20L), Seq((20L, 9L))),
+        (Seq(30L, 31L), Seq((30L, 31L), (31L, 1L), (9L, 2L))))
+      increments.zipWithIndex.foreach { case ((ids, pairs), i) =>
+        assert(KeepSetStore.increment(spark, dir, ids.toDF("doc_id"),
+          pairs.toDF("a_id", "b_id")) == i + 2L)
+        assert(cache.isEmpty, s"increment ${i + 1} left a cached frame")
+      }
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val in = MemoryStream[(Long, Long)]
+      val q = KeepSetStore
+        .incrementStream(dir, in.toDF().toDF("a_id", "b_id"), streamId = "m")
+        .option("checkpointLocation", s"$base/chk_ks5")
+        .start()
+      try {
+        in.addData(Seq((40L, 41L), (41L, 5L))); q.processAllAvailable()
+        assert(cache.isEmpty, "micro-batch 0 left a cached frame")
+        in.addData(Seq((50L, 40L))); q.processAllAvailable()
+        assert(cache.isEmpty, "micro-batch 1 left a cached frame")
+      } finally q.stop()
+      val clusters = KeepSetStore.read(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // {1,2,9,20,30,31} and {5,6,10,11,40,41,50} after the five folds
+      assert(Seq(2L, 9L, 20L, 30L, 31L).forall(clusters(_) == 1L), clusters)
+      assert(Seq(6L, 10L, 11L, 40L, 41L, 50L).forall(clusters(_) == 5L),
+        clusters)
+    }
+  }
 }

@@ -329,26 +329,46 @@ class OperatorLibSpec extends GraftFunSuite with ManifestStoreFixture {
     assert(auto == fixed && auto.nonEmpty)
   }
 
-  test("unpersistCache releases dedup storage between corpora") {
+  test("dedup intermediates live as long as their result: no CacheManager " +
+       "entry, and storage returns to baseline once the pairs are dropped") {
     import graft.operators.GraftDedup
     def docs(tag: String) = (0L until 50L).map(i =>
       (i, s"$tag token$i alpha beta gamma delta".split(" ").toSeq))
       .toDF("doc_id", "items")
-    def pinned = spark.sparkContext.getPersistentRDDs.size
-    // other suites share the session — measure OUR pins as a delta from a
-    // clean dedup-cache baseline
-    graft.queries.DedupQueries.unpersistCache()
-    val base = pinned
-    GraftDedup.nearDupPairs(docs("a"), "doc_id", "items", 0.8).count()
-    assert(pinned > base, "first corpus should pin its signature table")
-    // releasing between corpora returns storage to the baseline...
-    graft.queries.DedupQueries.unpersistCache()
-    assert(pinned == base, s"expected $base pins after release, have $pinned")
-    // ...and the second corpus only ever holds its own pins
-    GraftDedup.nearDupPairs(docs("b"), "doc_id", "items", 0.8).count()
-    assert(pinned > base)
-    graft.queries.DedupQueries.unpersistCache()
-    assert(pinned == base)
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    // GC until the unreachable checkpoint leaves are gone: polled, since
+    // the ContextCleaner releases their blocks asynchronously
+    def settleTo(target: Int): Int = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      var n = persisted
+      while (n > target && System.nanoTime() < deadline) {
+        System.gc(); Thread.sleep(100); n = persisted
+      }
+      n
+    }
+    // other suites share the session: let their dropped leaves go first
+    // (the count holds still over three GC rounds)
+    var base = -1
+    var stable = 0
+    while (stable < 3) {
+      System.gc(); Thread.sleep(200)
+      val n = persisted
+      stable = if (n == base) stable + 1 else 0
+      base = n
+    }
+    def corpus(tag: String): Unit = {
+      val pairs = GraftDedup.nearDupPairs(docs(tag), "doc_id", "items", 0.7)
+      assert(pairs.count() == 50L * 49 / 2)
+      assert(cache.isEmpty, s"corpus $tag left a CacheManager entry")
+      assert(persisted > base,
+        s"corpus $tag: the signature leaf holds storage while its pairs live")
+    }
+    corpus("a")
+    assert(settleTo(base) == base, "corpus a's storage outlived its pairs")
+    corpus("b")
+    assert(settleTo(base) == base, "corpus b's storage outlived its pairs")
   }
 
   test("connectedComponents: chains close transitively, deterministic labels") {
@@ -531,8 +551,11 @@ class OperatorLibSpec extends GraftFunSuite with ManifestStoreFixture {
       else Seq((i.toLong * 2, base + " solo"))
     }
     val df = rows.toDF("doc_id", "text").repartition(16) // scattered input
-    val out = GraftDedup.prefixDups(df, "doc_id", "text")
-    val got = out.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    val ((out, got), leaves) =
+      org.apache.spark.GraftJobProbe.leafPlans(spark) {
+        val out = GraftDedup.prefixDups(df, "doc_id", "text")
+        (out, out.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap)
+      }
     val sorted = rows.sortBy { case (id, t) => (t, id) }
     val exp = sorted.indices.map { i =>
       sorted(i)._1 ->
@@ -566,15 +589,14 @@ class OperatorLibSpec extends GraftFunSuite with ManifestStoreFixture {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case s: QueryStageExec => nodes(s.plan)
-      // the ranged+pid frame is persisted (one exchange instance for both
-      // branches - ADVICE r15); the range exchange lives in its cached plan
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        m +: nodes(m.relation.cachedPlan)
       case other => other +: (other.children.flatMap(nodes) ++
         other.subqueries.flatMap(nodes))
     }
+    // the ranged+pid frame is a checkpoint leaf (one exchange instance for
+    // both branches - ADVICE r15); the range exchange lives in its own plan
     val all = nodes(
-      org.apache.spark.sql.GraftSqlBridge.queryExecution(out).executedPlan)
+      org.apache.spark.sql.GraftSqlBridge.queryExecution(out).executedPlan) ++
+      leaves.flatMap(qe => nodes(qe.executedPlan))
     val singles = all.collect {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
     }

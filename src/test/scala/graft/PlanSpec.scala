@@ -57,7 +57,6 @@ class PlanSpec extends GraftFunSuite {
   }
 
   test("LSH verify attaches broadcast while under the size gate") {
-    // the memoized query caches its result; inspect the raw DAG instead
     val p = GraftSqlBridge.queryExecution(
       graft.queries.DedupQueries.buildLshPairs(spark, sf0001))
       .executedPlan.toString
@@ -68,11 +67,6 @@ class PlanSpec extends GraftFunSuite {
     val conf = spark.conf
     val prevGate = conf.getOption("spark.graft.broadcastGateBytes")
     val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // the memoized result may be cached from an earlier suite; its cached
-    // plan would be substituted wholesale (cache lookup ignores join hints)
-    // and the assertion would see the OLD broadcast plan — drop it first
-    val memo = graft.queries.DedupQueries.minhashLshPairs(spark, sf0001)
-    memo.unpersist(blocking = true)
     try {
       conf.set("spark.graft.broadcastGateBytes", "0")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -93,7 +87,6 @@ class PlanSpec extends GraftFunSuite {
       prevGate.fold(conf.unset("spark.graft.broadcastGateBytes"))(
         conf.set("spark.graft.broadcastGateBytes", _))
       conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      memo.persist()
     }
   }
 

@@ -5,6 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts the Spark jobs a block launches. The block runs under a job
   * group of its own, so jobs of anything else running in the session do
@@ -34,5 +37,24 @@ object GraftJobProbe {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The block's result and the query executions of the checkpoint leaves
+    * it built: a leaf's own plan, which the consuming plan shows only as
+    * `Scan ExistingRDD`. */
+  def leafPlans[T](spark: SparkSession)(body: => T): (T, Seq[QueryExecution]) = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.sparkContext.listenerBus.waitUntilEmpty()
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
