@@ -246,4 +246,163 @@ class GraphSpec extends GraftFunSuite {
                                      initialRanks = Some(empty)))
              == ranks(cold3))
   }
+
+  // ---- characterization: edge cases of the four operators ----
+
+  /** Nullable edge list: `None` is a null endpoint. */
+  private def nedges(es: (Option[Long], Option[Long])*) =
+    es.toDF("src", "dst")
+
+  /** node id (None = the null id) → the row's remaining columns. */
+  private def byNode(df: org.apache.spark.sql.DataFrame)
+      : Map[Option[Long], Seq[Long]] =
+    df.collect().map { r =>
+      (if (r.isNullAt(0)) None else Some(r.getLong(0))) ->
+        (1 until r.length).map(r.getLong)
+    }.toMap
+
+  test("characterization: null endpoints — pageRank keeps a null node " +
+       "for a null dst and drops edges with a null src; hits counts the " +
+       "null node but never outputs it; labelPropagation votes for the " +
+       "null node and loses nodes whose only neighbor is null") {
+    val e = nedges((Some(1L), Some(2L)), (Some(1L), None), (None, Some(3L)),
+                   (Some(2L), Some(1L)))
+    // deg(1) = 2 (the null-dst edge counts), node 3 only hangs off a
+    // null src so it is not a node; the null node receives nothing
+    assert(byNode(GraftGraph.pageRank(e, iters = 2, grid = 100L)) ==
+      Map(Some(1L) -> Seq(63L), Some(2L) -> Seq(57L), None -> Seq(15L)))
+    // dangling: only the null node dangles; n = 3, ds div n = 100 div 3
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L,
+                                      danglingRedistribute = true)) ==
+      Map(Some(1L) -> Seq(128L), Some(2L) -> Seq(85L), None -> Seq(43L)))
+    // a null seed and an off-graph seed are both ignored
+    val seeds = Seq(Some(1L), None, Some(3L)).toDF("node_id")
+    assert(byNode(GraftGraph.personalizedPageRank(e, seeds, iters = 1,
+                                                  grid = 100L)) ==
+      Map(Some(1L) -> Seq(15L), Some(2L) -> Seq(42L), None -> Seq(0L)))
+    // warm start: a null id and an off-graph id are ignored, the null
+    // node and node 2 take the cold default
+    val warm = Seq((Some(1L), 200L), (None, 7L), (Some(3L), 9L))
+      .toDF("node_id", "pr_micro")
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L,
+                                      initialRanks = Some(warm))) ==
+      Map(Some(1L) -> Seq(100L), Some(2L) -> Seq(100L), None -> Seq(15L)))
+    // hits: node 3 is a node (authority and hub 0), the null node is not
+    // in the output
+    assert(byNode(GraftGraph.hits(e, iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(100L, 100L), Some(2L) -> Seq(100L, 100L),
+          Some(3L) -> Seq(0L, 0L)))
+    // lpa: 3 and 5 only neighbor the null id, so no label reaches them
+    // and they leave the state after round 1; the null node takes the
+    // smallest of its tied neighbor labels
+    val e5 = nedges((Some(1L), Some(2L)), (Some(1L), None), (None, Some(3L)),
+                    (Some(2L), Some(1L)), (Some(5L), None))
+    assert(byNode(GraftGraph.labelPropagation(e5, iters = 1)) ==
+      Map(Some(1L) -> Seq(2L), Some(2L) -> Seq(1L), None -> Seq(1L)))
+    assert(byNode(GraftGraph.labelPropagation(e5, iters = 2)) ==
+      Map(Some(1L) -> Seq(1L), Some(2L) -> Seq(2L), None -> Seq(2L)))
+  }
+
+  test("characterization: self-loops count as an out- and an in-edge") {
+    val e = Seq((1L, 1L), (1L, 2L)).toDF("src", "dst")
+    // deg(1) = 2: half of r(1) flows back to 1
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(57L), Some(2L) -> Seq(57L)))
+    assert(byNode(GraftGraph.personalizedPageRank(
+        e, Seq(1L).toDF("node_id"), iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(57L), Some(2L) -> Seq(42L)))
+    assert(byNode(GraftGraph.hits(e, iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(100L, 100L), Some(2L) -> Seq(0L, 100L)))
+    // node 1 hears itself and 2 (tie → 1), node 2 hears 1
+    assert(byNode(GraftGraph.labelPropagation(e, iters = 1)) ==
+      Map(Some(1L) -> Seq(1L), Some(2L) -> Seq(1L)))
+  }
+
+  test("characterization: duplicate edges collapse in all four operators") {
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 3L))
+    val once = es.toDF("src", "dst")
+    val thrice = (es ++ es.reverse ++ es).toDF("src", "dst")
+    val seeds = Seq(1L, 4L).toDF("node_id")
+    for ((name, f) <- Seq[(String, org.apache.spark.sql.DataFrame =>
+                              org.apache.spark.sql.DataFrame)](
+           "pageRank" -> (GraftGraph.pageRank(_, iters = 3)),
+           "dangling" -> (GraftGraph.pageRank(_, iters = 3,
+                                              danglingRedistribute = true)),
+           "ppr" -> (GraftGraph.personalizedPageRank(_, seeds, iters = 3)),
+           "hits" -> (GraftGraph.hits(_, iters = 3)),
+           "lpa" -> (GraftGraph.labelPropagation(_, iters = 3)))) {
+      val a = byNode(f(once))
+      assert(a.size == 4 && a == byNode(f(thrice)), name)
+    }
+  }
+
+  test("characterization: an empty edge frame gives an empty result with " +
+       "the operator's columns") {
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val seeds = Seq(1L).toDF("node_id")
+    val warm = Seq((1L, 5L)).toDF("node_id", "pr_micro")
+    val cases = Seq(
+      GraftGraph.pageRank(e) -> Seq("node_id", "pr_micro"),
+      GraftGraph.pageRank(e, danglingRedistribute = true) ->
+        Seq("node_id", "pr_micro"),
+      GraftGraph.pageRank(e, initialRanks = Some(warm)) ->
+        Seq("node_id", "pr_micro"),
+      GraftGraph.personalizedPageRank(e, seeds) -> Seq("node_id", "pr_micro"),
+      GraftGraph.hits(e) -> Seq("node_id", "hub_micro", "auth_micro"),
+      GraftGraph.labelPropagation(e) -> Seq("node_id", "community"))
+    for ((df, cols) <- cases) {
+      assert(df.columns.toSeq == cols)
+      assert(df.schema.fields.forall(_.dataType ==
+        org.apache.spark.sql.types.LongType))
+      assert(df.collect().isEmpty)
+    }
+  }
+
+  test("characterization: off-graph warm-start ids and seeds are ignored") {
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val cold = byNode(GraftGraph.pageRank(e, iters = 2, grid = 100L))
+    val ghosts = Seq((98L, 5000L), (99L, 7L)).toDF("node_id", "pr_micro")
+    assert(byNode(GraftGraph.pageRank(e, iters = 2, grid = 100L,
+                                      initialRanks = Some(ghosts))) == cold)
+    // seeds entirely off the graph: nothing is seeded, every rank is 0
+    assert(byNode(GraftGraph.personalizedPageRank(
+        e, Seq(98L, 99L).toDF("node_id"), iters = 2, grid = 100L)) ==
+      Map(Some(1L) -> Seq(0L), Some(2L) -> Seq(0L), Some(3L) -> Seq(0L)))
+  }
+
+  test("characterization: dampingPct 0 is pure teleport, 100 pure " +
+       "propagation") {
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    assert(byNode(GraftGraph.pageRank(e, iters = 2, dampingPct = 0,
+                                      grid = 100L)) ==
+      Map(Some(1L) -> Seq(100L), Some(2L) -> Seq(100L), Some(3L) -> Seq(100L)))
+    assert(byNode(GraftGraph.personalizedPageRank(
+        e, Seq(2L).toDF("node_id"), iters = 2, dampingPct = 0,
+        grid = 100L)) ==
+      Map(Some(1L) -> Seq(0L), Some(2L) -> Seq(100L), Some(3L) -> Seq(0L)))
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, dampingPct = 100,
+                                      grid = 100L)) ==
+      Map(Some(1L) -> Seq(0L), Some(2L) -> Seq(100L), Some(3L) -> Seq(100L)))
+    // 1→2 with sink redistribution at damping 100: ds div n = 100 div 2
+    assert(byNode(GraftGraph.pageRank(Seq((1L, 2L)).toDF("src", "dst"),
+                                      iters = 1, dampingPct = 100,
+                                      grid = 100L,
+                                      danglingRedistribute = true)) ==
+      Map(Some(1L) -> Seq(50L), Some(2L) -> Seq(150L)))
+  }
+
+  test("characterization: iters = 1 runs exactly one round") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
+    // r1 = (1500 + 85·Σ r0 div deg) div 100 with deg(1) = 2
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(100L), Some(2L) -> Seq(57L), Some(3L) -> Seq(142L)))
+    // auth raw (1: 100, 2: 100, 3: 200) → (50, 50, 100); hub raw
+    // (1: 50 + 100, 2: 100, 3: 50) → (100, 66, 33)
+    assert(byNode(GraftGraph.hits(e, iters = 1, grid = 100L)) ==
+      Map(Some(1L) -> Seq(100L, 50L), Some(2L) -> Seq(66L, 50L),
+          Some(3L) -> Seq(33L, 100L)))
+    // every node has labels {x, y} of its two or three neighbors
+    assert(byNode(GraftGraph.labelPropagation(e, iters = 1)) ==
+      Map(Some(1L) -> Seq(2L), Some(2L) -> Seq(1L), Some(3L) -> Seq(1L)))
+  }
 }
