@@ -52,8 +52,7 @@ object PlanDump {
                     "ann_ivf_delete_manifest", "ann_pq_budget_sweep",
                     "ann_hybrid_pq",
                     // r12: the int4 rung of the at-rest ladder; link
-                    // centrality (the final-round shape — earlier rounds
-                    // are localCheckpoint leaves)
+                    // centrality (one GraftGraphIterate over its inputs)
                     "ann_ivf_stored_q4", "graph_pagerank",
                     // r12: metadata-filtered serve — the label predicate
                     // must show in PushedFilters beside the DPP cell prune

@@ -257,39 +257,6 @@ object ProbePhases {
       return
     }
 
-    if (mode == "graph") {
-      // VERDICT r16 next #6: per-iteration AQE stage scheduling on the
-      // fixed-iteration graph loops — A/B adaptive on/off on the same
-      // session, alternating, cold cache per rep.
-      import graft.operators.GraftGraph
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      def edges = li.select((col("l_orderkey") * 2).as("src"),
-                            (col("l_partkey") * 2 + 1).as("dst"))
-      val rows: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        ("graph_pagerank", () => GraftGraph.pageRank(edges, iters = 3)),
-        ("graph_pagerank_warm", () => GraftGraph.pageRank(edges, iters = 2,
-           initialRanks = Some(GraftGraph.pageRank(edges, iters = 3)))),
-        ("graph_lpa_communities",
-         () => GraftGraph.labelPropagation(edges, iters = 4)),
-        ("graph_hits", () => GraftGraph.hits(edges, iters = 3)))
-      (1 to reps).foreach { rep =>
-        Seq(true, false).foreach { aqe =>
-          spark.conf.set("spark.sql.adaptive.enabled", aqe)
-          println(s"== graph rows, rep $rep, aqe=$aqe")
-          rows.foreach { case (name, f) =>
-            phase(name) {
-              f().write.format("noop").mode("overwrite").save()
-            }
-            spark.catalog.clearCache()
-            System.gc()
-          }
-        }
-      }
-      spark.conf.set("spark.sql.adaptive.enabled", true)
-      spark.stop()
-      return
-    }
-
     (1 to reps).foreach { rep =>
       println(s"== ann_hybrid_q8 phases, rep $rep")
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
+import graft.plans.{GraftGraphIterate, GraphAlgo}
 
 /** Link-graph centrality — the web-graph quality signals a corpus
   * curation pipeline ranks documents by (a crawl's page graph, a
@@ -16,13 +19,16 @@ import org.apache.spark.sql.functions._
   * across engines — `graph_pagerank` / `graph_hits` are DuckDB
   * hash-checked rows, not "close enough" floats.
   *
-  * Scale shape (the PREGEL shape without the framework): state is one
-  * skinny (node, rank) frame; each iteration is one join of state
-  * against the out-degree-annotated edge list plus one sum-by-dst
-  * aggregation — map-side partial sums ship one long per (partition,
-  * dst), never the edge multiplicity. Iterations localCheckpoint (the
-  * [[GraftDedup.connectedComponents]] convention) so lineage stays
-  * flat and old rounds' blocks age out via the ContextCleaner.
+  * Scale shape (the PREGEL shape without the framework): each operator
+  * builds one [[graft.plans.GraftGraphIterate]] node, which graft's
+  * strategy plans as [[graft.plans.GraftGraphIterateExec]] — the whole
+  * fixed-budget iteration as one RDD lineage inside the caller's action.
+  * Edges are deduplicated once into their source's partition; the skinny
+  * node state lives in the same partitions. Each round is one
+  * map-side-combined shuffle keyed by the receiving node — partial sums
+  * ship one long per (partition, dst), never the edge multiplicity — and
+  * nothing is cached or checkpointed between rounds: each round's
+  * shuffle files are its state, reclaimed with the result frame.
   */
 object GraftGraph {
 
@@ -52,9 +58,9 @@ object GraftGraph {
     * pure local join+sum. Crawl graphs are SINK-HEAVY, though (every
     * leaf page dangles), so `danglingRedistribute = true` adds the
     * uniform redistribution term: each round computes the one scalar
-    * `ds = Σ_{dangling u} r(u)` on the skinny state (a map-side-combined
-    * sum — 8 bytes per partition to the driver-side broadcast, no extra
-    * shuffle of the state itself) and every node's update becomes
+    * `ds = Σ_{dangling u} r(u)` on the skinny state (one small job that
+    * sums 8 bytes per partition on the driver; the node count n rides
+    * the first) and every node's update becomes
     *
     *   r'(v) = (base + dampingPct · (Σ contrib + ds div n)) div 100
     *
@@ -71,12 +77,16 @@ object GraftGraph {
     * state), so a refresh pays only the marginal iterations to
     * re-converge instead of the full budget from uniform.
     *
-    * 100-TB shape: the rank state is 16 B/node; each iteration
-    * shuffles partial contribution sums keyed by dst (map-side
-    * combine) and joins state to edges on src — both keyed by node id,
-    * so pre-partitioning edges by src lets every round reuse the same
-    * exchange. O(iters) rounds with O(E) work each; no step holds more
-    * than the skinny state in memory.
+    * 100-TB shape: edges are shuffled into their source's partition
+    * once, sorted; the rank state (id, degree, base, rank) lives in the
+    * same partitions, sorted by id. A round walks each partition's edge
+    * run beside its state — a sorted merge, so a hub's adjacency streams
+    * and no task holds more than one record of it — and shuffles one
+    * map-side-combined partial sum per (partition, dst) plus each
+    * node's state record back to its own partition. O(iters) shuffles
+    * of O(min(E, P·n)) records each, no exchange of the edges after the
+    * first, and every buffer on the way (the sort and combine of each
+    * shuffle read) spills.
     */
   def pageRank(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
                grid: Long = PageRankGrid,
@@ -111,8 +121,7 @@ object GraftGraph {
                            srcCol: String = "src", dstCol: String = "dst",
                            seedCol: String = "node_id"): DataFrame =
     pageRankBody(edges,
-                 Some(seeds.select(col(seedCol).cast("long").as("node_id"))
-                           .distinct()),
+                 Some(seeds.select(col(seedCol).cast("long").as("node_id"))),
                  iters, dampingPct, grid, srcCol, dstCol)
 
   private def pageRankBody(edges: DataFrame, seeds: Option[DataFrame],
@@ -125,115 +134,28 @@ object GraftGraph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"pageRank: dampingPct must be in [0, 100], got $dampingPct")
     require(grid >= 1L, s"pageRank: grid must be >= 1, got $grid")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .distinct()
-    // loop-invariant frames localCheckpoint ONCE (leaves; blocks
-    // reclaimed by the ContextCleaner when the result frame dies — no
-    // unpersist point to leak past, the r11 ADVICE lesson). Checkpoints
-    // are LAZY (eager = false) throughout this operator: lineage is cut
-    // identically, but materialization folds into the caller's one
-    // action instead of running ~2 eager driver-blocking jobs per round
-    // (the r16 probe measured the eager cascade at 40 jobs for
-    // graph_pagerank_warm, nearly all of its wall time at bench scale —
-    // guide §1.2 step 1, fewer passes):
-    // (src, dst, deg) is the per-iteration join side, nodes the
-    // per-iteration universe. The personalized variant's per-node base
-    // term rides the node frame as `__base` (0 or (100−d)·grid) WITH an
-    // explicit `__seed` flag — seed membership is never inferred from
-    // __base > 0 (ADVICE r12: at dampingPct = 100 every base is 0 and
-    // that inference would zero the whole seeded state); the dangling
-    // variant's sink flag rides the same frame as `__dang`.
-    val eDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("__deg")), "src")
-      .localCheckpoint(eager = false)
-    val baseAll = (100L - dampingPct) * grid
-    val nodesPlain = eDeg.select(col("src").as("node_id"))
-      .unionAll(eDeg.select(col("dst").as("node_id")))
-      .distinct()
-    val nodesSeeded = seeds match {
-      case None => nodesPlain.withColumn("__base", lit(baseAll))
-        .withColumn("__seed", lit(1))
-      case Some(sd) => nodesPlain
-        .join(sd.withColumn("__sd", lit(1)), Seq("node_id"), "left")
-        .select(col("node_id"),
-                when(col("__sd").isNotNull, lit(baseAll))
-                  .otherwise(lit(0L)).as("__base"),
-                when(col("__sd").isNotNull, lit(1))
-                  .otherwise(lit(0)).as("__seed"))
-    }
-    val nodes = (if (danglingRedistribute)
-        nodesSeeded
-          .join(eDeg.select(col("src").as("node_id")).distinct()
-                  .withColumn("__out", lit(1)), Seq("node_id"), "left")
-          .withColumn("__dang",
-                      when(col("__out").isNull, 1).otherwise(0))
-          .drop("__out")
-      else nodesSeeded).localCheckpoint(eager = false)
-    // loop-invariant node count for the redistribution's `ds div n`
-    // (nodes is a checkpointed leaf, so this is one cheap count)
-    val n = if (danglingRedistribute) nodes.count().max(1L) else 1L
-    val stateCols: Seq[Column] =
-      if (danglingRedistribute)
-        Seq(col("node_id"), col("__base"), col("__dang"))
-      else Seq(col("node_id"), col("__base"))
-    // WARM START (VERDICT r13 #5): seed the state from a previous
-    // snapshot's (node_id, pr_micro) — the crawl-refresh shape, where a
-    // rerun should CONTINUE from yesterday's fixpoint instead of
-    // restarting at uniform. Nodes absent from the snapshot (new pages)
-    // take the cold default. Because each round is a pure function of
-    // the previous state, warm(n, seed = cold(m)) ≡ cold(m + n)
-    // bit-for-bit on an unchanged graph — the property the
-    // graph_pagerank_warm oracle certifies — and seeding from a
-    // fixpoint is stable (GraphSpec pins both).
-    val coldStart =
-      if (seeds.isEmpty) lit(grid)
-      else when(col("__seed") === 1, lit(grid)).otherwise(lit(0L))
-    val startExpr = initialRanks match {
-      case None => coldStart
-      case Some(_) => coalesce(col("__pr0"), coldStart)
-    }
-    val nodesStart = initialRanks match {
-      case None => nodes
-      case Some(ir) => nodes.join(
-        ir.select(col("node_id").cast("long").as("node_id"),
-                  col("pr_micro").cast("long").as("__pr0")),
-        Seq("node_id"), "left")
-    }
-    var ranks = nodesStart
-      .select(stateCols :+ startExpr.as("pr_micro"): _*)
-      .localCheckpoint(eager = false)
-    var i = 0
-    while (i < iters) {
-      val contrib = eDeg
-        .join(ranks.select(col("node_id").as("src"), col("pr_micro")), "src")
-        .groupBy(col("dst").as("node_id"))
-        .agg(sum(expr("pr_micro div __deg")).as("__s"))
-      val joined = nodes.join(contrib, Seq("node_id"), "left")
-      ranks =
-        if (danglingRedistribute) {
-          // one scalar per round: the dangling mass, folded to a single
-          // broadcast row (map-side-combined sum over the skinny state)
-          val dangSum = ranks.filter(col("__dang") === 1)
-            .agg(coalesce(sum(col("pr_micro")), lit(0L)).as("__ds"))
-          joined.crossJoin(broadcast(dangSum))
-            .select(stateCols :+
-              expr(s"(__base + $dampingPct * " +
-                   s"(coalesce(__s, 0L) + __ds div $n)) div 100")
-                .as("pr_micro"): _*)
-        } else
-          joined.select(stateCols :+
-            expr(s"(__base + $dampingPct * coalesce(__s, 0L)) div 100")
-              .as("pr_micro"): _*)
-      // checkpoint INTERMEDIATE rounds (flat lineage, reclaimable
-      // blocks); the final round stays a live plan so the returned
-      // frame explains as the iteration shape — one state×edges join +
-      // one partial-agg sum, the thing a plan audit needs to see
-      if (i < iters - 1) ranks = ranks.localCheckpoint(eager = false)
-      i += 1
-    }
-    ranks.select(col("node_id"), col("pr_micro"))
+    iterate(GraphAlgo.PageRank(iters, dampingPct, grid, danglingRedistribute,
+                               seeds.isDefined, initialRanks.isDefined),
+            Seq(edgePairs(edges, srcCol, dstCol)) ++ seeds ++
+              initialRanks.map(_.select(col("node_id").cast("long"),
+                                        col("pr_micro").cast("long"))))
+  }
+
+  /** The `(src, dst)` bigint edge input of an iteration. */
+  private def edgePairs(edges: DataFrame, srcCol: String,
+                        dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+                 col(dstCol).cast("long").as("dst"))
+
+  /** The frame of one [[GraftGraphIterate]] node over `inputs` (edges
+    * first). The aliasing select gives the frame output ids of its own,
+    * so a self-join of the result resolves like any projected frame. */
+  private def iterate(algo: GraphAlgo, inputs: Seq[DataFrame]): DataFrame = {
+    val spark = inputs.head.sparkSession
+    GraftSession.ensureExtensions(spark)
+    GraftSqlBridge.ofRows(spark,
+        GraftGraphIterate(algo, inputs.map(GraftSqlBridge.logicalPlan)))
+      .select(algo.columns.map(c => col(c).as(c)): _*)
   }
 
   /** HITS hubs-and-authorities over a directed edge list,
@@ -253,63 +175,16 @@ object GraftGraph {
     * and the rescale multiplies by grid before dividing — n·grid² must
     * stay under 2⁶³, i.e. ~9·10⁶ nodes at the default grid; pass a
     * smaller grid (e.g. 10³ → 9·10¹² nodes) for bigger graphs. The
-    * require below enforces it against the actual node count.
+    * node count is known only once the node universe is shuffled, so the
+    * check runs at execution, in the first renormalization's small job:
+    * the action fails with an `IllegalArgumentException`. Each half-step
+    * runs one such job (the global max); the rest is the caller's job.
     */
   def hits(edges: DataFrame, iters: Int = 3, grid: Long = PageRankGrid,
            srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
     require(grid >= 1L, s"hits: grid must be >= 1, got $grid")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("node_id"))
-      .unionAll(e.select(col("dst").as("node_id")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val n = nodes.count()
-    require(n <= Long.MaxValue / grid / grid,
-      s"hits: $n nodes at grid $grid risks 64-bit overflow in the " +
-      "rescale step — pass a smaller grid")
-    // max-renormalize to the grid; max(x) over non-negative longs is
-    // exact and order-free, and x·grid div max keeps integers in
-    // [0, grid]. A zero max (possible only on a degenerate empty side)
-    // leaves the zeros unchanged.
-    def rescale(st: DataFrame, c: String): DataFrame = {
-      val mx = st.agg(max(col(c)).as("__m"))
-      st.crossJoin(broadcast(mx))
-        .select(col("node_id"),
-                when(col("__m") > 0L,
-                     expr(s"$c * $grid div __m")).otherwise(lit(0L)).as(c))
-    }
-    var hub = nodes.withColumn("hub_micro", lit(grid)).localCheckpoint(eager = false)
-    var auth: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val a = nodes.join(
-          e.join(hub.withColumnRenamed("node_id", "src"), "src")
-            .groupBy(col("dst").as("node_id"))
-            .agg(sum(col("hub_micro")).as("auth_micro")),
-          Seq("node_id"), "left")
-        .select(col("node_id"),
-                coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
-      auth = rescale(a, "auth_micro").localCheckpoint(eager = false)
-      val h = nodes.join(
-          e.join(auth.withColumnRenamed("node_id", "dst"), "dst")
-            .groupBy(col("src").as("node_id"))
-            .agg(sum(col("auth_micro")).as("hub_micro")),
-          Seq("node_id"), "left")
-        .select(col("node_id"),
-                coalesce(col("hub_micro"), lit(0L)).as("hub_micro"))
-      // final round stays a live plan (the pageRank convention) — the
-      // result joins the last hub state to the checkpointed auth leaf
-      hub = if (i < iters - 1) rescale(h, "hub_micro").localCheckpoint(eager = false)
-            else rescale(h, "hub_micro")
-      i += 1
-    }
-    hub.join(auth, "node_id")
-      .select(col("node_id"), col("hub_micro"), col("auth_micro"))
+    iterate(GraphAlgo.Hits(iters, grid), Seq(edgePairs(edges, srcCol, dstCol)))
   }
 
   /** Community detection by SYNCHRONOUS label propagation (Raghavan,
@@ -332,44 +207,19 @@ object GraftGraph {
     * semi-synchronous practice; pick `iters` by corpus diameter, not
     * by waiting for a convergence that may never come.
     *
-    * Scale shape: state is one skinny (node, label) frame; each round
-    * is one state join against the mirrored edges, one map-side-
-    * combined count by (node, label), and one order-free max-struct
-    * argmax by node — no windows over corpus-sized partitions, rounds
-    * localCheckpoint ([[GraftDedup.connectedComponents]] convention).
+    * Scale shape: state is one skinny (node, label) stream per
+    * partition; each round walks the mirrored edges beside it and
+    * shuffles one map-side-combined count per (node, label), read back
+    * sorted, so the argmax (count desc, label asc) streams each node's
+    * labels — no window, no per-node buffer, and the whole budget runs
+    * in the caller's one job.
     * Output: (node_id, community) where community is the final label.
     */
   def labelPropagation(edges: DataFrame, iters: Int = 4,
                        srcCol: String = "src", dstCol: String = "dst")
       : DataFrame = {
     require(iters >= 1, s"labelPropagation: iters must be >= 1, got $iters")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .distinct()
-    val und = e.unionAll(e.select(col("dst").as("src"),
-                                  col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    var st = und.select(col("src").as("node_id"))
-      .distinct()
-      .withColumn("lbl", col("node_id"))
-      .localCheckpoint(eager = false)
-    var i = 0
-    while (i < iters) {
-      // neighbors' labels → (node, label) counts → deterministic argmax:
-      // max over struct(cnt, -lbl) is (count desc, label asc), exact and
-      // merge-order-free
-      val next = und
-        .join(st.withColumnRenamed("node_id", "src"), "src")
-        .groupBy(col("dst").as("node_id"), col("lbl"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy("node_id")
-        .agg(max(struct(col("__c"), (-col("lbl")).as("__nl"))).as("__m"))
-        .select(col("node_id"), (-col("__m.__nl")).as("lbl"))
-      st = if (i < iters - 1) next.localCheckpoint(eager = false) else next
-      i += 1
-    }
-    st.select(col("node_id"), col("lbl").as("community"))
+    iterate(GraphAlgo.LabelPropagation(iters),
+            Seq(edgePairs(edges, srcCol, dstCol)))
   }
 }

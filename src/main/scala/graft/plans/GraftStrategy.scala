@@ -17,6 +17,8 @@ object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case SampleNode(fraction, seed, child) =>
       SampleExecNode(fraction, seed, planLater(child)) :: Nil
+    case g: GraftGraphIterate =>
+      GraftGraphIterateExec(g.algo, g.output, g.children.map(planLater)) :: Nil
     case _ => Nil
   }
 }

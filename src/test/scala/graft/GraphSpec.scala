@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.GraftJobProbe
 import org.apache.spark.sql.functions._
 import graft.operators.GraftGraph
+import graft.plans.GraftGraphIterateExec
 
 /** [[graft.operators.GraftGraph]] — integer-exact link centrality. */
 class GraphSpec extends GraftFunSuite {
@@ -404,5 +406,73 @@ class GraphSpec extends GraftFunSuite {
     // every node has labels {x, y} of its two or three neighbors
     assert(byNode(GraftGraph.labelPropagation(e, iters = 1)) ==
       Map(Some(1L) -> Seq(2L), Some(2L) -> Seq(1L), Some(3L) -> Seq(1L)))
+  }
+
+  // ---- execution shape: one job per frame, metrics on the exec ----
+
+  private val shapeEdges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L),
+                               (4L, 3L), (1L, 2L))
+
+  test("building a graph frame launches no job; collecting PageRank, " +
+       "personalized, warm-start and LPA frames over an exchange-free " +
+       "edge frame launches one, HITS at most 1 + 2·iters") {
+    val e = shapeEdges.toDF("src", "dst")
+    val seeds = Seq(1L, 4L).toDF("node_id")
+    val builds = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
+      ("pageRank", () => GraftGraph.pageRank(e, iters = 3), 1),
+      ("ppr", () => GraftGraph.personalizedPageRank(e, seeds, iters = 3), 1),
+      ("warm", () => GraftGraph.pageRank(e, iters = 2,
+         initialRanks = Some(GraftGraph.pageRank(e, iters = 3))), 1),
+      ("lpa", () => GraftGraph.labelPropagation(e, iters = 4), 1),
+      ("hits", () => GraftGraph.hits(e, iters = 3), 1 + 2 * 3),
+      ("dangling", () => GraftGraph.pageRank(e, iters = 3,
+         danglingRedistribute = true), 1 + 3))
+    for ((name, build, maxJobs) <- builds) {
+      val (df, built) = GraftJobProbe.jobs(spark.sparkContext)(build())
+      assert(built.isEmpty, s"$name: building ran ${built.size} jobs")
+      val (_, ran) = GraftJobProbe.jobs(spark.sparkContext)(df.collect())
+      if (maxJobs == 1) assert(ran.size == 1, s"$name: $ran")
+      else assert(ran.size <= maxJobs, s"$name: ${ran.size} > $maxJobs")
+    }
+  }
+
+  test("the exec reports edges after dedup, nodes, iterations and output " +
+       "rows as SQL metrics, and explains as GraftGraphIterate") {
+    val df = GraftGraph.pageRank(shapeEdges.toDF("src", "dst"), iters = 3)
+    assert(df.collect().length == 4)
+    val qe = df.queryExecution
+    val exec = qe.executedPlan.collectFirst { case g: GraftGraphIterateExec => g }
+      .getOrElse(fail(s"no GraftGraphIterateExec in ${qe.executedPlan}"))
+    assert(exec.metrics.map { case (k, m) => k -> m.value } == Map(
+      "numOutputRows" -> 4L, "numEdges" -> 5L, "numNodes" -> 4L,
+      "iterations" -> 3L))
+    assert(qe.executedPlan.toString.contains(
+      "GraftGraphIterate pagerank iters=3 damping=85"), qe.executedPlan)
+    val lpa = GraftGraph.labelPropagation(shapeEdges.toDF("src", "dst"),
+                                          iters = 2)
+    lpa.collect()
+    val lx = lpa.queryExecution.executedPlan
+      .collectFirst { case g: GraftGraphIterateExec => g }.get
+    // the undirected view: 4 distinct links (3→1 and 1→3 are one),
+    // each both ways
+    assert(lx.metrics("numEdges").value == 8L &&
+           lx.metrics("numNodes").value == 4L &&
+           lx.metrics("iterations").value == 2L)
+  }
+
+  test("hits: the n·grid² overflow bound fails the action with the " +
+       "operator's message") {
+    val e = Seq((1L, 2L)).toDF("src", "dst")
+    val ex = intercept[IllegalArgumentException] {
+      GraftGraph.hits(e, iters = 1, grid = 3037000500L).collect()
+    }
+    assert(ex.getMessage.contains(
+      "hits: 2 nodes at grid 3037000500 risks 64-bit overflow"), ex.getMessage)
+  }
+
+  test("a graph frame self-joins like any projected frame") {
+    val pr = GraftGraph.pageRank(shapeEdges.toDF("src", "dst"), iters = 2)
+    val j = pr.as("a").join(pr.as("b"), col("a.node_id") === col("b.node_id"))
+    assert(j.count() == 4)
   }
 }

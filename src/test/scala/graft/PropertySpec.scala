@@ -327,4 +327,114 @@ class PropertySpec extends AnyFunSuite {
              decoded.toSeq == samples.toSeq)
     }
   }
+
+  // ---- the graph iterations against a driver-local replay ----
+
+  /** The formulas of `GraftGraph`'s scaladoc, replayed on a deduplicated
+    * edge list with plain collections. */
+  private object GraphReplay {
+    def pageRank(es: Seq[(Long, Long)], iters: Int, d: Long, grid: Long,
+                 dangling: Boolean, seeds: Option[Set[Long]],
+                 warm: Map[Long, Long]): Map[Long, Long] = {
+      val e = es.distinct
+      val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+      val deg = e.groupBy(_._1).map { case (u, out) => u -> out.size.toLong }
+      val on = (v: Long) => seeds.forall(_(v))
+      val n = nodes.size.max(1).toLong
+      var r = nodes.map(v => v -> warm.getOrElse(v, if (on(v)) grid else 0L)).toMap
+      for (_ <- 1 to iters) {
+        val ds = if (dangling) nodes.filterNot(deg.contains).map(r).sum else 0L
+        val in = e.groupBy(_._2).map { case (v, us) =>
+          v -> us.map { case (u, _) => r(u) / deg(u) }.sum }
+        r = nodes.map(v => v -> ((if (on(v)) (100 - d) * grid else 0L) +
+                                 d * (in.getOrElse(v, 0L) + ds / n)) / 100).toMap
+      }
+      r
+    }
+
+    def hits(es: Seq[(Long, Long)], iters: Int, grid: Long)
+        : Map[Long, (Long, Long)] = {
+      val e = es.distinct
+      val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+      def rescale(x: Map[Long, Long]) = {
+        val m = if (x.isEmpty) 0L else x.values.max
+        x.map { case (v, s) => v -> (if (m > 0) s * grid / m else 0L) }
+      }
+      var hub = nodes.map(_ -> grid).toMap
+      var auth = Map.empty[Long, Long]
+      for (_ <- 1 to iters) {
+        auth = rescale(nodes.map(v =>
+          v -> e.collect { case (u, `v`) => hub(u) }.sum).toMap)
+        hub = rescale(nodes.map(u =>
+          u -> e.collect { case (`u`, v) => auth(v) }.sum).toMap)
+      }
+      nodes.map(v => v -> ((hub(v), auth(v)))).toMap
+    }
+
+    def labelPropagation(es: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+      val und = (es ++ es.map(_.swap)).distinct
+      var label = und.map(_._1).distinct.map(v => v -> v).toMap
+      for (_ <- 1 to iters) {
+        label = und.groupBy(_._2).map { case (v, in) =>
+          v -> in.groupBy { case (u, _) => label(u) }.toSeq
+            .map { case (l, us) => (l, us.size) }
+            .minBy { case (l, c) => (-c, l) }._1 }
+      }
+      label
+    }
+  }
+
+  test("graph iterations equal the driver-local replay of their formulas " +
+       "bit for bit, across input partitionings 1/3/7 and shuffle " +
+       "partitions 1/4; a 60-round lineage plans and runs") {
+    import graft.operators.GraftGraph
+    val spark = SparkTestBase.spark.newSession()
+    import spark.implicits._
+    val genGraph = for {
+      n <- Gen.choose(1, 24)
+      m <- Gen.choose(1, 60)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(-3L, n.toLong), Gen.choose(-3L, n.toLong)))
+      seeds <- Gen.someOf(-3L to n.toLong)
+      warm <- Gen.listOf(Gen.zip(Gen.choose(-3L, 2L * n), Gen.choose(0L, 3000L)))
+    } yield (es, seeds.toSet, warm.toMap)
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
+    def check(es: Seq[(Long, Long)], seeds: Set[Long], warm: Map[Long, Long],
+              iters: Int, parts: Int): Unit = {
+      val e = spark.sparkContext.parallelize(es, parts).toDF("src", "dst")
+      val s = spark.sparkContext.parallelize(seeds.toSeq, parts).toDF("node_id")
+      val w = spark.sparkContext.parallelize(warm.toSeq, parts).toDF("node_id", "pr_micro")
+      val grid = 1000L
+      val one = (m: Map[Long, Long]) => m.map { case (k, v) => k -> Seq(v) }
+      val cases = Seq(
+        "pageRank" -> (byId(GraftGraph.pageRank(e, iters = iters, grid = grid)),
+          one(GraphReplay.pageRank(es, iters, 85, grid, false, None, Map.empty))),
+        "dangling" -> (byId(GraftGraph.pageRank(e, iters = iters, dampingPct = 70,
+                              grid = grid, danglingRedistribute = true)),
+          one(GraphReplay.pageRank(es, iters, 70, grid, true, None, Map.empty))),
+        "ppr" -> (byId(GraftGraph.personalizedPageRank(e, s, iters = iters, grid = grid)),
+          one(GraphReplay.pageRank(es, iters, 85, grid, false, Some(seeds), Map.empty))),
+        "warm" -> (byId(GraftGraph.pageRank(e, iters = iters, grid = grid,
+                                            initialRanks = Some(w))),
+          one(GraphReplay.pageRank(es, iters, 85, grid, false, None, warm))),
+        "hits" -> (byId(GraftGraph.hits(e, iters = iters, grid = grid)),
+          GraphReplay.hits(es, iters, grid).map { case (k, (h, a)) => k -> Seq(h, a) }),
+        "lpa" -> (byId(GraftGraph.labelPropagation(e, iters = iters)),
+          one(GraphReplay.labelPropagation(es, iters))))
+      for ((name, (got, want)) <- cases)
+        assert(got == want, s"$name iters=$iters parts=$parts edges=$es")
+    }
+    try {
+      for (shufflePartitions <- Seq(1, 4)) {
+        spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+        forAll(Gen.zip(genGraph, Gen.choose(1, 4)), n = 6) {
+          case ((es, seeds, warm), iters) =>
+            for (parts <- Seq(1, 3, 7)) check(es, seeds, warm, iters, parts)
+        }
+      }
+      forAll(genGraph, n = 1) { case (es, seeds, warm) =>
+        check(es, seeds, warm, iters = 60, parts = 3)
+      }
+    } finally spark.conf.unset("spark.sql.shuffle.partitions")
+  }
 }
