@@ -372,6 +372,24 @@ class GraphSpec extends GraftFunSuite {
       Map(Some(1L) -> Seq(0L), Some(2L) -> Seq(0L), Some(3L) -> Seq(0L)))
   }
 
+  test("characterization: duplicate warm-start ids each send their own " +
+       "share in the first round") {
+    // 1→2, 1→3, grid 100; node 1 warm-starts twice (201 and 51):
+    // each row sends its own r div deg — 201 div 2 + 51 div 2 = 125,
+    // not 252 div 2 = 126 — so r1(2) = (1500 + 85·125) div 100 = 121
+    val e = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
+    val warm = Seq((1L, 201L), (1L, 51L)).toDF("node_id", "pr_micro")
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L,
+                                      initialRanks = Some(warm))) ==
+      Map(Some(1L) -> Seq(15L), Some(2L) -> Seq(121L), Some(3L) -> Seq(121L)))
+    // the dangling mass counts both rows too: ds = 100 + 100 for the
+    // cold sinks 2 and 3 only, n = 3, so the duplicate leaves ds alone
+    assert(byNode(GraftGraph.pageRank(e, iters = 1, grid = 100L,
+                                      danglingRedistribute = true,
+                                      initialRanks = Some(warm))) ==
+      Map(Some(1L) -> Seq(71L), Some(2L) -> Seq(177L), Some(3L) -> Seq(177L)))
+  }
+
   test("characterization: dampingPct 0 is pure teleport, 100 pure " +
        "propagation") {
     val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
