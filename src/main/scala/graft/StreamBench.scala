@@ -708,20 +708,23 @@ object StreamBench {
         // same two bounded aggregations + in-row fusion
         val storeDir = java.nio.file.Files
           .createTempDirectory("sb_impact_store").toString
-        graft.operators.ImpactObjectStore.rebuild(docsStatic, storeDir)
-        val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
-        rep {
-          val in = MemoryStream[(Long, Timestamp, List[String], List[Double])]
-          val q = sink(CorpusStreams.hybridServeStreamStored(
-            idx, stored.impacts,
-            in.toDF().toDF("q_id", "ts", "q_terms", "qv"),
-            k = 10, kCand = 30, rrfK = 60, nprobe = 4),
-            "sb_hybrid_serve_stored")
-          drive("sb_hybrid_serve_stored", queries.size, q,
-                chunks(queries, 2).map(c => () => { in.addData(c); () }) :+
-                (() => { in.addData(Seq((-1L, ts(600), List("the"),
-                                         List(0.1)))); () }))
-        }
+        try {
+          graft.operators.ImpactObjectStore.rebuild(docsStatic, storeDir)
+          val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
+          rep {
+            val in = MemoryStream[(Long, Timestamp, List[String], List[Double])]
+            val q = sink(CorpusStreams.hybridServeStreamStored(
+              idx, stored.impacts,
+              in.toDF().toDF("q_id", "ts", "q_terms", "qv"),
+              k = 10, kCand = 30, rrfK = 60, nprobe = 4),
+              "sb_hybrid_serve_stored")
+            drive("sb_hybrid_serve_stored", queries.size, q,
+                  chunks(queries, 2).map(c => () => { in.addData(c); () }) :+
+                  (() => { in.addData(Seq((-1L, ts(600), List("the"),
+                                           List(0.1)))); () }))
+          }
+        } finally org.apache.commons.io.FileUtils
+          .deleteDirectory(new java.io.File(storeDir))
         // MaxScore-pruned twin (r16, VERDICT r15 missing #3): the same
         // serve with the lexical leg routed through the essential-list
         // cut, on the Zipf-head corpus (the text_bm25_pruned_skew
@@ -734,29 +737,33 @@ object StreamBench {
         // twin's.
         val skewDir = java.nio.file.Files
           .createTempDirectory("sb_impact_skew").toString
-        graft.operators.ImpactObjectStore.rebuild(
-          docsStatic.select(
-            col("doc_id"),
-            concat(col("text"), lit(" the"),
-                   when(col("doc_id") % 5 === 0, lit(" uncommonmark"))
-                     .otherwise(lit(""))).as("text")),
-          skewDir)
-        val skewStored = graft.operators.ImpactObjectStore.read(spark, skewDir)
-        val prunedQueries = queries.map { case (id, t, _, v) =>
-          (id, t, List("uncommonmark", "the"), v) }
-        rep {
-          val in = MemoryStream[(Long, Timestamp, List[String], List[Double])]
-          val q = sink(CorpusStreams.hybridServeStreamPruned(
-            idx, skewStored,
-            in.toDF().toDF("q_id", "ts", "q_terms", "qv"),
-            essential = 1, k = 10, kCand = 30, rrfK = 60, nprobe = 4),
-            "sb_hybrid_serve_pruned")
-          drive("sb_hybrid_serve_pruned", prunedQueries.size, q,
-                chunks(prunedQueries, 2)
-                  .map(c => () => { in.addData(c); () }) :+
-                (() => { in.addData(Seq((-1L, ts(600), List("the"),
-                                         List(0.1)))); () }))
-        }
+        try {
+          graft.operators.ImpactObjectStore.rebuild(
+            docsStatic.select(
+              col("doc_id"),
+              concat(col("text"), lit(" the"),
+                     when(col("doc_id") % 5 === 0, lit(" uncommonmark"))
+                       .otherwise(lit(""))).as("text")),
+            skewDir)
+          val skewStored =
+            graft.operators.ImpactObjectStore.read(spark, skewDir)
+          val prunedQueries = queries.map { case (id, t, _, v) =>
+            (id, t, List("uncommonmark", "the"), v) }
+          rep {
+            val in = MemoryStream[(Long, Timestamp, List[String], List[Double])]
+            val q = sink(CorpusStreams.hybridServeStreamPruned(
+              idx, skewStored,
+              in.toDF().toDF("q_id", "ts", "q_terms", "qv"),
+              essential = 1, k = 10, kCand = 30, rrfK = 60, nprobe = 4),
+              "sb_hybrid_serve_pruned")
+            drive("sb_hybrid_serve_pruned", prunedQueries.size, q,
+                  chunks(prunedQueries, 2)
+                    .map(c => () => { in.addData(c); () }) :+
+                  (() => { in.addData(Seq((-1L, ts(600), List("the"),
+                                           List(0.1)))); () }))
+          }
+        } finally org.apache.commons.io.FileUtils
+          .deleteDirectory(new java.io.File(skewDir))
       } finally idx.unpersist(blocking = true)
     }
 

@@ -30,19 +30,25 @@ object GraftSimilarity {
     expr(s"graft_cosine($a, $b)")
 
   /** Per-query top-k cut via the mergeable `graft_topk` aggregate: each
-    * executor keeps a k-slot heap per q_id and only k (score, id) pairs per
-    * query cross the shuffle — vs a row_number window, which would shuffle
-    * and sort EVERY candidate row of a query. Same output, including the
-    * (score desc, id asc) tie rule.
+    * executor keeps a k-slot heap per query and only k (score, id) pairs
+    * per query cross the shuffle — vs a row_number window, which would
+    * shuffle and sort EVERY candidate row of a query. Same output,
+    * including the (score desc, id asc) tie rule. `keys` name the query
+    * (a streaming serve adds its event time), `score` is a SQL expression
+    * over `scored`; output is (keys…, id, rnk, scoreOut(score)).
     */
-  private[operators] def topK(scored: DataFrame, k: Int): DataFrame =
+  private[graft] def topK(scored: DataFrame, k: Int,
+                          keys: Seq[String] = Seq("q_id"),
+                          id: String = "n_id", score: String = "c",
+                          scoreOut: Column => Column =
+                            s => round(s, 4).as("cos")): DataFrame =
     scored
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(c, n_id, $k)").as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"),
+      .groupBy(keys.map(col): _*)
+      .agg(expr(s"graft_topk($score, $id, $k)").as("tk"))
+      .select(keys.map(col) :+ posexplode(col("tk")).as(Seq("p", "s")): _*)
+      .select(keys.map(col) ++ Seq(col("s.id").as(id),
               (col("p") + 1).cast("long").as("rnk"),
-              round(col("s.score"), 4).as("cos"))
+              scoreOut(col("s.score"))): _*)
 
   /** Exact top-k by cosine: broadcast the (small) query block against the
     * full collection — a pure map over the collection, no shuffle until the
@@ -798,6 +804,9 @@ object GraftSimilarity {
   private[graft] def probeCells(q: DataFrame, centroids: DataFrame,
                                 nprobe: Int, keep: Seq[String],
                                 withRank: Boolean = false): DataFrame = {
+    // the probe order is sliced to 1..nprobe: nprobe = 0 would probe no
+    // cell and serve every query an empty answer
+    require(nprobe >= 1, s"probeCells: nprobe must be >= 1, got $nprobe")
     val centsRow = broadcast(centroids.agg(
       collect_list(struct(col("c_id"), col("cv"))).as("__cents")))
     // Zero-norm guard (ADVICE r6): graft_cosine has no zero-norm special
@@ -1581,13 +1590,9 @@ object GraftSimilarity {
                               col(vecCol).as("v"))
     val q = broadcast(
       queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")))
-    val cand = e.join(q, col("n_id") =!= col("q_id"))
+    val scored = e.join(q, col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(c, n_id, $kCand)").as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("s"))
-      .select(col("q_id"), col("s.id").as("n_id"), col("s.score").as("rel"))
-    mmrRerank(cand, e, k, lambda)
+    mmrRerank(topK(scored, kCand, scoreOut = _.as("rel")), e, k, lambda)
   }
 
   /** [[mmrTopK]] served from an at-rest IVF index: candidates come from

@@ -89,14 +89,19 @@ object HybridRetrieval {
       .groupMap(_._1)(_._2)
   }
 
+  /** One leg's reciprocal-rank term, `round(1e9 / (rrfK + rank))` as a
+    * long (double arithmetic), NULL rank → 0. The fused score is the sum
+    * over both legs — here and in the streaming serves' in-row fusion
+    * ([[graft.streaming.CorpusStreams.hybridServeStream]]). */
+  private[graft] def rrfLeg(rrfK: Int)(rank: Column): Column =
+    coalesce(round(lit(1e9) / (lit(rrfK) + rank), 0).cast("long"), lit(0L))
+
   /** Fuse two per-query rank lists (≤ kCand rows each) by reciprocal
-    * rank: `rrf = Σ_legs round(1e9 / (rrfK + rank))`, NULL leg → 0.
-    * Output (q_id, doc_id, rank, rrf, lex_rank, sem_rank). */
+    * rank ([[rrfLeg]] summed over the legs). Output (q_id, doc_id, rank,
+    * rrf, lex_rank, sem_rank). */
   private def fuse(lex: DataFrame, sem: DataFrame, k: Int,
                    rrfK: Int): DataFrame = {
-    def leg(rank: Column): Column =
-      coalesce(round(lit(1e9) / (lit(rrfK) + rank), 0).cast("long"),
-               lit(0L))
+    val leg = rrfLeg(rrfK) _
     val fused = lex.join(sem, Seq("q_id", "doc_id"), "full_outer")
       .select(col("q_id"), col("doc_id"),
               (leg(col("lex_rank")) + leg(col("sem_rank"))).as("rrf"),

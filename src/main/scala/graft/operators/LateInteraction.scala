@@ -179,18 +179,15 @@ object LateInteraction {
   // (q_id, qtok, doc), sum per (q_id, doc), top-k per q_id — exactly the
   // MaxSim contraction, each stage a partial-aggregating groupBy
   private def scoreAndRank(pairs: DataFrame, k: Int): DataFrame =
-    pairs
-      .filter(col("doc_id") =!= col("q_id"))
-      .select(col("q_id"), col("qtok"), col("doc_id"),
-              expr(dotExpr).as("__dot"))
-      .groupBy("q_id", "qtok", "doc_id")
-      .agg(max(col("__dot")).as("__m"))
-      .groupBy("q_id", "doc_id")
-      .agg(sum(col("__m")).as("__s"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(cast(__s AS double), doc_id, $k)").as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("s.id").as("doc_id"),
-              (col("p") + 1).cast("long").as("rnk"),
-              col("s.score").cast("long").as("score"))
+    GraftSimilarity.topK(
+      pairs
+        .filter(col("doc_id") =!= col("q_id"))
+        .select(col("q_id"), col("qtok"), col("doc_id"),
+                expr(dotExpr).as("__dot"))
+        .groupBy("q_id", "qtok", "doc_id")
+        .agg(max(col("__dot")).as("__m"))
+        .groupBy("q_id", "doc_id")
+        .agg(sum(col("__m")).as("__s")),
+      k, id = "doc_id", score = "cast(__s AS double)",
+      scoreOut = _.cast("long").as("score"))
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.{GraftCosine, GraftJaccardSorted, GraftSigAgree}
+import graft.operators.GraftSimilarity.IvfIndex
 import PairBuckets.round4
 
 /** Structured Streaming forms of the corpus-curation stages — the
@@ -279,15 +280,12 @@ object CorpusStreams {
     * The exact rerank is the SECOND chained stateful aggregation
     * (Spark's multi-stateful-operator append mode): survivors explode,
     * fetch their full vectors from the static collection by equi-join,
-    * score `graft_cosine` exactly, and the final `graft_topk` at k
-    * finalizes when the watermark clears the query's event time. Output
-    * rows are (q_id, ts, n_id, rnk, cos) — value-identical to the batch
-    * serve for the same query (PqSpec pins the parity). State is
-    * O(in-flight queries) in BOTH heaps, never O(stream).
-    *
-    * Malformed queries (zero-norm, or a dim that differs from the
-    * codebook's) are DROPPED pre-LUT, the [[ivfServeStream]] poison-pill
-    * rule: the batch serve fails loudly, a long-running serve must not.
+    * score `graft_cosine` exactly, and the [[StreamServe]] top-k tail
+    * at k finalizes at the watermark. Output rows are (q_id, ts, n_id,
+    * rnk, cos) — value-identical to the batch serve for the same query
+    * (PqSpec pins the parity). State is O(in-flight queries) in BOTH
+    * heaps. Queries follow the [[StreamServe]] contract, with the
+    * codebook's m·dsub as the dim.
     */
   def pqServeStream(cb: graft.operators.GraftPq.PqCodebook,
                     encoded: DataFrame, collection: DataFrame,
@@ -299,25 +297,16 @@ object CorpusStreams {
     require(k >= 1, s"pqServeStream: k must be >= 1, got $k")
     require(rerankFactor >= 1,
       s"pqServeStream: rerankFactor must be >= 1, got $rerankFactor")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
-    import graft.operators.GraftPq
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val cc = GraftPq.collectCodebook(cb)
-    val d = cc.m * cc.dsub
-    val q = queries
-      .select(col(qIdCol).cast("long").as("q_id"), col(tsCol).as("ts"),
-              expr(s"transform($qVecCol, x -> cast(x AS double))").as("qv"))
-      .filter(expr("aggregate(qv, 0D, (a, x) -> a + x * x) > 0D") &&
-              expr(s"size(qv) = $d"))
-      .withWatermark("ts", s"$latenessMinutes minutes")
-    val qlut = GraftPq.qlutFrame(cb, q, carry = Seq("ts", "qv"))
+    import graft.operators.{GraftPq, GraftSimilarity}
+    val q = StreamServe.queries(queries,
+      { val cc = GraftPq.collectCodebook(cb); cc.m * cc.dsub },
+      latenessMinutes, qIdCol, qVecCol, tsCol)
     val enc = encoded.select(col("n_id"),
                              expr("graft_pq_pack(codes)").as("__cw"))
     val e = collection.select(col(idCol).cast("long").as("n_id"),
                               col(vecCol).as("v"))
     val kk = k * rerankFactor
-    val cand = qlut
+    val cand = GraftPq.qlutFrame(cb, q, carry = Seq("ts", "qv"))
       .crossJoin(enc)
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("__nlut", GraftPq.normLut(cb))
@@ -331,16 +320,11 @@ object CorpusStreams {
            first(col("qv")).as("qv"))
       .select(col("q_id"), col("ts"), col("qv"),
               explode(col("tk.id")).as("n_id"))
-    cand.join(e, "n_id")
-      .select(col("q_id"), col("ts"), col("n_id"),
-              expr("graft_cosine(qv, v)").as("c"))
-      .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"graft_topk(c, n_id, $k)").as("tk"))
-      .select(col("q_id"), col("ts"),
-              posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("ts"), col("s.id").as("n_id"),
-              (col("p") + 1).cast("long").as("rnk"),
-              round(col("s.score"), 4).as("cos"))
+    GraftSimilarity.topK(
+      cand.join(e, "n_id")
+        .select(col("q_id"), col("ts"), col("n_id"),
+                expr("graft_cosine(qv, v)").as("c")),
+      k, StreamServe.Keys)
   }
 
   /** Streaming APPLY side of
@@ -772,29 +756,20 @@ object CorpusStreams {
     * index — the online half of the build/append/store lifecycle, where
     * the index is the 100-TB side and queries trickle in forever.
     *
-    * Plan shape, all stream-static: probe-cell selection is the same
-    * shuffle-free per-row map as batch (one broadcast centroid row, in-row
-    * top-nprobe — [[graft.operators.GraftSimilarity.probeCells]], shared
-    * code); candidates attach via a stream-static equi join on cell id —
-    * a [[graft.operators.IvfObjectStore.read]] store serves
-    * identically (StreamingSpec pins it; the batch serve remains the path
-    * with metric-certified file pruning — micro-batch planning is not
-    * asserted to prune); the per-query
-    * top-k runs `graft_topk` as a STREAMING aggregation — the same
-    * mergeable k-slot heap, now living in the state store, finalized in
-    * append mode when the watermark passes the query's event time. Output
-    * rows are (q_id, ts, n_id, rnk, cos), value-identical to the batch
-    * serve for the same query (StreamingSpec pins the parity).
+    * Plan shape: the [[StreamServe]] probe leg (the batch probe map and
+    * a stream-static equi join on cell id; a
+    * [[graft.operators.IvfObjectStore.read]] store serves identically,
+    * StreamingSpec pins it — the batch serve remains the path with
+    * metric-certified file pruning), then the [[StreamServe]] top-k tail:
+    * the same mergeable `graft_topk` heap as batch, living in the state
+    * store and finalized in append mode at the watermark. Output rows
+    * are (q_id, ts, n_id, rnk, cos), value-identical to the batch serve
+    * for the same query (StreamingSpec pins the parity).
     *
-    * `latenessMinutes` is the answer-latency / reorder-tolerance dial:
-    * append-mode aggregation emits a query's top-k only once the
-    * watermark clears its timestamp, so state is O(in-flight queries) —
-    * never O(stream) — and a candidate row arriving later than the bound
-    * is dropped with its query already answered.
-    *
-    * Malformed queries (zero-norm, or a dim that differs from the
-    * index's) are DROPPED pre-probe with no answer instead of failing
-    * the stream — see the inline note on the filter below.
+    * `where` is the batch ivfTopKWith's metadata-filter contract: the
+    * predicate cuts the (static) candidate side before the probe join;
+    * stream ≡ batch over the same filter (StreamingSpec pins it).
+    * Queries, state and late rows follow the [[StreamServe]] contract.
     */
   def ivfServeStream(index: graft.operators.GraftSimilarity.IvfIndex,
                      queries: DataFrame, k: Int, nprobe: Int = 4,
@@ -805,53 +780,11 @@ object CorpusStreams {
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    // the index's embedding dim, read once at stream setup from the tiny
-    // centroids frame (√N rows, a checkpoint leaf) — used to screen
-    // malformed queries below
-    val indexDim = index.centroids
-      .select(org.apache.spark.sql.functions.size(col("cv")).as("d"))
-      .limit(1).collect() match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalStateException(
-        "ivfServeStream: index has no centroids")
-    }
-    val q = queries
-      .select(col(qIdCol).cast("long").as("q_id"), col(tsCol).as("ts"),
-              expr(s"transform($qVecCol, x -> cast(x AS double))").as("qv"))
-      // a zero-norm or dim-mismatched query vector has no defined cosine
-      // against this index: the batch serve FAILS LOUDLY (probeCells'
-      // assert / graft_cosine's strict-length throw — right for a one-shot
-      // job), but in a long-running serve stream one malformed row would
-      // become a checkpoint-replayed poison pill that wedges the service.
-      // Drop such rows BEFORE the probe instead: they get no answer
-      // (exactly what the batch error reports), every other in-flight
-      // query is served, and the stream lives. StreamingSpec pins this
-      // divergence for both malformations.
-      .filter(expr("aggregate(qv, 0D, (a, x) -> a + x * x) > 0D") &&
-              expr(s"size(qv) = $indexDim"))
-      .withWatermark("ts", s"$latenessMinutes minutes")
-    val probes = graft.operators.GraftSimilarity
-      .probeCells(q, index.centroids, nprobe, Seq("q_id", "ts", "qv"))
-    // metadata-filtered online serve: the same `where` contract as the
-    // batch ivfTopKWith — the predicate cuts the (static) candidate side
-    // before the probe join, so the stream-static join ships only
-    // filter-satisfying candidates; stream ≡ batch over the same filter
-    // (StreamingSpec pins it)
-    val cand = where.fold(index.assigned)(index.assigned.filter(_))
-    probes.join(cand, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("ts"), col("n_id"),
-              expr("graft_cosine(qv, v)").as("c"))
-      .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"graft_topk(c, n_id, $k)").as("tk"))
-      .select(col("q_id"), col("ts"),
-              posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("ts"), col("s.id").as("n_id"),
-              (col("p") + 1).cast("long").as("rnk"),
-              round(col("s.score"), 4).as("cos"))
+    val q = StreamServe.queries(queries,
+      StreamServe.indexDim(index, "ivfServeStream"), latenessMinutes,
+      qIdCol, qVecCol, tsCol)
+    graft.operators.GraftSimilarity.topK(
+      StreamServe.probe(q, index, nprobe, where), k, StreamServe.Keys)
   }
 
   /** Streaming serve twin of
@@ -874,24 +807,22 @@ object CorpusStreams {
     *   - lexical leg: query terms explode (distinct), join the impact
     *     index, SUM addends per (query, doc) — stateful agg #1, state
     *     = the query's term-matched docs inside the horizon;
-    *   - semantic leg: the [[ivfServeStream]] probe + candidate
-    *     scoring, stateless;
+    *   - semantic leg: the [[StreamServe]] probe leg, stateless;
     *   - both legs UNION into ONE aggregation computing BOTH per-leg
     *     kCand cuts as two `graft_topk` heaps in the same state row
     *     (null scores skip the other leg's heap) — stateful agg #2,
     *     state = 2·kCand slots per in-flight query;
     *   - fusion is IN-ROW on the two arrays (rank maps, RRF terms,
     *     deterministic sort, slice k) — no stream-stream join, no third
-    *     stateful operator; the arithmetic replicates the batch `fuse`
-    *     exactly, so per-query output equals [[graft.operators
+    *     stateful operator; the RRF term is the batch fuse's own
+    *     ([[graft.operators.HybridRetrieval.rrfLeg]]), so per-query
+    *     output equals [[graft.operators
     *     .HybridRetrieval.hybridTopKWith]] at the same parameters
     *     (StreamingSpec pins it).
     *
     * Output (q_id, ts, doc_id, rank, rrf, lex_rank, sem_rank) finalizes
-    * at the watermark. Malformed query vectors drop pre-probe under
-    * [[ivfServeStream]]'s poison-pill rule (their lexical leg is
-    * dropped with them — a half-answered query would be worse than an
-    * unanswered one).
+    * at the watermark. A malformed query vector drops the whole query,
+    * lexical leg included ([[StreamServe]]'s poison-pill rule).
     */
   def hybridServeStream(index: graft.operators.GraftSimilarity.IvfIndex,
                         docs: DataFrame, queries: DataFrame,
@@ -902,14 +833,7 @@ object CorpusStreams {
                         qTermsCol: String = "q_terms",
                         qVecCol: String = "qv", tsCol: String = "ts",
                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k >= 1, s"hybridServeStream: k must be >= 1, got $k")
-    require(kCand >= k,
-      s"hybridServeStream: kCand ($kCand) must be >= k ($k)")
-    require(rrfK >= 1, s"hybridServeStream: rrfK must be >= 1, got $rrfK")
-    require(nprobe >= 1,
-      s"hybridServeStream: nprobe must be >= 1, got $nprobe")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
+    requireHybrid("hybridServeStream", k, kCand, rrfK, nprobe)
     graft.GraftSession.ensureExtensions(queries.sparkSession)
     // ---- static impact index, built ONCE through the shared kernel
     // (VERDICT r13 #1: ungated mode — the df attach is a plain
@@ -917,24 +841,25 @@ object CorpusStreams {
     // addends are the same 10⁻⁶-grid longs bm25Scores sums, so scores
     // are bit-equal to the batch serve). The 100-TB deployment persists
     // this table term-bucketed beside the IVF store instead
-    // ([[graft.operators.ImpactIndex.write]]) and serves through
+    // ([[graft.operators.ImpactObjectStore.rebuild]]) and serves through
     // [[hybridServeStreamStored]] — build-once/serve-many.
     val impact = graft.operators.TextRank.bm25Impacts(
         docs.select(col(idCol).cast("long").as("doc_id"), col(textCol)),
         "doc_id", textCol, k1, b, termGate = None)
       .localCheckpoint()
-    hybridServeBody(index, impact, queries, k, kCand, rrfK, nprobe,
-                    latenessMinutes, qIdCol, qTermsCol, qVecCol, tsCol)
+    hybridServe("hybridServeStream", index, queries, k, kCand, rrfK, nprobe,
+                latenessMinutes, qIdCol, qTermsCol, qVecCol, tsCol)(
+      lexLeg(impact))
   }
 
   /** [[hybridServeStream]] off an AT-REST impact index
-    * ([[graft.operators.ImpactIndex]]): the serving twin that never
+    * ([[graft.operators.ImpactObjectStore]]): the serving twin that never
     * rebuilds the lexical index at stream start — the build is amortized
     * across deploys exactly like `ann_maxsim_stored`'s token index.
     * `impacts` is the store's (__term, doc_id, __a) frame (e.g.
-    * [[graft.operators.ImpactIndex.read]]`.impacts`); addends at rest are
-    * bit-identical to the in-memory build (one kernel, one grid), so
-    * stored-serve output ≡ in-memory-serve output ≡ batch
+    * [[graft.operators.ImpactObjectStore.read]]`.impacts`); addends at
+    * rest are bit-identical to the in-memory build (one kernel, one
+    * grid), so stored-serve output ≡ in-memory-serve output ≡ batch
     * [[graft.operators.HybridRetrieval.hybridTopKWith]] (StreamingSpec
     * pins all three). The IMPACT store must describe the same corpus the
     * IVF index serves, and must have been built at the same (k1, b).
@@ -947,24 +872,14 @@ object CorpusStreams {
                               qTermsCol: String = "q_terms",
                               qVecCol: String = "qv", tsCol: String = "ts")
       : DataFrame = {
-    require(k >= 1, s"hybridServeStreamStored: k must be >= 1, got $k")
-    require(kCand >= k,
-      s"hybridServeStreamStored: kCand ($kCand) must be >= k ($k)")
-    require(rrfK >= 1,
-      s"hybridServeStreamStored: rrfK must be >= 1, got $rrfK")
-    require(nprobe >= 1,
-      s"hybridServeStreamStored: nprobe must be >= 1, got $nprobe")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
+    requireHybrid("hybridServeStreamStored", k, kCand, rrfK, nprobe)
     val need = Set("__term", "doc_id", "__a")
     require(need.subsetOf(impacts.columns.toSet),
       s"hybridServeStreamStored: impacts frame must carry $need " +
       s"(an ImpactIndex store read), got ${impacts.columns.mkString(", ")}")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    hybridServeBody(index,
-                    impacts.select(col("__term"), col("doc_id"), col("__a")),
-                    queries, k, kCand, rrfK, nprobe, latenessMinutes,
-                    qIdCol, qTermsCol, qVecCol, tsCol)
+    hybridServe("hybridServeStreamStored", index, queries, k, kCand, rrfK,
+                nprobe, latenessMinutes, qIdCol, qTermsCol, qVecCol, tsCol)(
+      lexLeg(impacts.select(col("__term"), col("doc_id"), col("__a"))))
   }
 
   /** [[hybridServeStreamStored]] with the lexical leg routed through
@@ -996,11 +911,11 @@ object CorpusStreams {
     *      guard sees the skipped mass and refuses rather than serving
     *      the semantic leg as if the lexical leg were legitimately
     *      empty;
-    *   4. the fusion heap stage is [[hybridServeStreamStored]]'s,
-    *      plus the covering guard: `__ne = 0` (nothing skipped), or a
-    *      FULL kCand lexical heap whose weakest score strictly exceeds
-    *      `__ne` (a skipped doc tying θ with a smaller id would usurp
-    *      the heap slot — same strictness as the batch guard).
+    *   4. the fusion stage is [[hybridServeStreamStored]]'s, plus the
+    *      covering guard: `__ne = 0` (nothing skipped), or a FULL kCand
+    *      lexical heap whose weakest score strictly exceeds `__ne` (a
+    *      skipped doc tying θ with a smaller id would usurp the heap
+    *      slot — same strictness as the batch guard).
     *
     * Output and parameters match [[hybridServeStreamStored]]; when the
     * guard covers, per-query output is IDENTICAL (pruning is exact by
@@ -1023,211 +938,137 @@ object CorpusStreams {
                               qTermsCol: String = "q_terms",
                               qVecCol: String = "qv", tsCol: String = "ts")
       : DataFrame = {
-    require(k >= 1, s"hybridServeStreamPruned: k must be >= 1, got $k")
-    require(kCand >= k,
-      s"hybridServeStreamPruned: kCand ($kCand) must be >= k ($k)")
-    require(rrfK >= 1,
-      s"hybridServeStreamPruned: rrfK must be >= 1, got $rrfK")
-    require(nprobe >= 1,
-      s"hybridServeStreamPruned: nprobe must be >= 1, got $nprobe")
+    requireHybrid("hybridServeStreamPruned", k, kCand, rrfK, nprobe)
     require(essential >= 1,
       s"hybridServeStreamPruned: essential must be >= 1, got $essential")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val indexDim = index.centroids
-      .select(org.apache.spark.sql.functions.size(col("cv")).as("d"))
-      .limit(1).collect() match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalStateException(
-        "hybridServeStreamPruned: index has no centroids")
+    // ---- stage 4, on the fusion heaps: the covering guard
+    val covered = assert_true(
+      coalesce(col("__ne"), lit(0L)) === 0L ||
+      (size(col("ltk")) >= kCand &&
+       col("__ne").cast("double") < element_at(col("ltk"), kCand)("score")),
+      concat(lit(s"hybridServeStreamPruned: essential=$essential does " +
+                 s"not cover kCand=$kCand for q_id="), col("q_id"),
+             lit(" — skipped-term upper bound "), col("__ne"),
+             lit(" is not strictly below the kCand-th candidate " +
+                 "score; raise essential — a silently non-exact " +
+                 "lexical leg is refused"))).isNull
+    hybridServe("hybridServeStreamPruned", index, queries, k, kCand, rrfK,
+                nprobe, latenessMinutes, qIdCol, qTermsCol, qVecCol, tsCol,
+                Some(covered)) { q =>
+      // ---- stage 1: per-query impact ordering off the store's bound
+      // table. Terms absent from the corpus have no postings and no
+      // bounds — they drop out of the ordering (they cannot contribute to
+      // either the exact or the pruned answer, the batch operator's rule).
+      val qess = q
+        .select(col("q_id"), col("ts"),
+                explode(array_distinct(col("__qtk"))).as("__term"))
+        .join(stored.terms.select(col("__term"), col("__maxa")),
+              Seq("__term"), "left")
+        .groupBy(col("q_id"), col("ts"))
+        .agg(collect_list(when(col("__maxa").isNotNull,
+               struct(col("__maxa").as("m"), col("__term").as("t"))))
+             .as("__tb"))
+        .withColumn("__tb", expr(
+          """array_sort(__tb, (a, b) -> CASE
+            |  WHEN a.m > b.m THEN -1 WHEN a.m < b.m THEN 1
+            |  WHEN a.t < b.t THEN -1 WHEN a.t > b.t THEN 1
+            |  ELSE 0 END)""".stripMargin))
+        .withColumn("__ne", expr(
+          s"""coalesce(aggregate(
+             |  slice(__tb, ${essential + 1},
+             |        greatest(size(__tb) - $essential, 0)),
+             |  0L, (a, s) -> a + s.m), 0L)""".stripMargin))
+      // ---- stage 2: postings join with the essential tag riding along;
+      // the candidate cut is the in-group max(__e) filter
+      val lexScored = qess
+        .select(col("q_id"), col("ts"), col("__ne"),
+                explode(expr(
+                  s"transform(__tb, (s, i) -> " +
+                  s"struct(s.t AS t, i < $essential AS e))")).as("__x"))
+        .select(col("q_id"), col("ts"), col("__ne"),
+                col("__x.t").as("__term"), col("__x.e").as("__e"))
+        .join(stored.impacts.select(col("__term"), col("doc_id"), col("__a")),
+              "__term")
+        .filter(col("doc_id") =!= col("q_id"))
+        .groupBy(col("q_id"), col("ts"), col("doc_id"))
+        .agg(sum(col("__a")).as("__l"), max(col("__e")).as("__c"),
+             max(col("__ne")).as("__ne"))
+        .filter(col("__c"))
+        .select(col("q_id"), col("ts"), col("doc_id"),
+                col("__l").cast("double").as("__sc"),
+                lit("lex").as("__leg"), col("__ne"))
+      // ---- stage 3: the per-query __ne marker (see scaladoc point 3)
+      val bnd = qess.select(col("q_id"), col("ts"),
+                            lit(null).cast("long").as("doc_id"),
+                            lit(null).cast("double").as("__sc"),
+                            lit("bnd").as("__leg"), col("__ne"))
+      lexScored.unionByName(bnd)
     }
-    val q = queries
-      .select(col(qIdCol).cast("long").as("q_id"), col(tsCol).as("ts"),
-              col(qTermsCol).as("__qtk"),
-              expr(s"transform($qVecCol, x -> cast(x AS double))").as("qv"))
-      .filter(expr("aggregate(qv, 0D, (a, x) -> a + x * x) > 0D") &&
-              expr(s"size(qv) = $indexDim"))
-      .withWatermark("ts", s"$latenessMinutes minutes")
-    // ---- stage 1: per-query impact ordering off the store's bound
-    // table. Terms absent from the corpus have no postings and no
-    // bounds — they drop out of the ordering (they cannot contribute to
-    // either the exact or the pruned answer, the batch operator's rule).
-    val qb = q
-      .select(col("q_id"), col("ts"),
-              explode(array_distinct(col("__qtk"))).as("__term"))
-      .join(stored.terms.select(col("__term"), col("__maxa")),
-            Seq("__term"), "left")
-    val qess = qb.groupBy(col("q_id"), col("ts"))
-      .agg(collect_list(when(col("__maxa").isNotNull,
-             struct(col("__maxa").as("m"), col("__term").as("t"))))
-           .as("__tb"))
-      .withColumn("__tb", expr(
-        """array_sort(__tb, (a, b) -> CASE
-          |  WHEN a.m > b.m THEN -1 WHEN a.m < b.m THEN 1
-          |  WHEN a.t < b.t THEN -1 WHEN a.t > b.t THEN 1
-          |  ELSE 0 END)""".stripMargin))
-      .withColumn("__ne", expr(
-        s"""coalesce(aggregate(
-           |  slice(__tb, ${essential + 1},
-           |        greatest(size(__tb) - $essential, 0)),
-           |  0L, (a, s) -> a + s.m), 0L)""".stripMargin))
-    // ---- stage 2: postings join with the essential tag riding along;
-    // the candidate cut is the in-group max(__e) filter
-    val lexScored = qess
-      .select(col("q_id"), col("ts"), col("__ne"),
-              explode(expr(
-                s"transform(__tb, (s, i) -> " +
-                s"struct(s.t AS t, i < $essential AS e))")).as("__x"))
-      .select(col("q_id"), col("ts"), col("__ne"),
-              col("__x.t").as("__term"), col("__x.e").as("__e"))
-      .join(stored.impacts.select(col("__term"), col("doc_id"), col("__a")),
-            "__term")
-      .filter(col("doc_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("ts"), col("doc_id"))
-      .agg(sum(col("__a")).as("__l"), max(col("__e")).as("__c"),
-           max(col("__ne")).as("__ne"))
-      .filter(col("__c"))
-      .select(col("q_id"), col("ts"), col("doc_id"),
-              col("__l").cast("double").as("__sc"),
-              lit("lex").as("__leg"), col("__ne"))
-    // ---- stage 3: the per-query __ne marker (see scaladoc point 3)
-    val bnd = qess.select(col("q_id"), col("ts"),
-                          lit(null).cast("long").as("doc_id"),
-                          lit(null).cast("double").as("__sc"),
-                          lit("bnd").as("__leg"), col("__ne"))
-    // ---- semantic leg: stateless probe + candidate scoring, unchanged
-    val probes = graft.operators.GraftSimilarity
-      .probeCells(q.select(col("q_id"), col("ts"), col("qv")),
-                  index.centroids, nprobe, Seq("q_id", "ts", "qv"))
-    val semScored = probes.join(index.assigned, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("ts"), col("n_id").as("doc_id"),
-              expr("graft_cosine(qv, v)").as("__sc"),
-              lit("sem").as("__leg"), lit(null).cast("long").as("__ne"))
-    // ---- stage 4: fusion heaps + the covering guard
-    val rrfTerm = (m: String) =>
-      s"""coalesce(CAST(round(1000000000.0 / ($rrfK +
-         |  element_at($m, d)), 0) AS BIGINT), 0L)""".stripMargin
-    lexScored.unionByName(bnd).unionByName(semScored)
-      .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"""graft_topk(if(__leg = 'lex', __sc,
-                      cast(null AS double)), doc_id, $kCand)""").as("ltk"),
-           expr(s"""graft_topk(if(__leg = 'sem', __sc,
-                      cast(null AS double)), doc_id, $kCand)""").as("stk"),
-           max(col("__ne")).as("__ne"))
-      .filter(assert_true(
-        coalesce(col("__ne"), lit(0L)) === 0L ||
-        (size(col("ltk")) >= kCand &&
-         col("__ne").cast("double") <
-           element_at(col("ltk"), kCand)("score")),
-        concat(lit(s"hybridServeStreamPruned: essential=$essential does " +
-                   s"not cover kCand=$kCand for q_id="), col("q_id"),
-               lit(" — skipped-term upper bound "), col("__ne"),
-               lit(" is not strictly below the kCand-th candidate " +
-                   "score; raise essential — a silently non-exact " +
-                   "lexical leg is refused"))).isNull)
-      .withColumn("__ml", expr(
-        """map_from_entries(transform(ltk,
-          |  (s, i) -> struct(s.id, CAST(i + 1 AS BIGINT))))""".stripMargin))
-      .withColumn("__ms", expr(
-        """map_from_entries(transform(stk,
-          |  (s, i) -> struct(s.id, CAST(i + 1 AS BIGINT))))""".stripMargin))
-      .withColumn("__fused", expr(
-        s"""slice(
-           |  array_sort(
-           |    transform(
-           |      array_distinct(concat(transform(ltk, s -> s.id),
-           |                            transform(stk, s -> s.id))),
-           |      d -> struct(${rrfTerm("__ml")} + ${rrfTerm("__ms")} AS rrf,
-           |                  d AS doc_id,
-           |                  element_at(__ml, d) AS lex_rank,
-           |                  element_at(__ms, d) AS sem_rank)),
-           |    (a, b) -> CASE
-           |      WHEN a.rrf > b.rrf THEN -1 WHEN a.rrf < b.rrf THEN 1
-           |      WHEN a.doc_id < b.doc_id THEN -1
-           |      WHEN a.doc_id > b.doc_id THEN 1 ELSE 0 END),
-           |  1, $k)""".stripMargin))
-      .select(col("q_id"), col("ts"),
-              posexplode(col("__fused")).as(Seq("p", "s")))
-      .select(col("q_id"), col("ts"), col("s.doc_id").as("doc_id"),
-              (col("p") + 1).cast("long").as("rank"),
-              col("s.rrf").as("rrf"), col("s.lex_rank").as("lex_rank"),
-              col("s.sem_rank").as("sem_rank"))
   }
 
-  private def hybridServeBody(index: graft.operators.GraftSimilarity.IvfIndex,
-                              impact: DataFrame, queries: DataFrame,
-                              k: Int, kCand: Int, rrfK: Int, nprobe: Int,
-                              latenessMinutes: Long, qIdCol: String,
-                              qTermsCol: String, qVecCol: String,
-                              tsCol: String): DataFrame = {
-    // ---- validated, watermarked query stream (the ivfServeStream
-    // poison-pill contract)
-    val indexDim = index.centroids
-      .select(org.apache.spark.sql.functions.size(col("cv")).as("d"))
-      .limit(1).collect() match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalStateException(
-        "hybridServeStream: index has no centroids")
-    }
-    val q = queries
-      .select(col(qIdCol).cast("long").as("q_id"), col(tsCol).as("ts"),
-              col(qTermsCol).as("__qtk"),
-              expr(s"transform($qVecCol, x -> cast(x AS double))").as("qv"))
-      .filter(expr("aggregate(qv, 0D, (a, x) -> a + x * x) > 0D") &&
-              expr(s"size(qv) = $indexDim"))
-      .withWatermark("ts", s"$latenessMinutes minutes")
-    // lexical leg: inverted-index lookup + per-(query, doc) addend sum
-    val lexScored = q
-      .select(col("q_id"), col("ts"),
-              explode(array_distinct(col("__qtk"))).as("__term"))
+  private def requireHybrid(serve: String, k: Int, kCand: Int, rrfK: Int,
+                            nprobe: Int): Unit = {
+    require(k >= 1, s"$serve: k must be >= 1, got $k")
+    require(kCand >= k, s"$serve: kCand ($kCand) must be >= k ($k)")
+    require(rrfK >= 1, s"$serve: rrfK must be >= 1, got $rrfK")
+    require(nprobe >= 1, s"$serve: nprobe must be >= 1, got $nprobe")
+  }
+
+  /** The unpruned hybrid serves' lexical leg: inverted-index lookup +
+    * per-(query, doc) addend sum. */
+  private def lexLeg(impact: DataFrame)(q: DataFrame): DataFrame =
+    q.select(col("q_id"), col("ts"),
+             explode(array_distinct(col("__qtk"))).as("__term"))
       .join(impact, "__term")
       .filter(col("doc_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("ts"), col("doc_id"))
       .agg(sum(col("__a")).as("__l"))
       .select(col("q_id"), col("ts"), col("doc_id"),
               col("__l").cast("double").as("__sc"), lit("lex").as("__leg"))
-    // semantic leg: stateless probe + candidate scoring
-    val probes = graft.operators.GraftSimilarity
-      .probeCells(q.select(col("q_id"), col("ts"), col("qv")),
-                  index.centroids, nprobe, Seq("q_id", "ts", "qv"))
-    val semScored = probes.join(index.assigned, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
+
+  /** The hybrid serves' shared shape: the [[StreamServe]] query contract
+    * carrying the query terms as `__qtk`; the serve's lexical leg, (q_id,
+    * ts, doc_id, __sc, __leg) rows plus any extra column the fusion keeps
+    * as its max (the pruned serve's `__ne`); the [[StreamServe]] probe
+    * leg. Both legs union into ONE aggregation holding both per-leg kCand
+    * heaps, `guard` filters its rows, and the in-row RRF fusion slices
+    * the top k. */
+  private def hybridServe(serve: String, index: IvfIndex, queries: DataFrame,
+                          k: Int, kCand: Int, rrfK: Int, nprobe: Int,
+                          latenessMinutes: Long, qIdCol: String,
+                          qTermsCol: String, qVecCol: String, tsCol: String,
+                          guard: Option[Column] = None)(
+      lexOf: DataFrame => DataFrame): DataFrame = {
+    val q = StreamServe.queries(queries, StreamServe.indexDim(index, serve),
+      latenessMinutes, qIdCol, qVecCol, tsCol, col(qTermsCol).as("__qtk"))
+    val lex = lexOf(q)
+    val sem = StreamServe.probe(q, index, nprobe)
       .select(col("q_id"), col("ts"), col("n_id").as("doc_id"),
-              expr("graft_cosine(qv, v)").as("__sc"),
-              lit("sem").as("__leg"))
-    // one aggregation, two bounded heaps; then the in-row fusion
-    val rrfTerm = (m: String) =>
-      s"""coalesce(CAST(round(1000000000.0 / ($rrfK +
-         |  element_at($m, d)), 0) AS BIGINT), 0L)""".stripMargin
-    lexScored.unionByName(semScored)
+              col("c").as("__sc"), lit("sem").as("__leg"))
+    def heap(leg: String) = expr(s"""graft_topk(if(__leg = '$leg', __sc,
+                                    cast(null AS double)), doc_id, $kCand)""")
+    val carry = lex.columns.filterNot(sem.columns.contains)
+    val heaps = lex.unionByName(sem, allowMissingColumns = true)
       .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"""graft_topk(if(__leg = 'lex', __sc,
-                      cast(null AS double)), doc_id, $kCand)""").as("ltk"),
-           expr(s"""graft_topk(if(__leg = 'sem', __sc,
-                      cast(null AS double)), doc_id, $kCand)""").as("stk"))
-      .withColumn("__ml", expr(
-        """map_from_entries(transform(ltk,
-          |  (s, i) -> struct(s.id, CAST(i + 1 AS BIGINT))))""".stripMargin))
-      .withColumn("__ms", expr(
-        """map_from_entries(transform(stk,
-          |  (s, i) -> struct(s.id, CAST(i + 1 AS BIGINT))))""".stripMargin))
-      .withColumn("__fused", expr(
-        s"""slice(
-           |  array_sort(
-           |    transform(
-           |      array_distinct(concat(transform(ltk, s -> s.id),
-           |                            transform(stk, s -> s.id))),
-           |      d -> struct(${rrfTerm("__ml")} + ${rrfTerm("__ms")} AS rrf,
-           |                  d AS doc_id,
-           |                  element_at(__ml, d) AS lex_rank,
-           |                  element_at(__ms, d) AS sem_rank)),
-           |    (a, b) -> CASE
-           |      WHEN a.rrf > b.rrf THEN -1 WHEN a.rrf < b.rrf THEN 1
-           |      WHEN a.doc_id < b.doc_id THEN -1
-           |      WHEN a.doc_id > b.doc_id THEN 1 ELSE 0 END),
-           |  1, $k)""".stripMargin))
+      .agg(heap("lex").as("ltk"),
+           heap("sem").as("stk") +: carry.map(c => max(col(c)).as(c)): _*)
+    // a heap's rank map: doc id → 1-based position
+    def ranks(tk: String) = map_from_entries(transform(col(tk),
+      (s, i) => struct(s("id"), (i + 1).cast("long"))))
+    val rrf = graft.operators.HybridRetrieval.rrfLeg(rrfK) _
+    guard.fold(heaps)(heaps.filter)
+      .withColumn("__ml", ranks("ltk"))
+      .withColumn("__ms", ranks("stk"))
+      .withColumn("__fused", slice(array_sort(
+        transform(array_distinct(concat(col("ltk.id"), col("stk.id"))), d => {
+          val (l, s) = (element_at(col("__ml"), d), element_at(col("__ms"), d))
+          struct((rrf(l) + rrf(s)).as("rrf"), d.as("doc_id"),
+                 l.as("lex_rank"), s.as("sem_rank"))
+        }),
+        (a, b) => when(a("rrf") > b("rrf"), -1).when(a("rrf") < b("rrf"), 1)
+          .when(a("doc_id") < b("doc_id"), -1)
+          .when(a("doc_id") > b("doc_id"), 1).otherwise(0)),
+        1, k))
       .select(col("q_id"), col("ts"),
               posexplode(col("__fused")).as(Seq("p", "s")))
       .select(col("q_id"), col("ts"), col("s.doc_id").as("doc_id"),
@@ -1242,24 +1083,24 @@ object CorpusStreams {
     * the online form of the MMR stage, for serving paths where plain
     * top-k would return k near-copies of one duplicate cluster.
     *
-    * Shape: the [[ivfServeStream]] probe + candidate scoring (stateless,
-    * stream-static), then TWO chained stateful aggregations keyed on the
-    * query's event time — the kCand candidate cut (`graft_topk`: state
-    * is kCand heap slots per in-flight query, bounded by construction)
-    * finalizes at the watermark, survivors join the STATIC index for
-    * their vectors (a stateless stream-static equi-join, |survivors| =
-    * kCand rows per query), and the second aggregation folds them into
-    * one bounded array per query on which `graft_mmr` runs the greedy in
-    * the result projection. Second-stage state is ≤ kCand (n_id, rel, v)
-    * rows per in-flight query — dim·8·kCand bytes, the price of needing
-    * pairwise candidate sims that [[ivfServeStream]]'s (score, id) heap
-    * cannot carry.
+    * Shape: the [[StreamServe]] probe leg (stateless, stream-static),
+    * then TWO chained stateful aggregations keyed on the query's event
+    * time — the kCand candidate cut (the [[StreamServe]] top-k tail at
+    * kCand, exact scores kept as `rel`: state is kCand heap slots per
+    * in-flight query, bounded by construction) finalizes at the
+    * watermark, survivors join the STATIC index for their vectors (a
+    * stateless stream-static equi-join, |survivors| = kCand rows per
+    * query), and the second aggregation folds them into one bounded
+    * array per query on which `graft_mmr` runs the greedy in the result
+    * projection. Second-stage state is ≤ kCand (n_id, rel, v) rows per
+    * in-flight query — dim·8·kCand bytes, the price of needing pairwise
+    * candidate sims that [[ivfServeStream]]'s (score, id) heap cannot
+    * carry.
     *
     * Output (q_id, ts, n_id, rank, mmr) equals the batch
     * [[graft.operators.GraftSimilarity.mmrTopKWith]] at the same
     * (k, kCand, lambda, nprobe) per in-flight query (StreamingSpec pins
-    * it). Malformed queries drop pre-probe under [[ivfServeStream]]'s
-    * poison-pill rule.
+    * it). Queries follow the [[StreamServe]] contract.
     */
   def mmrServeStream(index: graft.operators.GraftSimilarity.IvfIndex,
                      queries: DataFrame, k: Int, kCand: Int = 20,
@@ -1272,34 +1113,13 @@ object CorpusStreams {
     require(kCand >= k, s"mmrServeStream: kCand ($kCand) must be >= k ($k)")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"mmrServeStream: lambda must be in [0, 1], got $lambda")
-    require(latenessMinutes > 0,
-      s"latenessMinutes must be positive, got $latenessMinutes")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val indexDim = index.centroids
-      .select(org.apache.spark.sql.functions.size(col("cv")).as("d"))
-      .limit(1).collect() match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalStateException(
-        "mmrServeStream: index has no centroids")
-    }
-    val q = queries
-      .select(col(qIdCol).cast("long").as("q_id"), col(tsCol).as("ts"),
-              expr(s"transform($qVecCol, x -> cast(x AS double))").as("qv"))
-      .filter(expr("aggregate(qv, 0D, (a, x) -> a + x * x) > 0D") &&
-              expr(s"size(qv) = $indexDim"))
-      .withWatermark("ts", s"$latenessMinutes minutes")
-    val probes = graft.operators.GraftSimilarity
-      .probeCells(q, index.centroids, nprobe, Seq("q_id", "ts", "qv"))
+    val q = StreamServe.queries(queries,
+      StreamServe.indexDim(index, "mmrServeStream"), latenessMinutes,
+      qIdCol, qVecCol, tsCol)
     // stage 1: kCand-bounded candidate cut (graft_topk heap state)
-    val cut = probes.join(index.assigned, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("ts"), col("n_id"),
-              expr("graft_cosine(qv, v)").as("c"))
-      .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"graft_topk(c, n_id, $kCand)").as("tk"))
-      .select(col("q_id"), col("ts"), explode(col("tk")).as("s"))
-      .select(col("q_id"), col("ts"), col("s.id").as("n_id"),
-              col("s.score").as("rel"))
+    val cut = graft.operators.GraftSimilarity.topK(
+      StreamServe.probe(q, index, nprobe), kCand, StreamServe.Keys,
+      scoreOut = _.as("rel"))
     // survivor vectors off the static index (stateless equi-join), then
     // stage 2: one bounded fold per query; the greedy runs in the result
     // projection exactly as in the batch tail
@@ -1323,11 +1143,11 @@ object CorpusStreams {
     * .hashTokenVectors]] arithmetic inline, so stream and batch token
     * vectors are bit-identical); each query token probes its cells
     * against the broadcast centroid row (stateless, the
-    * [[ivfServeStream]] shape); then the MaxSim contraction runs as
+    * [[StreamServe]] probe map); then the MaxSim contraction runs as
     * THREE chained stateful aggregations in append mode — max per
-    * (query, token, doc), sum per (query, doc), top-k per query — each
-    * keyed on the query's event time, finalizing together when the
-    * watermark clears it.
+    * (query, token, doc), sum per (query, doc), and the [[StreamServe]]
+    * top-k tail — each keyed on the query's event time, finalizing
+    * together when the watermark clears it.
     *
     * State is BOUNDED BY CONSTRUCTION (VERDICT r12 #5): the index is
     * pre-grouped ONCE at stream construction into one row per cell
@@ -1352,9 +1172,10 @@ object CorpusStreams {
     * Output (q_id, ts, doc_id, rnk, score) is value-identical to the
     * batch serve at the same nprobe when candCut covers (spec-pinned).
     * Empty/blank queries yield no tokens and therefore no answer — the
-    * poison-pill drop rule. The query-token embedding dim is validated
-    * against the index's `tv` width at construction (ADVICE r12: a
-    * mismatch would null-pad `zip_with` and degrade scores silently).
+    * [[StreamServe]] poison-pill rule. The query-token embedding dim is
+    * validated against the index's `tv` width at construction (ADVICE
+    * r12: a mismatch would null-pad `zip_with` and degrade scores
+    * silently).
     */
   def maxSimServeStream(index: graft.operators.GraftSimilarity.IvfIndex,
                         queries: DataFrame, k: Int, nprobe: Int = 4,
@@ -1379,13 +1200,8 @@ object CorpusStreams {
     // fail loudly on an embedding-dim mismatch (ADVICE r12): zip_with
     // over unequal lengths null-pads, the dot aggregate goes null, and
     // scores would degrade silently instead of erroring
-    val idxDim = index.assigned
-      .select(org.apache.spark.sql.functions.size(col("tv")).as("d"))
-      .limit(1).collect() match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalStateException(
-        "maxSimServeStream: index has no assigned token vectors")
-    }
+    val idxDim = StreamServe.width(index.assigned, "tv",
+      "maxSimServeStream: index has no assigned token vectors")
     require(idxDim == dim,
       s"maxSimServeStream: dim=$dim but the token index carries " +
       s"$idxDim-component vectors — build and serve must agree")
@@ -1411,7 +1227,7 @@ object CorpusStreams {
       .groupBy(col("c_id"))
       .agg(collect_list(struct(col("n_id"), col("tv"))).as("__cands"))
       .localCheckpoint()
-    probes.join(packed, "c_id")
+    val summed = probes.join(packed, "c_id")
       .select(col("q_id"), col("ts"), col("qtok"),
         // in-row per-cell contraction: self-pairs out, integer dots,
         // deterministic top-candCut cut — all before any state store
@@ -1442,12 +1258,9 @@ object CorpusStreams {
       .agg(max(col("__dot")).as("__m"))
       .groupBy(col("q_id"), col("ts"), col("doc_id"))
       .agg(sum(col("__m")).as("__s"))
-      .groupBy(col("q_id"), col("ts"))
-      .agg(expr(s"graft_topk(cast(__s AS double), doc_id, $k)").as("tk"))
-      .select(col("q_id"), col("ts"), posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("ts"), col("s.id").as("doc_id"),
-              (col("p") + 1).cast("long").as("rnk"),
-              col("s.score").cast("long").as("score"))
+    graft.operators.GraftSimilarity.topK(summed, k, StreamServe.Keys,
+      id = "doc_id", score = "cast(__s AS double)",
+      scoreOut = _.cast("long").as("score"))
   }
 
   final case class PackDoc(shard: String, doc_id: Long, n_tokens: Long)

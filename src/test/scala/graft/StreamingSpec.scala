@@ -1682,36 +1682,11 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
          if (r.isNullAt(4)) -1L else r.getLong(4),
          if (r.isNullAt(5)) -1L else r.getLong(5))
-      val batchServe = HybridRetrieval.hybridTopKWith(
-          idx, docs, qBatch, k = 10, kCand = 30, rrfK = 60, nprobe = 4)
-        .collect().map(key).toSet
-      assert(batchServe.nonEmpty)
       val rows = qBatch.collect()
         .map(r => (r.getLong(0), ts(r.getLong(0).toInt % 8),
                    r.getSeq[String](1).toList, r.getSeq[Double](2).toList))
         .sortBy(_._1).toSeq
       val (h1, h2) = rows.splitAt(rows.size / 2)
-      val input = MemoryStream[(Long, Timestamp, List[String], List[Double])]
-      val df = input.toDF().toDF("q_id", "ts", "q_terms", "qv")
-      val q = CorpusStreams
-        .hybridServeStream(idx, docs, df, k = 10, kCand = 30, rrfK = 60,
-                           nprobe = 4, latenessMinutes = 10)
-        .writeStream.format("memory").queryName("hybrid_serve")
-        .outputMode("append").start()
-      try {
-        input.addData(h1); q.processAllAvailable()
-        input.addData(h2); q.processAllAvailable()
-        input.addData(Seq((999999L, ts(600), List("the"),
-                           rows.head._4)))
-        q.processAllAvailable()
-        val streamed = spark.table("hybrid_serve")
-          .filter(col("q_id") =!= 999999L)
-          .select("q_id", "doc_id", "rank", "rrf", "lex_rank", "sem_rank")
-          .collect().map(key).toSet
-        assert(streamed == batchServe,
-          s"stream-only=${streamed.diff(batchServe).take(5)} " +
-          s"batch-only=${batchServe.diff(streamed).take(5)}")
-      } finally q.stop()
       // STORED-impact serve (VERDICT r13 #1c): the same stream off an
       // at-rest impact store — addends at rest are the shared kernel's,
       // so stored-serve ≡ in-memory-serve ≡ batch, bit-for-bit; and the
@@ -1719,32 +1694,6 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
       val storeDir = tempStore("graft_impact_store")
       graft.operators.ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
       val stored = graft.operators.ImpactObjectStore.read(spark, storeDir)
-      val batchStored = HybridRetrieval.hybridTopKWithImpacts(
-          idx, stored, qBatch, k = 10, kCand = 30, rrfK = 60, nprobe = 4)
-        .collect().map(key).toSet
-      assert(batchStored == batchServe,
-        "batch serve off the stored impacts must equal the corpus-fold serve")
-      val input2 = MemoryStream[(Long, Timestamp, List[String], List[Double])]
-      val df2 = input2.toDF().toDF("q_id", "ts", "q_terms", "qv")
-      val q2 = CorpusStreams
-        .hybridServeStreamStored(idx, stored.impacts, df2,
-                                 k = 10, kCand = 30, rrfK = 60,
-                                 nprobe = 4, latenessMinutes = 10)
-        .writeStream.format("memory").queryName("hybrid_serve_stored")
-        .outputMode("append").start()
-      try {
-        input2.addData(h1); q2.processAllAvailable()
-        input2.addData(h2); q2.processAllAvailable()
-        input2.addData(Seq((999999L, ts(600), List("the"), rows.head._4)))
-        q2.processAllAvailable()
-        val streamed2 = spark.table("hybrid_serve_stored")
-          .filter(col("q_id") =!= 999999L)
-          .select("q_id", "doc_id", "rank", "rrf", "lex_rank", "sem_rank")
-          .collect().map(key).toSet
-        assert(streamed2 == batchServe,
-          s"stored-stream-only=${streamed2.diff(batchServe).take(5)} " +
-          s"batch-only=${batchServe.diff(streamed2).take(5)}")
-      } finally q2.stop()
       // MANIFEST substrate (r15): the same stream off the object-store
       // layout — ImpactObjectStore.read returns the same StoredImpacts
       // surface with bit-identical addends, so the S3-class deployment
@@ -1754,27 +1703,70 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
                                                 buckets = 16)
       val manifestIdx =
         graft.operators.ImpactObjectStore.read(spark, manifestDir)
-      val input3 = MemoryStream[(Long, Timestamp, List[String], List[Double])]
-      val df3 = input3.toDF().toDF("q_id", "ts", "q_terms", "qv")
-      val q3 = CorpusStreams
-        .hybridServeStreamStored(idx, manifestIdx.impacts, df3,
-                                 k = 10, kCand = 30, rrfK = 60,
-                                 nprobe = 4, latenessMinutes = 10)
-        .writeStream.format("memory").queryName("hybrid_serve_manifest")
-        .outputMode("append").start()
-      try {
-        input3.addData(h1); q3.processAllAvailable()
-        input3.addData(h2); q3.processAllAvailable()
-        input3.addData(Seq((999999L, ts(600), List("the"), rows.head._4)))
-        q3.processAllAvailable()
-        val streamed3 = spark.table("hybrid_serve_manifest")
-          .filter(col("q_id") =!= 999999L)
-          .select("q_id", "doc_id", "rank", "rrf", "lex_rank", "sem_rank")
+      // two RRF parameter points: the default, and rrfK = 1 with
+      // kCand = k, where every fused score sits on the smallest
+      // denominators and the heaps hold no slack
+      for ((rrfK, kCand) <- Seq((60, 30), (1, 10))) {
+        val batchServe = HybridRetrieval.hybridTopKWith(
+            idx, docs, qBatch, k = 10, kCand = kCand, rrfK = rrfK,
+            nprobe = 4)
           .collect().map(key).toSet
-        assert(streamed3 == batchServe,
-          s"manifest-stream-only=${streamed3.diff(batchServe).take(5)} " +
-          s"batch-only=${batchServe.diff(streamed3).take(5)}")
-      } finally q3.stop()
+        assert(batchServe.nonEmpty)
+        val input = MemoryStream[(Long, Timestamp, List[String], List[Double])]
+        val df = input.toDF().toDF("q_id", "ts", "q_terms", "qv")
+        val q = CorpusStreams
+          .hybridServeStream(idx, docs, df, k = 10, kCand = kCand,
+                             rrfK = rrfK, nprobe = 4, latenessMinutes = 10)
+          .writeStream.format("memory").queryName(s"hybrid_serve_$rrfK")
+          .outputMode("append").start()
+        try {
+          input.addData(h1); q.processAllAvailable()
+          input.addData(h2); q.processAllAvailable()
+          input.addData(Seq((999999L, ts(600), List("the"),
+                             rows.head._4)))
+          q.processAllAvailable()
+          val streamed = spark.table(s"hybrid_serve_$rrfK")
+            .filter(col("q_id") =!= 999999L)
+            .select("q_id", "doc_id", "rank", "rrf", "lex_rank", "sem_rank")
+            .collect().map(key).toSet
+          assert(streamed == batchServe,
+            s"rrfK=$rrfK stream-only=${streamed.diff(batchServe).take(5)} " +
+            s"batch-only=${batchServe.diff(streamed).take(5)}")
+        } finally q.stop()
+        val batchStored = HybridRetrieval.hybridTopKWithImpacts(
+            idx, stored, qBatch, k = 10, kCand = kCand, rrfK = rrfK,
+            nprobe = 4)
+          .collect().map(key).toSet
+        assert(batchStored == batchServe,
+          s"rrfK=$rrfK: batch serve off the stored impacts must equal the " +
+          "corpus-fold serve")
+        for ((impacts, label) <- Seq((stored.impacts, "stored"),
+                                     (manifestIdx.impacts, "manifest"))) {
+          val input2 = MemoryStream[(Long, Timestamp, List[String], List[Double])]
+          val df2 = input2.toDF().toDF("q_id", "ts", "q_terms", "qv")
+          val name = s"hybrid_serve_${label}_$rrfK"
+          val q2 = CorpusStreams
+            .hybridServeStreamStored(idx, impacts, df2,
+                                     k = 10, kCand = kCand, rrfK = rrfK,
+                                     nprobe = 4, latenessMinutes = 10)
+            .writeStream.format("memory").queryName(name)
+            .outputMode("append").start()
+          try {
+            input2.addData(h1); q2.processAllAvailable()
+            input2.addData(h2); q2.processAllAvailable()
+            input2.addData(Seq((999999L, ts(600), List("the"), rows.head._4)))
+            q2.processAllAvailable()
+            val streamed2 = spark.table(name)
+              .filter(col("q_id") =!= 999999L)
+              .select("q_id", "doc_id", "rank", "rrf", "lex_rank", "sem_rank")
+              .collect().map(key).toSet
+            assert(streamed2 == batchServe,
+              s"rrfK=$rrfK $label-stream-only=" +
+              s"${streamed2.diff(batchServe).take(5)} " +
+              s"batch-only=${batchServe.diff(streamed2).take(5)}")
+          } finally q2.stop()
+        }
+      }
     } finally { idx.unpersist(); () }
   }
 
@@ -2168,6 +2160,82 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
 
   test("ivfServeStream drops a zero-norm query instead of dying: the " +
        "malformed row gets no answer, every other query is served") {
+    // table-driven over every vector serve: ivf, ivf(where), pq, the three
+    // hybrid serves and mmr share one query contract, so each answers the
+    // good queries and gives no rows to the zero-norm or dim-drifted one
+    import graft.streaming.CorpusStreams
+    import graft.operators.{GraftPq, GraftSimilarity, ImpactObjectStore}
+    implicit val sqlCtx = spark.sqlContext
+    GraftSession.ensureExtensions(spark)
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"),
+              expr("transform(embedding, x -> cast(x AS double))").as("v"),
+              col("label"))
+    val idx = GraftSimilarity.buildIvfIndex(e, metaCols = Seq("label"))
+      .persist()
+    val cb = GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
+    val enc = GraftPq.pqEncode(e, cb).persist()
+    val storeDir = tempStore("serve_malformed_impacts")
+    ImpactObjectStore.rebuild(docs, storeDir, buckets = 16)
+    val stored = ImpactObjectStore.read(spark, storeDir)
+    type Serve = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    val serves: Seq[(String, Serve)] = Seq(
+      "ivf" -> (q => CorpusStreams.ivfServeStream(idx, q, k = 3)),
+      "ivfwhere" -> (q => CorpusStreams.ivfServeStream(
+        idx, q, k = 3, where = Some(col("label") < 5))),
+      "pq" -> (q => CorpusStreams.pqServeStream(cb, enc, e, q, k = 3)),
+      "hybrid" -> (q => CorpusStreams.hybridServeStream(
+        idx, docs, q, k = 3, kCand = 5)),
+      "hybridstored" -> (q => CorpusStreams.hybridServeStreamStored(
+        idx, stored.impacts, q, k = 3, kCand = 5)),
+      "hybridpruned" -> (q => CorpusStreams.hybridServeStreamPruned(
+        idx, stored, q, k = 3, kCand = 5)),
+      "mmr" -> (q => CorpusStreams.mmrServeStream(idx, q, k = 3, kCand = 5)))
+    try {
+      val good = e.filter(col("vec_id") < 3)
+        .select(col("vec_id"),
+                expr("transform(v, x -> cast(x AS float))").as("qv"))
+        .collect()
+        .map(r => (r.getLong(0), ts(1), List("the"),
+                   r.getSeq[Float](1).toList)).toSeq
+      val dim = good.head._4.size
+      val zero = (999L, ts(1), List("the"), List.fill(dim)(0f))
+      // wrong-dim but nonzero: would throw in graft_cosine's strict-length
+      // kernel if it reached the probe — must be dropped, not fatal
+      val drifted = (998L, ts(1), List("the"), List.fill(dim / 2)(0.5f))
+      for ((name, serve) <- serves) {
+        val input = MemoryStream[(Long, Timestamp, List[String], List[Float])]
+        val q = serve(input.toDF().toDF("q_id", "ts", "q_terms", "qv"))
+          .writeStream.format("memory").queryName(s"serve_malformed_$name")
+          .outputMode("append").start()
+        try {
+          input.addData(good :+ zero :+ drifted)
+          q.processAllAvailable()
+          // watermark push so the good queries' top-k finalize (full-dim,
+          // nonzero — a malformed push row would itself be filtered before
+          // the watermark and never advance it)
+          input.addData(Seq((-1L, ts(600), List("the"), List.fill(dim)(0.1f))))
+          q.processAllAvailable()
+          assert(q.exception.isEmpty,
+            s"$name: malformed rows must not kill the serve stream: " +
+            s"${q.exception}")
+          val answered = spark.table(s"serve_malformed_$name").collect()
+            .map(_.getLong(0)).toSet
+          assert(good.map(_._1).toSet.subsetOf(answered),
+            s"$name: good queries must be served: $answered")
+          assert(!answered.contains(999L),
+            s"$name: the zero-norm query must get no rows, not fake ones")
+          assert(!answered.contains(998L),
+            s"$name: the dim-drifted query must get no rows, not " +
+            "truncated-prefix ones")
+        } finally q.stop()
+      }
+    } finally { idx.unpersist(blocking = true); enc.unpersist(); () }
+  }
+
+  test("nprobe = 0 is refused, not served empty: ivfTopKWith, mmrTopKWith " +
+       "and mmrServeStream require nprobe >= 1") {
     import graft.streaming.CorpusStreams
     import graft.operators.GraftSimilarity
     implicit val sqlCtx = spark.sqlContext
@@ -2177,40 +2245,22 @@ class StreamingSpec extends GraftFunSuite with ManifestStoreFixture {
               expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val idx = GraftSimilarity.buildIvfIndex(e).persist()
     try {
-      val good = e.filter(col("vec_id") < 3)
-        .select(col("vec_id"),
-                expr("transform(v, x -> cast(x AS float))").as("qv"))
-        .collect()
-        .map(r => (r.getLong(0), ts(1), r.getSeq[Float](1).toList)).toSeq
-      val dim = good.head._3.size
-      val zero = (999L, ts(1), List.fill(dim)(0f))
-      // wrong-dim but nonzero: would throw in graft_cosine's strict-length
-      // kernel if it reached the probe — must be dropped, not fatal
-      val drifted = (998L, ts(1), List.fill(dim / 2)(0.5f))
-      val input = MemoryStream[(Long, Timestamp, List[Float])]
-      val q = CorpusStreams.ivfServeStream(
-          idx, input.toDF().toDF("q_id", "ts", "qv"), k = 3)
-        .writeStream.format("memory").queryName("serve_zero_norm")
-        .outputMode("append").start()
-      try {
-        input.addData(good :+ zero :+ drifted)
-        q.processAllAvailable()
-        // watermark push so the good queries' top-k finalize (full-dim,
-        // nonzero — a malformed push row would itself be filtered before
-        // the watermark and never advance it)
-        input.addData(Seq((-1L, ts(600), List.fill(dim)(0.1f))))
-        q.processAllAvailable()
-        assert(q.exception.isEmpty,
-          s"malformed rows must not kill the serve stream: ${q.exception}")
-        val answered = spark.table("serve_zero_norm").collect()
-          .map(_.getLong(0)).toSet
-        assert(good.map(_._1).toSet.subsetOf(answered),
-          s"good queries must be served: $answered")
-        assert(!answered.contains(999L),
-          "the zero-norm query must get no rows, not fake ones")
-        assert(!answered.contains(998L),
-          "the dim-drifted query must get no rows, not truncated-prefix ones")
-      } finally q.stop()
+      val qBatch = e.filter(col("vec_id") < 3)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val input = MemoryStream[(Long, Timestamp, List[Double])]
+      val entries: Seq[(String, () => Any)] = Seq(
+        "ivfTopKWith" -> (() => GraftSimilarity
+          .ivfTopKWith(idx, qBatch, k = 3, nprobe = 0).collect()),
+        "mmrTopKWith" -> (() => GraftSimilarity
+          .mmrTopKWith(idx, qBatch, k = 3, kCand = 5, nprobe = 0).collect()),
+        "mmrServeStream" -> (() => CorpusStreams.mmrServeStream(
+          idx, input.toDF().toDF("q_id", "ts", "qv"), k = 3, kCand = 5,
+          nprobe = 0)))
+      for ((name, run) <- entries) {
+        val err = intercept[IllegalArgumentException](run())
+        assert(err.getMessage.contains("nprobe must be >= 1"),
+          s"$name: ${err.getMessage}")
+      }
     } finally idx.unpersist(blocking = true)
   }
 
