@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{GraftPq, GraftSimilarity, GraftText, HybridRetrieval,
-  IvfObjectStore, TextRank}
+  ImpactObjectStore, IvfObjectStore, TextRank}
 
 /** The executed shape of the stored serves: every query-bounded side —
   * the query minibatch, the BM25 term set with its df and corpus stats,
@@ -122,6 +122,54 @@ class ServeShapeSpec extends GraftFunSuite with ManifestStoreFixture {
     check("ivfPqTopKWithCw", pinnedJobs = 7) {
       GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, store),
         GraftPq.readPqCodebook(spark, store), queries, k = 5, nprobe = 2)
+    }
+  }
+
+  private lazy val impacts: String = {
+    val dir = tempStore("graft_serve_shape_impacts")
+    ImpactObjectStore.rebuild(docs, dir)
+    dir
+  }
+
+  test("hybridTopKWith: no string-keyed hashed broadcast, no persisted " +
+       "frame, job count pinned") {
+    check("hybridTopKWith", pinnedJobs = 13) {
+      HybridRetrieval.hybridTopKWith(IvfObjectStore.read(spark, store), docs,
+        queries, k = 5, kCand = 10, nprobe = 2)
+    }
+  }
+
+  test("hybridTopKWithQ8: no string-keyed hashed broadcast, no persisted " +
+       "frame, job count pinned") {
+    check("hybridTopKWithQ8", pinnedJobs = 15) {
+      HybridRetrieval.hybridTopKWithQ8(IvfObjectStore.read(spark, store),
+        docs, queries, k = 5, kCand = 10, nprobe = 2)
+    }
+  }
+
+  test("hybridTopKWithMmr: no string-keyed hashed broadcast, no persisted " +
+       "frame, job count pinned") {
+    check("hybridTopKWithMmr", pinnedJobs = 15) {
+      HybridRetrieval.hybridTopKWithMmr(IvfObjectStore.read(spark, store),
+        docs, queries, k = 5, kCand = 10, nprobe = 2)
+    }
+  }
+
+  test("hybridTopKWithImpacts: no string-keyed hashed broadcast, no " +
+       "persisted frame, job count pinned") {
+    val imp = ImpactObjectStore.read(spark, impacts)
+    check("hybridTopKWithImpacts", pinnedJobs = 10) {
+      HybridRetrieval.hybridTopKWithImpacts(IvfObjectStore.read(spark, store),
+        imp, queries, k = 5, kCand = 10, nprobe = 2)
+    }
+  }
+
+  test("serveProduction: no string-keyed hashed broadcast, no persisted " +
+       "frame, job count pinned") {
+    val imp = ImpactObjectStore.read(spark, impacts)
+    check("serveProduction", pinnedJobs = 21) {
+      HybridRetrieval.serveProduction(IvfObjectStore.read(spark, store), imp,
+        queries, essential = 1, k = 5, kCand = 10, nprobe = 2)
     }
   }
 

@@ -1131,6 +1131,95 @@ class SimilaritySpec extends GraftFunSuite with ManifestStoreFixture {
     assert(msgs(err).exists(_.contains("does not cover")), s"got: $err")
   }
 
+  test("batch serves refuse k, kCand, rrfK, nprobe and rerankFactor of 0, " +
+       "each message naming the method that checks it") {
+    import graft.operators.{GraftPq, GraftSimilarity, GraftText,
+                            HybridRetrieval, ImpactObjectStore}
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
+    val queries = docs.filter(col("doc_id") < 10)
+      .join(e, col("doc_id") === col("vec_id"))
+      .select(col("doc_id").as("q_id"),
+              GraftText.whitespaceTokens(col("text")).as("q_terms"),
+              col("v").as("qv"), col("text"))
+    val idx = GraftSimilarity.b1Augment(GraftSimilarity.q4Augment(
+      GraftSimilarity.q8Augment(GraftSimilarity.buildIvfIndex(e))))
+    val cb = GraftPq.trainPq(e, m = 4, ksub = 8)
+    val impDir = tempStore("graft_refusals")
+    ImpactObjectStore.rebuild(docs, impDir)
+    val imp = ImpactObjectStore.read(spark, impDir)
+    // each serve: the parameters it takes, and a call reading them
+    val serves: Seq[(String, Seq[String], (String => Int) => Any)] = Seq(
+      ("hybridTopK", Seq("k", "kCand", "rrfK"), p =>
+        HybridRetrieval.hybridTopK(docs, e, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"))),
+      ("hybridTopKWith", Seq("k", "kCand", "rrfK", "nprobe"), p =>
+        HybridRetrieval.hybridTopKWith(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"))),
+      ("hybridTopKWithQ8", Seq("k", "kCand", "rrfK", "nprobe", "rerankFactor"),
+        p => HybridRetrieval.hybridTopKWithQ8(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"),
+          rerankFactor = p("rerankFactor"))),
+      ("hybridTopKWithQ4", Seq("k", "kCand", "rrfK", "nprobe", "rerankFactor"),
+        p => HybridRetrieval.hybridTopKWithQ4(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"),
+          rerankFactor = p("rerankFactor"))),
+      ("hybridTopKWithB1", Seq("k", "kCand", "rrfK", "nprobe", "rerankFactor"),
+        p => HybridRetrieval.hybridTopKWithB1(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"),
+          rerankFactor = p("rerankFactor"))),
+      ("hybridTopKWithPq", Seq("k", "kCand", "rrfK", "nprobe", "rerankFactor"),
+        p => HybridRetrieval.hybridTopKWithPq(idx, cb, docs, queries,
+          k = p("k"), kCand = p("kCand"), rrfK = p("rrfK"),
+          nprobe = p("nprobe"), rerankFactor = p("rerankFactor"))),
+      ("hybridTopKWithMaxSim", Seq("k", "kCand", "rrfK", "nprobe"), p =>
+        HybridRetrieval.hybridTopKWithMaxSim(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"))),
+      ("hybridTopKWithMmr", Seq("k", "kCand", "rrfK", "nprobe"), p =>
+        HybridRetrieval.hybridTopKWithMmr(idx, docs, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"))),
+      ("hybridTopKWithImpacts", Seq("k", "kCand", "rrfK", "nprobe"), p =>
+        HybridRetrieval.hybridTopKWithImpacts(idx, imp, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"))),
+      ("serveProduction", Seq("k", "kCand", "rrfK", "nprobe", "rerankFactor"),
+        p => HybridRetrieval.serveProduction(idx, imp, queries, k = p("k"),
+          kCand = p("kCand"), rrfK = p("rrfK"), nprobe = p("nprobe"),
+          rerankFactor = p("rerankFactor"))),
+      ("ivfTopKWithQ8", Seq("k", "nprobe", "rerankFactor"), p =>
+        GraftSimilarity.ivfTopKWithQ8(idx, queries, k = p("k"),
+          nprobe = p("nprobe"), rerankFactor = p("rerankFactor"))),
+      ("ivfTopKWithQ4", Seq("k", "nprobe", "rerankFactor"), p =>
+        GraftSimilarity.ivfTopKWithQ4(idx, queries, k = p("k"),
+          nprobe = p("nprobe"), rerankFactor = p("rerankFactor"))),
+      ("ivfTopKWithB1", Seq("k", "nprobe", "rerankFactor"), p =>
+        GraftSimilarity.ivfTopKWithB1(idx, queries, k = p("k"),
+          nprobe = p("nprobe"), rerankFactor = p("rerankFactor"))),
+      ("ivfPqTopKWithCw", Seq("k", "nprobe", "rerankFactor"), p =>
+        GraftPq.ivfPqTopKWithCw(idx, cb, queries, k = p("k"),
+          nprobe = p("nprobe"), rerankFactor = p("rerankFactor"))))
+    // a check a serve hands to the serve it delegates to names that one:
+    // the MMR hybrid's nprobe is its fused serve's, the production
+    // serve's rerankFactor its q8 leg's, the quantized IVF serves'
+    // nprobe the probe's
+    val checkedBy = Map(
+      ("hybridTopKWithMmr", "nprobe") -> "hybridTopKWith",
+      ("serveProduction", "rerankFactor") -> "ivfTopKWithQ8",
+      ("ivfTopKWithQ8", "nprobe") -> "probeCells",
+      ("ivfTopKWithQ4", "nprobe") -> "probeCells",
+      ("ivfTopKWithB1", "nprobe") -> "probeCells")
+    val ok = Map("k" -> 5, "kCand" -> 10, "rrfK" -> 60, "nprobe" -> 2,
+                 "rerankFactor" -> 2)
+    for ((name, params, serve) <- serves; zero <- params) {
+      val err = intercept[IllegalArgumentException] {
+        serve(p => if (p == zero) 0 else ok(p))
+      }
+      val owner = checkedBy.getOrElse((name, zero), name)
+      assert(err.getMessage == s"requirement failed: $owner: $zero must be " +
+                               ">= 1, got 0", s"$name($zero = 0)")
+    }
+  }
+
   test("ndcgAtK: covering nprobe scores a perfect 10^6 for every query, " +
        "all values live on the [0, 10^6] grid, and a starved probe " +
        "budget can only lower the per-query score") {
