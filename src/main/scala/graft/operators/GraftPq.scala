@@ -209,39 +209,27 @@ object GraftPq {
         .as("__lut"): _*)
   }
 
-  /** Stage 1 + 2 of every PQ serve: ADC-score (q_id, n_id, __cw, __lut,
-    * __qn) candidate pairs (m byte-lookups each — exact integer sums,
-    * replayed bit-for-bit by the SQL oracles), cut to k·rerankFactor
-    * per query with the mergeable top-k heap, exact-rerank the
-    * survivors through their original vectors.
-    */
-  private def scoreAndRerank(pairs: DataFrame, cb: PqCodebook,
-                             e: DataFrame, q: DataFrame,
-                             k: Int, kk: Int): DataFrame = {
-    val cand = pairs
-      .withColumn("__nlut", normLut(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(__cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(__cw, __nlut)) END""".stripMargin)
-        .as("ac"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(ac, n_id, $kk)").as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("s"))
-      .select(col("q_id"), col("s.id").as("n_id"))
-    GraftSimilarity.topK(
-      cand.join(ScaleHints.gated(e), "n_id")
-          .join(ScaleHints.gated(q), "q_id")
-          .select(col("q_id"), col("n_id"),
-                  GraftSimilarity.cosine("qv", "v").as("c")), k)
+  /** The ADC cosine of the packed code word in column `cw` against a
+    * row's [[qlutFrame]] state (__lut, __qn): m byte-lookups into each
+    * LUT — exact integer sums, replayed bit-for-bit by the SQL oracles —
+    * with the codeword norm from [[normLut]] as the candidate-norm
+    * surrogate; 0 for a zero-norm query or code word. */
+  private def adcCosine(cb: PqCodebook, cw: String): Column = {
+    def adc(lut: Column) = call_function("graft_pq_adc", col(cw), lut)
+    val norm = adc(normLut(cb))
+    when(col("__qn") === 0.0 || norm === 0.0, lit(0.0))
+      .otherwise(adc(col("__lut")) / sqrt(col("__qn") * norm))
   }
+
+  /** The packed code words of an encoded frame's `codes`. */
+  private def packed: Column = expr("graft_pq_pack(codes)").as("__cw")
 
   /** ADC serve over an encoded collection: the per-query LUT
     * ([[qlutFrame]]) and the codeword-norm LUT ([[normLut]]) against the
     * literal codebook, `graft_pq_adc` candidate scoring over PACKED code
-    * bytes, `graft_topk` cut at k·rerankFactor, exact rerank through the
-    * original vectors. `collection` supplies the rerank vectors and must
-    * carry the same ids the encoding was built from.
+    * bytes, then the flat two-stage tail
+    * ([[GraftSimilarity.cutAndRerank]]). `collection` supplies the rerank
+    * vectors and must carry the same ids the encoding was built from.
     */
   def pqTopKWith(cb: PqCodebook, encoded: DataFrame, collection: DataFrame,
                  queries: DataFrame, k: Int, rerankFactor: Int = 4,
@@ -256,11 +244,10 @@ object GraftPq {
                               col(vecCol).as("v"))
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
     // the scan carries ONLY the m-byte packed codes
-    val pairs = encoded
-      .select(col("n_id"), expr("graft_pq_pack(codes)").as("__cw"))
-      .crossJoin(broadcast(qlutFrame(cb, q)))
-      .filter(col("n_id") =!= col("q_id"))
-    scoreAndRerank(pairs, cb, e, q, k, k * rerankFactor)
+    GraftSimilarity.cutAndRerank(
+      GraftSimilarity.flatPairs(encoded.select(col("n_id"), packed),
+                                qlutFrame(cb, q), adcCosine(cb, "__cw")),
+      e, q, k, k * rerankFactor)
   }
 
   /** IVF × PQ serve — the FAISS-IVFPQ cost shape on the relational
@@ -299,13 +286,12 @@ object GraftPq {
     val probes = GraftSimilarity.probeCells(q, index.centroids, nprobe,
                                             Seq("q_id", "qv"))
     // (q_id, c_id, LUT) — |Q|·nprobe rows, broadcastable at any N
-    val probeLut = broadcast(qlutFrame(cb, probes, carry = Seq("c_id")))
-    val pairs = encodedWithCells
-      .select(col("n_id"), col("c_id"),
-              expr("graft_pq_pack(codes)").as("__cw"))
-      .join(probeLut, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-    scoreAndRerank(pairs, cb, e, q, k, k * rerankFactor)
+    GraftSimilarity.cutAndRerank(
+      GraftSimilarity.probeJoin(
+        qlutFrame(cb, probes, carry = Seq("c_id")),
+        encodedWithCells.select(col("n_id"), col("c_id"), packed),
+        adcCosine(cb, "__cw")),
+      e, q, k, k * rerankFactor)
   }
 
   /** One-shot IVF×PQ: build the IVF index, train the PQ codebook,
@@ -492,16 +478,12 @@ object GraftPq {
   }
 
   /** Serve top-k from any cw-carrying index + codebook pair — typically
-    * an at-rest PQ store ([[IvfObjectStore.read]] + [[readPqCodebook]]):
-    * probe the query's `nprobe` nearest cells, ADC-score the probed
-    * cells' members off the STORED `cw` column — the stage-1 scan ships
-    * (n_id, c_id, m bytes) and column pruning keeps the doubles (and the
-    * q8 bytes) out entirely — then exact-rerank the k·rerankFactor
-    * survivors, fetching ONLY their full vectors through the literal
-    * `n_id IN (...)` pushdown that prunes row groups on the n_id-sorted
-    * cell files (the [[GraftSimilarity.ivfTopKWithQ8]] stage-2 shape).
-    * A null `cw` (a file written before the store had a codebook) FAILS
-    * LOUDLY; [[IvfObjectStore.compact]] with the codebook present
+    * an at-rest PQ store ([[IvfObjectStore.read]] + [[readPqCodebook]]) —
+    * through the at-rest IVF two-stage shape
+    * ([[GraftSimilarity.ivfServe]]) with ADC candidate scoring off the
+    * STORED `cw` column: the stage-1 scan ships (n_id, c_id, m bytes).
+    * A null `cw` (a file written before the store had a codebook) fails
+    * loudly; [[IvfObjectStore.compact]] with the codebook present
     * re-encodes it in every cell it rewrites. `rerankFactor` is the
     * recall knob — size it with [[pqAutoBudget]], not the default (see
     * [[pqTopK]]'s budget warning). */
@@ -516,49 +498,15 @@ object GraftPq {
       s"ivfPqTopKWithCw: nprobe must be >= 1, got $nprobe")
     require(rerankFactor >= 1,
       s"ivfPqTopKWithCw: rerankFactor must be >= 1, got $rerankFactor")
-    val spark = queries.sparkSession
-    graft.GraftSession.ensureExtensions(spark)
     require(index.assigned.columns.contains("cw"),
       "ivfPqTopKWithCw: index has no cw column — write the store with " +
       "IvfObjectStore.create(…, pq = Some(cb)), or compact a pre-PQ " +
       "store with its codebook present to migrate in place")
-    // the minibatch is collected once (the ivfTopKQuant precedent): the
-    // survivor-fetch collect, |Q| and the rerank's query vectors read
-    // driver values, and the LUTs are computed on the probe rows, which
-    // already carry qv, against the literal codebook
-    val q = GraftSimilarity.queryBatch(
-      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")),
-      "ivfPqTopKWithCw")
-    val probes = GraftSimilarity.probeCells(q.frame, index.centroids, nprobe,
-                                            Seq("q_id", "qv"))
-    val probeLut = broadcast(qlutFrame(cb, probes, carry = Seq("c_id")))
-    val kk = k * rerankFactor
-    // metadata-filtered PQ serve: the predicate cuts the candidate scan
-    // BEFORE the ADC scoring — same placement/pushdown story as
-    // ivfTopKWith(where) (the filter makes the quantized stage cheaper,
-    // and the survivors inherit it, so stage 2 needs no re-filter)
-    val scan0 = where.fold(index.assigned)(index.assigned.filter(_))
-    val cand = scan0.select(col("n_id"), col("c_id"), col("cw"))
-      .join(probeLut, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("__nlut", normLut(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN isnull(cw) THEN cast(assert_true(false,
-          |  'ivfPqTopKWithCw: null cw — mixed-generation cell files;
-          |   compact the store (codebook present) to migrate') AS double)
-          |WHEN __qn = 0D OR graft_pq_adc(cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(cw, __nlut)) END""".stripMargin)
-        .as("ac"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(ac, n_id, $kk)").as("tk"))
-      .select(col("q_id"), explode(col("tk.id")).as("n_id"))
-    // rerank fetch gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
-    // row-group-pruned fetch below the gate, broadcast-join fetch past it
-    // (GraftSimilarity.survivorRerank — the q8 tier's exact stage-2)
-    GraftSimilarity.survivorRerank(
-      cand, index.assigned.select(col("n_id"), col("v")), q, k,
-      q.size * kk)
+    // the LUTs are computed on the probe rows, which already carry qv,
+    // against the literal codebook
+    GraftSimilarity.ivfServe(index, queries, k, nprobe, rerankFactor, qIdCol,
+                             qVecCol, where, "ivfPqTopKWithCw", "cw")(
+      qlutFrame(cb, _, carry = Seq("c_id")), adcCosine(cb, "cw"))
   }
 
   /** Recall of the PQ tier against exact truth across a rerank-budget
@@ -604,37 +552,24 @@ object GraftPq {
     val enc = pqEncode(collection, cb, idCol, vecCol)
     val kkMax = k * rerankFactors.max
     val rfArr = rerankFactors.sorted.mkString("array(", ", ", ")")
-    // ONE ADC pass at the largest budget; position in the heap output IS
-    // the ADC rank every smaller budget cuts on
-    val ranked = enc
-      .select(col("n_id"), expr("graft_pq_pack(codes)").as("__cw"))
-      .crossJoin(broadcast(qlutFrame(cb, q)))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("__nlut", normLut(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(__cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(__cw, __nlut)) END""".stripMargin)
-        .as("ac"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(ac, n_id, $kkMax)").as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"),
-              (col("p") + 1).as("__arnk"))
+    // ONE ADC pass at the largest budget; the heap rank IS the ADC rank
+    // every smaller budget cuts on
+    val ranked = GraftSimilarity.topK(
+        GraftSimilarity.flatPairs(enc.select(col("n_id"), packed),
+                                  qlutFrame(cb, q), adcCosine(cb, "__cw")),
+        kkMax)
+      .select(col("q_id"), col("n_id"), col("rnk").as("__arnk"))
     // exact cosines ONCE for the largest budget's survivor superset
     val cand = ranked
       .join(ScaleHints.gated(e), "n_id")
       .join(org.apache.spark.sql.functions.broadcast(q), "q_id")
       .select(col("q_id"), col("n_id"), col("__arnk"),
               GraftSimilarity.cosine("qv", "v").as("c"))
-    val served = cand
-      .select(col("q_id"), col("n_id"), col("c"),
-              explode(expr(s"filter($rfArr, rf -> rf * $k >= __arnk)"))
-                .as("rf"))
-      .groupBy(col("rf"), col("q_id"))
-      .agg(expr(s"graft_topk(c, n_id, $k)").as("tk"))
-      .select(col("rf"), col("q_id"), explode(col("tk.id")).as("n_id"),
-              lit(true).as("__hit"))
+    val served = GraftSimilarity.topK(
+        cand.select(col("q_id"), col("n_id"), col("c"),
+          explode(expr(s"filter($rfArr, rf -> rf * $k >= __arnk)")).as("rf")),
+        k, keys = Seq("rf", "q_id"))
+      .select(col("rf"), col("q_id"), col("n_id"), lit(true).as("__hit"))
     val truth = GraftSimilarity.bruteForceTopK(collection, queries, k,
                                                idCol, vecCol, qIdCol, qVecCol)
       .select(col("q_id"), col("n_id"))

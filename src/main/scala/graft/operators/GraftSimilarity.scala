@@ -60,11 +60,10 @@ object GraftSimilarity {
                      qIdCol: String = "q_id", qVecCol: String = "qv")
       : DataFrame = {
     graft.GraftSession.ensureExtensions(collection.sparkSession)
-    val e = collection.select(col(idCol).as("n_id"), col(vecCol).as("v"))
-    val q = broadcast(
-      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")))
-    topK(e.join(q, col("n_id") =!= col("q_id"))
-           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+    topK(flatPairs(
+           collection.select(col(idCol).as("n_id"), col(vecCol).as("v")),
+           queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")),
+           cosine("qv", "v")), k)
   }
 
   /** HARD-NEGATIVE MINING for contrastive/metric training: for each
@@ -144,26 +143,6 @@ object GraftSimilarity {
                   queries, k, Seq(nprobe))
       .select(col("q_id"), col("n_hits"), col("recall"))
 
-  /** [[recallAtK]] across an nprobe SWEEP over ONE built index — the
-    * shape the operator's use case actually has: tuning nprobe means
-    * evaluating the SAME index at many probe depths, and the one-shot
-    * form rebuilt it per value (VERDICT r10 #3). Returns
-    * `(nprobe, q_id, n_hits, recall)`, recall against the per-query
-    * truth count (see [[recallAtK]]).
-    *
-    * Cost shape: ONE probe pass at max(nprobes) — each candidate row
-    * carries `__prnk`, the rank of its cell in the query's probe order —
-    * and each (query, candidate) cosine is computed exactly once; the
-    * sweep then replays that single scored set per nprobe value, a row
-    * fanning out only into the sweep values that actually probe its cell
-    * (`filter(nprobes, np -> np >= __prnk)` — strictly-necessary
-    * replication, never |sweep|× the kernel). Ground truth is one linear
-    * scan of the index's population (`assigned` — what the index can
-    * possibly return), shared by every sweep value. Recall is therefore
-    * non-decreasing in nprobe BY CONSTRUCTION (a cell probed at np is
-    * probed at every np' > np); SimilaritySpec pins that and equality
-    * with the one-shot [[recallAtK]] at each swept value.
-    */
   /** Recall@k of the COMPRESSED serving tiers against exact ground
     * truth at ONE shared rerank budget — the deploy-time decision
     * measurement for the vector-bytes ladder (q8 ≈ 5.7× fewer
@@ -303,6 +282,26 @@ object GraftSimilarity {
               coalesce(expr("1000000L div __fr"), lit(0L)).as("mrr_micro"))
   }
 
+  /** [[recallAtK]] across an nprobe SWEEP over ONE built index — the
+    * shape the operator's use case actually has: tuning nprobe means
+    * evaluating the SAME index at many probe depths, and the one-shot
+    * form rebuilt it per value (VERDICT r10 #3). Returns
+    * `(nprobe, q_id, n_hits, recall)`, recall against the per-query
+    * truth count (see [[recallAtK]]).
+    *
+    * Cost shape: ONE probe pass at max(nprobes) — each candidate row
+    * carries `__prnk`, the rank of its cell in the query's probe order —
+    * and each (query, candidate) cosine is computed exactly once; the
+    * sweep then replays that single scored set per nprobe value, a row
+    * fanning out only into the sweep values that actually probe its cell
+    * (`filter(nprobes, np -> np >= __prnk)` — strictly-necessary
+    * replication, never |sweep|× the kernel). Ground truth is one linear
+    * scan of the index's population (`assigned` — what the index can
+    * possibly return), shared by every sweep value. Recall is therefore
+    * non-decreasing in nprobe BY CONSTRUCTION (a cell probed at np is
+    * probed at every np' > np); SimilaritySpec pins that and equality
+    * with the one-shot [[recallAtK]] at each swept value.
+    */
   def recallAtKWith(index: IvfIndex, queries: DataFrame, k: Int,
                     nprobes: Seq[Int],
                     qIdCol: String = "q_id", qVecCol: String = "qv")
@@ -318,17 +317,13 @@ object GraftSimilarity {
     val npArr = nprobes.sorted.mkString("array(", ", ", ")")
     val probes = probeCells(q, index.centroids, nprobes.max,
                             Seq("q_id", "qv"), withRank = true)
-    val scored = broadcast(probes).join(index.assigned, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("__prnk"), col("n_id"),
-              cosine("qv", "v").as("c"))
-    val served = scored
-      .select(col("q_id"), col("n_id"), col("c"),
-              explode(expr(s"filter($npArr, np -> np >= __prnk)")).as("np"))
-      .groupBy(col("np"), col("q_id"))
-      .agg(expr(s"graft_topk(c, n_id, $k)").as("tk"))
-      .select(col("np"), col("q_id"), explode(col("tk.id")).as("n_id"),
-              lit(true).as("__hit"))
+    val scored = probeJoin(probes, index.assigned, cosine("qv", "v"),
+                           carry = Seq("__prnk"))
+    val served = topK(
+        scored.select(col("q_id"), col("n_id"), col("c"),
+          explode(expr(s"filter($npArr, np -> np >= __prnk)")).as("np")),
+        k, keys = Seq("np", "q_id"))
+      .select(col("np"), col("q_id"), col("n_id"), lit(true).as("__hit"))
     val truth = bruteForceTopK(
         index.assigned.select(col("n_id").as("vec_id"), col("v")), q, k)
       .select(col("q_id"), col("n_id"))
@@ -977,10 +972,7 @@ object GraftSimilarity {
       .select(col("q_id"), col("__p.c_id").as("c_id"),
               col("__p.qc").as("__qc"))
       .filter(col("__qc") >= lit(-2.0))
-      .groupBy(col("q_id"))
-      .agg(expr(s"graft_topk(__qc, c_id, $nprobe)").as("__tk"))
-      .select(col("q_id"), explode(col("__tk.id")).as("c_id"))
-    topCells
+    topK(topCells, nprobe, id = "c_id", score = "__qc")
       .join(broadcast(q.select(keep.map(col): _*)), "q_id")
       .select(keep.map(col) :+ col("c_id"): _*)
   }
@@ -1001,9 +993,7 @@ object GraftSimilarity {
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
     val probes = probeCellsCoarse(q, coarse, sProbe, nprobe,
                                   Seq("q_id", "qv"))
-    topK(broadcast(probes).join(index.assigned, "c_id")
-           .filter(col("n_id") =!= col("q_id"))
-           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+    topK(probeJoin(probes, index.assigned, cosine("qv", "v")), k)
   }
 
   /** Query a built [[IvfIndex]]: each query probes its `nprobe` nearest
@@ -1032,22 +1022,8 @@ object GraftSimilarity {
     // distance, which ignores the filter) — a highly selective filter
     // can starve probed cells, so widen nprobe as selectivity grows
     // (recallAtKWith measures the trade on your data).
-    val cand = where.fold(index.assigned)(index.assigned.filter(_))
-    // The probe side is |Q|·nprobe skinny rows — broadcast-small by DESIGN
-    // at any store size (the serving contract bounds the batch; split
-    // oversized offline batches), exactly like [[bruteForceTopK]]'s query
-    // block. The explicit hint is LOAD-BEARING for the at-rest layout:
-    // with probes as the broadcast build side, dynamic partition pruning
-    // REUSES that broadcast to filter the assigned scan down to the probed
-    // cells' files. Left to size estimates, a small store gets broadcast
-    // itself and the DPP filter degenerates to `true` at runtime
-    // (reuseBroadcastOnly) — every file read; and the crossJoin-inflated
-    // stats of the probe DAG can flip it to a shuffle join, which breaks
-    // the broadcast-reuse DPP the same way. OperatorLibSpec pins numFiles
-    // ≤ probed cells — the I/O fact, not just the plan shape.
-    topK(broadcast(probes).join(cand, "c_id")
-           .filter(col("n_id") =!= col("q_id"))
-           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+    val scan = where.fold(index.assigned)(index.assigned.filter(_))
+    topK(probeJoin(probes, scan, cosine("qv", "v")), k)
   }
 
   /** Candidate-row gate below which the quantized serves' survivor fetch
@@ -1120,12 +1096,109 @@ object GraftSimilarity {
     org.apache.spark.sql.GraftSqlBridge.columnOf(
       org.apache.spark.sql.catalyst.expressions.Literal.create(value, dt))
 
-  /** Stage 2 of every quantized serve (q8 and PQ): exact-rerank the
-    * quantized cut's survivors `cand` (q_id, n_id) through the original
-    * vectors in `source` (n_id, v), cut to top-k per query. Gated in
-    * `boundRows` (the caller's |Q|·k·rerankFactor bound) between the
-    * literal-pushdown fetch and the broadcast-join fetch — the two paths
-    * are bit-identical (SimilaritySpec pins it); see
+  // ---------------------------------------------------------------------
+  // The batch serve kernel. Every top-k serve scores (q_id, n_id, c)
+  // candidate pairs and cuts them per query with [[topK]]; a serve
+  // supplies only its candidate score. The pairs come from one of two
+  // joins: [[flatPairs]] (a broadcast query block against the whole
+  // collection) or [[probeJoin]] (the probe rows against the probed
+  // cells). A two-stage serve (quantized or PQ candidates) cuts its pairs
+  // to k·rerankFactor survivors ([[cut]]) and reranks them exactly; its
+  // two shapes are each written once:
+  //   - flat ([[cutAndRerank]]): the survivors re-attach their vectors
+  //     and the query vectors through size-gated joins;
+  //   - IVF at rest ([[ivfServe]]): probe join, cut, then the |Q|-gated
+  //     survivor fetch ([[survivorRerank]]).
+  // ---------------------------------------------------------------------
+
+  /** The scored pairs of a flat serve: `score` (the column `c`) over
+    * every (row of `scan`, query of `qBlock`) pair but the self pair.
+    * The query block is a serving minibatch, small by construction, so it
+    * broadcasts into a pure map over the scan — no shuffle. */
+  private[operators] def flatPairs(scan: DataFrame, qBlock: DataFrame,
+                                   score: Column): DataFrame =
+    scan.join(broadcast(qBlock), col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), score.as("c"))
+
+  /** The scored pairs of an IVF serve: `score` (the column `c`, plus the
+    * `carry` columns) over the probe rows (q_id, c_id, …) joined on the
+    * cell to the candidate scan (n_id, c_id, …), minus the self pair.
+    *
+    * The probe side is |Q|·nprobe skinny rows — broadcast-small by DESIGN
+    * at any store size (the serving contract bounds the batch; split
+    * oversized offline batches), exactly like [[flatPairs]]'s query
+    * block. The explicit hint is LOAD-BEARING for the at-rest layout:
+    * with probes as the broadcast build side, dynamic partition pruning
+    * REUSES that broadcast to filter the assigned scan down to the probed
+    * cells' files. Left to size estimates, a small store gets broadcast
+    * itself and the DPP filter degenerates to `true` at runtime
+    * (reuseBroadcastOnly) — every file read; and the crossJoin-inflated
+    * stats of the probe DAG can flip it to a shuffle join, which breaks
+    * the broadcast-reuse DPP the same way. OperatorLibSpec pins numFiles
+    * ≤ probed cells — the I/O fact, not just the plan shape. */
+  private[operators] def probeJoin(probes: DataFrame, scan: DataFrame,
+                                   score: Column,
+                                   carry: Seq[String] = Nil): DataFrame =
+    broadcast(probes).join(scan, "c_id")
+      .filter(col("n_id") =!= col("q_id"))
+      .select(Seq(col("q_id"), col("n_id"), score.as("c")) ++
+              carry.map(col): _*)
+
+  /** Stage 1 of a two-stage serve: the (q_id, n_id) survivors of the
+    * per-query top-`kk` cut of scored pairs. */
+  private[operators] def cut(scored: DataFrame, kk: Int): DataFrame =
+    topK(scored, kk).select(col("q_id"), col("n_id"))
+
+  /** The flat two-stage tail: cut `scored` to `kk` survivors per query
+    * and rerank them by exact cosine, re-attaching the original vectors
+    * `e` (n_id, v) and the query vectors `q` (q_id, qv) through
+    * [[ScaleHints.gated]] joins. */
+  private[operators] def cutAndRerank(scored: DataFrame, e: DataFrame,
+                                      q: DataFrame, k: Int,
+                                      kk: Int): DataFrame =
+    topK(cut(scored, kk)
+           .join(ScaleHints.gated(e), "n_id")
+           .join(ScaleHints.gated(q), "q_id")
+           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+
+  /** The at-rest IVF two-stage serve (the q8/q4/b1 rungs and the PQ
+    * store): collect the minibatch once ([[queryBatch]], so the survivor
+    * fetch, |Q| and the rerank's query vectors read driver values), probe,
+    * let `augment` add the serve's query-side state to the probe rows,
+    * score the probed cells' (n_id, c_id, `quantCol`) scan — column
+    * pruning keeps the doubles out of it; `where` filters it before the
+    * cut, pushed to the at-rest reader beside the DPP cell prune — cut to
+    * k·rerankFactor and rerank the survivors through [[survivorRerank]].
+    * A null `quantCol` (a cell file written without it) fails loudly
+    * rather than silently dropping the candidate from the heap. */
+  private[operators] def ivfServe(index: IvfIndex, queries: DataFrame,
+                                  k: Int, nprobe: Int, rerankFactor: Int,
+                                  qIdCol: String, qVecCol: String,
+                                  where: Option[Column], label: String,
+                                  quantCol: String)(
+      augment: DataFrame => DataFrame, score: Column): DataFrame = {
+    graft.GraftSession.ensureExtensions(queries.sparkSession)
+    val q = queryBatch(
+      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")), label)
+    val probes = probeCells(q.frame, index.centroids, nprobe,
+                            Seq("q_id", "qv"))
+    val scan = where.fold(index.assigned)(index.assigned.filter(_))
+      .select(col("n_id"), col("c_id"), col(quantCol))
+    val checked = when(col(quantCol).isNull, assert_true(lit(false), lit(
+        s"$label: null $quantCol — mixed-generation cell files; compact " +
+        "the store to migrate")).cast("double")).otherwise(score)
+    val kk = k * rerankFactor
+    survivorRerank(cut(probeJoin(augment(probes), scan, checked), kk),
+                   index.assigned.select(col("n_id"), col("v")), q, k,
+                   q.size * kk)
+  }
+
+  /** Stage 2 of every at-rest quantized serve (q8 and PQ): exact-rerank
+    * the quantized cut's survivors `cand` (q_id, n_id) through the
+    * original vectors in `source` (n_id, v), cut to top-k per query.
+    * Gated in `boundRows` (the caller's |Q|·k·rerankFactor bound) between
+    * the literal-pushdown fetch and the broadcast-join fetch — the two
+    * paths are bit-identical (SimilaritySpec pins it); see
     * [[SurvivorFetchMaxLiterals]] for the trade. */
   private[operators] def survivorRerank(cand: DataFrame, source: DataFrame,
                                         q: QueryBatch, k: Int,
@@ -1187,30 +1260,17 @@ object GraftSimilarity {
     * probed cells are scored with `graft_q8b_cos` off the store's `q8`
     * column (ONE signed byte per component, packed binary, vs 8·dim
     * bytes of doubles — the full 8× cut, not the ~2× an `array<int>`
-    * encoding would leave on the table), the top
-    * k·`rerankFactor` per query are reranked with exact cosine, and only
-    * THOSE survivors' full vectors are fetched. Output contract matches
-    * [[ivfTopKWith]] (q_id, n_id, rnk, cos with exact cosines); the
-    * quantized stage is a recall trade bounded by `rerankFactor` — with
-    * it covering the probed population the result is exactly
-    * [[ivfTopKWith]]'s (SimilaritySpec pins it).
-    *
-    * The survivor fetch COLLECTS the candidate (q_id, n_id) pairs — a
-    * driver materialization bounded by |Q|·k·rerankFactor, the same
-    * serving-batch contract that lets the probe side broadcast — so the
-    * exact-vector read carries a LITERAL `n_id IN (...)` predicate that
-    * reaches the parquet scan (PushedFilters — spec-pinned): with the
-    * store's n_id-sorted cell files, row-group min/max stats prune the
-    * fetch to the pages actually holding survivors instead of re-reading
-    * the probed cells' vector column. (The standard candidates-then-gets
-    * shape of a quantized ANN store; without the literal pushdown the
-    * rerank would re-scan every probed cell's `v` and erase the q8
-    * saving.)
+    * encoding would leave on the table), and the top k·`rerankFactor`
+    * per query rerank with exact cosine through the at-rest two-stage
+    * shape ([[ivfServe]]: only the survivors' full vectors are fetched,
+    * through the literal `n_id IN (...)` pushdown of [[survivorRerank]]).
+    * Output contract matches [[ivfTopKWith]] (q_id, n_id, rnk, cos with
+    * exact cosines); the quantized stage is a recall trade bounded by
+    * `rerankFactor` — with it covering the probed population the result
+    * is exactly [[ivfTopKWith]]'s (SimilaritySpec pins it).
     *
     * Requires `q8` on `index.assigned` (every [[IvfObjectStore]] carries
-    * it; [[q8Augment]] for in-memory indexes). A null q8 — a file written
-    * without the column — FAILS LOUDLY on the scored candidate rather than
-    * silently dropping it from the heap.
+    * it; [[q8Augment]] for in-memory indexes).
     */
   def ivfTopKWithQ8(index: IvfIndex, queries: DataFrame, k: Int,
                     nprobe: Int = 4, rerankFactor: Int = 4,
@@ -1271,10 +1331,9 @@ object GraftSimilarity {
                  cosFn = "graft_b1_cos", label = "ivfTopKWithB1",
                  augmentHint = "b1Augment", where = where)
 
-  /** Shared body of the scalar-quantized at-rest serves — one candidate
-    * kernel, two physical rungs (q8 / q4), identical two-stage shape:
-    * column-pruned integer candidate scoring over (n_id, c_id, quant),
-    * then the |Q|-gated exact rerank ([[survivorRerank]]). */
+  /** The scalar rungs' [[ivfServe]]: the probe rows carry the query's
+    * `encodeFn` code (`__qq`) and each candidate scores `cosFn(__qq,
+    * quantCol)`. */
   private def ivfTopKQuant(index: IvfIndex, queries: DataFrame, k: Int,
                            nprobe: Int, rerankFactor: Int,
                            qIdCol: String, qVecCol: String,
@@ -1289,41 +1348,9 @@ object GraftSimilarity {
       s"$label: index has no $quantCol column — read a store written with " +
       s"the $quantCol layout (or compact an older store to migrate it), " +
       s"or wrap an in-memory index with $augmentHint")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    // the minibatch is collected once: the survivor-fetch collect, |Q| and
-    // the rerank's query vectors then read driver values, not the
-    // caller's derivation again
-    val q = queryBatch(
-      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")), label)
-    val probes = probeCells(q.frame, index.centroids, nprobe,
-                            Seq("q_id", "qv"))
-    val pq = broadcast(probes.withColumn("__qq", expr(s"$encodeFn(qv)")))
-    val kk = k * rerankFactor
-    // stage 1: integer candidate scoring over (n_id, c_id, quant) — column
-    // pruning keeps the doubles out of this scan entirely
-    // the metadata predicate filters the candidate scan BEFORE the
-    // quantized cut (same placement as ivfTopKWith's filtered serve:
-    // pushed to the at-rest reader, composing with DPP); the metadata
-    // column joins the pruned column set only when a filter needs it
-    val scan0 = where.fold(index.assigned)(index.assigned.filter(_))
-    val cand = pq
-      .join(scan0.select(col("n_id"), col("c_id"), col(quantCol)),
-            "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-              expr(s"""if(isnull($quantCol),
-                        cast(assert_true(false,
-                          '$label: null $quantCol — mixed-generation cell
-                           files; compact the store to migrate') AS double),
-                        $cosFn(__qq, $quantCol))""").as("qc"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(qc, n_id, $kk)").as("tk"))
-      .select(col("q_id"), explode(col("tk.id")).as("n_id"))
-    // stage 2, gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
-    // row-group-pruned fetch below the gate, broadcast-join fetch past it
-    // (see survivorRerank / SurvivorFetchMaxLiterals)
-    survivorRerank(cand, index.assigned.select(col("n_id"), col("v")),
-                   q, k, q.size * kk)
+    ivfServe(index, queries, k, nprobe, rerankFactor, qIdCol, qVecCol, where,
+             label, quantCol)(_.withColumn("__qq", expr(s"$encodeFn(qv)")),
+                              expr(s"$cosFn(__qq, $quantCol)"))
   }
 
   /** Fixed-point grid for [[kmeansRefine]]'s centroid accumulation:
@@ -1481,15 +1508,12 @@ object GraftSimilarity {
     * (`graft_q8` — per-vector scales cancel in the normalized cosine, so
     * no scale column exists), ALL candidate scoring runs on the quantized
     * forms (`graft_q8_cos` — integer multiply-adds over ~8× less data than
-    * the float64 vectors), the top `k·rerankFactor` per query by quantized
-    * score are then reranked with the exact cosine on the original vectors.
-    *
-    * Scale shape: the broadcast query block ships quantized vectors; the
-    * N·Q scoring loop touches no doubles; only k·rerankFactor candidates
-    * per query re-attach the full-precision vectors (size-gated). The
-    * classic memory-bandwidth trade of quantized ANN, with recall
-    * controlled by `rerankFactor` (the quantization error bounds how far a
-    * true top-k item can fall in the approximate ordering).
+    * the float64 vectors), and the top `k·rerankFactor` per query rerank
+    * by exact cosine through the flat two-stage shape ([[cutAndRerank]]).
+    * The classic memory-bandwidth trade of quantized ANN: the N·Q scoring
+    * loop touches no doubles, with recall controlled by `rerankFactor`
+    * (the quantization error bounds how far a true top-k item can fall in
+    * the approximate ordering).
     */
   def quantizedTopK(collection: DataFrame, queries: DataFrame, k: Int,
                     rerankFactor: Int = 4,
@@ -1541,20 +1565,11 @@ object GraftSimilarity {
     graft.GraftSession.ensureExtensions(collection.sparkSession)
     val e = collection.select(col(idCol).as("n_id"), col(vecCol).as("v"))
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    val eq = e.select(col("n_id"), expr(s"$encodeFn(v)").as("nvq"))
-    val qq = broadcast(q.select(col("q_id"), expr(s"$encodeFn(qv)").as("qvq")))
-    val m = k * rerankFactor
-    val cand = eq.join(qq, col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-              expr(s"$cosFn(qvq, nvq)").as("ac"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(ac, n_id, $m)").as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("s"))
-      .select(col("q_id"), col("s.id").as("n_id"))
-    topK(cand
-           .join(ScaleHints.gated(e), "n_id")
-           .join(ScaleHints.gated(q), "q_id")
-           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+    cutAndRerank(
+      flatPairs(e.select(col("n_id"), expr(s"$encodeFn(v)").as("nvq")),
+                q.select(col("q_id"), expr(s"$encodeFn(qv)").as("qvq")),
+                expr(s"$cosFn(qvq, nvq)")),
+      e, q, k, k * rerankFactor)
   }
 
   /** DIVERSIFIED top-k: Maximal Marginal Relevance (Carbonell &
@@ -1588,11 +1603,9 @@ object GraftSimilarity {
     graft.GraftSession.ensureExtensions(collection.sparkSession)
     val e = collection.select(col(idCol).cast("long").as("n_id"),
                               col(vecCol).as("v"))
-    val q = broadcast(
-      queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")))
-    val scored = e.join(q, col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c"))
-    mmrRerank(topK(scored, kCand, scoreOut = _.as("rel")), e, k, lambda)
+    val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
+    mmrRerank(cut(flatPairs(e, q, cosine("qv", "v")), kCand), e, q, k,
+              lambda)
   }
 
   /** [[mmrTopK]] served from an at-rest IVF index: candidates come from
@@ -1616,28 +1629,29 @@ object GraftSimilarity {
     val served = ivfTopKWith(index, queries, k = kCand, nprobe = nprobe,
                              qIdCol = qIdCol, qVecCol = qVecCol,
                              where = where)
-    // ivfTopKWith emits round(cos, 4) for display — re-attach the exact
-    // rel from the stored vectors so the greedy walk runs on the same
-    // doubles as the brute path (and as the SQL oracle)
-    val src = index.assigned.select(col("n_id"), col("v"))
-    val q = broadcast(queries.select(col(qIdCol).as("q_id"),
-                                     col(qVecCol).as("qv")))
-    val cand = served.select(col("q_id"), col("n_id"))
-      .join(ScaleHints.gated(src), "n_id")
-      .join(q, "q_id")
-      .select(col("q_id"), col("n_id"), cosine("qv", "v").as("rel"))
-    mmrRerank(cand, src, k, lambda)
+    mmrRerank(served.select(col("q_id"), col("n_id")),
+              index.assigned.select(col("n_id"), col("v")),
+              queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv")),
+              k, lambda)
   }
 
-  /** Shared MMR tail: attach candidate vectors, fold each query's
-    * candidates to one bounded array, run the `graft_mmr` greedy, and
-    * explode back to (q_id, n_id, rank, mmr) rows. `collect_list` order
-    * is irrelevant — the greedy argmax scans the whole remaining set
-    * each round with a deterministic tie-break. */
+  /** Shared MMR tail over (q_id, n_id) candidates: attach each
+    * candidate's vector from `source` (n_id, v) once, score `rel` = exact
+    * cosine to its query's vector in `q` (q_id, qv; broadcast — a serving
+    * minibatch), fold each query's candidates to one bounded array, run
+    * the `graft_mmr` greedy, and explode back to (q_id, n_id, rank, mmr)
+    * rows. The greedy walk runs on the same doubles as the brute path
+    * and the SQL oracles; `collect_list` order is irrelevant — the greedy
+    * argmax scans the whole remaining set each round with a deterministic
+    * tie-break. */
   private[operators] def mmrRerank(cand: DataFrame, source: DataFrame,
-                                   k: Int, lambda: Double): DataFrame =
+                                   q: DataFrame, k: Int,
+                                   lambda: Double): DataFrame =
     cand
       .join(ScaleHints.gated(source), "n_id")
+      .join(broadcast(q), "q_id")
+      .select(col("q_id"), col("n_id"), cosine("qv", "v").as("rel"),
+              col("v"))
       .groupBy("q_id")
       .agg(expr(
         s"graft_mmr(collect_list(struct(n_id, rel, v)), $k, ${lambda}D)")

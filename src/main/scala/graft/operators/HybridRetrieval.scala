@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, MapType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import GraftSimilarity.{IvfIndex, QueryBatch}
 
@@ -26,7 +29,12 @@ import GraftSimilarity.{IvfIndex, QueryBatch}
   *     query batch reads only its probed cells' files (the DPP-pruned
   *     serve path) instead of scanning the corpus. The IVF recall trade
   *     applies to that leg only — with `nprobe` covering all cells the
-  *     output equals [[hybridTopK]]'s exactly (HybridSpec pins it).
+  *     output equals [[hybridTopK]]'s exactly (SimilaritySpec's
+  *     "hybridTopKWith: covering nprobe equals the brute tier exactly"
+  *     pins it).
+  *
+  * Every fused serve is one body ([[fusedServe]]): it collects the
+  * minibatch and fuses, and the serve supplies only its legs.
   *
   * Scale shape — each leg is the already-audited retrieval kernel:
   *   - the query minibatch is collected ONCE ([[qBatch]], bounded by
@@ -59,25 +67,31 @@ import GraftSimilarity.{IvfIndex, QueryBatch}
   */
 object HybridRetrieval {
 
-  /** Lexical leg: per-query BM25 top-`kCand` ranks via the shared
-    * [[TextRank.bm25Scores]] kernel, over the minibatch's (q_id, __qtk)
-    * rows. The query's own document is excluded AFTER the aggregation —
-    * sound because groups are atomic in (q_id, doc_id). The per-query
-    * kCand cut rides the mergeable `graft_topk` heap (long scores < 2^53
-    * are exact as doubles); position in the heap output IS the rank.
-    */
+  /** A lexical leg's per-query top-`kCand` ranks over (q_id, doc_id,
+    * __score) BM25 sums, through [[GraftSimilarity.topK]] (long scores
+    * < 2^53 are exact as doubles; the heap position IS the rank). The
+    * query's own document is excluded after the aggregation — sound
+    * because groups are atomic in (q_id, doc_id). */
+  private def lexTop(scores: DataFrame, kCand: Int): DataFrame =
+    GraftSimilarity.topK(scores.filter(col("doc_id") =!= col("q_id")), kCand,
+                         id = "doc_id", score = "cast(__score AS double)")
+      .select(col("q_id"), col("doc_id"), col("rnk").as("lex_rank"))
+
+  /** Lexical leg: BM25 through the shared [[TextRank.bm25Scores]] kernel
+    * over the minibatch's (q_id, __qtk) rows. */
   private def lexRanks(docs: DataFrame, q: QueryBatch, kCand: Int,
                        idCol: String, textCol: String,
                        k1: Double, b: Double): DataFrame =
-    TextRank.bm25Scores(docs, termQueries(q), q.frame.schema("q_id").dataType,
-                        idCol, textCol, k1, b)
-      .filter(col("doc_id") =!= col("q_id"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(cast(__score AS double), doc_id, $kCand)")
-             .as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("q_id"), col("s.id").as("doc_id"),
-              (col("p") + 1).cast("long").as("lex_rank"))
+    lexTop(TextRank.bm25Scores(docs, termQueries(q),
+                               q.frame.schema("q_id").dataType,
+                               idCol, textCol, k1, b), kCand)
+
+  /** The lexical leg of a minibatch with no query terms at all: empty,
+    * so fusion degrades to the semantic leg (the full-outer fuse
+    * contract). */
+  private def noLex(q: QueryBatch): DataFrame =
+    q.frame.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
+                            lit(0L).as("lex_rank"))
 
   /** Each distinct non-null term of the minibatch's `__qtk` arrays → the
     * ids of the queries holding it (a driver-side value). */
@@ -115,11 +129,18 @@ object HybridRetrieval {
               col("lex_rank"), col("sem_rank"))
   }
 
-  private def requireParams(k: Int, kCand: Int, rrfK: Int, ctx: String)
-      : Unit = {
+  /** The fused serves' parameter checks, each message naming `ctx`;
+    * `nprobe` and `rerankFactor` are checked for the serves that take
+    * them. */
+  private def requireParams(ctx: String, k: Int, kCand: Int, rrfK: Int,
+                            nprobe: Option[Int] = None,
+                            rerankFactor: Option[Int] = None): Unit = {
     require(k >= 1, s"$ctx: k must be >= 1, got $k")
     require(kCand >= 1, s"$ctx: kCand must be >= 1, got $kCand")
     require(rrfK >= 1, s"$ctx: rrfK must be >= 1, got $rrfK")
+    for (n <- nprobe) require(n >= 1, s"$ctx: nprobe must be >= 1, got $n")
+    for (r <- rerankFactor)
+      require(r >= 1, s"$ctx: rerankFactor must be >= 1, got $r")
   }
 
   /** Project the caller's query minibatch to the canonical (q_id, __qtk,
@@ -141,6 +162,37 @@ object HybridRetrieval {
                      col(qVecCol).as("__qv")), ctx)
   }
 
+  /** The body of every fused serve over a (q_id, terms, vector)
+    * minibatch: collect it once ([[qBatch]]), run the serve's semantic
+    * leg — any vector serve from (q_id, qv) queries to (q_id, n_id, rnk)
+    * ranks — over the batch's query vectors and its lexical leg over the
+    * batch, and [[fuse]] the two rank lists at `k`. `tail` sees the
+    * batch and the fused frame (the MMR serves diversify it). */
+  private def fusedServe(ctx: String, queries: DataFrame, qIdCol: String,
+                         qTermsCol: String, qVecCol: String, k: Int,
+                         rrfK: Int, castId: Boolean = false,
+                         tail: (QueryBatch, DataFrame) => DataFrame =
+                           (_, fused) => fused)(
+      lex: QueryBatch => DataFrame,
+      sem: DataFrame => DataFrame): DataFrame = {
+    graft.GraftSession.ensureExtensions(queries.sparkSession)
+    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, ctx, castId)
+    val semRanks = sem(q.frame.select(col("q_id"), col("__qv").as("qv")))
+      .select(col("q_id"), col("n_id").as("doc_id"),
+              col("rnk").as("sem_rank"))
+    tail(q, fuse(lex(q), semRanks, k, rrfK))
+  }
+
+  /** The MMR serves' tail: the fused candidacy re-ranked by
+    * [[GraftSimilarity.mmrRerank]], relevance = exact cosine to the
+    * collected batch's query vectors. */
+  private def mmrTail(index: IvfIndex, k: Int, lambda: Double)(
+      q: QueryBatch, fused: DataFrame): DataFrame =
+    GraftSimilarity.mmrRerank(
+      fused.select(col("q_id"), col("doc_id").as("n_id")),
+      index.assigned.select(col("n_id"), col("v")),
+      q.frame.select(col("q_id"), col("__qv").as("qv")), k, lambda)
+
   /** Fused top-`k` per query, exact-cosine semantic leg. `queries`
     * carries one row per query: (`qIdCol`, `qTermsCol`:
     * array&lt;string&gt;, `qVecCol`: array&lt;double&gt;) — a
@@ -156,15 +208,11 @@ object HybridRetrieval {
                  qIdCol: String = "q_id", qTermsCol: String = "q_terms",
                  qVecCol: String = "qv",
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopK")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopK")
-    val sem = GraftSimilarity.bruteForceTopK(
-        vecs, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        idCol = vecIdCol, vecCol = vecCol)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopK", k, kCand, rrfK)
+    fusedServe("hybridTopK", queries, qIdCol, qTermsCol, qVecCol, k, rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.bruteForceTopK(vecs, _, kCand, idCol = vecIdCol,
+                                     vecCol = vecCol))
   }
 
   /** The SERVED fused top-`k`: semantic leg through a built
@@ -176,6 +224,15 @@ object HybridRetrieval {
     * standard IVF recall trade, confined to the semantic leg — and with
     * `nprobe` ≥ the cell count the two tiers are EQUAL, which is the
     * spec's parity pin).
+    *
+    * METADATA-FILTERED fusion: `where` filters the SEMANTIC leg's
+    * candidate population (the predicate lives in the index — see
+    * [[GraftSimilarity.ivfTopKWith]]). The LEXICAL leg's population is
+    * the `docs` frame the caller passes — pre-filter it to the same
+    * population (BM25's df/avgdl then describe exactly the filtered
+    * corpus, which is the correct pre-filter statistic; a post-hoc doc
+    * filter would keep the unfiltered corpus's term weights). The same
+    * holds for every `where` of the tiers below.
     */
   def hybridTopKWith(index: IvfIndex, docs: DataFrame, queries: DataFrame,
                      k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
@@ -185,34 +242,21 @@ object HybridRetrieval {
                      qVecCol: String = "qv",
                      k1: Double = 1.2, b: Double = 0.75,
                      where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWith")
-    require(nprobe >= 1, s"hybridTopKWith: nprobe must be >= 1, got $nprobe")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWith")
-    // METADATA-FILTERED fusion: `where` filters the SEMANTIC leg's
-    // candidate population (the predicate lives in the index — see
-    // ivfTopKWith). The LEXICAL leg's population is the `docs` frame the
-    // caller passes — pre-filter it to the same population (BM25's
-    // df/avgdl then describe exactly the filtered corpus, which is the
-    // correct pre-filter statistic; a post-hoc doc filter would keep the
-    // unfiltered corpus's term weights).
-    val sem = GraftSimilarity.ivfTopKWith(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopKWith", k, kCand, rrfK, Some(nprobe))
+    fusedServe("hybridTopKWith", queries, qIdCol, qTermsCol, qVecCol, k,
+               rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.ivfTopKWith(index, _, kCand, nprobe, where = where))
   }
 
   /** The fused top-`k` over the q8 (8×) tier: semantic leg through
     * [[GraftSimilarity.ivfTopKWithQ8]] — integer candidate scoring off
     * the store's byte-packed `q8` column in the probed cells, exact
     * rerank of kCand·rerankFactor survivors — behind the same rank-only
-    * fusion contract. Completes the serving matrix (brute / IVF / q8 /
-    * PQ, each behind one fusion): at a covering budget the q8 cut loses
-    * nothing, so covering nprobe + covering rerankFactor equals
-    * [[hybridTopK]] exactly (spec-pinned). `index.assigned` must carry
-    * `q8` (stores written at r11+ do; [[GraftSimilarity.q8Augment]] for
+    * fusion contract. At a covering budget the q8 cut loses nothing, so
+    * covering nprobe + covering rerankFactor equals [[hybridTopK]]
+    * exactly (spec-pinned). `index.assigned` must carry `q8` (every
+    * [[IvfObjectStore]] does; [[GraftSimilarity.q8Augment]] for
     * in-memory indexes).
     */
   def hybridTopKWithQ8(index: IvfIndex, docs: DataFrame, queries: DataFrame,
@@ -223,30 +267,23 @@ object HybridRetrieval {
                        qVecCol: String = "qv",
                        k1: Double = 1.2, b: Double = 0.75,
                        where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithQ8")
-    require(nprobe >= 1, s"hybridTopKWithQ8: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithQ8: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithQ8")
-    val sem = GraftSimilarity.ivfTopKWithQ8(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopKWithQ8", k, kCand, rrfK, Some(nprobe),
+                  Some(rerankFactor))
+    fusedServe("hybridTopKWithQ8", queries, qIdCol, qTermsCol, qVecCol, k,
+               rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.ivfTopKWithQ8(index, _, kCand, nprobe, rerankFactor,
+                                    where = where))
   }
 
   /** The fused top-`k` over the int4 (16×) tier: semantic leg through
     * [[GraftSimilarity.ivfTopKWithQ4]] — integer candidate scoring off
-    * the store's nibble-packed `q4` column, exact rerank of
-    * kCand·rerankFactor survivors — completing the fusion matrix
-    * (brute / IVF / q8 / q4 / PQ behind ONE rank-only contract).
-    * `index.assigned` must carry `q4` (a store written with
-    * `IvfObjectStore.create(q4 = true)`, or [[GraftSimilarity.q4Augment]] for
-    * in-memory indexes — the tier is opt-in at write). At covering
-    * nprobe + covering rerankFactor the output equals [[hybridTopK]]
-    * exactly, the same parity contract as the q8/PQ rungs.
+    * the store's nibble-packed `q4` column. `index.assigned` must carry
+    * `q4` (a store written with `IvfObjectStore.create(q4 = true)`, or
+    * [[GraftSimilarity.q4Augment]] for in-memory indexes — the tier is
+    * opt-in at write). At covering nprobe + covering rerankFactor the
+    * output equals [[hybridTopK]] exactly, the same parity contract as
+    * the q8/PQ rungs.
     */
   def hybridTopKWithQ4(index: IvfIndex, docs: DataFrame, queries: DataFrame,
                        k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
@@ -256,33 +293,24 @@ object HybridRetrieval {
                        qVecCol: String = "qv",
                        k1: Double = 1.2, b: Double = 0.75,
                        where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithQ4")
-    require(nprobe >= 1, s"hybridTopKWithQ4: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithQ4: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithQ4")
-    val sem = GraftSimilarity.ivfTopKWithQ4(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopKWithQ4", k, kCand, rrfK, Some(nprobe),
+                  Some(rerankFactor))
+    fusedServe("hybridTopKWithQ4", queries, qIdCol, qTermsCol, qVecCol, k,
+               rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.ivfTopKWithQ4(index, _, kCand, nprobe, rerankFactor,
+                                    where = where))
   }
 
   /** The fused top-`k` over the ONE-BIT tier: semantic leg through
     * [[GraftSimilarity.ivfTopKWithB1]] — XOR+POPCNT Hamming candidate
-    * scoring off the store's sign-packed `b1` column in the probed
-    * cells (the cheapest candidate kernel of the ladder), exact rerank
-    * of kCand·rerankFactor survivors — behind the same rank-only fusion
-    * contract. Completes the fusion matrix at the bottom of the
-    * vector-bytes ladder (brute / IVF / q8 / q4 / b1 / PQ / MaxSim).
-    * The coarsest rung drops the most true semantic candidates at a
-    * given budget (size `rerankFactor` from a [[GraftSimilarity
-    * .tierRecall]] measurement); lexical candidates survive any
-    * semantic cut, the fusion contract's usual guarantee. Requires `b1`
-    * on `index.assigned` (opt-in at write; [[GraftSimilarity.b1Augment]]
-    * for in-memory). */
+    * scoring off the store's sign-packed `b1` column (the cheapest
+    * candidate kernel of the ladder). The coarsest rung drops the most
+    * true semantic candidates at a given budget (size `rerankFactor`
+    * from a [[GraftSimilarity.tierRecall]] measurement); lexical
+    * candidates survive any semantic cut, the fusion contract's usual
+    * guarantee. Requires `b1` on `index.assigned` (opt-in at write;
+    * [[GraftSimilarity.b1Augment]] for in-memory). */
   def hybridTopKWithB1(index: IvfIndex, docs: DataFrame, queries: DataFrame,
                        k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
                        nprobe: Int = 4, rerankFactor: Int = 4,
@@ -291,32 +319,25 @@ object HybridRetrieval {
                        qVecCol: String = "qv",
                        k1: Double = 1.2, b: Double = 0.75,
                        where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithB1")
-    require(nprobe >= 1, s"hybridTopKWithB1: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithB1: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithB1")
-    val sem = GraftSimilarity.ivfTopKWithB1(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopKWithB1", k, kCand, rrfK, Some(nprobe),
+                  Some(rerankFactor))
+    fusedServe("hybridTopKWithB1", queries, qIdCol, qTermsCol, qVecCol, k,
+               rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.ivfTopKWithB1(index, _, kCand, nprobe, rerankFactor,
+                                    where = where))
   }
 
   /** The fused top-`k` over the 64× PQ tier: semantic leg through
     * [[GraftPq.ivfPqTopKWithCw]] — ADC candidate scoring off the store's
-    * m-byte code words in the probed cells, exact rerank of
-    * kCand·rerankFactor survivors — behind the SAME rank-only RRF fusion
-    * contract as [[hybridTopKWith]] (VERDICT r11 missing #4). The PQ
-    * recall trade is confined to the semantic leg and bounded by
-    * `rerankFactor` (size it with [[GraftPq.pqAutoBudget]] — see
-    * [[GraftPq.pqTopK]]'s budget warning); with `nprobe` covering every
-    * cell and a covering budget the output equals [[hybridTopK]]'s
-    * exactly (HybridSpec pins it). `index.assigned` must carry `cw`
-    * (an [[IvfObjectStore]] created with `pq`, read with its codebook
-    * via [[GraftPq.readPqCodebook]]).
+    * m-byte code words in the probed cells. The PQ recall trade is
+    * bounded by `rerankFactor` (size it with [[GraftPq.pqAutoBudget]] —
+    * see [[GraftPq.pqTopK]]'s budget warning); with `nprobe` covering
+    * every cell and a covering budget the output equals [[hybridTopK]]'s
+    * exactly (SimilaritySpec's "hybridTopKWithPq: covering nprobe +
+    * covering rerank budget equals …" pins it). `index.assigned` must
+    * carry `cw` (an [[IvfObjectStore]] created with `pq`, read with its
+    * codebook via [[GraftPq.readPqCodebook]]).
     */
   def hybridTopKWithPq(index: IvfIndex, cb: GraftPq.PqCodebook,
                        docs: DataFrame, queries: DataFrame,
@@ -327,18 +348,13 @@ object HybridRetrieval {
                        qVecCol: String = "qv",
                        k1: Double = 1.2, b: Double = 0.75,
                        where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithPq")
-    require(nprobe >= 1, s"hybridTopKWithPq: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithPq: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "hybridTopKWithPq")
-    val sem = GraftPq.ivfPqTopKWithCw(
-        index, cb, q.frame.select(col("q_id"), col("__qv").as("qv")),
-        kCand, nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
+    requireParams("hybridTopKWithPq", k, kCand, rrfK, Some(nprobe),
+                  Some(rerankFactor))
+    fusedServe("hybridTopKWithPq", queries, qIdCol, qTermsCol, qVecCol, k,
+               rrfK)(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftPq.ivfPqTopKWithCw(index, cb, _, kCand, nprobe, rerankFactor,
+                              where = where))
   }
 
   /** BM25 ⊕ late-interaction (MaxSim) fusion — the ColBERT deployment
@@ -366,9 +382,7 @@ object HybridRetrieval {
                            qTextCol: String = "text",
                            k1: Double = 1.2, b: Double = 0.75)
       : DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithMaxSim")
-    require(nprobe >= 1,
-      s"hybridTopKWithMaxSim: nprobe must be >= 1, got $nprobe")
+    requireParams("hybridTopKWithMaxSim", k, kCand, rrfK, Some(nprobe))
     graft.GraftSession.ensureExtensions(docs.sparkSession)
     // the qBatch stance in text shape: both legs derive from __qtext —
     // tokens lexically, ±1 hash vectors semantically — off ONE collect
@@ -417,25 +431,17 @@ object HybridRetrieval {
                         qVecCol: String = "qv",
                         k1: Double = 1.2, b: Double = 0.75,
                         where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithMmr")
+    requireParams("hybridTopKWithMmr", k, kCand, rrfK)
     require(lambda >= 0.0 && lambda <= 1.0,
       s"hybridTopKWithMmr: lambda must be in [0, 1], got $lambda")
     require(kCand >= k, s"hybridTopKWithMmr: kCand ($kCand) must be >= k ($k)")
-    val fused = hybridTopKWith(index, docs, queries, k = kCand,
-                               kCand = kCand, rrfK = rrfK, nprobe = nprobe,
-                               idCol = idCol, textCol = textCol,
-                               qIdCol = qIdCol, qTermsCol = qTermsCol,
-                               qVecCol = qVecCol, k1 = k1, b = b,
-                               where = where)
-    val q = broadcast(queries.select(col(qIdCol).as("q_id"),
-                                     col(qVecCol).as("__qv")))
-    val src = index.assigned.select(col("n_id"), col("v"))
-    val cand = fused.select(col("q_id"), col("doc_id").as("n_id"))
-      .join(ScaleHints.gated(src), "n_id")
-      .join(q, "q_id")
-      .select(col("q_id"), col("n_id"),
-              expr("graft_cosine(__qv, v)").as("rel"))
-    GraftSimilarity.mmrRerank(cand, src, k, lambda)
+    // the candidacy is hybridTopKWith's serve at k = kCand, checked and
+    // collected under that serve's name
+    requireParams("hybridTopKWith", kCand, kCand, rrfK, Some(nprobe))
+    fusedServe("hybridTopKWith", queries, qIdCol, qTermsCol, qVecCol, kCand,
+               rrfK, tail = mmrTail(index, k, lambda))(
+      lexRanks(docs, _, kCand, idCol, textCol, k1, b),
+      GraftSimilarity.ivfTopKWith(index, _, kCand, nprobe, where = where))
   }
 
   /** The served fused top-`k` with the LEXICAL leg off an at-rest
@@ -464,38 +470,18 @@ object HybridRetrieval {
                             qTermsCol: String = "q_terms",
                             qVecCol: String = "qv",
                             where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithImpacts")
-    require(nprobe >= 1,
-      s"hybridTopKWithImpacts: nprobe must be >= 1, got $nprobe")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol,
-                   "hybridTopKWithImpacts")
-    val terms = termQueries(q)
-    val lex =
-      if (terms.isEmpty)
-        // no query terms at all: the lexical leg is empty, fusion
-        // degrades to the semantic leg (the full-outer fuse contract)
-        q.frame.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
-                                lit(0L).as("lex_rank"))
-      else impacts.impactsFor(terms.keys.toSeq)
-        .select(TextRank.queriesOfTerm(terms,
-                  q.frame.schema("q_id").dataType),
-                col("doc_id"), col("__a"))
-        .filter(col("doc_id") =!= col("q_id"))
-        .groupBy(col("q_id"), col("doc_id"))
-        .agg(sum(col("__a")).as("__score"))
-        .groupBy("q_id")
-        .agg(expr(s"graft_topk(cast(__score AS double), doc_id, $kCand)")
-               .as("tk"))
-        .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))
-        .select(col("q_id"), col("s.id").as("doc_id"),
-                (col("p") + 1).cast("long").as("lex_rank"))
-    val sem = GraftSimilarity.ivfTopKWith(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lex, sem, k, rrfK)
+    requireParams("hybridTopKWithImpacts", k, kCand, rrfK, Some(nprobe))
+    fusedServe("hybridTopKWithImpacts", queries, qIdCol, qTermsCol, qVecCol,
+               k, rrfK)({ q =>
+      val terms = termQueries(q)
+      if (terms.isEmpty) noLex(q)
+      else lexTop(impacts.impactsFor(terms.keys.toSeq)
+          .select(TextRank.queriesOfTerm(terms,
+                    q.frame.schema("q_id").dataType),
+                  col("doc_id"), col("__a"))
+          .groupBy(col("q_id"), col("doc_id"))
+          .agg(sum(col("__a")).as("__score")), kCand)
+    }, GraftSimilarity.ivfTopKWith(index, _, kCand, nprobe, where = where))
   }
 
   /** THE PRODUCTION SERVE (VERDICT r15 stretch #9): everything-at-rest
@@ -508,19 +494,16 @@ object HybridRetrieval {
     * each other on an object store.
     *
     * The lexical leg is the MINIBATCH form of
-    * [[ImpactIndex.bm25TopKPruned]] — per-QUERY essential splits in one
-    * plan (a rank window over the broadcast query×bounds sliver instead
-    * of a driver-side sort, since each query carries its own term set):
-    * only each query's `essential` highest-max-impact terms' postings
-    * generate candidates, candidates score exactly over all their
-    * query-term postings, and the covering guard (skipped upper bound
-    * strictly below the kCand-th candidate score, full heap required)
-    * REFUSES per the batch operator's contract — a guard row per query
-    * rides the output plan, so a zero-candidate query with skipped mass
-    * refuses too instead of silently serving the semantic leg alone.
-    * Postings scan stays bucket-pruned via [[ImpactIndex.StoredImpacts
-    * .impactsFor]]'s literal predicates (minibatch term collect, the
-    * survivor-fetch precedent).
+    * [[ImpactIndex.bm25TopKPruned]] — per-QUERY essential splits
+    * ([[prunedLex]]): only each query's `essential` highest-max-impact
+    * terms' postings generate candidates, candidates score exactly over
+    * all their query-term postings, and the covering guard (skipped
+    * upper bound strictly below the kCand-th candidate score, full heap
+    * required) REFUSES per the batch operator's contract — a guard row
+    * per query rides the output plan, so a zero-candidate query with
+    * skipped mass refuses too instead of silently serving the semantic
+    * leg alone. Postings scan stays bucket-pruned via
+    * [[ImpactIndex.StoredImpacts.impactsFor]]'s literal predicates.
     *
     * The semantic leg is [[GraftSimilarity.ivfTopKWithQ8]] off the
     * at-rest q8 column with `where` filtering the candidate scan BEFORE
@@ -549,82 +532,87 @@ object HybridRetrieval {
                       qTermsCol: String = "q_terms",
                       qVecCol: String = "qv",
                       where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "serveProduction")
+    requireParams("serveProduction", k, kCand, rrfK, Some(nprobe))
     require(kCand >= k, s"serveProduction: kCand ($kCand) must be >= k ($k)")
     require(essential >= 1,
       s"serveProduction: essential must be >= 1, got $essential")
-    require(nprobe >= 1,
-      s"serveProduction: nprobe must be >= 1, got $nprobe")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"serveProduction: lambda must be in [0, 1], got $lambda")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol, "serveProduction",
-                   castId = true)
-    val qt = q.frame.select(col("q_id"),
-                            explode(array_distinct(col("__qtk"))).as("__term"))
-    val termList = termQueries(q).keys.toSeq
-    val lex =
-      if (termList.isEmpty)
-        q.frame.limit(0).select(col("q_id"), col("q_id").as("doc_id"),
-                                lit(0L).as("lex_rank"))
-      else {
-        // per-query impact ordering: terms absent from the store have no
-        // postings and drop from the split (the bm25TopKPruned rule)
-        val bounds = impacts.terms
-          .filter(col("__term").isin(termList: _*))
-          .select(col("__term"), col("__maxa"))
-        val tagged = qt.join(broadcast(bounds), Seq("__term"))
-          .withColumn("__e", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("__maxa").desc, col("__term").asc))
-            <= essential)
-        val ne = tagged.filter(!col("__e"))
-          .groupBy(col("q_id")).agg(sum(col("__maxa")).as("__ne"))
-        val top = impacts.impactsFor(termList)
-          .join(broadcast(tagged.select(col("q_id"), col("__term"),
-                                        col("__e"))), "__term")
-          .filter(col("doc_id") =!= col("q_id"))
-          .groupBy(col("q_id"), col("doc_id"))
-          .agg(sum(col("__a")).as("__l"), max(col("__e")).as("__c"))
-          .filter(col("__c"))
-          .withColumn("lex_rank", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("__l").desc, col("doc_id").asc)).cast("long"))
-          .filter(col("lex_rank") <= kCand)
-        // the covering guard evaluates for EVERY query row — including
-        // zero-candidate queries, which never reach `top`
-        val stats = top.groupBy(col("q_id"))
-          .agg(count(lit(1)).as("__cnt"), min(col("__l")).as("__th"))
-        val guard = q.frame.select(col("q_id"))
-          .join(ne, Seq("q_id"), "left")
-          .join(stats, Seq("q_id"), "left")
-          .filter(assert_true(
-            coalesce(col("__ne"), lit(0L)) === 0L ||
-            (coalesce(col("__cnt"), lit(0L)) >= kCand &&
-             col("__ne") < col("__th")),
-            concat(lit(s"serveProduction: essential=$essential does not " +
-                       s"cover kCand=$kCand for q_id="), col("q_id"),
-                   lit(" — skipped-term upper bound is not strictly " +
-                       "below the kCand-th candidate score; raise " +
-                       "essential — a silently non-exact lexical leg " +
-                       "is refused"))).isNull)
-          .select(col("q_id"))
-        top.join(guard, "q_id")
-          .select(col("q_id"), col("doc_id"), col("lex_rank"))
-      }
-    val sem = GraftSimilarity.ivfTopKWithQ8(
-        index, q.frame.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    val fused = fuse(lex, sem, kCand, rrfK)
-    val qv = broadcast(q.frame.select(col("q_id"), col("__qv")))
-    val src = index.assigned.select(col("n_id"), col("v"))
-    val cand = fused.select(col("q_id"), col("doc_id").as("n_id"))
-      .join(ScaleHints.gated(src), "n_id")
-      .join(qv, "q_id")
-      .select(col("q_id"), col("n_id"),
-              expr("graft_cosine(__qv, v)").as("rel"))
-    GraftSimilarity.mmrRerank(cand, src, k, lambda)
+    fusedServe("serveProduction", queries, qIdCol, qTermsCol, qVecCol, kCand,
+               rrfK, castId = true, tail = mmrTail(index, k, lambda))(
+      prunedLex(impacts, essential, kCand),
+      GraftSimilarity.ivfTopKWithQ8(index, _, kCand, nprobe, rerankFactor,
+                                    where = where))
+  }
+
+  /** [[serveProduction]]'s lexical leg. The query terms' `(__term,
+    * __maxa)` upper bounds are one bounded collect (at most |terms| rows,
+    * like the batch itself); each query's MaxScore split runs on the
+    * driver — its terms by `__maxa` desc, then the term in Spark's
+    * byte order, the first `essential` essential, the rest summed into
+    * the skipped bound `__ne` — and reaches the plan as literals: a term
+    * → (q_id, essential) map fans the postings out, a q_id → `__ne` map
+    * feeds the covering guard. Terms absent from the store have no
+    * postings and drop from the split (the bm25TopKPruned rule). */
+  private def prunedLex(impacts: ImpactIndex.StoredImpacts, essential: Int,
+                        kCand: Int)(q: QueryBatch): DataFrame = {
+    val terms = termQueries(q)
+    if (terms.isEmpty) return noLex(q)
+    val maxa = impacts.terms
+      .filter(col("__term").isin(terms.keys.toSeq: _*))
+      .select(col("__term"), col("__maxa")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def before(a: String, b: String): Boolean =
+      maxa(a) > maxa(b) || maxa(a) == maxa(b) &&
+        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    val split = terms.toSeq
+      .flatMap { case (t, qs) => qs.distinct.map(_ -> t) }
+      .groupMap(_._1)(_._2)
+      .map { case (id, ts) => id -> ts.filter(maxa.contains).sortWith(before) }
+    val qIdType = q.frame.schema("q_id").dataType
+    val fanOut = GraftSimilarity.literalOf(
+      split.toSeq
+        .flatMap { case (id, ts) =>
+          ts.zipWithIndex.map { case (t, i) => t -> Row(id, i < essential) } }
+        .groupMap(_._1)(_._2),
+      MapType(StringType, ArrayType(StructType(Seq(
+        StructField("q_id", qIdType), StructField("__e", BooleanType))))))
+    val ne = GraftSimilarity.literalOf(
+      q.rows.map(_.get(0)).map(id => id ->
+        split.getOrElse(id, Nil).drop(essential).map(maxa).sum).toMap,
+      MapType(qIdType, LongType))
+    val top = impacts.impactsFor(terms.keys.toSeq)
+      .select(explode(element_at(fanOut, col("__term"))).as("__qe"),
+              col("doc_id"), col("__a"))
+      .select(col("__qe.q_id").as("q_id"), col("__qe.__e").as("__e"),
+              col("doc_id"), col("__a"))
+      .filter(col("doc_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("doc_id"))
+      .agg(sum(col("__a")).as("__l"), max(col("__e")).as("__c"))
+      .filter(col("__c"))
+      .withColumn("lex_rank", row_number().over(
+        Window.partitionBy(col("q_id"))
+          .orderBy(col("__l").desc, col("doc_id").asc)).cast("long"))
+      .filter(col("lex_rank") <= kCand)
+    // the covering guard evaluates for EVERY query row — including
+    // zero-candidate queries, which never reach `top`
+    val stats = top.groupBy(col("q_id"))
+      .agg(count(lit(1)).as("__cnt"), min(col("__l")).as("__th"))
+    val guard = q.frame.select(col("q_id"),
+                               element_at(ne, col("q_id")).as("__ne"))
+      .join(stats, Seq("q_id"), "left")
+      .filter(assert_true(
+        col("__ne") === 0L ||
+        (coalesce(col("__cnt"), lit(0L)) >= kCand &&
+         col("__ne") < col("__th")),
+        concat(lit(s"serveProduction: essential=$essential does not " +
+                   s"cover kCand=$kCand for q_id="), col("q_id"),
+               lit(" — skipped-term upper bound is not strictly " +
+                   "below the kCand-th candidate score; raise " +
+                   "essential — a silently non-exact lexical leg " +
+                   "is refused"))).isNull)
+      .select(col("q_id"))
+    top.join(guard, "q_id")
+      .select(col("q_id"), col("doc_id"), col("lex_rank"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{GraftSimilarity, ImpactObjectStore, IvfObjectStore}
 import GraftQuery.{freshStore, reusedStore}
@@ -32,6 +32,17 @@ object SimilarityQueries extends QueryModule {
   private def queryBlock(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** The hybrid rows' query minibatch (q_id, q_terms, qv): documents
+    * 0–9 joined to their vectors in `e`, each carrying `terms` — by
+    * default its whitespace tokens. */
+  private def hybridQueries(docs: DataFrame, e: DataFrame,
+                            terms: Column = graft.operators.GraftText
+                              .whitespaceTokens(col("text"))): DataFrame =
+    docs.filter(col("doc_id") < 10)
+      .join(e, col("doc_id") === col("vec_id"))
+      .select(col("doc_id").as("q_id"), terms.as("q_terms"),
+              col("v").as("qv"))
 
   /** The DuckDB replay of `ann_lsh_bucket` (srpTopK at nbits=16, bands=4,
     * k=5 over dim-64 embeddings): the 16×64 hyperplane matrix is a pure
@@ -1950,12 +1961,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         graft.operators.HybridRetrieval.hybridTopK(
           docs, e, queries, k = 10, kCand = 30, rrfK = 60)
       },
@@ -2024,12 +2030,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWith(
           GraftSimilarity.buildIvfIndex(e), docs, queries,
           k = 10, kCand = 30, rrfK = 60, nprobe = 4)
@@ -2052,12 +2053,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWithImpacts(
           GraftSimilarity.buildIvfIndex(e),
           TextQueries.impactStore(s, dir), queries,
@@ -2083,12 +2079,7 @@ object SimilarityQueries extends QueryModule {
           docs.select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
           .select(col("vec_id"), col("v"), col("lang"))
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWith(
           GraftSimilarity.buildIvfIndex(eMeta, metaCols = Seq("lang")),
           docs.filter(col("lang") === "en"), queries,
@@ -2114,12 +2105,7 @@ object SimilarityQueries extends QueryModule {
           docs.select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
           .select(col("vec_id"), col("v"), col("lang"))
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         val out = freshStore(s, dir, "hybrid_filtered_q8_store")(
           IvfObjectStore.create(
             s, GraftSimilarity.buildIvfIndex(eMeta, metaCols = Seq("lang")), _))
@@ -2142,12 +2128,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         val out = freshStore(s, dir, "hybrid_q4_store")(IvfObjectStore.create(
           s, GraftSimilarity.buildIvfIndex(e), _, q4 = true))
         graft.operators.HybridRetrieval.hybridTopKWithQ4(
@@ -2169,12 +2150,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         val out = freshStore(s, dir, "hybrid_b1_store")(IvfObjectStore.create(
           s, GraftSimilarity.buildIvfIndex(e), _, b1 = true))
         graft.operators.HybridRetrieval.hybridTopKWithB1(
@@ -2346,12 +2322,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWithMmr(
           GraftSimilarity.buildIvfIndex(e), docs, queries,
           k = 10, kCand = 30, rrfK = 60, nprobe = 4, lambda = 0.5)
@@ -2396,11 +2367,8 @@ object SimilarityQueries extends QueryModule {
                    .select(col("vec_id"), col("v"), col("lang")),
                  metaCols = Seq("lang")),
             _))
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  expr("array('uncommonmark', 'the')").as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e,
+                                    expr("array('uncommonmark', 'the')"))
         graft.operators.HybridRetrieval.serveProduction(
           IvfObjectStore.read(s, ivfDir), ImpactObjectStore.read(s, impDir),
           queries, essential = 1,
@@ -2632,12 +2600,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         val out = freshStore(s, dir, "hybrid_q8_store")(
           IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), _))
         graft.operators.HybridRetrieval.hybridTopKWithQ8(
@@ -2723,12 +2686,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueries(docs, e)
         val out = freshStore(s, dir, "hybrid_pq_store")(IvfObjectStore.create(
           s, GraftSimilarity.buildIvfIndex(e), _,
           pq = Some(graft.operators.GraftPq.trainPq(e, m = 8, ksub = 16,

@@ -167,7 +167,7 @@ class ServeShapeSpec extends GraftFunSuite with ManifestStoreFixture {
   test("serveProduction: no string-keyed hashed broadcast, no persisted " +
        "frame, job count pinned") {
     val imp = ImpactObjectStore.read(spark, impacts)
-    check("serveProduction", pinnedJobs = 21) {
+    check("serveProduction", pinnedJobs = 17) {
       HybridRetrieval.serveProduction(IvfObjectStore.read(spark, store), imp,
         queries, essential = 1, k = 5, kCand = 10, nprobe = 2)
     }
