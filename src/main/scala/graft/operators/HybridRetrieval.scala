@@ -578,8 +578,8 @@ object HybridRetrieval {
       MapType(StringType, ArrayType(StructType(Seq(
         StructField("q_id", qIdType), StructField("__e", BooleanType))))))
     val ne = GraftSimilarity.literalOf(
-      q.rows.map(_.get(0)).map(id => id ->
-        split.getOrElse(id, Nil).drop(essential).map(maxa).sum).toMap,
+      q.rows.map(r => r.get(0) ->
+        split.getOrElse(r.get(0), Nil).drop(essential).map(maxa).sum).toMap,
       MapType(qIdType, LongType))
     val top = impacts.impactsFor(terms.keys.toSeq)
       .select(explode(element_at(fanOut, col("__term"))).as("__qe"),
